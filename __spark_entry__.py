@@ -1250,18 +1250,19 @@ def q_subword_pack(spark, sf_dir):
 
 
 def q_mosaic_fill(spark, sf_dir):
-    """Mosaic-scale depression filling (r8): block-Jacobi with exact
-    per-tile Priority-Flood solves — round 1 treats every interior
-    seam as an impassable-high wall, each round cogroups the tiles
-    with the current perimeter W strips and reruns the UNCHANGED fill
-    kernel on the halo-augmented grid, and the monotone-decreasing
-    iteration converges to the greatest fixpoint = the whole-mosaic
-    fill (bowls deliberately straddle both seams of the crater gate
-    mosaic: a cross-seam depression's spill lives in ANOTHER tile, the
-    case per-tile fill provably gets wrong —
-    test_mosaic_fill_plain_and_per_tile_divergence). Convergence is an
-    order-free bit_xor checksum over the perimeter strips (never a
-    driver collect). The oracle re-verifies the golden surface against
+    """Mosaic-scale depression filling (r8; single solve since r9):
+    one profile cogroup compresses each tile's filled-surface minimax
+    metric to a border-band dendrogram keyed by global cell, ONE
+    bounded task runs a minimax-Dijkstra from the mosaic drain over
+    their union and writes the true W value of every perimeter strip
+    slot, and a final cogroup reruns the UNCHANGED per-tile fill
+    kernel on the W-ringed halo grid — the whole-mosaic fill (bowls
+    deliberately straddle both seams of the crater gate mosaic: a
+    cross-seam depression's spill lives in ANOTHER tile, the case
+    per-tile fill provably gets wrong —
+    test_mosaic_fill_plain_and_per_tile_divergence). No iteration and
+    no driver collect; tests pin the solved strips equal to the
+    block-Jacobi fixpoint. The oracle re-verifies the golden surface against
     the fixpoint equations recomputed from the raw crater_mosaic_cells
     table at GLOBAL coordinates; the golden itself is the scalar-heapq
     flood on the assembled grid cross-asserted vs the numpy
@@ -1277,7 +1278,7 @@ def q_mosaic_routed_flow(spark, sf_dir):
     """Whole-mosaic CONDITIONED drainage (r8): fill + flat routing +
     accumulation, all seam-correct — the capstone composition of the
     hydrology tier. Three perimeter-sized halo exchanges: the
-    mosaic_fill W iteration, a flat-distance (q-strip) iteration whose
+    mosaic_fill W single solve, a flat-distance (q-strip) iteration whose
     min-plus relaxation converges monotonically from +inf to the
     global BFS fixpoint, and the unchanged drainage decomposition on
     the ROUTED graph (flat edges are functional like strict edges; a
@@ -1372,7 +1373,8 @@ def q_mosaic_flow_length(spark, sf_dir):
     whose paths stop at tile borders). Engine: halo exchange + border
     pass shipping per-entry local path splits, the one-task border
     solve chaining per-edge downstream splits through its reverse-Kahn,
-    then one per-tile pass + a broadcast join (ops/mosaic.py:
+    then one per-tile pass that resolves each cell's edge split
+    in-kernel from strip rows — no join (ops/mosaic.py:
     mosaic_flow_length — no weighted rerun; length is purely additive).
     Oracle: DuckDB re-derives global D8 over the seam-checked
     mosaic_cells golden and walks it ONE STEP AT A TIME with recursive

@@ -36,7 +36,13 @@ def fan_out(df: DataFrame, *key_cols: str) -> DataFrame:
     """Hash-repartition ``df`` to the session's default parallelism when
     its file-source backing has fewer files than cores; no-op otherwise
     (including for non-file sources, which already chose a parallelism
-    at creation). ``key_cols``: the row-key column(s) to hash on."""
+    at creation). ``key_cols``: the row-key column(s) to hash on.
+
+    Cost: every call runs ``df.inputFiles()`` eagerly on the driver,
+    before the query runs: it analyzes the plan and returns every file
+    of the file-source backing, so the call grows with the table's
+    file count (cheap at gate scale; a large catalog table hands its
+    whole file listing to the driver here, on each call)."""
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism
     try:

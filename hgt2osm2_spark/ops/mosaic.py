@@ -67,6 +67,16 @@ solve reproduce ``terrain.flow_accumulate_grid`` run on the assembled
 whole-mosaic grid BIT-EXACTLY (acc, outlet, universe membership), on
 rectangular and L-shaped mosaics, with NOVALUE patches crossing seams
 and a multi-tile river.
+
+Skeleton: every op below is built from the same few pieces, each
+written once — ``_edge_strips`` (the 8-neighbour send) and
+``_receive`` (strip side -> aug ring slot), ``_per_tile`` (the
+tiles x strips cogroup, one decoded ``_Tile`` per call),
+``_solve_once`` (the single-task solve), ``_drain`` (border pass ->
+border solve -> solved rows routed back into the strip frame ->
+final per-tile pass), ``_drain_arrays``/``_kahn_sum`` (the summing
+worklist Kahn and its term/steps tail) and ``_fixpoint`` (the
+checksummed strip iteration).
 """
 
 from __future__ import annotations
@@ -76,17 +86,19 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..cache import scope
 from ..kernels import codecs
-from .terrain import D8_NEIGHBORS, d8_grid
+from .terrain import (D8_NEIGHBORS, aspect_octant, d8_grid, fill_grid,
+                      hillshade_grid, horn_grid, morph_grid)
 
 NOVALUE = int(codecs.NOVALUE)
 
 #: strip sides -> (dlat, dlon) of the SENDER relative to the receiver.
-#: Receiver aug-grid placement is in _assemble_aug. Row 0 = north:
-#: the north neighbor has lat+1.
+#: Row 0 = north: the north neighbor has lat+1. The order is the send
+#: order of _edge_strips.
 _SIDES = {
-    "n": (1, 0), "s": (-1, 0), "w": (0, -1), "e": (0, 1),
-    "nw": (1, -1), "ne": (1, 1), "sw": (-1, -1), "se": (-1, 1),
+    "s": (-1, 0), "n": (1, 0), "e": (0, 1), "w": (0, -1),
+    "se": (-1, 1), "sw": (-1, -1), "ne": (1, 1), "nw": (1, -1),
 }
 
 STRIP_SCHEMA = "image_id string, side string, pos int, pos2 int, val long"
@@ -106,19 +118,12 @@ LEN_CELLS_SCHEMA = "gx long, gy long, steps long, n_card long, n_diag long"
 # resolves whole-mosaic outlets/lengths IN-KERNEL instead of a
 # raster-sized broadcast join afterwards (measured ~20% of the
 # flow_acc wall at SRTM-1 grain, BENCH/mosaic_srtm1.json):
+#   side='d'  pos/pos2 = entry ly/lx, val = inflow delta
 #   side='t'  pos/pos2 = edge src ly/lx, val = (outlet_gx<<32)|outlet_gy
 #   side='u'  pos/pos2 = edge src ly/lx, val = (d_steps<<32)|d_card
 # Packing is safe: global coords < 2^21, and a 2^31-step drainage path
 # would need two billion cells in ONE path — beyond any planet mosaic.
 _PACK = np.int64(1) << np.int64(32)
-
-
-def _unpack_map(rows: pd.DataFrame, w: int):
-    """side='t'/'u' strip rows -> (sorted local src key, hi, lo)."""
-    src = rows["pos"].to_numpy(np.int64) * w + rows["pos2"].to_numpy(np.int64)
-    val = rows["val"].to_numpy(np.int64)
-    order = np.argsort(src, kind="stable")
-    return src[order], (val >> np.int64(32))[order], (val & np.int64(0xFFFFFFFF))[order]
 
 
 def parse_tile_id(image_id: str) -> tuple[int, int, str]:
@@ -143,7 +148,265 @@ def cell_gy(lat: int, y: int, h: int) -> int:
     return (89 - lat) * (h - 1) + y
 
 
+# ------------------------------------------------------------------ frames
+
+_DTYPES = {"string": object, "int": np.int32, "long": np.int64}
+
+
+def _empty(schema: str) -> pd.DataFrame:
+    """Zero-row frame with the dtypes of a DDL schema string."""
+    cols = (c.split() for c in schema.split(","))
+    return pd.DataFrame({n: pd.Series([], dtype=_DTYPES[t]) for n, t in cols})
+
+
+def _frame(parts: list[pd.DataFrame], schema: str) -> pd.DataFrame:
+    """Concatenate the non-empty parts, or an empty `schema` frame."""
+    parts = [p for p in parts if len(p)]
+    return pd.concat(parts, ignore_index=True) if parts else _empty(schema)
+
+
+class _Tile:
+    """One cogrouped tile, decoded: its image_id, its (h, w) grid and
+    the global coords (gx0, gy0) of its local cell (0, 0)."""
+
+    def __init__(self, pdf: pd.DataFrame):
+        self.img = pdf["image_id"].iloc[0]
+        lat, lon, _k = parse_tile_id(self.img)
+        (_, self.grid), = codecs.iter_decoded_tiles(pdf)
+        self.h, self.w = self.grid.shape
+        self.gx0 = cell_gx(lon, 0, self.w)
+        self.gy0 = cell_gy(lat, 0, self.h)
+
+    def cells(self, ys, xs) -> dict:
+        """Global (gx, gy) columns of local cells."""
+        return {"gx": self.gx0 + np.asarray(xs, np.int64),
+                "gy": self.gy0 + np.asarray(ys, np.int64)}
+
+
+# ------------------------------------------------------- strip send/receive
+
+def _edge_strips(plane: np.ndarray, image_id: str,
+                 prefix: str = "") -> pd.DataFrame:
+    """STRIP_SCHEMA rows shipping a tile's (h, w) plane to its 8
+    neighbors (perimeter-sized; the plane itself never leaves the
+    task). HGT convention: adjacent tiles SHARE their border row/column
+    (HGTReader.cs:50-52), so the strip a neighbor's halo needs is the
+    SECOND row/column in from the shared edge: the north neighbor
+    (lat+1) gets our row 1 as ITS south strip, the south neighbor our
+    row h-2, the west neighbor our column 1, the east our column w-2;
+    corners are the single matching interior-corner cell. Sides carry
+    `prefix` (the flat-distance strips are q-prefixed)."""
+    lat, lon, k = parse_tile_id(image_id)
+    h, w = plane.shape
+    frames = []
+    for side, (dlat, dlon) in _SIDES.items():
+        vals = np.atleast_1d(plane[
+            1 if "s" in side else h - 2 if "n" in side else slice(None),
+            1 if "e" in side else w - 2 if "w" in side else slice(None),
+        ]).astype(np.int64)
+        frames.append(pd.DataFrame({
+            "image_id": tile_id(lat - dlat, lon - dlon, k),
+            "side": prefix + side,
+            "pos": np.arange(len(vals), dtype=np.int32),
+            "pos2": np.zeros(len(vals), dtype=np.int32),
+            "val": vals,
+        }))
+    return pd.concat(frames, ignore_index=True)
+
+
+def _receive(aug: np.ndarray, strips: pd.DataFrame,
+             prefix: str = "") -> np.ndarray:
+    """Write the `prefix`-sided strips into the ring of an (h+2, w+2)
+    aug-frame plane, in place: n/s strips fill its top/bottom row, w/e
+    its left/right column (pos runs along the edge, offset 1 by the
+    ring), corner strips its corners. Other sides are ignored."""
+    h, w = aug.shape[0] - 2, aug.shape[1] - 2
+    for side, g in strips.groupby("side"):
+        base = side[len(prefix):]
+        if not side.startswith(prefix) or base not in _SIDES:
+            continue
+        along = 1 + g["pos"].to_numpy()
+        edge = np.zeros_like(along)
+        rows = edge if "n" in base else edge + h + 1 if "s" in base else along
+        cols = edge if "w" in base else edge + w + 1 if "e" in base else along
+        aug[rows, cols] = g["val"].to_numpy(np.int64)
+    return aug
+
+
+def _assemble_aug(grid: np.ndarray, strips: pd.DataFrame) -> np.ndarray:
+    """Own grid + neighbor strips -> (h+2, w+2) augmented grid with
+    NOVALUE where the mosaic has no neighbor."""
+    h, w = grid.shape
+    aug = np.full((h + 2, w + 2), NOVALUE, dtype=np.int64)
+    aug[1 : h + 1, 1 : w + 1] = grid.astype(np.int64)
+    return _receive(aug, strips)
+
+
+def halo_strips(tiles: DataFrame) -> DataFrame:
+    """Every tile -> 8 perimeter strips of its elevations addressed to
+    its neighbors (STRIP_SCHEMA rows, geometry in _edge_strips; the
+    raster itself never leaves the task)."""
+    from typing import Iterator
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _frame([_edge_strips(grid, img)
+                          for img, grid in codecs.iter_decoded_tiles(pdf)],
+                         STRIP_SCHEMA)
+
+    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
+        gen, schema=STRIP_SCHEMA
+    )
+
+
+# ------------------------------------------------------------ spark stages
+
+def _fresh_scope():
+    """The mosaic family's cache scope, with the previous call's
+    perimeter caches dropped."""
+    sc = scope("mosaic")
+    sc.release()
+    return sc
+
+
+def _per_tile(tiles: DataFrame, strips: DataFrame, body, schema: str) -> DataFrame:
+    """The per-tile cogroup: each tile meets the strip rows addressed
+    to it and body(_Tile, strips) returns `schema` rows. Strips
+    addressed past the mosaic edge meet no tile and yield nothing.
+    Under image_id bucketing both sides are co-located, shuffle-free."""
+    return (
+        tiles.groupby("image_id")
+        .cogroup(strips.groupby("image_id"))
+        .applyInPandas(lambda l, r: body(_Tile(l), r) if len(l) else _empty(schema),
+                       schema=schema)
+    )
+
+
+def _solve_once(df: DataFrame, fn, schema: str) -> DataFrame:
+    """fn over ALL rows of df in ONE executor task (groupBy on a
+    constant key) — the Barnes single-node border solve."""
+    return df.groupBy(F.lit(0).alias("_g")).applyInPandas(
+        lambda _k, pdf: fn(pdf), schema=schema
+    )
+
+
+def _strip_checksum(df: DataFrame):
+    """Order-free fingerprint of a strip frame: one tiny agg job."""
+    row = df.agg(
+        F.expr("bit_xor(xxhash64(image_id, side, pos, pos2, val))"),
+        F.count("*"),
+    ).collect()[0]
+    return (row[0], row[1])
+
+
+def _fixpoint(step, sc, max_rounds: int, what: str) -> DataFrame:
+    """Iterate strip frames: step(previous output, None in round 1)
+    -> the next output, cached in `sc`, until two consecutive outputs
+    have the same checksum (one tiny Spark job per round, never a
+    driver collect of the strips). Returns the converged output;
+    RAISES after max_rounds rather than silently capping."""
+    out, prev = None, None
+    for _round in range(max_rounds):
+        out = sc.hold(step(out).cache())
+        chk = _strip_checksum(out)
+        if chk == prev:
+            return out
+        prev = chk
+    raise RuntimeError(f"{what} did not converge in {max_rounds} rounds")
+
+
 # ------------------------------------------------------------------ kernel
+
+def _find(keys: np.ndarray, probes: np.ndarray) -> np.ndarray:
+    """Index of each probe in `keys` (first hit), -1 where absent."""
+    if len(keys) == 0:
+        return np.full(len(probes), -1, dtype=np.int64)
+    order = np.argsort(keys, kind="stable")
+    pos = np.clip(np.searchsorted(keys[order], probes), 0, len(keys) - 1)
+    return np.where(keys[order][pos] == probes, order[pos], -1)
+
+
+def _sum_by(keys: np.ndarray, vals: np.ndarray):
+    """Non-empty keys -> (sorted unique keys, sum of vals, count)."""
+    order = np.argsort(keys, kind="stable")
+    sk = keys[order]
+    cuts = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
+    return sk[cuts], np.add.reduceat(vals[order], cuts), np.diff(np.r_[cuts, len(sk)])
+
+
+def _kahn_sum(t: np.ndarray, acc: np.ndarray, what: str) -> list:
+    """Summing worklist Kahn over a functional graph (t = each node's
+    target index, -1 at terminals): adds every node's FINAL acc into
+    its target, in place, one vectorized frontier per round. Returns
+    the rounds (upstream first) for a reverse pass."""
+    indeg = np.zeros(len(t), dtype=np.int64)
+    np.add.at(indeg, t[t >= 0], 1)
+    rounds = []
+    frontier = np.flatnonzero(indeg == 0)
+    n_done = 0
+    while frontier.size:
+        rounds.append(frontier)
+        n_done += frontier.size
+        ft = t[frontier]
+        has = ft >= 0
+        if not has.any():
+            break
+        uniq, sums, cnt = _sum_by(ft[has], acc[frontier][has])
+        acc[uniq] += sums
+        indeg[uniq] -= cnt
+        frontier = uniq[indeg[uniq] == 0]
+    assert n_done == len(t), f"{what} must be acyclic"
+    return rounds
+
+
+def _owned(ys, xs, h: int, w: int):
+    """Aug-frame cell coords -> (ly, lx) tile coords and the ownership
+    mask lx < w-1 & ly < h-1: every mosaic cell has exactly one owner,
+    and shared border cells belong to the tile that holds them at
+    x=0 / y=0."""
+    ly, lx = ys - 1, xs - 1
+    return ly, lx, (lx < w - 1) & (ly < h - 1)
+
+
+def _d8_step(ys, xs, d8):
+    """Target coords of each cell's D8 code (own coords where 0)."""
+    t_ys, t_xs = ys.astype(np.int64), xs.astype(np.int64)
+    for c, dx, dy, _card in D8_NEIGHBORS:
+        sel = d8 == c
+        t_xs[sel] += dx
+        t_ys[sel] += dy
+    return t_ys, t_xs
+
+
+def _drain_arrays(ys, xs, t_ys, t_xs, has, h: int, w: int, weights):
+    """Shared tail of the tile kernels: the owned universe cells (tile
+    coords, row-major) with their target coords and has-target flags
+    -> the mosaic_tile_arrays 10-tuple (see mosaic_tile_arrays_py)."""
+    n = len(ys)
+    lookup = np.full(h * w, -1, dtype=np.int64)
+    lookup[ys.astype(np.int64) * w + xs] = np.arange(n)
+    in_box = has & (t_xs >= 0) & (t_xs < w - 1) & (t_ys >= 0) & (t_ys < h - 1)
+    t = np.full(n, -1, dtype=np.int64)
+    t[in_box] = lookup[t_ys[in_box] * w + t_xs[in_box]]
+    # t == -1 now means terminal: no target (pit/flat), dead in-box
+    # target (owned but mosaic-invalid), or out-of-box target (cross)
+    acc = np.ones(n, np.int64) if weights is None else weights[ys, xs].astype(np.int64)
+    rounds = _kahn_sum(t, acc, "mosaic drainage graph")
+    term = np.arange(n, dtype=np.int64)
+    steps = np.zeros(n, dtype=np.int64)
+    ncard = np.zeros(n, dtype=np.int64)
+    # step cell->target is cardinal iff the target shares a row or
+    # column (meaningful only where t >= 0)
+    is_card = ((t_xs == xs) | (t_ys == ys)).astype(np.int64)
+    for frontier in reversed(rounds):
+        ft = t[frontier]
+        has_t = ft >= 0
+        idx = frontier[has_t]
+        term[idx] = term[ft[has_t]]
+        steps[idx] = steps[ft[has_t]] + 1
+        ncard[idx] = ncard[ft[has_t]] + is_card[idx]
+    return ys, xs, acc, term, has & ~in_box, t_ys, t_xs, steps, ncard, t
+
 
 def mosaic_tile_arrays(aug: np.ndarray, weights: np.ndarray | None = None):
     """One tile's drainage pass over its (h+2, w+2) augmented grid.
@@ -164,9 +427,10 @@ def mosaic_tile_arrays(aug: np.ndarray, weights: np.ndarray | None = None):
 def mosaic_tile_arrays_py(aug: np.ndarray, weights: np.ndarray | None = None):
     """One tile's drainage pass over its (h+2, w+2) augmented grid.
 
-    Returns (ys, xs, acc, term, cross, t_ys, t_xs) over the tile's
-    OWNED universe cells (local coords, x < w-1 and y < h-1, fully
-    valid 3x3 in the AUGMENTED grid — i.e. mosaic-valid):
+    Returns (ys, xs, acc, term, cross, t_ys, t_xs, steps, ncard, t)
+    over the tile's OWNED universe cells (local coords, x < w-1 and
+    y < h-1, fully valid 3x3 in the AUGMENTED grid — i.e.
+    mosaic-valid):
       acc   weighted local accumulation (weights default to 1),
       term  index (into these arrays) of each cell's local terminal,
       cross boolean per cell index: True where the cell's own D8
@@ -185,229 +449,67 @@ def mosaic_tile_arrays_py(aug: np.ndarray, weights: np.ndarray | None = None):
     universe cut. ``weights`` is indexed like the returned arrays
     (dense (h-1, w-1) owned-box plane)."""
     h, w = aug.shape[0] - 2, aug.shape[1] - 2
-    ys, xs, d8, _ = d8_grid(aug)
-    ys = ys - 1  # d8_grid coords are in the AUGMENTED frame; shift to
-    xs = xs - 1  # tile coords (aug pads one ring on every side)
-    own = (xs < w - 1) & (ys < h - 1)
+    ays, axs, d8, _ = d8_grid(aug)  # AUGMENTED-frame coords
+    ys, xs, own = _owned(ays, axs, h, w)
     ys, xs, d8 = ys[own], xs[own], d8[own]
-    n = len(ys)
-
-    lookup = np.full(h * w, -1, dtype=np.int64)
-    lookup[ys.astype(np.int64) * w + xs] = np.arange(n)
-    t_xs = xs.astype(np.int64).copy()
-    t_ys = ys.astype(np.int64).copy()
-    for c, dx, dy, _card in D8_NEIGHBORS:
-        sel = d8 == c
-        t_xs[sel] += dx
-        t_ys[sel] += dy
-    in_box = (
-        (d8 > 0)
-        & (t_xs >= 0) & (t_xs < w - 1)
-        & (t_ys >= 0) & (t_ys < h - 1)
-    )
-    t = np.full(n, -1, dtype=np.int64)
-    t[in_box] = lookup[t_ys[in_box] * w + t_xs[in_box]]
-    # t == -1 now means terminal: pit/flat (d8 = 0), dead in-box target
-    # (owned but mosaic-invalid), or out-of-box target (cross candidate)
-    cross = (d8 > 0) & ~in_box
-
-    if weights is None:
-        acc = np.ones(n, dtype=np.int64)
-    else:
-        acc = weights[ys, xs].astype(np.int64).copy()
-    indeg = np.zeros(n, dtype=np.int64)
-    np.add.at(indeg, t[t >= 0], 1)
-    rounds = []
-    frontier = np.flatnonzero(indeg == 0)
-    n_done = 0
-    while frontier.size:
-        rounds.append(frontier)
-        n_done += frontier.size
-        ft = t[frontier]
-        has = ft >= 0
-        tgt = ft[has]
-        if tgt.size == 0:
-            break
-        order = np.argsort(tgt, kind="stable")
-        st = tgt[order]
-        sa = acc[frontier][has][order]
-        cuts = np.flatnonzero(np.r_[True, st[1:] != st[:-1]])
-        uniq = st[cuts]
-        acc[uniq] += np.add.reduceat(sa, cuts)
-        indeg[uniq] -= np.diff(np.r_[cuts, len(st)])
-        frontier = uniq[indeg[uniq] == 0]
-    assert n_done == n, "mosaic D8 graph must be acyclic (strict descent)"
-
-    term = np.arange(n, dtype=np.int64)
-    steps = np.zeros(n, dtype=np.int64)
-    ncard = np.zeros(n, dtype=np.int64)
-    # step cell->target is cardinal iff the target shares a row or
-    # column (meaningful only where t >= 0)
-    is_card = ((t_xs == xs) | (t_ys == ys)).astype(np.int64)
-    for frontier in reversed(rounds):
-        ft = t[frontier]
-        has_t = ft >= 0
-        idx = frontier[has_t]
-        term[idx] = term[ft[has_t]]
-        steps[idx] = steps[ft[has_t]] + 1
-        ncard[idx] = ncard[ft[has_t]] + is_card[idx]
-    return ys, xs, acc, term, cross, t_ys, t_xs, steps, ncard, t
+    t_ys, t_xs = _d8_step(ys, xs, d8)
+    return _drain_arrays(ys, xs, t_ys, t_xs, d8 > 0, h, w, weights)
 
 
-def _assemble_aug(grid: np.ndarray, strips: pd.DataFrame) -> np.ndarray:
-    """Own grid + neighbor strips -> (h+2, w+2) augmented grid with
-    NOVALUE where the mosaic has no neighbor."""
-    h, w = grid.shape
-    aug = np.full((h + 2, w + 2), NOVALUE, dtype=np.int64)
-    aug[1 : h + 1, 1 : w + 1] = grid.astype(np.int64)
-    for side, g in strips.groupby("side"):
-        # skip weight deltas / solved edge maps / flat-distance rings
-        if side in ("d", "t", "u") or side.startswith("q"):
-            continue
-        pos = g["pos"].to_numpy()
-        val = g["val"].to_numpy()
-        if side == "n":
-            aug[0, 1 + pos] = val
-        elif side == "s":
-            aug[h + 1, 1 + pos] = val
-        elif side == "w":
-            aug[1 + pos, 0] = val
-        elif side == "e":
-            aug[1 + pos, w + 1] = val
-        elif side == "nw":
-            aug[0, 0] = val[0]
-        elif side == "ne":
-            aug[0, w + 1] = val[0]
-        elif side == "sw":
-            aug[h + 1, 0] = val[0]
-        elif side == "se":
-            aug[h + 1, w + 1] = val[0]
-    return aug
+# ---------------------------------------------------------- drainage spine
+
+def _plain_arrays(grid: np.ndarray, strips: pd.DataFrame, weights=None):
+    """The drainage kernel over the halo-augmented elevation grid."""
+    return mosaic_tile_arrays(_assemble_aug(grid, strips), weights)
 
 
-# ------------------------------------------------------------ spark stages
-
-def halo_strips(tiles: DataFrame) -> DataFrame:
-    """Every tile -> 8 perimeter strips addressed to its neighbors
-    (STRIP_SCHEMA rows; the raster itself never leaves the task).
-    With the shared-border convention the strip a neighbor's halo
-    needs is the SECOND row/column in from the shared edge: row 0 is
-    the north edge, so the north neighbor (lat+1) gets our row 1 as
-    ITS south halo, the south neighbor (lat-1) gets our row h-2, the
-    west neighbor our column 1, the east our column w-2; corners are
-    the single matching interior-corner cell."""
-    from typing import Iterator
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                lat, lon, k = parse_tile_id(img)
-                h, w = grid.shape
-                g = grid.astype(np.int64)
-                # (receiver side, receiver dlat/dlon, payload, pos axis)
-                emits = (
-                    ("s", 1, 0, g[1, :], np.arange(w)),       # to north nbr
-                    ("n", -1, 0, g[h - 2, :], np.arange(w)),  # to south nbr
-                    ("e", 0, -1, g[:, 1], np.arange(h)),      # to west nbr
-                    ("w", 0, 1, g[:, w - 2], np.arange(h)),   # to east nbr
-                    ("se", 1, -1, g[1:2, 1], np.zeros(1, np.int64)),
-                    ("sw", 1, 1, g[1:2, w - 2], np.zeros(1, np.int64)),
-                    ("ne", -1, -1, g[h - 2 : h - 1, 1], np.zeros(1, np.int64)),
-                    ("nw", -1, 1, g[h - 2 : h - 1, w - 2], np.zeros(1, np.int64)),
-                )
-                for side, dlat, dlon, vals, pos in emits:
-                    out.append(pd.DataFrame({
-                        "image_id": tile_id(lat + dlat, lon + dlon, k),
-                        "side": side,
-                        "pos": pos.astype(np.int32),
-                        "pos2": np.zeros(len(pos), dtype=np.int32),
-                        "val": np.asarray(vals, dtype=np.int64),
-                    }))
-            yield pd.concat(out, ignore_index=True) if out else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "side": pd.Series([], dtype=object),
-                "pos": pd.Series([], dtype=np.int32),
-                "pos2": pd.Series([], dtype=np.int32),
-                "val": pd.Series([], dtype=np.int64),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=STRIP_SCHEMA
-    )
+def _weights(strips: pd.DataFrame, h: int, w: int) -> np.ndarray:
+    """Cell weights 1 + the solved inflow deltas (side='d' rows)."""
+    weights = np.ones((h - 1, w - 1), dtype=np.int64)
+    d = strips[strips["side"] == "d"]
+    if len(d):
+        weights[d["pos"].to_numpy(), d["pos2"].to_numpy()] += d["val"].to_numpy(np.int64)
+    return weights
 
 
-def _empty_border() -> pd.DataFrame:
-    return pd.DataFrame({
-        "kind": pd.Series([], dtype=object),
-        "img": pd.Series([], dtype=object),
-        "ax": pd.Series([], dtype=np.int64),
-        "ay": pd.Series([], dtype=np.int64),
-        "bx": pd.Series([], dtype=np.int64),
-        "by": pd.Series([], dtype=np.int64),
-        "lx": pd.Series([], dtype=np.int32),
-        "ly": pd.Series([], dtype=np.int32),
-        "v": pd.Series([], dtype=np.int64),
-        "s": pd.Series([], dtype=np.int64),
-        "c": pd.Series([], dtype=np.int64),
-    })
+def _edge_map(strips: pd.DataFrame, side: str, ys, xs, term, w: int):
+    """Resolve each cell's local terminal against the solved per-edge
+    map riding the strip frame as `side` rows (keyed by the edge src's
+    local coords): -> (hit, hi, lo) per cell, hi/lo the unpacked val
+    (0 where the terminal is no exit-edge source)."""
+    rows = strips[strips["side"] == side]
+    src = rows["pos"].to_numpy(np.int64) * w + rows["pos2"].to_numpy(np.int64)
+    i = _find(src, ys[term].astype(np.int64) * w + xs[term])
+    val = np.append(rows["val"].to_numpy(np.int64), 0)[i]
+    return i >= 0, val >> np.int64(32), val & np.int64(0xFFFFFFFF)
 
 
-def _border_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame,
-                 kernel=None) -> pd.DataFrame:
+def _border_pass(t: _Tile, strips: pd.DataFrame, kernel) -> pd.DataFrame:
     """Stage-2 cogroup body: unweighted local pass -> BORDER_SCHEMA
     rows (exit edges kind='x', entry registry kind='e'). Entry rows
     carry the entry cell's LOCAL path split (s=steps, c=cardinal steps
     to its local terminal) so the border solve can also chain
     whole-mosaic flow-path lengths; exit rows leave s/c at 0 (the
     edge's own cardinality is derivable from its global endpoints)."""
-    if len(tile_pdf) == 0:
-        return _empty_border()
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    h, w = grid.shape
-    if kernel is None:
-        aug = _assemble_aug(grid, strips)
-        arrays = mosaic_tile_arrays(aug)
-    else:
-        arrays = kernel(grid, strips)
-    ys, xs, acc, term, cross, t_ys, t_xs, steps, ncard, _t = arrays
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
-    out = []
+    ys, xs, acc, term, cross, t_ys, t_xs, steps, ncard, _t = kernel(t.grid, strips)
+    g = t.cells(ys, xs)
+
+    def rows(kind, i, bx, by, v, s, c):
+        return pd.DataFrame({
+            "kind": kind, "img": t.img, "ax": g["gx"][i], "ay": g["gy"][i],
+            "bx": bx, "by": by, "lx": xs[i].astype(np.int32),
+            "ly": ys[i].astype(np.int32), "v": v, "s": s, "c": c,
+        })
+
     xi = np.flatnonzero(cross)  # exit-edge sources (terminals by def.)
-    if xi.size:
-        out.append(pd.DataFrame({
-            "kind": "x", "img": img,
-            "ax": gx0 + xs[xi].astype(np.int64),
-            "ay": gy0 + ys[xi].astype(np.int64),
-            "bx": gx0 + t_xs[xi],
-            "by": gy0 + t_ys[xi],
-            "lx": xs[xi].astype(np.int32),
-            "ly": ys[xi].astype(np.int32),
-            "v": acc[xi],
-            "s": np.zeros(xi.size, np.int64),
-            "c": np.zeros(xi.size, np.int64),
-        }))
-    ring = np.flatnonzero(
-        (xs == 0) | (xs == w - 2) | (ys == 0) | (ys == h - 2)
-    )
-    if ring.size:
-        tr = term[ring]
-        out.append(pd.DataFrame({
-            "kind": "e", "img": img,
-            "ax": gx0 + xs[ring].astype(np.int64),
-            "ay": gy0 + ys[ring].astype(np.int64),
-            "bx": gx0 + xs[tr].astype(np.int64),
-            "by": gy0 + ys[tr].astype(np.int64),
-            "lx": xs[ring].astype(np.int32),
-            "ly": ys[ring].astype(np.int32),
-            "v": cross[tr].astype(np.int64),
-            "s": steps[ring],
-            "c": ncard[ring],
-        }))
-    return pd.concat(out, ignore_index=True) if out else _empty_border()
+    zero = np.zeros(xi.size, np.int64)
+    ring = np.flatnonzero((xs == 0) | (xs == t.w - 2) | (ys == 0) | (ys == t.h - 2))
+    tr = term[ring]
+    return _frame([
+        rows("x", xi, t.gx0 + t_xs[xi], t.gy0 + t_ys[xi], acc[xi], zero, zero),
+        rows("e", ring, g["gx"][tr], g["gy"][tr], cross[tr].astype(np.int64),
+             steps[ring], ncard[ring]),
+    ], BORDER_SCHEMA)
 
 
 def solve_border_graph(border: pd.DataFrame) -> pd.DataFrame:
@@ -422,81 +524,29 @@ def solve_border_graph(border: pd.DataFrame) -> pd.DataFrame:
     Pure pandas/numpy — runs as ONE executor task."""
     ex = border[border["kind"] == "x"].reset_index(drop=True)
     en = border[border["kind"] == "e"].reset_index(drop=True)
-    empty = pd.DataFrame({
-        "kind": pd.Series([], dtype=object),
-        "img": pd.Series([], dtype=object),
-        "lx": pd.Series([], dtype=np.int32),
-        "ly": pd.Series([], dtype=np.int32),
-        "ax": pd.Series([], dtype=np.int64),
-        "ay": pd.Series([], dtype=np.int64),
-        "bx": pd.Series([], dtype=np.int64),
-        "by": pd.Series([], dtype=np.int64),
-        "v": pd.Series([], dtype=np.int64),
-        "s": pd.Series([], dtype=np.int64),
-        "c": pd.Series([], dtype=np.int64),
-    })
     if len(ex) == 0:
-        return empty
+        return _empty(SOLVE_SCHEMA)
 
-    def key(xa, ya):
-        return (np.asarray(xa, np.int64) << np.int64(32)) | np.asarray(ya, np.int64)
+    def col(df, c):
+        return df[c].to_numpy(np.int64)
 
-    src_k = key(ex["ax"], ex["ay"])
-    dst_k = key(ex["bx"], ex["by"])
-    base = ex["v"].to_numpy(np.int64)
+    def key(df, a, b):
+        return (col(df, a) << np.int64(32)) | col(df, b)
+
+    src_k = key(ex, "ax", "ay")
     m = len(ex)
-    # entry lookup by cell key
-    cell_k = key(en["ax"], en["ay"])
-    e_order = np.argsort(cell_k, kind="stable")
-    cell_sorted = cell_k[e_order]
-    # edge lookup by src key (functional: one exit per terminal)
-    x_order = np.argsort(src_k, kind="stable")
-    src_sorted = src_k[x_order]
-
-    def find(sorted_keys, order, keys):
-        if len(sorted_keys) == 0:
-            return np.full(len(keys), -1, dtype=np.int64)
-        pos = np.searchsorted(sorted_keys, keys)
-        pos_c = np.clip(pos, 0, len(sorted_keys) - 1)
-        ok = sorted_keys[pos_c] == keys
-        return np.where(ok, order[pos_c], -1)
-
-    ent = find(cell_sorted, e_order, dst_k)      # entry row per edge, -1 dead
-    dead = ent < 0
-    term_k = key(en["bx"], en["by"])             # entry's local terminal
-    ent_cross = en["v"].to_numpy(np.int64)
-    succ = np.full(m, -1, dtype=np.int64)
-    live = ~dead
+    ent = _find(key(en, "ax", "ay"), key(ex, "bx", "by"))  # -1 = dead edge
+    live = ent >= 0
+    term_k = key(en, "bx", "by")  # entry's local terminal
     crossing = np.zeros(m, dtype=bool)
-    crossing[live] = ent_cross[ent[live]] == 1
-    succ[crossing] = find(src_sorted, x_order, term_k[ent[crossing]])
+    crossing[live] = col(en, "v")[ent[live]] == 1
+    succ = np.full(m, -1, dtype=np.int64)
+    succ[crossing] = _find(src_k, term_k[ent[crossing]])  # one exit per terminal
     assert (succ[crossing] >= 0).all(), (
         "entry marked crossing but its terminal has no exit edge"
     )
-
-    flow = base.copy()
-    indeg = np.zeros(m, dtype=np.int64)
-    np.add.at(indeg, succ[succ >= 0], 1)
-    rounds = []
-    frontier = np.flatnonzero(indeg == 0)
-    n_done = 0
-    while frontier.size:
-        rounds.append(frontier)
-        n_done += frontier.size
-        fs = succ[frontier]
-        has = fs >= 0
-        tgt = fs[has]
-        if tgt.size == 0:
-            break
-        order = np.argsort(tgt, kind="stable")
-        st = tgt[order]
-        sa = flow[frontier][has][order]
-        cuts = np.flatnonzero(np.r_[True, st[1:] != st[:-1]])
-        uniq = st[cuts]
-        flow[uniq] += np.add.reduceat(sa, cuts)
-        indeg[uniq] -= np.diff(np.r_[cuts, len(st)])
-        frontier = uniq[indeg[uniq] == 0]
-    assert n_done == m, "border-edge graph must be acyclic"
+    flow = col(ex, "v").copy()
+    rounds = _kahn_sum(succ, flow, "border-edge graph")
 
     # mosaic terminal per edge: dead -> its own src; pit entry -> the
     # entry's local terminal; crossing -> terminal of the successor
@@ -507,114 +557,94 @@ def solve_border_graph(border: pd.DataFrame) -> pd.DataFrame:
     # step (cardinal iff src/target share a global row or column) plus
     # the entry's local split plus, when the entry's terminal crosses
     # again, the successor edge's downstream split.
-    t_out = np.where(dead, src_k, 0).astype(np.int64)
+    t_out = np.where(live, 0, src_k).astype(np.int64)
     pit = live & ~crossing
     t_out[pit] = term_k[ent[pit]]
-    ex_card = (
-        (ex["ax"].to_numpy(np.int64) == ex["bx"].to_numpy(np.int64))
-        | (ex["ay"].to_numpy(np.int64) == ex["by"].to_numpy(np.int64))
-    ).astype(np.int64)
-    en_s = en["s"].to_numpy(np.int64) if len(en) else np.zeros(0, np.int64)
-    en_c = en["c"].to_numpy(np.int64) if len(en) else np.zeros(0, np.int64)
+    ex_card = ((col(ex, "ax") == col(ex, "bx"))
+               | (col(ex, "ay") == col(ex, "by"))).astype(np.int64)
     d_steps = np.zeros(m, dtype=np.int64)
     d_card = np.zeros(m, dtype=np.int64)
-    d_steps[live] = 1 + en_s[ent[live]]
-    d_card[live] = ex_card[live] + en_c[ent[live]]
+    d_steps[live] = 1 + col(en, "s")[ent[live]]
+    d_card[live] = ex_card[live] + col(en, "c")[ent[live]]
     for frontier in reversed(rounds):
         fc = frontier[crossing[frontier]]
         t_out[fc] = t_out[succ[fc]]
         d_steps[fc] += d_steps[succ[fc]]
         d_card[fc] += d_card[succ[fc]]
 
-    out = [pd.DataFrame({
+    parts = [pd.DataFrame({
         "kind": "t", "img": ex["img"].to_numpy(object),
         "lx": ex["lx"].to_numpy(np.int32), "ly": ex["ly"].to_numpy(np.int32),
-        "ax": src_k >> np.int64(32),
-        "ay": src_k & np.int64(0xFFFFFFFF),
-        "bx": t_out >> np.int64(32),
-        "by": t_out & np.int64(0xFFFFFFFF),
-        "v": flow,
-        "s": d_steps,
-        "c": d_card,
+        "ax": src_k >> np.int64(32), "ay": src_k & np.int64(0xFFFFFFFF),
+        "bx": t_out >> np.int64(32), "by": t_out & np.int64(0xFFFFFFFF),
+        "v": flow, "s": d_steps, "c": d_card,
     })]
     # per-entry inflow delta = sum of FINAL flow over live edges in
     li = np.flatnonzero(live)
     if li.size:
-        tgt_ent = ent[li]
-        order = np.argsort(tgt_ent, kind="stable")
-        st = tgt_ent[order]
-        sf = flow[li][order]
-        cuts = np.flatnonzero(np.r_[True, st[1:] != st[:-1]])
-        uniq_e = st[cuts]
-        dsum = np.add.reduceat(sf, cuts)
-        out.append(pd.DataFrame({
-            "kind": "d",
-            "img": en["img"].to_numpy(object)[uniq_e],
+        uniq_e, dsum, _n = _sum_by(ent[li], flow[li])
+        zero = np.zeros(uniq_e.size, np.int64)
+        parts.append(pd.DataFrame({
+            "kind": "d", "img": en["img"].to_numpy(object)[uniq_e],
             "lx": en["lx"].to_numpy(np.int32)[uniq_e],
             "ly": en["ly"].to_numpy(np.int32)[uniq_e],
-            "ax": np.zeros(uniq_e.size, np.int64),
-            "ay": np.zeros(uniq_e.size, np.int64),
-            "bx": np.zeros(uniq_e.size, np.int64),
-            "by": np.zeros(uniq_e.size, np.int64),
-            "v": dsum,
-            "s": np.zeros(uniq_e.size, np.int64),
-            "c": np.zeros(uniq_e.size, np.int64),
+            "ax": zero, "ay": zero, "bx": zero, "by": zero,
+            "v": dsum, "s": zero, "c": zero,
         }))
-    return pd.concat(out, ignore_index=True)
+    return _frame(parts, SOLVE_SCHEMA)
 
 
-def _weighted_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame,
-                   kernel=None) -> pd.DataFrame:
+def _route_back(solved: DataFrame, side: str) -> DataFrame:
+    """Solved rows -> strip rows for their owner tile (see _PACK)."""
+    kind, val = {
+        "d": ("d", F.col("v")),
+        "t": ("t", F.col("bx") * F.lit(int(_PACK)) + F.col("by")),
+        "u": ("t", F.col("s") * F.lit(int(_PACK)) + F.col("c")),
+    }[side]
+    return solved.filter(F.col("kind") == kind).select(
+        F.col("img").alias("image_id"),
+        F.lit(side).alias("side"),
+        F.col("ly").alias("pos"),
+        F.col("lx").alias("pos2"),
+        val.alias("val"),
+    )
+
+
+def _drain(tiles: DataFrame, strips: DataFrame, sides: tuple, sc, body,
+           schema: str, kernel=_plain_arrays) -> DataFrame:
+    """The drainage spine: border pass (with `kernel`) over the strip
+    frame -> the one-task border solve -> the solved rows routed back
+    into the strip frame as each of `sides` -> body(_Tile, strips) per
+    tile. The solve is cached exactly when more than one side reads
+    it: Python subtrees are not deduplicated by ReuseExchange, so a
+    second reader would rerun it."""
+    border = _per_tile(tiles, strips, lambda t, s: _border_pass(t, s, kernel),
+                       BORDER_SCHEMA)
+    solved = _solve_once(border, solve_border_graph, SOLVE_SCHEMA)
+    if len(sides) > 1:
+        solved = sc.hold(solved.cache())
+    for side in sides:
+        strips = strips.unionByName(_route_back(solved, side))
+    return _per_tile(tiles, strips, body, schema)
+
+
+def _weighted_pass(t: _Tile, strips: pd.DataFrame,
+                   kernel=_plain_arrays) -> pd.DataFrame:
     """Stage-4 cogroup body: weighted local pass (weights 1 + delta
     rows riding the strip frame as side='d') -> CELLS_SCHEMA rows in
     global coordinates. The solved edge-terminal map rides the same
     frame as side='t' rows, so whole-mosaic outlets resolve HERE with
     one searchsorted over the tile's own exit edges — no raster-sized
     join downstream."""
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "gx": pd.Series([], dtype=np.int64),
-            "gy": pd.Series([], dtype=np.int64),
-            "z": pd.Series([], dtype=np.int32),
-            "acc": pd.Series([], dtype=np.int64),
-            "outlet_gx": pd.Series([], dtype=np.int64),
-            "outlet_gy": pd.Series([], dtype=np.int64),
-        })
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    h, w = grid.shape
-    weights = np.ones((h - 1, w - 1), dtype=np.int64)
-    d = strips[strips["side"] == "d"]
-    if len(d):
-        weights[d["pos"].to_numpy(), d["pos2"].to_numpy()] += d["val"].to_numpy(np.int64)
-    if kernel is None:
-        arrays = mosaic_tile_arrays(_assemble_aug(grid, strips), weights)
-    else:
-        arrays = kernel(grid, strips, weights)
-    ys, xs, acc, term, _cross, _t_ys, _t_xs, _steps, _ncard, _t = arrays
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
+    ys, xs, acc, term, *_ = kernel(t.grid, strips, _weights(strips, t.h, t.w))
+    g = t.cells(ys, xs)
     # local terminal -> whole-mosaic outlet, where the terminal is an
     # exit-edge source the border solve resolved; pits keep themselves
-    out_gx = gx0 + xs[term].astype(np.int64)
-    out_gy = gy0 + ys[term].astype(np.int64)
-    tmap = strips[strips["side"] == "t"]
-    if len(tmap):
-        src_sorted, hi, lo = _unpack_map(tmap, w)
-        tk = ys[term].astype(np.int64) * w + xs[term]
-        pos = np.searchsorted(src_sorted, tk)
-        pos_c = np.clip(pos, 0, len(src_sorted) - 1)
-        ok = src_sorted[pos_c] == tk
-        out_gx = np.where(ok, hi[pos_c], out_gx)
-        out_gy = np.where(ok, lo[pos_c], out_gy)
+    hit, hi, lo = _edge_map(strips, "t", ys, xs, term, t.w)
     return pd.DataFrame({
-        "gx": gx0 + xs.astype(np.int64),
-        "gy": gy0 + ys.astype(np.int64),
-        "z": grid[ys, xs].astype(np.int32),
-        "acc": acc,
-        "outlet_gx": out_gx,
-        "outlet_gy": out_gy,
+        **g, "z": t.grid[ys, xs].astype(np.int32), "acc": acc,
+        "outlet_gx": np.where(hit, hi, g["gx"][term]),
+        "outlet_gy": np.where(hit, lo, g["gy"][term]),
     })
 
 
@@ -624,48 +654,11 @@ def mosaic_flow_accumulation(tiles: DataFrame) -> DataFrame:
     (gx, gy, z, acc, outlet_gx, outlet_gy) where acc and outlet are
     WHOLE-MOSAIC truths (bit-equal to running the per-tile kernel on
     the assembled mosaic grid — pinned in tests/test_mosaic.py)."""
-    from ..cache import scope
-
-    sc = scope("mosaic")
-    sc.release()  # drop the previous call's perimeter caches
+    sc = _fresh_scope()
     # strips feed BOTH cogroups; perimeter-sized, so caching trades a
     # few MB for a second decode+strip pass over every tile
     strips = sc.hold(halo_strips(tiles).cache())
-    border = (
-        tiles.groupby("image_id")
-        .cogroup(strips.groupby("image_id"))
-        .applyInPandas(lambda l, r: _border_pass(l, r), schema=BORDER_SCHEMA)
-    )
-    solved = sc.hold(
-        border.groupBy(F.lit(0).alias("_g"))
-        .applyInPandas(
-            lambda _k, pdf: solve_border_graph(pdf), schema=SOLVE_SCHEMA
-        )
-        .cache()
-    )
-    deltas = solved.filter(F.col("kind") == "d").select(
-        F.col("img").alias("image_id"),
-        F.lit("d").alias("side"),
-        F.col("ly").alias("pos"),
-        F.col("lx").alias("pos2"),
-        F.col("v").alias("val"),
-    )
-    # solved edge -> mosaic outlet, routed back to the OWNER tile in
-    # the strip frame (side='t', val packs the outlet's global coords)
-    # so _weighted_pass resolves outlets in-kernel
-    terms = solved.filter(F.col("kind") == "t").select(
-        F.col("img").alias("image_id"),
-        F.lit("t").alias("side"),
-        F.col("ly").alias("pos"),
-        F.col("lx").alias("pos2"),
-        (F.col("bx") * F.lit(int(_PACK)) + F.col("by")).alias("val"),
-    )
-    strips2 = strips.unionByName(deltas).unionByName(terms)
-    return (
-        tiles.groupby("image_id")
-        .cogroup(strips2.groupby("image_id"))
-        .applyInPandas(lambda l, r: _weighted_pass(l, r), schema=CELLS_SCHEMA)
-    )
+    return _drain(tiles, strips, ("d", "t"), sc, _weighted_pass, CELLS_SCHEMA)
 
 
 def mosaic_basin_stats(tiles: DataFrame) -> DataFrame:
@@ -683,45 +676,25 @@ def mosaic_basin_stats(tiles: DataFrame) -> DataFrame:
         (F.sum("z").cast("long") / F.count("*").cast("long")).alias("mean_z"),
     )
 
+
 STREAM_CELLS_SCHEMA = "gx long, gy long, acc long, tgt_gx long, tgt_gy long"
 MOSAIC_STREAM_SCHEMA = "gx long, gy long, acc long, sorder long"
 
 
-def _stream_pass(
-    tile_pdf: pd.DataFrame, strips: pd.DataFrame, min_acc: int
-) -> pd.DataFrame:
+def _stream_pass(t: _Tile, strips: pd.DataFrame, min_acc: int) -> pd.DataFrame:
     """Cogroup body for mosaic_stream_order: WEIGHTED local pass
     (deltas riding the strip frame as side='d', so acc is the mosaic
     accumulation) -> the tile's owned STREAM cells (acc >= min_acc)
     with their immediate D8 target in global coordinates (-1/-1 at
     terminals). Only the sparse stream skeleton leaves the task."""
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "gx": pd.Series([], dtype=np.int64),
-            "gy": pd.Series([], dtype=np.int64),
-            "acc": pd.Series([], dtype=np.int64),
-            "tgt_gx": pd.Series([], dtype=np.int64),
-            "tgt_gy": pd.Series([], dtype=np.int64),
-        })
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    h, w = grid.shape
-    aug = _assemble_aug(grid, strips)
-    weights = np.ones((h - 1, w - 1), dtype=np.int64)
-    d = strips[strips["side"] == "d"]
-    if len(d):
-        weights[d["pos"].to_numpy(), d["pos2"].to_numpy()] += d["val"].to_numpy(np.int64)
-    ys, xs, acc, _term, cross, t_ys, t_xs, _s, _c, t = mosaic_tile_arrays(aug, weights)
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
+    ys, xs, acc, _term, cross, t_ys, t_xs, _s, _c, tt = _plain_arrays(
+        t.grid, strips, _weights(strips, t.h, t.w))
     keep = acc >= min_acc
-    has_tgt = (t >= 0) | cross  # live descent target somewhere in the mosaic
-    tgx = np.where(has_tgt, gx0 + t_xs, np.int64(-1))
-    tgy = np.where(has_tgt, gy0 + t_ys, np.int64(-1))
+    has_tgt = (tt >= 0) | cross  # live descent target somewhere in the mosaic
+    tgx = np.where(has_tgt, t.gx0 + t_xs, np.int64(-1))
+    tgy = np.where(has_tgt, t.gy0 + t_ys, np.int64(-1))
     return pd.DataFrame({
-        "gx": gx0 + xs[keep].astype(np.int64),
-        "gy": gy0 + ys[keep].astype(np.int64),
+        **t.cells(ys[keep], xs[keep]),
         "acc": acc[keep],
         "tgt_gx": tgx[keep],
         "tgt_gy": tgy[keep],
@@ -738,27 +711,14 @@ def solve_stream_order(cells: pd.DataFrame) -> pd.DataFrame:
     Pure pandas/numpy — ONE executor task."""
     n = len(cells)
     if n == 0:
-        return pd.DataFrame({
-            "gx": pd.Series([], dtype=np.int64),
-            "gy": pd.Series([], dtype=np.int64),
-            "acc": pd.Series([], dtype=np.int64),
-            "sorder": pd.Series([], dtype=np.int64),
-        })
+        return _empty(MOSAIC_STREAM_SCHEMA)
     gx = cells["gx"].to_numpy(np.int64)
     gy = cells["gy"].to_numpy(np.int64)
     acc = cells["acc"].to_numpy(np.int64)
     tgx = cells["tgt_gx"].to_numpy(np.int64)
     tgy = cells["tgt_gy"].to_numpy(np.int64)
-    key = (gx << np.int64(32)) | gy
-    order_k = np.argsort(key, kind="stable")
-    key_sorted = key[order_k]
-    has = tgx >= 0
-    tkey = (tgx << np.int64(32)) | tgy
-    st = np.full(n, -1, dtype=np.int64)
-    pos = np.searchsorted(key_sorted, tkey[has])
-    pos_c = np.clip(pos, 0, n - 1)
-    ok = key_sorted[pos_c] == tkey[has]
-    st[np.flatnonzero(has)[ok]] = order_k[pos_c[ok]]
+    st = np.where(tgx >= 0, _find((gx << np.int64(32)) | gy,
+                                  (tgx << np.int64(32)) | tgy), -1)
 
     indeg = np.zeros(n, dtype=np.int64)
     np.add.at(indeg, st[st >= 0], 1)
@@ -806,9 +766,9 @@ def mosaic_stream_order(tiles: DataFrame, min_acc: int = 5) -> DataFrame:
     pinned in tests/test_mosaic.py). The mosaic closure of the r8
     per-tile ``stream_order``, whose orders reset at tile borders.
 
-    Composition: the drainage pipeline through the delta broadcast
-    (halo exchange, border pass, one-task border solve — so the
-    weighted per-tile pass sees the MOSAIC accumulation), then a
+    Composition: the drainage spine with the deltas routed back (halo
+    exchange, border pass, one-task border solve — so the weighted
+    per-tile pass sees the MOSAIC accumulation), whose final pass is a
     stream pass that emits only the sparse stream skeleton (owned
     cells at/above threshold + their immediate D8 target in global
     coords), and ONE more bounded task running the (max, count-at-max)
@@ -823,78 +783,25 @@ def mosaic_stream_order(tiles: DataFrame, min_acc: int = 5) -> DataFrame:
     the documented fallback if a mosaic's skeleton outgrows one
     executor is the same distributed-rounds variant as the border
     solve's). Integer-exact gate surface (counts and orders)."""
-    from ..cache import scope
-
-    sc = scope("mosaic")
-    sc.release()
-    strips = sc.hold(halo_strips(tiles).cache())
-    border = (
-        tiles.groupby("image_id")
-        .cogroup(strips.groupby("image_id"))
-        .applyInPandas(lambda l, r: _border_pass(l, r), schema=BORDER_SCHEMA)
-    )
-    solved = border.groupBy(F.lit(0).alias("_g")).applyInPandas(
-        lambda _k, pdf: solve_border_graph(pdf), schema=SOLVE_SCHEMA
-    )
-    deltas = solved.filter(F.col("kind") == "d").select(
-        F.col("img").alias("image_id"),
-        F.lit("d").alias("side"),
-        F.col("ly").alias("pos"),
-        F.col("lx").alias("pos2"),
-        F.col("v").alias("val"),
-    )
-    strips2 = strips.unionByName(deltas)
-    skeleton = (
-        tiles.groupby("image_id")
-        .cogroup(strips2.groupby("image_id"))
-        .applyInPandas(
-            lambda l, r: _stream_pass(l, r, min_acc),
-            schema=STREAM_CELLS_SCHEMA,
-        )
-    )
-    return skeleton.groupBy(F.lit(0).alias("_g")).applyInPandas(
-        lambda _k, pdf: solve_stream_order(pdf), schema=MOSAIC_STREAM_SCHEMA
-    )
+    sc = _fresh_scope()
+    skeleton = _drain(tiles, sc.hold(halo_strips(tiles).cache()), ("d",), sc,
+                      lambda t, s: _stream_pass(t, s, min_acc), STREAM_CELLS_SCHEMA)
+    return _solve_once(skeleton, solve_stream_order, MOSAIC_STREAM_SCHEMA)
 
 
-def _length_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame) -> pd.DataFrame:
+def _length_pass(t: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
     """Cogroup body for mosaic_flow_length: unweighted local pass ->
     per-owned-cell WHOLE-MOSAIC path split. The solved per-edge
     downstream splits ride the strip frame as side='u' rows
     (val = (d_steps<<32)|d_card keyed by the edge src's local coords),
     so total = local split + the terminal edge's downstream split
     resolves HERE — no raster-sized join downstream."""
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "gx": pd.Series([], dtype=np.int64),
-            "gy": pd.Series([], dtype=np.int64),
-            "steps": pd.Series([], dtype=np.int64),
-            "n_card": pd.Series([], dtype=np.int64),
-            "n_diag": pd.Series([], dtype=np.int64),
-        })
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    h, w = grid.shape
-    aug = _assemble_aug(grid, strips)
-    ys, xs, _acc, term, _cross, _t_ys, _t_xs, steps, ncard, _t = mosaic_tile_arrays(aug)
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
-    umap = strips[strips["side"] == "u"]
-    if len(umap):
-        src_sorted, d_steps, d_card = _unpack_map(umap, w)
-        tk = ys[term].astype(np.int64) * w + xs[term]
-        pos = np.searchsorted(src_sorted, tk)
-        pos_c = np.clip(pos, 0, len(src_sorted) - 1)
-        ok = src_sorted[pos_c] == tk
-        steps = steps + np.where(ok, d_steps[pos_c], 0)
-        ncard = ncard + np.where(ok, d_card[pos_c], 0)
+    ys, xs, _acc, term, _cross, _t_ys, _t_xs, steps, ncard, _t = _plain_arrays(
+        t.grid, strips)
+    _hit, d_steps, d_card = _edge_map(strips, "u", ys, xs, term, t.w)
+    steps, ncard = steps + d_steps, ncard + d_card
     return pd.DataFrame({
-        "gx": gx0 + xs.astype(np.int64),
-        "gy": gy0 + ys.astype(np.int64),
-        "steps": steps,
-        "n_card": ncard,
-        "n_diag": steps - ncard,
+        **t.cells(ys, xs), "steps": steps, "n_card": ncard, "n_diag": steps - ncard,
     })
 
 
@@ -906,45 +813,21 @@ def mosaic_flow_length(tiles: DataFrame) -> DataFrame:
     in tests/test_mosaic.py). The mosaic closure of the per-tile
     ``terrain.flow_path_length``, whose paths stop at tile borders.
 
-    Composition: the drainage family's halo exchange + border pass
-    (``_border_pass`` now also ships each entry cell's local path
-    split), the one-task border solve (whose reverse-Kahn chains
-    per-edge downstream splits alongside the terminal map), then ONE
-    more per-tile pass with the solved per-edge splits riding the
-    strip frame back (side='u') — total = local split + edge
-    downstream split, resolved in-kernel. Unlike accumulation, length
+    Composition: the drainage spine (``_border_pass`` also ships each
+    entry cell's local path split, and the one-task border solve's
+    reverse-Kahn chains per-edge downstream splits alongside the
+    terminal map) with the solved per-edge splits routed back as
+    side='u' — total = local split + edge downstream split, resolved
+    in-kernel by the final per-tile pass. Unlike accumulation, length
     is purely additive along the path (no inflow), so no weighted
     rerun / delta strips are needed: the raster crosses exactly two
     cogroups and nothing else shuffles (strips, border rows and the
     edge map stay perimeter-sized). Integer-exact gate surface:
     steps/n_card/n_diag are counts; the metric length
     n_card + sqrt(2)*n_diag never enters a hashed column."""
-    from ..cache import scope
-
-    sc = scope("mosaic")
-    sc.release()
-    strips = sc.hold(halo_strips(tiles).cache())
-    border = (
-        tiles.groupby("image_id")
-        .cogroup(strips.groupby("image_id"))
-        .applyInPandas(lambda l, r: _border_pass(l, r), schema=BORDER_SCHEMA)
-    )
-    solved = border.groupBy(F.lit(0).alias("_g")).applyInPandas(
-        lambda _k, pdf: solve_border_graph(pdf), schema=SOLVE_SCHEMA
-    )
-    edge_len = solved.filter(F.col("kind") == "t").select(
-        F.col("img").alias("image_id"),
-        F.lit("u").alias("side"),
-        F.col("ly").alias("pos"),
-        F.col("lx").alias("pos2"),
-        (F.col("s") * F.lit(int(_PACK)) + F.col("c")).alias("val"),
-    )
-    strips2 = strips.unionByName(edge_len)
-    return (
-        tiles.groupby("image_id")
-        .cogroup(strips2.groupby("image_id"))
-        .applyInPandas(lambda l, r: _length_pass(l, r), schema=LEN_CELLS_SCHEMA)
-    )
+    sc = _fresh_scope()
+    return _drain(tiles, sc.hold(halo_strips(tiles).cache()), ("u",), sc,
+                  _length_pass, LEN_CELLS_SCHEMA)
 
 
 # -------------------------------------------------- seam-correct stencils
@@ -956,7 +839,7 @@ MOSAIC_TERRAIN_SCHEMA = (
 )
 
 
-def _terrain_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame) -> pd.DataFrame:
+def _terrain_pass(t: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
     """Cogroup body: halo-augmented grid -> the full first- AND
     second-order stencil surface over the tile's OWNED cells, in global
     coordinates. Pure reuse: ``terrain.horn_grid`` / ``terrain.
@@ -965,37 +848,17 @@ def _terrain_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame) -> pd.DataFrame:
     its true cross-seam 3x3 neighborhood, so the mosaic union is
     bit-equal to running the per-tile kernels on the assembled
     whole-mosaic grid (pinned in tests/test_mosaic.py)."""
-    from .terrain import aspect_octant, horn_grid, morph_grid
-
-    cols = {
-        "gx": np.int64, "gy": np.int64, "z": np.int32, "ndx": np.int64,
-        "ndy": np.int64, "slope_q": np.int64, "aspect_oct": np.int32,
-        "tpi8": np.int64, "tri": np.int64, "rough": np.int64,
-        "zxx": np.int64, "zyy": np.int64, "ixy4": np.int64,
-    }
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({k: pd.Series([], dtype=d) for k, d in cols.items()})
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    h, w = grid.shape
-    aug = _assemble_aug(grid, strips)
+    aug = _assemble_aug(t.grid, strips)
     ys, xs, ndx, ndy = horn_grid(aug)
     mys, mxs, tpi8, tri, rough, zxx, zyy, ixy4 = morph_grid(aug)
     # both kernels suppress on the same condition (any NOVALUE in the
     # 3x3, center included) in the same row-major order
     assert np.array_equal(ys, mys) and np.array_equal(xs, mxs)
-    ly = ys - 1  # aug frame -> local tile frame
-    lx = xs - 1
-    keep = (lx < w - 1) & (ly < h - 1)  # ownership: shared border cells
-    ly, lx = ly[keep], lx[keep]         # belong to the tile at x=0/y=0
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
-    ndx, ndy = ndx[keep], ndy[keep]
+    ly, lx, keep = _owned(ys, xs, t.h, t.w)
+    ly, lx, ndx, ndy = ly[keep], lx[keep], ndx[keep], ndy[keep]
     return pd.DataFrame({
-        "gx": gx0 + lx.astype(np.int64),
-        "gy": gy0 + ly.astype(np.int64),
-        "z": grid[ly, lx].astype(np.int32),
+        **t.cells(ly, lx),
+        "z": t.grid[ly, lx].astype(np.int32),
         "ndx": ndx,
         "ndy": ndy,
         "slope_q": ndx * ndx + ndy * ndy,
@@ -1012,44 +875,20 @@ def _terrain_pass(tile_pdf: pd.DataFrame, strips: pd.DataFrame) -> pd.DataFrame:
 MOSAIC_HILLSHADE_SCHEMA = "gx long, gy long, shade int"
 
 
-def _hillshade_pass(
-    tile_pdf: pd.DataFrame,
-    strips: pd.DataFrame,
-    azimuth_deg: float,
-    altitude_deg: float,
-    z_factor: float,
-) -> pd.DataFrame:
+def _hillshade_pass(t: _Tile, strips: pd.DataFrame, azimuth_deg: float,
+                    altitude_deg: float, z_factor: float) -> pd.DataFrame:
     """Cogroup body: halo-augmented grid -> quantized uint8 hillshade
     over the tile's OWNED cells in global coordinates. Pure reuse:
     ``terrain.hillshade_grid`` runs UNCHANGED on the (h+2, w+2)
     augmented grid, so owned border cells render with their true
     cross-seam 3x3 neighborhood."""
-    from .terrain import hillshade_grid, horn_grid
-
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "gx": pd.Series([], dtype=np.int64),
-            "gy": pd.Series([], dtype=np.int64),
-            "shade": pd.Series([], dtype=np.int32),
-        })
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    h, w = grid.shape
-    aug = _assemble_aug(grid, strips)
+    aug = _assemble_aug(t.grid, strips)
     ys, xs, _ndx, _ndy = horn_grid(aug)  # valid cells, aug frame
     shade = hillshade_grid(aug, azimuth_deg, altitude_deg, z_factor)
-    ly = ys - 1  # aug frame -> local tile frame; shade's interior
-    lx = xs - 1  # render is indexed by the same local coords
-    keep = (lx < w - 1) & (ly < h - 1)
+    # shade's interior render is indexed by the local tile coords
+    ly, lx, keep = _owned(ys, xs, t.h, t.w)
     ly, lx = ly[keep], lx[keep]
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
-    return pd.DataFrame({
-        "gx": gx0 + lx.astype(np.int64),
-        "gy": gy0 + ly.astype(np.int64),
-        "shade": shade[ly, lx].astype(np.int32),
-    })
+    return pd.DataFrame({**t.cells(ly, lx), "shade": shade[ly, lx].astype(np.int32)})
 
 
 def mosaic_hillshade_cells(
@@ -1071,16 +910,10 @@ def mosaic_hillshade_cells(
     quantized integer (0..255); the trig stays inside the kernel,
     re-derived per-cell with math-module trig over the assembled
     whole-mosaic grid by the golden twin (tools/make_golden.py)."""
-    strips = halo_strips(tiles)
-    return (
-        tiles.groupby("image_id")
-        .cogroup(strips.groupby("image_id"))
-        .applyInPandas(
-            lambda l, r: _hillshade_pass(
-                l, r, azimuth_deg, altitude_deg, z_factor
-            ),
-            schema=MOSAIC_HILLSHADE_SCHEMA,
-        )
+    return _per_tile(
+        tiles, halo_strips(tiles),
+        lambda t, s: _hillshade_pass(t, s, azimuth_deg, altitude_deg, z_factor),
+        MOSAIC_HILLSHADE_SCHEMA,
     )
 
 
@@ -1104,94 +937,35 @@ def mosaic_terrain_cells(tiles: DataFrame) -> DataFrame:
     bucketing at 100 TB); the stencil pass itself stays one narrow
     Arrow kernel per tile with no Exchange downstream. Integer-exact
     gate surface throughout (same discipline as the per-tile ops)."""
-    strips = halo_strips(tiles)
-    return (
-        tiles.groupby("image_id")
-        .cogroup(strips.groupby("image_id"))
-        .applyInPandas(lambda l, r: _terrain_pass(l, r),
-                       schema=MOSAIC_TERRAIN_SCHEMA)
-    )
+    return _per_tile(tiles, halo_strips(tiles), _terrain_pass, MOSAIC_TERRAIN_SCHEMA)
 
 
 # ------------------------------------------------- mosaic depression fill
 
 MOSAIC_FILL_SCHEMA = "gx long, gy long, z int, zfill int"
-#: round-1 boundary estimate at every EXISTING neighbor seam: an
-#: impassable-high pass. Must exceed every true elevation (HGT valid
-#: range tops out ~8850 m; the synthetic generators clip at 32000) —
-#: the cells pass asserts no WALL survives to the fixpoint output.
+#: impassable-high elevation: above every true elevation (HGT valid
+#: range tops out ~8850 m; the synthetic generators clip at 32000).
+#: The block-Jacobi test twin seeds interior seams with it; the cells
+#: pass asserts no filled value reaches it.
 FILL_WALL = 32767
 
 
-def _fill_W(tile_pdf: pd.DataFrame, strips: pd.DataFrame):
-    """Decode one tile, assemble the halo-augmented grid whose RING
-    carries the current round's neighbor-W estimates (absent ring =
-    NOVALUE = mosaic edge drains), and fill it. Ring cells sit on the
-    aug boundary, so fill_grid's own seed rule (< 8 valid neighbors)
-    makes them seeds at exactly the estimate values — the per-tile
-    exact solve of the block-Jacobi iteration, zero kernel changes."""
-    from .terrain import fill_grid
-
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, _k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    aug = _assemble_aug(grid, strips)
-    W = fill_grid(aug)
-    return img, lat, lon, grid, W[1:-1, 1:-1]  # owned-plane view (h, w)
+def _fill_W(t: _Tile, strips: pd.DataFrame) -> np.ndarray:
+    """Fill the tile's halo-augmented grid whose RING carries the
+    neighbor W values (absent ring = NOVALUE = mosaic edge drains).
+    Ring cells sit on the aug boundary, so fill_grid's own seed rule
+    (< 8 valid neighbors) makes them seeds at exactly those values —
+    the per-tile exact solve, zero kernel changes. Returns the
+    owned-plane (h, w) view."""
+    return fill_grid(_assemble_aug(t.grid, strips))[1:-1, 1:-1]
 
 
-def _fill_strips_pass(tile_pdf: pd.DataFrame,
-                      strips: pd.DataFrame) -> pd.DataFrame:
-    """Cogroup body for one halo round: per-tile fill -> the NEW
-    outgoing W strips (same geometry as halo_strips: the SECOND
-    row/column in from each shared edge, in the RECEIVER's frame)."""
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "image_id": pd.Series([], dtype=object),
-            "side": pd.Series([], dtype=object),
-            "pos": pd.Series([], dtype=np.int32),
-            "pos2": pd.Series([], dtype=np.int32),
-            "val": pd.Series([], dtype=np.int64),
-        })
-    _img, lat, lon, grid, W = _fill_W(tile_pdf, strips)
-    h, w = grid.shape
-    k = parse_tile_id(tile_pdf["image_id"].iloc[0])[2]
-    emits = (
-        ("s", 1, 0, W[1, :], np.arange(w)),
-        ("n", -1, 0, W[h - 2, :], np.arange(w)),
-        ("e", 0, -1, W[:, 1], np.arange(h)),
-        ("w", 0, 1, W[:, w - 2], np.arange(h)),
-        ("se", 1, -1, W[1:2, 1], np.zeros(1, np.int64)),
-        ("sw", 1, 1, W[1:2, w - 2], np.zeros(1, np.int64)),
-        ("ne", -1, -1, W[h - 2 : h - 1, 1], np.zeros(1, np.int64)),
-        ("nw", -1, 1, W[h - 2 : h - 1, w - 2], np.zeros(1, np.int64)),
-    )
-    out = []
-    for side, dlat, dlon, vals, pos in emits:
-        out.append(pd.DataFrame({
-            "image_id": tile_id(lat + dlat, lon + dlon, k),
-            "side": side,
-            "pos": pos.astype(np.int32),
-            "pos2": np.zeros(len(pos), dtype=np.int32),
-            "val": np.asarray(vals, dtype=np.int64),
-        }))
-    return pd.concat(out, ignore_index=True)
-
-
-def _fill_cells_pass(tile_pdf: pd.DataFrame,
-                     strips: pd.DataFrame) -> pd.DataFrame:
-    """Final cogroup body: per-tile fill with the CONVERGED ring ->
+def _fill_cells_pass(t: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
+    """Final cogroup body: per-tile fill with the solved W ring ->
     owned valid cells in global coordinates."""
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "gx": pd.Series([], dtype=np.int64),
-            "gy": pd.Series([], dtype=np.int64),
-            "z": pd.Series([], dtype=np.int32),
-            "zfill": pd.Series([], dtype=np.int32),
-        })
-    _img, lat, lon, grid, W = _fill_W(tile_pdf, strips)
-    h, w = grid.shape
-    ys, xs = np.nonzero(grid != NOVALUE)
+    W = _fill_W(t, strips)
+    h, w = t.h, t.w
+    ys, xs = np.nonzero(t.grid != NOVALUE)
     # Ownership, fill edition: the drainage family's cut (x < w-1,
     # y < h-1) suffices there because the D8 universe never includes
     # tile-border cells — fill's universe DOES, so the mosaic's global
@@ -1215,19 +989,14 @@ def _fill_cells_pass(tile_pdf: pd.DataFrame,
     ys, xs = ys[own], xs[own]
     zf = W[ys, xs]
     assert (zf < FILL_WALL).all(), (
-        "mosaic_fill: WALL leaked past the fixpoint (elevation >= 32767?)"
+        "mosaic_fill: filled surface reached FILL_WALL (elevation >= 32767?)"
     )
-    gx0 = cell_gx(lon, 0, w)
-    gy0 = cell_gy(lat, 0, h)
     return pd.DataFrame({
-        "gx": gx0 + xs.astype(np.int64),
-        "gy": gy0 + ys.astype(np.int64),
-        "z": grid[ys, xs].astype(np.int32),
+        **t.cells(ys, xs),
+        "z": t.grid[ys, xs].astype(np.int32),
         "zfill": zf.astype(np.int32),
     })
 
-
-# --------------------- single-solve fill (Barnes 2016 shape, r9) ----------
 
 PROFILE_SCHEMA = ("kind string, img string, side string, pos int, "
                   "ka long, kb long, lam long")
@@ -1343,82 +1112,34 @@ def _fill_profile_events_py(g, valid, seed, band):
     return events
 
 
-def _fill_profile_pass(tile_pdf: pd.DataFrame,
-                       strips: pd.DataFrame) -> pd.DataFrame:
-    """Cogroup body of the ONE profile pass: decode the tile, build the
-    z-ringed aug, emit (a) its border-band dendrogram events with node
-    keys in GLOBAL coordinates — shared border cells of neighboring
-    tiles get the SAME key, which is exactly how the per-tile trees
-    join into the mosaic graph — and (b) one destination row per strip
-    slot the converged-Jacobi iteration would have emitted (same
-    receiver/side/pos enumeration as _fill_strips_pass), carrying the
+def _fill_profile_pass(t: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
+    """Cogroup body of the ONE profile pass: build the z-ringed aug and
+    emit (a) the tile's border-band dendrogram events with node keys
+    in GLOBAL coordinates — shared border cells of neighboring tiles
+    get the SAME key, which is exactly how the per-tile trees join
+    into the mosaic graph — and (b) one destination row per W strip
+    slot the tile sends (the _edge_strips geometry), carrying the
     slot's cell key so the solver can write the strip values itself."""
-    cols = ("kind", "img", "side", "pos", "ka", "kb", "lam")
-    if len(tile_pdf) == 0:
-        return pd.DataFrame({
-            "kind": pd.Series([], dtype=object),
-            "img": pd.Series([], dtype=object),
-            "side": pd.Series([], dtype=object),
-            "pos": pd.Series([], dtype=np.int32),
-            "ka": pd.Series([], dtype=np.int64),
-            "kb": pd.Series([], dtype=np.int64),
-            "lam": pd.Series([], dtype=np.int64),
-        })
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    h, w = grid.shape
-    aug = _assemble_aug(grid, strips)
-    events = fill_profile_events(aug)
-    gx0 = np.int64(cell_gx(lon, 0, w))
-    gy0 = np.int64(cell_gy(lat, 0, h))
-
-    def key(lin: np.ndarray) -> np.ndarray:
-        out = np.asarray(lin, dtype=np.int64)
-        pos = out >= 0
-        ys_, xs_ = out[pos] // w, out[pos] % w
-        packed = (gx0 + xs_) * (np.int64(1) << np.int64(32)) + (gy0 + ys_)
-        res = out.copy()
-        res[pos] = packed
-        return res
-
-    frames = []
-    if events:
-        ea = np.array([e[0] for e in events], dtype=np.int64)
-        eb = np.array([e[1] for e in events], dtype=np.int64)
-        el = np.array([e[2] for e in events], dtype=np.int64)
-        frames.append(pd.DataFrame({
-            "kind": "e", "img": img, "side": "",
-            "pos": np.zeros(len(ea), dtype=np.int32),
-            "ka": key(ea), "kb": key(eb), "lam": el,
-        }))
-    gi = grid.astype(np.int64)
-    emits = (
-        ("s", 1, 0, np.full(w, 1), np.arange(w)),
-        ("n", -1, 0, np.full(w, h - 2), np.arange(w)),
-        ("e", 0, -1, np.arange(h), np.full(h, 1)),
-        ("w", 0, 1, np.arange(h), np.full(h, w - 2)),
-        ("se", 1, -1, np.array([1]), np.array([1])),
-        ("sw", 1, 1, np.array([1]), np.array([w - 2])),
-        ("ne", -1, -1, np.array([h - 2]), np.array([1])),
-        ("nw", -1, 1, np.array([h - 2]), np.array([w - 2])),
-    )
-    for side, dlat, dlon, ys_, xs_ in emits:
-        lin = ys_.astype(np.int64) * w + xs_.astype(np.int64)
-        ka = np.where(gi.ravel()[lin] == NOVALUE, np.int64(_K_NOVALUE),
-                      key(lin))
-        if side in ("e", "w"):
-            pos = ys_
-        elif side in ("s", "n"):
-            pos = xs_
-        else:
-            pos = np.zeros(1, dtype=np.int64)
-        frames.append(pd.DataFrame({
-            "kind": "d", "img": tile_id(lat + dlat, lon + dlon, k),
-            "side": side, "pos": pos.astype(np.int32),
-            "ka": ka, "kb": np.int64(0), "lam": np.int64(0),
-        }))
-    return pd.concat(frames, ignore_index=True)[list(cols)]
+    events = np.array(fill_profile_events(_assemble_aug(t.grid, strips)),
+                      dtype=np.int64).reshape(-1, 3)
+    # global key gx * 2^32 + gy of every local cell
+    keys = np.add.outer(t.gy0 + np.arange(t.h, dtype=np.int64),
+                        (t.gx0 + np.arange(t.w, dtype=np.int64)) * _PACK)
+    ka, kb = (np.where(e >= 0, keys.ravel()[np.maximum(e, 0)], e)
+              for e in (events[:, 0], events[:, 1]))
+    dest = _edge_strips(np.where(t.grid == NOVALUE, _K_NOVALUE, keys), t.img)
+    return _frame([
+        pd.DataFrame({
+            "kind": "e", "img": t.img, "side": "",
+            "pos": np.zeros(len(events), dtype=np.int32),
+            "ka": ka, "kb": kb, "lam": events[:, 2],
+        }),
+        pd.DataFrame({
+            "kind": "d", "img": dest["image_id"], "side": dest["side"],
+            "pos": dest["pos"], "ka": dest["val"],
+            "kb": np.int64(0), "lam": np.int64(0),
+        }),
+    ], PROFILE_SCHEMA)
 
 
 def solve_fill_border(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1426,12 +1147,12 @@ def solve_fill_border(pdf: pd.DataFrame) -> pd.DataFrame:
     precedent of solve_border_graph): minimax-Dijkstra from OUT over
     the union of every tile's dendrogram events — shared border cells
     carry the same global key, so the per-tile trees concatenate into
-    the mosaic's border graph — then write the converged W strips
+    the mosaic's border graph — then write the solved W strips
     directly from the destination rows. W(node) = min over paths to
     OUT of the max event level = the true mosaic fill at that cell;
     feeding these strips to the UNCHANGED _fill_cells_pass reproduces
-    the Jacobi fixpoint bit-for-bit (equality pinned in
-    tests/test_mosaic.py against the iterated path)."""
+    fill_grid on the assembled mosaic (strips pinned equal to the
+    block-Jacobi twin's fixpoint in tests/test_mosaic.py)."""
     import heapq
 
     ev = pdf[pdf["kind"] == "e"]
@@ -1476,117 +1197,41 @@ def solve_fill_border(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def _solved_fill_strips(tiles: DataFrame, sc) -> DataFrame:
-    """Single-solve replacement for _converged_fill_strips (VERDICT r8
-    #1): ONE profile cogroup + ONE bounded solve task instead of
-    (depression seam-span) halo rounds each re-decoding and re-filling
-    every tile. Returns the same converged W strips frame (cached in
-    `sc`); the iterated path stays as the mechanism-independent twin,
-    equality pinned in tests/test_mosaic.py."""
+    """The solved W strips (STRIP_SCHEMA, cached in `sc`): ONE profile
+    cogroup over the halo z strips + ONE bounded solve task, pinned
+    equal to the converged strips of the mechanism-independent
+    block-Jacobi twin (tests/mosaic_jacobi.py) in tests/test_mosaic.py."""
     zstrips = sc.hold(halo_strips(tiles).cache())
-    prof = (
-        tiles.groupby("image_id")
-        .cogroup(zstrips.groupby("image_id"))
-        .applyInPandas(
-            lambda l, r: _fill_profile_pass(l, r), schema=PROFILE_SCHEMA
-        )
-    )
-    strips = (
-        prof.groupBy(F.lit(0).alias("_g"))
-        .applyInPandas(
-            lambda _k, pdf: solve_fill_border(pdf), schema=STRIP_SCHEMA
-        )
-    )
-    return sc.hold(strips.cache())
+    prof = _per_tile(tiles, zstrips, _fill_profile_pass, PROFILE_SCHEMA)
+    return sc.hold(_solve_once(prof, solve_fill_border, STRIP_SCHEMA).cache())
 
 
-def mosaic_fill(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
+def mosaic_fill(tiles: DataFrame) -> DataFrame:
     """PRODUCTION mosaic-scale depression filling: tiles (input_hint
     schema) -> per-owned-valid-cell (gx, gy, z, zfill) where zfill is
     the WHOLE-MOSAIC Priority-Flood surface (bit-equal to fill_grid on
     the assembled mosaic — pinned in tests/test_mosaic.py, including
-    bowls that straddle seams).
+    bowls that straddle seams and a depression spanning nine tiles).
 
-    Distributed shape — block-Jacobi with exact per-tile solves
-    (the fill analogue of Barnes 2016's tiled decomposition, iterated
-    instead of border-solved because fill state is a full border
-    PROFILE, not a functional graph):
-     1. round 1 treats every interior seam as an impassable-high WALL
-        (ring = 32767 at existing neighbors, NOVALUE where the mosaic
-        ends) — an upper bound on the true boundary values;
-     2. each round cogroups (tiles x current W strips), runs the
-        UNCHANGED per-tile fill kernel on the halo-augmented grid
-        (the ring is seed row by fill_grid's own < 8-valid-neighbors
-        rule), and emits fresh perimeter W strips;
-     3. the iteration is monotone DECREASING from an upper bound, so
-        it converges to the greatest fixpoint of the global minimax
-        equation — the true mosaic fill (same argument as the numpy
-        reconstruction-by-erosion oracle, one level up); convergence
-        is detected by an order-free checksum aggregate over the
-        strips (one tiny Spark job per round, never a driver collect
-        of the strips themselves);
-     4. a final cogroup emits owned cells.
+    Distributed shape — the Barnes 2016 single solve, three stages:
+     1. one profile cogroup (tiles x halo z strips): each tile
+        compresses its filled-surface minimax metric to a border-band
+        dendrogram (fill_profile_events, C Kruskal kernel) with node
+        keys in global coordinates;
+     2. ONE bounded task (solve_fill_border): minimax-Dijkstra from
+        the mosaic drain over the union of the dendrograms, writing
+        the mosaic-true W value of every strip slot;
+     3. a final cogroup (tiles x W strips) runs the UNCHANGED per-tile
+        fill kernel on the W-ringed grid and emits owned cells.
 
-    Rounds needed = how many tiles the deepest cross-seam depression
-    spans (+1): information crosses one seam per round. Gate mosaics
-    converge in ~3; a planet mosaic's worst chain is the longest
-    low-relief corridor, bounded by max_rounds (RAISES rather than
-    silently capping). Per round the raster is decoded and filled once
-    per tile (C heap: ~2.3 s/SRTM-1 tile) and only perimeter-sized
-    strips shuffle — the Barnes single-solve variant (border minimax
-    profiles + one global solve) is the documented next step if round
-    count ever dominates."""
-    from ..cache import scope
-
-    sc = scope("mosaic")
-    sc.release()
-    strips = _solved_fill_strips(tiles, sc)
-    return (
-        tiles.groupby("image_id")
-        .cogroup(strips.groupby("image_id"))
-        .applyInPandas(
-            lambda l, r: _fill_cells_pass(l, r), schema=MOSAIC_FILL_SCHEMA
-        )
-    )
-
-
-def _strip_checksum(df: DataFrame):
-    """Order-free fingerprint of a strip frame: one tiny agg job."""
-    row = df.agg(
-        F.expr("bit_xor(xxhash64(image_id, side, pos, pos2, val))"),
-        F.count("*"),
-    ).collect()[0]
-    return (row[0], row[1])
-
-
-def _converged_fill_strips(tiles: DataFrame, sc, max_rounds: int) -> DataFrame:
-    """The mosaic_fill halo iteration, exposed: returns the CONVERGED
-    perimeter W strips (cached in `sc`). mosaic_routed_flow reuses
-    them as the boundary condition for the filled surface."""
-    zstrips = sc.hold(halo_strips(tiles).cache())
-    strips = zstrips.select(
-        "image_id", "side", "pos", "pos2",
-        F.when(F.col("val") == int(NOVALUE), F.col("val"))
-        .otherwise(F.lit(FILL_WALL)).cast("long").alias("val"),
-    )
-    prev = None
-    for _round in range(max_rounds):
-        strips = sc.hold(strips.cache())
-        nxt = (
-            tiles.groupby("image_id")
-            .cogroup(strips.groupby("image_id"))
-            .applyInPandas(
-                lambda l, r: _fill_strips_pass(l, r), schema=STRIP_SCHEMA
-            )
-        )
-        nxt = sc.hold(nxt.cache())
-        chk = _strip_checksum(nxt)
-        if chk == prev:
-            return strips
-        prev = chk
-        strips = nxt
-    raise RuntimeError(
-        f"mosaic_fill did not converge in {max_rounds} rounds"
-    )
+    Fill state is a full border profile, not a functional graph, so it
+    does not ride the drainage spine. Per call each tile is decoded
+    and filled twice (profile, cells); only perimeter-sized rows
+    shuffle, and the job count does not depend on how many tiles a
+    depression spans."""
+    sc = _fresh_scope()
+    return _per_tile(tiles, _solved_fill_strips(tiles, sc), _fill_cells_pass,
+                     MOSAIC_FILL_SCHEMA)
 
 
 # -------------------------------------- mosaic conditioned drainage
@@ -1595,86 +1240,47 @@ def _converged_fill_strips(tiles: DataFrame, sc, max_rounds: int) -> DataFrame:
 #: far above any real hop count; strips carry it verbatim)
 DIST_INF = np.int64(1) << np.int64(40)
 
-_QSIDES = {"qn": "n", "qs": "s", "qe": "e", "qw": "w",
-           "qne": "ne", "qnw": "nw", "qse": "se", "qsw": "sw"}
+
+def _flat_candidates(dplane, augW, part):
+    """Per D8 neighbor k -> (k, target slices, candidate plane): the
+    neighbor's BFS dist where it is a flat-routing candidate (a
+    participant of EQUAL filled elevation), else DIST_INF."""
+    ha, wa = augW.shape
+    for k, (_c, dx, dy, _card) in enumerate(D8_NEIGHBORS):
+        src = (slice(max(dy, 0), ha + min(dy, 0)), slice(max(dx, 0), wa + min(dx, 0)))
+        tgt = (slice(max(-dy, 0), ha + min(-dy, 0)), slice(max(-dx, 0), wa + min(-dx, 0)))
+        yield k, tgt, np.where(part[src] & (augW[src] == augW[tgt]),
+                               dplane[src], DIST_INF)
 
 
 def _routed_core(grid: np.ndarray, strips: pd.DataFrame):
     """Shared derivation for the mosaic conditioned-drainage passes:
-    decode-side core over ONE tile given the converged fill ring
+    decode-side core over ONE tile given the solved fill ring
     (n/s/e/w/corner sides carry W) and the current flat-distance ring
     (q-prefixed sides, absent = +inf).
 
-    Returns (augW, univ, d8p, tgt_y, tgt_x, dplane) in AUG coords:
+    Returns (augW, univ, d8p, dplane) in AUG coords:
       augW   the tile's filled surface incl. the ring (fill_grid of
-             the W-ringed aug — the per-tile exact solve at the fill
-             fixpoint),
+             the W-ringed aug — the per-tile exact solve),
       univ   the mosaic-universe mask (valid 3x3 on augW),
       d8p    D8 codes on augW (0 = flat/pit),
-      tgt_*  strict-descent target coords per universe cell,
       dplane BFS hop distance to a draining equal-W cell, seeded by
              local draining cells (0) and the ring distances, relaxed
              to the local fixpoint (min-plus rounds; the CROSS-SEAM
              fixpoint emerges from the outer strip iteration)."""
-    from .terrain import D8_NEIGHBORS, d8_grid, fill_grid
-
-    aug = _assemble_aug(grid, strips)
-    augW = fill_grid(aug)
+    augW = fill_grid(_assemble_aug(grid, strips))
     ha, wa = augW.shape
     ys, xs, d8, _ = d8_grid(augW)
     univ = np.zeros((ha, wa), dtype=bool)
     univ[ys, xs] = True
     d8p = np.zeros((ha, wa), dtype=np.int32)
     d8p[ys, xs] = d8
-    tgt_y = np.tile(np.arange(ha, dtype=np.int64)[:, None], (1, wa))
-    tgt_x = np.tile(np.arange(wa, dtype=np.int64)[None, :], (ha, 1))
-    for c, dx, dy, _card in D8_NEIGHBORS:
-        sel = d8p == c
-        tgt_x[sel] += dx
-        tgt_y[sel] += dy
-
-    # ring distances from the q strips (aug boundary positions)
-    ring = np.zeros((ha, wa), dtype=bool)
-    rdist = np.full((ha, wa), DIST_INF, dtype=np.int64)
-    h, w = ha - 2, wa - 2
-    for side, g in strips.groupby("side"):
-        if side not in _QSIDES:
-            continue
-        pos = g["pos"].to_numpy()
-        val = g["val"].to_numpy(np.int64)
-        base = _QSIDES[side]
-        if base == "n":
-            ring[0, 1 + pos] = True
-            rdist[0, 1 + pos] = val
-        elif base == "s":
-            ring[h + 1, 1 + pos] = True
-            rdist[h + 1, 1 + pos] = val
-        elif base == "w":
-            ring[1 + pos, 0] = True
-            rdist[1 + pos, 0] = val
-        elif base == "e":
-            ring[1 + pos, w + 1] = True
-            rdist[1 + pos, w + 1] = val
-        elif base == "nw":
-            ring[0, 0] = True
-            rdist[0, 0] = val[0]
-        elif base == "ne":
-            ring[0, w + 1] = True
-            rdist[0, w + 1] = val[0]
-        elif base == "sw":
-            ring[h + 1, 0] = True
-            rdist[h + 1, 0] = val[0]
-        elif base == "se":
-            ring[h + 1, w + 1] = True
-            rdist[h + 1, w + 1] = val[0]
-    # a ring position exists as a BFS participant even without a q
-    # strip yet (round 1): equal-W adjacency through it only helps once
-    # its distance arrives, so absent == +inf is exactly right
-    ring |= np.zeros_like(ring)
-
+    # ring distances from the q strips; a ring position without one
+    # (round 1, or the mosaic edge) stays +inf
+    rdist = _receive(np.full((ha, wa), DIST_INF, dtype=np.int64), strips, "q")
     dplane = np.full((ha, wa), DIST_INF, dtype=np.int64)
     dplane[univ & (d8p > 0)] = 0
-    np.minimum(dplane, np.where(ring, rdist, DIST_INF), out=dplane)
+    np.minimum(dplane, rdist, out=dplane)
     flat = univ & (d8p == 0)
     # min-plus relaxation to the LOCAL fixpoint: rounds <= local flat
     # diameter; candidates flow through universe cells and ring cells
@@ -1682,25 +1288,13 @@ def _routed_core(grid: np.ndarray, strips: pd.DataFrame):
     part = univ | (rdist < DIST_INF)
     while True:
         best = np.full((ha, wa), DIST_INF, dtype=np.int64)
-        for _c, dx, dy, _card in D8_NEIGHBORS:
-            sy0, sy1 = max(dy, 0), ha + min(dy, 0)
-            ty0, ty1 = max(-dy, 0), ha + min(-dy, 0)
-            sx0, sx1 = max(dx, 0), wa + min(dx, 0)
-            tx0, tx1 = max(-dx, 0), wa + min(-dx, 0)
-            nb_d = dplane[sy0:sy1, sx0:sx1]
-            nb_w = augW[sy0:sy1, sx0:sx1]
-            nb_ok = part[sy0:sy1, sx0:sx1]
-            cand = np.where(
-                nb_ok & (nb_w == augW[ty0:ty1, tx0:tx1]),
-                nb_d, DIST_INF - 1,
-            ) + 1
-            np.minimum(best[ty0:ty1, tx0:tx1], cand,
-                       out=best[ty0:ty1, tx0:tx1])
+        for _k, tgt, cand in _flat_candidates(dplane, augW, part):
+            np.minimum(best[tgt], cand + 1, out=best[tgt])
         nd = np.where(flat, np.minimum(dplane, best), dplane)
         if np.array_equal(nd, dplane):
             break
         dplane = nd
-    return augW, univ, d8p, tgt_y, tgt_x, dplane
+    return augW, univ, d8p, dplane
 
 
 def _routed_arrays(grid: np.ndarray, strips: pd.DataFrame,
@@ -1712,148 +1306,33 @@ def _routed_arrays(grid: np.ndarray, strips: pd.DataFrame,
     code) among universe AND ring cells (a best ring target is a
     cross-seam flat edge, handled by the existing border machinery).
     Acyclic: strict edges drop W, flat edges drop the global BFS dist."""
-    from .terrain import D8_NEIGHBORS
-
-    augW, univ, d8p, tgt_y, tgt_x, dplane = _routed_core(grid, strips)
+    augW, univ, d8p, dplane = _routed_core(grid, strips)
     ha, wa = augW.shape
     h, w = ha - 2, wa - 2
-    part = univ | (dplane < DIST_INF)  # routing candidates incl. ring
-
-    # routed targets for flat universe cells: stacked per-code planes,
-    # first-minimum = smallest ESRI code (np.argmin ties)
-    flat = univ & (d8p == 0)
+    # routed code for flat universe cells: stacked per-neighbor
+    # planes, first-minimum = smallest ESRI code (np.argmin ties)
     cand = np.full((8, ha, wa), DIST_INF, dtype=np.int64)
-    for k, (_c, dx, dy, _card) in enumerate(D8_NEIGHBORS):
-        sy0, sy1 = max(dy, 0), ha + min(dy, 0)
-        ty0, ty1 = max(-dy, 0), ha + min(-dy, 0)
-        sx0, sx1 = max(dx, 0), wa + min(dx, 0)
-        tx0, tx1 = max(-dx, 0), wa + min(-dx, 0)
-        nb_d = dplane[sy0:sy1, sx0:sx1]
-        nb_w = augW[sy0:sy1, sx0:sx1]
-        nb_ok = part[sy0:sy1, sx0:sx1]
-        cand[k][ty0:ty1, tx0:tx1] = np.where(
-            nb_ok & (nb_w == augW[ty0:ty1, tx0:tx1]), nb_d, DIST_INF
-        )
+    for k, tgt, c in _flat_candidates(dplane, augW, univ | (dplane < DIST_INF)):
+        cand[k][tgt] = c
     bestk = np.argmin(cand, axis=0)
-    bestd = np.take_along_axis(cand, bestk[None], axis=0)[0]
-    routed = flat & (bestd < DIST_INF)
-    dxs = np.array([d[1] for d in D8_NEIGHBORS], dtype=np.int64)
-    dys = np.array([d[2] for d in D8_NEIGHBORS], dtype=np.int64)
-    tgt_x = np.where(routed, tgt_x + dxs[bestk] * routed, tgt_x)
-    tgt_y = np.where(routed, tgt_y + dys[bestk] * routed, tgt_y)
-    has_tgt = (d8p > 0) | routed
-
+    routed = univ & (d8p == 0) & (cand.min(axis=0) < DIST_INF)
+    codes = np.array([d[0] for d in D8_NEIGHBORS], dtype=np.int32)
+    code = np.where(routed, codes[bestk], d8p)
     # compact owned universe (row-major), tile coords — the
     # mosaic_tile_arrays contract
     uy, ux = np.nonzero(univ)
-    ty_ = uy - 1
-    tx_ = ux - 1
-    own = (tx_ < w - 1) & (ty_ < h - 1)
-    uy, ux, ty_, tx_ = uy[own], ux[own], ty_[own], tx_[own]
-    n = len(uy)
-    ys_out = ty_.astype(np.int32)
-    xs_out = tx_.astype(np.int32)
-    t_ys = tgt_y[uy, ux] - 1
-    t_xs = tgt_x[uy, ux] - 1
-    htg = has_tgt[uy, ux]
-    lookup = np.full(h * w, -1, dtype=np.int64)
-    lookup[ty_ * w + tx_] = np.arange(n)
-    in_box = (
-        htg
-        & (t_xs >= 0) & (t_xs < w - 1)
-        & (t_ys >= 0) & (t_ys < h - 1)
-    )
-    t = np.full(n, -1, dtype=np.int64)
-    safe_idx = np.where(in_box, t_ys * w + t_xs, 0)
-    t[in_box] = lookup[safe_idx[in_box]]
-    cross = htg & ~in_box
-    # unrouted terminals keep own coords as target coords (the
-    # mosaic_tile_arrays convention for pits)
-    t_ys = np.where(htg, t_ys, ty_)
-    t_xs = np.where(htg, t_xs, tx_)
-
-    if weights is None:
-        acc = np.ones(n, dtype=np.int64)
-    else:
-        acc = weights[ty_, tx_].astype(np.int64).copy()
-    indeg = np.zeros(n, dtype=np.int64)
-    np.add.at(indeg, t[t >= 0], 1)
-    rounds = []
-    frontier = np.flatnonzero(indeg == 0)
-    n_done = 0
-    while frontier.size:
-        rounds.append(frontier)
-        n_done += frontier.size
-        ft = t[frontier]
-        has = ft >= 0
-        tgt = ft[has]
-        if tgt.size == 0:
-            break
-        order = np.argsort(tgt, kind="stable")
-        st = tgt[order]
-        sa = acc[frontier][has][order]
-        cuts = np.flatnonzero(np.r_[True, st[1:] != st[:-1]])
-        uniq = st[cuts]
-        acc[uniq] += np.add.reduceat(sa, cuts)
-        indeg[uniq] -= np.diff(np.r_[cuts, len(st)])
-        frontier = uniq[indeg[uniq] == 0]
-    assert n_done == n, "routed mosaic graph must be acyclic"
-    term = np.arange(n, dtype=np.int64)
-    steps = np.zeros(n, dtype=np.int64)
-    ncard = np.zeros(n, dtype=np.int64)
-    is_card = ((t_xs == tx_) | (t_ys == ty_)).astype(np.int64)
-    for frontier in reversed(rounds):
-        ft = t[frontier]
-        has_t = ft >= 0
-        idx = frontier[has_t]
-        term[idx] = term[ft[has_t]]
-        steps[idx] = steps[ft[has_t]] + 1
-        ncard[idx] = ncard[ft[has_t]] + is_card[idx]
-    return (ys_out, xs_out, acc, term, cross, t_ys, t_xs,
-            steps, ncard, t)
+    ys, xs, own = _owned(uy, ux, h, w)
+    ys, xs, code = ys[own], xs[own], code[uy[own], ux[own]]
+    t_ys, t_xs = _d8_step(ys, xs, code)
+    return _drain_arrays(ys, xs, t_ys, t_xs, code > 0, h, w, weights)
 
 
-def _dist_strips_pass(tile_pdf: pd.DataFrame,
-                      strips: pd.DataFrame) -> pd.DataFrame:
+def _dist_strips_pass(t: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
     """Cogroup body for one flat-distance halo round: per-tile BFS
-    relaxation (given the converged W ring + current q-dist ring) ->
-    fresh outgoing q strips (the dist at the SECOND row/column in from
-    each shared edge — the halo_strips geometry, q-prefixed)."""
-    empty = pd.DataFrame({
-        "image_id": pd.Series([], dtype=object),
-        "side": pd.Series([], dtype=object),
-        "pos": pd.Series([], dtype=np.int32),
-        "pos2": pd.Series([], dtype=np.int32),
-        "val": pd.Series([], dtype=np.int64),
-    })
-    if len(tile_pdf) == 0:
-        return empty
-    img = tile_pdf["image_id"].iloc[0]
-    lat, lon, k = parse_tile_id(img)
-    (_, grid), = codecs.iter_decoded_tiles(tile_pdf)
-    _augW, _univ, _d8p, _ty, _tx, dplane = _routed_core(grid, strips)
-    d = dplane[1:-1, 1:-1]  # tile-coords view
-    h, w = grid.shape
-    emits = (
-        ("qs", 1, 0, d[1, :], np.arange(w)),
-        ("qn", -1, 0, d[h - 2, :], np.arange(w)),
-        ("qe", 0, -1, d[:, 1], np.arange(h)),
-        ("qw", 0, 1, d[:, w - 2], np.arange(h)),
-        ("qse", 1, -1, d[1:2, 1], np.zeros(1, np.int64)),
-        ("qsw", 1, 1, d[1:2, w - 2], np.zeros(1, np.int64)),
-        ("qne", -1, -1, d[h - 2 : h - 1, 1], np.zeros(1, np.int64)),
-        ("qnw", -1, 1, d[h - 2 : h - 1, w - 2], np.zeros(1, np.int64)),
-    )
-    out = []
-    for side, dlat, dlon, vals, pos in emits:
-        out.append(pd.DataFrame({
-            "image_id": tile_id(lat + dlat, lon + dlon, k),
-            "side": side,
-            "pos": pos.astype(np.int32),
-            "pos2": np.zeros(len(pos), dtype=np.int32),
-            "val": np.asarray(vals, dtype=np.int64),
-        }))
-    return pd.concat(out, ignore_index=True)
+    relaxation (given the solved W ring + current q-dist ring) ->
+    fresh outgoing q strips (the _edge_strips geometry, q-prefixed)."""
+    dplane = _routed_core(t.grid, strips)[3]
+    return _edge_strips(dplane[1:-1, 1:-1], t.img, "q")
 
 
 def mosaic_routed_flow(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
@@ -1865,89 +1344,34 @@ def mosaic_routed_flow(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
     drainage must CROSS the seam after conditioning).
 
     Three exchange stages, all perimeter-sized:
-     1. the mosaic_fill halo iteration (converged W strips — the
-        boundary condition under which every tile reproduces its slice
-        of the mosaic-filled surface locally);
+     1. mosaic_fill's single solve (profile cogroup + one bounded
+        task) -> the solved W strips, the boundary condition under
+        which every tile reproduces its slice of the mosaic-filled
+        surface locally;
      2. a flat-distance halo iteration (q strips): per-tile min-plus
         BFS relaxation seeded by local draining cells and the ring
         distances — monotone decreasing from +inf, so it converges to
         the global BFS fixpoint in (seam crossings of the longest
-        shortest-flat-path) rounds;
-     3. the drainage decomposition (border pass -> ONE-task border
-        solve -> weighted relabel), running on the ROUTED graph: the
-        border machinery is unchanged because routed flat edges are
+        shortest-flat-path) rounds, at most max_rounds;
+     3. the drainage spine (border pass -> ONE-task border solve ->
+        weighted relabel), running on the ROUTED graph: the border
+        machinery is unchanged because routed flat edges are
         functional exactly like strict D8 edges — a best ring target
         is simply a cross-seam exit edge. Acyclic end to end (strict
         edges drop W, flat edges drop the global BFS dist).
 
-    Cost: each halo round decodes + fills every tile once; the routed
-    kernel is the numpy body (no C twin yet — gate-scale; documented
-    next step if this enters a hot path)."""
-    from ..cache import scope
-
-    sc = scope("mosaic")
-    sc.release()
+    Cost: every distance round re-decodes, re-fills and re-relaxes
+    every tile and adds a cogroup + checksum job; the routed kernel is
+    the numpy body (no C twin yet). The gate mosaics converge in 2-3
+    rounds."""
+    sc = _fresh_scope()
     wstrips = _solved_fill_strips(tiles, sc)
-    cur = wstrips
-    prev = None
-    qconv = None
-    for _round in range(max_rounds):
-        qnxt = (
-            tiles.groupby("image_id")
-            .cogroup(cur.groupby("image_id"))
-            .applyInPandas(
-                lambda l, r: _dist_strips_pass(l, r), schema=STRIP_SCHEMA
-            )
-        )
-        qnxt = sc.hold(qnxt.cache())
-        chk = _strip_checksum(qnxt)
-        if chk == prev:
-            qconv = qnxt
-            break
-        prev = chk
-        cur = wstrips.unionByName(qnxt)
-    if qconv is None:
-        raise RuntimeError(
-            f"mosaic_routed_flow dist iteration did not converge "
-            f"in {max_rounds} rounds"
-        )
+    qconv = _fixpoint(
+        lambda q: _per_tile(tiles, wstrips if q is None else wstrips.unionByName(q),
+                            _dist_strips_pass, STRIP_SCHEMA),
+        sc, max_rounds, "mosaic_routed_flow dist iteration")
     base = sc.hold(wstrips.unionByName(qconv).cache())
-    border = (
-        tiles.groupby("image_id")
-        .cogroup(base.groupby("image_id"))
-        .applyInPandas(
-            lambda l, r: _border_pass(l, r, kernel=_routed_arrays),
-            schema=BORDER_SCHEMA,
-        )
-    )
-    solved = sc.hold(
-        border.groupBy(F.lit(0).alias("_g"))
-        .applyInPandas(
-            lambda _k, pdf: solve_border_graph(pdf), schema=SOLVE_SCHEMA
-        )
-        .cache()
-    )
-    deltas = solved.filter(F.col("kind") == "d").select(
-        F.col("img").alias("image_id"),
-        F.lit("d").alias("side"),
-        F.col("ly").alias("pos"),
-        F.col("lx").alias("pos2"),
-        F.col("v").alias("val"),
-    )
-    terms = solved.filter(F.col("kind") == "t").select(
-        F.col("img").alias("image_id"),
-        F.lit("t").alias("side"),
-        F.col("ly").alias("pos"),
-        F.col("lx").alias("pos2"),
-        (F.col("bx") * F.lit(int(_PACK)) + F.col("by")).alias("val"),
-    )
-    strips2 = base.unionByName(deltas).unionByName(terms)
-    cells = (
-        tiles.groupby("image_id")
-        .cogroup(strips2.groupby("image_id"))
-        .applyInPandas(
-            lambda l, r: _weighted_pass(l, r, kernel=_routed_arrays),
-            schema=CELLS_SCHEMA,
-        )
-    )
+    cells = _drain(tiles, base, ("d", "t"), sc,
+                   lambda t, s: _weighted_pass(t, s, _routed_arrays),
+                   CELLS_SCHEMA, kernel=_routed_arrays)
     return cells.select("gx", "gy", "acc", "outlet_gx", "outlet_gy")

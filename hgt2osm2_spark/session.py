@@ -79,7 +79,7 @@ def get_spark(
         .config("spark.driver.memory", driver_memory)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 1024 rows/batch: amortizes per-batch Arrow+UDF overhead for
+        # 8192 rows/batch: amortizes per-batch Arrow+UDF overhead for
         # skinny rows (points, polylines) while staying bounded for fat
         # tile rows — tile pipelines keep O(10) tiles per task via
         # repartition, so a batch never exceeds the partition anyway.

@@ -9,6 +9,7 @@ import pytest
 from hgt2osm2_spark.kernels import codecs
 from hgt2osm2_spark.ops import mosaic, terrain
 from hgt2osm2_spark.sources import synthetic
+from mosaic_jacobi import converged_fill_strips
 
 NV = int(codecs.NOVALUE)
 
@@ -828,7 +829,7 @@ def _solve_vs_jacobi(spark, tiles_df):
     from hgt2osm2_spark.cache import scope
 
     sc = scope("mosaic_test_a")
-    jac = _strips_rows(mosaic._converged_fill_strips(tiles_df, sc, 64))
+    jac = _strips_rows(converged_fill_strips(tiles_df, sc, 64))
     sc2 = scope("mosaic_test_b")
     slv = _strips_rows(mosaic._solved_fill_strips(tiles_df, sc2))
     sc.release()
@@ -888,7 +889,7 @@ def test_fill_single_solve_deep_corridor(spark):
 
     sc = scope("mosaic_test_c")
     with pytest.raises(RuntimeError, match="did not converge"):
-        mosaic._converged_fill_strips(df, sc, 4)
+        converged_fill_strips(df, sc, 4)
     sc.release()
 
     _solve_vs_jacobi(spark, df)
@@ -910,3 +911,42 @@ def test_fill_concave_corner_no_duplicate(spark):
     the exact layout, and the lex-smallest-holder rule end to end."""
     for skip in (((1, 1),), ((0, 0),), ((0, 1),), ((1, 0),)):
         _fill_check(spark, 2, 2, seed=9, skip=skip)
+
+
+# ------------------------------------------------------- scheduling pins
+
+def _schedule(spark, group, build):
+    """(Spark jobs, stages that ran as ONE task) while building one
+    mosaic op (the routed distance rounds run their checksum jobs
+    here) and collecting it once."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    spark.catalog.clearCache()  # no cache hit from an earlier test
+    sc.setJobGroup(group, group)
+    try:
+        build().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = st.getJobIdsForGroup(group)
+    stages = [st.getStageInfo(s)
+              for s in {s for j in jobs for s in st.getJobInfo(j).stageIds}]
+    return len(jobs), sum(1 for i in stages
+                          if i is not None and i.numTasks == i.numCompletedTasks == 1)
+
+
+def test_mosaic_job_counts_pinned(spark):
+    """The gate mosaics' scheduling: Spark job counts (halo strips,
+    cached solves, cogroups and, routed, the fill solve plus the
+    distance rounds with their checksum jobs) and the single-task
+    stages (the one-task solves, checksum aggregates). Dropping the
+    cache of the border solve, which two strip sides read, leaves the
+    job count alone but reruns the solve as one more single-task
+    stage."""
+    gate = synthetic.mosaic_tiles_df(spark, nx=2, ny=2, size=33, seed=7)
+    craters = synthetic.mosaic_tiles_df(spark, nx=2, ny=2, size=33, seed=7,
+                                        craters=True)
+    assert _schedule(spark, "pin_flow_acc",
+                     lambda: mosaic.mosaic_flow_accumulation(gate)) == (10, 2)
+    assert _schedule(spark, "pin_routed",
+                     lambda: mosaic.mosaic_routed_flow(craters)) == (29, 6)
