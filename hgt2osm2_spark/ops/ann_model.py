@@ -244,11 +244,11 @@ def adc_by_id_udf(books: np.ndarray, qmap: dict):
         marange = np.arange(m)
         for key in pd.unique(ids):
             sel = np.flatnonzero(ids == key)
-            # same normalization arithmetic as adc_udf's batch form:
-            # np.linalg.norm over one contiguous row reduces pairwise
-            # exactly like the axis=1 matrix form — bit-identical
-            qi = qarr[key].copy()
-            qi /= np.maximum(np.linalg.norm(qi), 1e-12)
+            # adc_udf's matrix-form normalization: the 1-D norm goes
+            # through BLAS dot and can differ from it in the last bit
+            qi = qarr[key][None, :].copy()
+            qi /= np.maximum(np.linalg.norm(qi, axis=1, keepdims=True), 1e-12)
+            qi = qi[0]
             lut = np.stack([
                 (books[j] * qi[j * dsub : (j + 1) * dsub][None, :]).sum(axis=1)
                 for j in range(m)

@@ -35,17 +35,32 @@ def iceberg_configs(
     }
 
 
+def default_driver_memory() -> str:
+    """Driver heap for this host: half of MemTotal, at most 24g.
+    Without /proc/meminfo, 24g."""
+    cap_mb = 24 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{cap_mb}m"
+    return f"{min(kb // 2048, cap_mb)}m"
+
+
 def get_spark(
     app: str = "hgt2osm2-spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "24g",
+    driver_memory: str | None = None,
     extra: dict[str, str] | None = None,
     iceberg_warehouse: str | None = None,
 ) -> SparkSession:
     """Build (or fetch) the session.
 
     cores: local parallelism (defaults to $SPARK_GRAFT_CPUS or '*').
+    driver_memory: defaults to default_driver_memory() (half the host's
+    RAM, at most 24g).
     shuffle_partitions: defaults to the core count — at cluster scale this
     would instead be sized so a shuffle partition is ~128-256MB; AQE
     coalescing corrects overshoot at runtime either way.
@@ -61,6 +76,8 @@ def get_spark(
         ncores = cores
     if shuffle_partitions is None:
         shuffle_partitions = ncores
+    if driver_memory is None:
+        driver_memory = default_driver_memory()
 
     # one BLAS thread per task slot: a worker that fans out BLAS threads
     # oversubscribes the executor's cores (and in local mode lets a

@@ -130,9 +130,9 @@ def test_adc_by_id_bit_equals_adc(spark):
     """r9: the slim ADC form (q_id + closure-held query vectors) must
     score BIT-identically to the qvec-carrying adc_udf it replaced —
     same LUT arithmetic, keyed by id instead of by vector bytes."""
-    e = _embs(spark, n=120, dim=16, seed=11)
-    model = am.fit_ann_model(e, n_centroids=4, m=4, ksub=8, train_sample=64)
-    q = _queries(spark, e, n=4)
+    e = _embs(spark, n=120, dim=64, seed=11)
+    model = am.fit_ann_model(e, n_centroids=4, m=8, ksub=8, train_sample=64)
+    q = _queries(spark, e, n=60)
     enc = am.encode_vectors(e, model).withColumnRenamed("vec_id", "p_id")
     cand = enc.crossJoin(F.broadcast(q))
     old = cand.withColumn(
@@ -142,7 +142,7 @@ def test_adc_by_id_bit_equals_adc(spark):
         "s", am.adc_by_id_udf(model.books, qmap)(F.col("q_id"), F.col("codes")))
     a = {(r.q_id, r.p_id): r.s for r in old.collect()}
     b = {(r.q_id, r.p_id): r.s for r in new.collect()}
-    assert len(a) == len(b) == 120 * 4
+    assert len(a) == len(b) == 120 * 60
     # bit equality, not approx: the scores feed a rank comparator
     import struct
     for k in a:
