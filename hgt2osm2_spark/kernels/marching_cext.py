@@ -1,11 +1,7 @@
-"""Optional C fast path for the marching-squares segment extraction.
-
-Same contract as kernels/stitch_cext.py / postprocess_cext.py: lazy gcc
-build (`-ffp-contract=off` keeps every double op IEEE-identical to the
-NumPy strip path), content-hashed .so cache, pure-Python/NumPy stays
-the fallback AND the oracle (bit-identical, property-pinned across
-random grids, NoValue holes, fake-distance settings and window crops),
-HGT2OSM2_NO_CKERNEL disables.
+"""Optional C fast path for the marching-squares segment extraction
+(the C-twin contract is in kernels/cext.py).  Bit-identity with the
+NumPy strip path is property-pinned across random grids, NoValue holes,
+fake-distance settings and window crops.
 
 The C twin replays the reference's per-cell loop directly
 (ContourProcessor2.cs:1684-1976 — four triangles per cell, flat case-e
@@ -205,32 +201,20 @@ int64_t march(
 }
 """
 
-_lib = None
-_tried = False
+_f64p = ctypes.POINTER(ctypes.c_double)
+_i32p = ctypes.POINTER(ctypes.c_int32)
+_k = cext.load("marching", _C_SOURCE, {
+    "march": (ctypes.c_int64, [
+        _f64p, ctypes.c_int32, ctypes.c_int32,
+        ctypes.c_int32, ctypes.c_double,
+        ctypes.c_int32, ctypes.c_int32, ctypes.c_int32,
+        _i32p, _i32p, _f64p, _f64p, _f64p, _f64p, ctypes.c_int64,
+    ]),
+})
 
 
 def available() -> bool:
-    global _lib, _tried
-    if _tried:
-        return _lib is not None
-    _tried = True
-    if cext.disabled():
-        return False
-    try:
-        lib = cext.build_lib("marching", _C_SOURCE)
-        f64p = ctypes.POINTER(ctypes.c_double)
-        i32p = ctypes.POINTER(ctypes.c_int32)
-        lib.march.argtypes = [
-            f64p, ctypes.c_int32, ctypes.c_int32,
-            ctypes.c_int32, ctypes.c_double,
-            ctypes.c_int32, ctypes.c_int32, ctypes.c_int32,
-            i32p, i32p, f64p, f64p, f64p, f64p, ctypes.c_int64,
-        ]
-        lib.march.restype = ctypes.c_int64
-        _lib = lib
-    except Exception:
-        _lib = None
-    return _lib is not None
+    return _k.lib is not None
 
 
 def run(P: np.ndarray, d: int, fake: float, c0: int, c1: int, yb: int,
@@ -242,8 +226,6 @@ def run(P: np.ndarray, d: int, fake: float, c0: int, c1: int, yb: int,
     Hp, Wp = P.shape
     H, W = Hp - 2, Wp - 2
     P = np.ascontiguousarray(P, dtype=np.float64)
-    f64p = ctypes.POINTER(ctypes.c_double)
-    i32p = ctypes.POINTER(ctypes.c_int32)
     cap = max(int(cap_hint), 1024)
     for _ in range(8):
         oy = np.empty(cap, np.int32)
@@ -252,12 +234,12 @@ def run(P: np.ndarray, d: int, fake: float, c0: int, c1: int, yb: int,
         oy1 = np.empty(cap, np.float64)
         ox2 = np.empty(cap, np.float64)
         oy2 = np.empty(cap, np.float64)
-        n = _lib.march(
-            P.ctypes.data_as(f64p), H, W, int(d), float(fake),
+        n = _k.lib.march(
+            P.ctypes.data_as(_f64p), H, W, int(d), float(fake),
             int(c0), int(c1), int(yb),
-            oy.ctypes.data_as(i32p), olv.ctypes.data_as(i32p),
-            ox1.ctypes.data_as(f64p), oy1.ctypes.data_as(f64p),
-            ox2.ctypes.data_as(f64p), oy2.ctypes.data_as(f64p), cap,
+            oy.ctypes.data_as(_i32p), olv.ctypes.data_as(_i32p),
+            ox1.ctypes.data_as(_f64p), oy1.ctypes.data_as(_f64p),
+            ox2.ctypes.data_as(_f64p), oy2.ctypes.data_as(_f64p), cap,
         )
         if n == -3:
             cap *= 4

@@ -1,11 +1,8 @@
 """Optional C fast path for post-production (filters + collinear + DP).
 
 Batch twin of ``postprocess.run_polyline`` over all polylines of a tile
-at once, passed as flat float64 arrays + offsets.  Same contract as
-kernels/stitch_cext.py: lazy gcc build, content-hashed cache, the
-Python implementation stays the fallback AND the oracle (bit-exact —
-the C is compiled with -ffp-contract=off so every double op matches
-NumPy/CPython IEEE-754 exactly), HGT2OSM2_NO_CKERNEL disables.
+at once, passed as flat float64 arrays + offsets (the C-twin contract
+is in kernels/cext.py).
 
 Replicated semantics, quirks included (reference file:line cites live in
 kernels/postprocess.py): the Q1 BoundingRectangle accumulator bug behind
@@ -188,34 +185,22 @@ int post_batch(
 }
 """
 
-_lib = None
-_tried = False
+_f64p = ctypes.POINTER(ctypes.c_double)
+_i64p = ctypes.POINTER(ctypes.c_int64)
+_i8p = ctypes.POINTER(ctypes.c_int8)
+_i32p = ctypes.POINTER(ctypes.c_int32)
+_k = cext.load("postproc", _C_SOURCE, {
+    "post_batch": (ctypes.c_int, [
+        ctypes.c_int64, _i64p, _f64p, _f64p,
+        ctypes.c_int32, ctypes.c_double, _f64p,
+        ctypes.c_double, ctypes.c_int,
+        _f64p, _f64p, _i64p, _i8p, _i32p, _i32p,
+    ]),
+})
 
 
 def available() -> bool:
-    global _lib, _tried
-    if _tried:
-        return _lib is not None
-    _tried = True
-    if cext.disabled():
-        return False
-    try:
-        lib = cext.build_lib("postproc", _C_SOURCE)
-        f64p = ctypes.POINTER(ctypes.c_double)
-        i64p = ctypes.POINTER(ctypes.c_int64)
-        lib.post_batch.argtypes = [
-            ctypes.c_int64, i64p, f64p, f64p,
-            ctypes.c_int32, ctypes.c_double, f64p,
-            ctypes.c_double, ctypes.c_int,
-            f64p, f64p, i64p,
-            ctypes.POINTER(ctypes.c_int8), ctypes.POINTER(ctypes.c_int32),
-            ctypes.POINTER(ctypes.c_int32),
-        ]
-        lib.post_batch.restype = ctypes.c_int
-        _lib = lib
-    except Exception:
-        _lib = None
-    return _lib is not None
+    return _k.lib is not None
 
 
 def run(xs: np.ndarray, ys: np.ndarray, off: np.ndarray, minpt: int,
@@ -238,18 +223,14 @@ def run(xs: np.ndarray, ys: np.ndarray, off: np.ndarray, minpt: int,
     status = np.empty(n_poly, dtype=np.int8)
     n_unn = np.empty(n_poly, dtype=np.int32)
     n_dp = np.empty(n_poly, dtype=np.int32)
-    f64p = ctypes.POINTER(ctypes.c_double)
-    i64p = ctypes.POINTER(ctypes.c_int64)
-    rc = _lib.post_batch(
-        n_poly, off.ctypes.data_as(i64p),
-        xs.ctypes.data_as(f64p), ys.ctypes.data_as(f64p),
-        int(minpt), float(minbox), edges.ctypes.data_as(f64p),
+    rc = _k.lib.post_batch(
+        n_poly, off.ctypes.data_as(_i64p),
+        xs.ctypes.data_as(_f64p), ys.ctypes.data_as(_f64p),
+        int(minpt), float(minbox), edges.ctypes.data_as(_f64p),
         float(dp_eps), 1 if strict else 0,
-        oxs.ctypes.data_as(f64p), oys.ctypes.data_as(f64p),
-        ooff.ctypes.data_as(i64p),
-        status.ctypes.data_as(ctypes.POINTER(ctypes.c_int8)),
-        n_unn.ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
-        n_dp.ctypes.data_as(ctypes.POINTER(ctypes.c_int32)),
+        oxs.ctypes.data_as(_f64p), oys.ctypes.data_as(_f64p),
+        ooff.ctypes.data_as(_i64p), status.ctypes.data_as(_i8p),
+        n_unn.ctypes.data_as(_i32p), n_dp.ctypes.data_as(_i32p),
     )
     if rc != 0:
         return None

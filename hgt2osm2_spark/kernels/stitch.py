@@ -326,28 +326,14 @@ def stitch_tile_reference(seg_array: np.ndarray) -> dict[int, list[list[Point]]]
     return out
 
 
-def stitch_tile(seg_array: np.ndarray) -> dict[int, list[list[Point]]]:
-    """Full per-tile stage 3+4: per-(row, level) bags -> per-level gather
-    -> per-level stitching (ContourProcessor2.cs:1461-1525).
-
-    seg_array: marching.SEG_DTYPE records in emission order.
-    Returns {level: [polyline, ...]} with levels ascending.
-
-    This is the hot path of ``stitch_tile_reference`` (same semantics
-    bit-for-bit, property-tested). Two speed levers over the readable
-    twin, neither changing behavior:
-     - endpoints are interned ONCE into integer ids whose order is the
-       (x, y)-lexicographic point order (one vectorized np.unique on a
-       structured view — structured comparison is exactly the reference
-       comparator, :231-243), so every dict/list/sort in the sequential
-       assembly runs on small ints instead of float tuples;
-     - the LineBag add logic is inlined as local dict ops.
-    -0.0/0.0 cannot collide here: grid-unit coordinates are
-    non-negative and the lerp never yields -0.0 (p1 + f*(p2-p1) with
-    p1 >= 0)."""
-    n = len(seg_array)
-    if n == 0:
-        return {}
+def _intern(seg_array: np.ndarray):
+    """Intern the 2n segment endpoints ONCE into integer ids whose order
+    is the (x, y)-lexicographic point order (structured comparison is
+    exactly the reference comparator, :231-243).  Returns (inverse, ux,
+    uy): endpoint k of the [p1s..., p2s...] stream is point inverse[k]
+    at (ux, uy)[inverse[k]].  -0.0/0.0 cannot collide here: grid-unit
+    coordinates are non-negative and the lerp never yields -0.0
+    (p1 + f*(p2-p1) with p1 >= 0)."""
     x = np.concatenate([seg_array["x1"], seg_array["x2"]])
     y = np.concatenate([seg_array["y1"], seg_array["y2"]])
     # lexsort-based interning (a structured np.unique gives identical
@@ -359,12 +345,20 @@ def stitch_tile(seg_array: np.ndarray) -> dict[int, list[list[Point]]]:
     first[1:] = (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])
     inverse = np.empty(xs.size, dtype=np.int64)
     inverse[order] = np.cumsum(first) - 1
-    ux = xs[first]
-    uy = ys[first]
+    return inverse, xs[first], ys[first]
 
+
+def _stitch_ids(seg_array: np.ndarray):
+    """The stitched tile as flat point ids: (pts, offsets, levels, ux,
+    uy) where polyline i is the ids pts[offsets[i]:offsets[i+1]] at
+    contour level levels[i], in stitch_tile's order (levels ascending,
+    creation order within a level).  One C call when the C path is on
+    and does not decline, else the pure-Python twin below (the oracle);
+    both produce the same ids."""
+    n = len(seg_array)
+    inverse, ux, uy = _intern(seg_array)
     # C fast path (kernels/stitch_cext.py): the whole sequential core
-    # (bags -> gather -> assembly) in one GIL-free call; bit-identical
-    # by property test, pure-Python below stays the fallback + oracle
+    # (bags -> gather -> assembly) in one GIL-free call
     from . import stitch_cext
 
     if stitch_cext.available():
@@ -373,20 +367,7 @@ def stitch_tile(seg_array: np.ndarray) -> dict[int, list[list[Point]]]:
             ux.size,
         )
         if res is not None:
-            out_pts, out_off, out_lv = res
-            xs_l = ux[out_pts].tolist()
-            ys_l = uy[out_pts].tolist()
-            offs = out_off.tolist()
-            out: dict[int, list[list[Point]]] = {}
-            for i, lv in enumerate(out_lv.tolist()):
-                s, e = offs[i], offs[i + 1]
-                pl = list(zip(xs_l[s:e], ys_l[s:e]))
-                lst = out.get(lv)
-                if lst is None:
-                    out[lv] = [pl]
-                else:
-                    lst.append(pl)
-            return out
+            return (*res, ux, uy)
 
     p1s = inverse[:n].tolist()
     p2s = inverse[n:].tolist()
@@ -422,7 +403,9 @@ def stitch_tile(seg_array: np.ndarray) -> dict[int, list[list[Point]]]:
     rows = sorted({r for (r, _) in row_bags})
     n_pts = ux.size
     madj: list[list[int] | None] = [None] * n_pts
-    out: dict[int, list[list[Point]]] = {}
+    pts: list[int] = []
+    offs: list[int] = [0]
+    lvls: list[int] = []
     for lv in levels:
         mkeys: list[int] = []
         for r in rows:
@@ -444,15 +427,45 @@ def stitch_tile(seg_array: np.ndarray) -> dict[int, list[list[Point]]]:
                     madj[p1] = [p2]
                     mkeys.append(p1)
         if mkeys:
-            # assemble on ids, then map ids -> exact (x, y) tuples
-            pls = _stitch_arr(madj, mkeys, n_pts)
-            mapped = []
-            for ids in pls:
-                arr = np.fromiter(ids, dtype=np.int64, count=len(ids))
-                mapped.append(list(zip(ux[arr].tolist(), uy[arr].tolist())))
-            out[lv] = mapped
+            for ids in _stitch_arr(madj, mkeys, n_pts):
+                pts.extend(ids)
+                offs.append(len(pts))
+                lvls.append(lv)
             for k in mkeys:  # reset for the next level
                 madj[k] = None
+    return (np.asarray(pts, dtype=np.int64), np.asarray(offs, dtype=np.int64),
+            np.asarray(lvls, dtype=np.int32), ux, uy)
+
+
+def stitch_tile(seg_array: np.ndarray) -> dict[int, list[list[Point]]]:
+    """Full per-tile stage 3+4: per-(row, level) bags -> per-level gather
+    -> per-level stitching (ContourProcessor2.cs:1461-1525).
+
+    seg_array: marching.SEG_DTYPE records in emission order.
+    Returns {level: [polyline, ...]} with levels ascending.
+
+    This is the hot path of ``stitch_tile_reference`` (same semantics
+    bit-for-bit, property-tested): the dict view of ``_stitch_ids``.
+    Two speed levers over the readable twin, neither changing behavior:
+     - endpoints are interned once into integer ids (``_intern``), so
+       every dict/list/sort in the sequential assembly runs on small
+       ints instead of float tuples;
+     - the LineBag add logic is inlined as local dict ops."""
+    if len(seg_array) == 0:
+        return {}
+    out_pts, out_off, out_lv, ux, uy = _stitch_ids(seg_array)
+    xs_l = ux[out_pts].tolist()
+    ys_l = uy[out_pts].tolist()
+    offs = out_off.tolist()
+    out: dict[int, list[list[Point]]] = {}
+    for i, lv in enumerate(out_lv.tolist()):
+        s, e = offs[i], offs[i + 1]
+        pl = list(zip(xs_l[s:e], ys_l[s:e]))
+        lst = out.get(lv)
+        if lst is None:
+            out[lv] = [pl]
+        else:
+            lst.append(pl)
     return out
 
 
@@ -461,55 +474,16 @@ def stitch_tile_arrays(seg_array: np.ndarray):
     ys) where polyline i spans xs/ys[offsets[i]:offsets[i+1]] and
     levels[i] is its contour level.  Polyline order == stitch_tile's
     iteration order (levels ascending, creation order within a level),
-    values bit-identical (the tuple dict is just a different container).
+    values bit-identical: both are views of ``_stitch_ids``.
 
     This is the zero-copy hand-off into postprocess.run_polylines_batch
     — on the C fast path neither tuples nor per-point Python objects are
     ever materialized for the tile hot loop."""
-    n = len(seg_array)
-    empty = (np.empty(0, np.int32), np.zeros(1, np.int64),
-             np.empty(0, np.float64), np.empty(0, np.float64))
-    if n == 0:
-        return empty
-    x = np.concatenate([seg_array["x1"], seg_array["x2"]])
-    y = np.concatenate([seg_array["y1"], seg_array["y2"]])
-    order = np.lexsort((y, x))
-    xs, ys = x[order], y[order]
-    first = np.empty(xs.size, dtype=bool)
-    first[0] = True
-    first[1:] = (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])
-    inverse = np.empty(xs.size, dtype=np.int64)
-    inverse[order] = np.cumsum(first) - 1
-    ux = xs[first]
-    uy = ys[first]
-
-    from . import stitch_cext
-
-    if stitch_cext.available():
-        res = stitch_cext.run(
-            seg_array["y"], seg_array["level"], inverse[:n], inverse[n:],
-            ux.size,
-        )
-        if res is not None:
-            out_pts, out_off, out_lv = res
-            return (out_lv, out_off.astype(np.int64), ux[out_pts], uy[out_pts])
-
-    # pure-Python fallback: flatten the dict result
-    bags = stitch_tile(seg_array)
-    lvls: list[int] = []
-    offs: list[int] = [0]
-    fx: list[float] = []
-    fy: list[float] = []
-    for lv in bags:
-        for pts in bags[lv]:
-            lvls.append(lv)
-            fx.extend(p[0] for p in pts)
-            fy.extend(p[1] for p in pts)
-            offs.append(len(fx))
-    return (
-        np.asarray(lvls, dtype=np.int32), np.asarray(offs, dtype=np.int64),
-        np.asarray(fx, dtype=np.float64), np.asarray(fy, dtype=np.float64),
-    )
+    if len(seg_array) == 0:
+        return (np.empty(0, np.int32), np.zeros(1, np.int64),
+                np.empty(0, np.float64), np.empty(0, np.float64))
+    out_pts, out_off, out_lv, ux, uy = _stitch_ids(seg_array)
+    return (out_lv, out_off.astype(np.int64), ux[out_pts], uy[out_pts])
 
 
 def _stitch_arr(adj: list[list[int] | None], keys: list[int], n_pts: int) -> list[list[int]]:

@@ -9,22 +9,9 @@ flat-loop work it is still ~200 ms/tile of pure CPython dispatch, which
 is both the headline-throughput bottleneck and the named contributor to
 the 8->32 core scaling ceiling (BENCH/BASELINE.md).
 
-This module compiles a small C twin of stages 1-4 (row bags -> per-level
-gather -> master adjacency -> assembly) at first use with the system
-gcc, loads it via ctypes, and exposes ``run``.  Design rules:
-
-- The PYTHON PATH STAYS THE ORACLE: ``stitch.stitch_tile`` falls back to
-  the pure-Python implementation whenever the compiler, the load, or the
-  C run itself fails (negative return code), and tests assert the two
-  produce bit-identical output on reference fixtures, random
-  heightfields and adversarial multigraphs.  This is the same
-  golden-twin contract that keeps the pure-Python image codecs safe to
-  swap for libjpeg/libwebp at fleet scale (see COVERAGE.md).
-- No build at import time: compilation happens lazily on the first
-  stitched tile of each process and is cached as a content-hashed .so in
-  the user cache dir, so ``spark-submit --py-files`` zipimport deploys
-  keep working (each executor python worker builds once, then mmaps).
-- ``HGT2OSM2_NO_CKERNEL=1`` disables the C path entirely.
+This module holds a small C twin of stages 1-4 (row bags -> per-level
+gather -> master adjacency -> assembly) behind ``run``; the C-twin
+contract is in kernels/cext.py.
 
 The C code mirrors kernels/stitch.py line-for-line in structure; every
 behavioral quirk (umdrehen keying, duplicate rejection, candidate order
@@ -376,34 +363,18 @@ done:
 }
 """
 
-_lib = None
-_tried = False
-
-
-def _build() -> "ctypes.CDLL | None":
-    lib = cext.build_lib("stitch", _C_SOURCE)
-    i32p = ctypes.POINTER(ctypes.c_int32)
-    lib.stitch_tile_c.argtypes = [
-        ctypes.c_int32, i32p, i32p, i32p, i32p, ctypes.c_int32,
-        i32p, ctypes.c_int64, i32p, ctypes.c_int64, i32p, ctypes.c_int64,
+_i32p = ctypes.POINTER(ctypes.c_int32)
+_k = cext.load("stitch", _C_SOURCE, {
+    "stitch_tile_c": (ctypes.c_int, [
+        ctypes.c_int32, _i32p, _i32p, _i32p, _i32p, ctypes.c_int32,
+        _i32p, ctypes.c_int64, _i32p, ctypes.c_int64, _i32p, ctypes.c_int64,
         ctypes.POINTER(ctypes.c_int64),
-    ]
-    lib.stitch_tile_c.restype = ctypes.c_int
-    return lib
+    ]),
+})
 
 
 def available() -> bool:
-    global _lib, _tried
-    if _tried:
-        return _lib is not None
-    _tried = True
-    if cext.disabled():
-        return False
-    try:
-        _lib = _build()
-    except Exception:
-        _lib = None
-    return _lib is not None
+    return _k.lib is not None
 
 
 def run(seg_y: np.ndarray, seg_lv: np.ndarray, p1: np.ndarray,
@@ -424,12 +395,11 @@ def run(seg_y: np.ndarray, seg_lv: np.ndarray, p1: np.ndarray,
     out_off = np.empty(n + 2, dtype=np.int32)
     out_lv = np.empty(n + 1, dtype=np.int32)
     out_counts = np.zeros(2, dtype=np.int64)
-    i32p = ctypes.POINTER(ctypes.c_int32)
 
     def p(a):
-        return a.ctypes.data_as(i32p)
+        return a.ctypes.data_as(_i32p)
 
-    rc = _lib.stitch_tile_c(
+    rc = _k.lib.stitch_tile_c(
         n, p(y_s), p(lv_s), p(p1_s), p(p2_s), int(n_pts),
         p(out_pts), out_pts.size, p(out_off), out_off.size,
         p(out_lv), out_lv.size,

@@ -3,14 +3,11 @@ flow direction + flow accumulation + outlet labeling, the slowest
 per-tile kernels in the tree at SRTM-1 grain (BENCH/TERRAIN.md: the
 numpy worklist-Kahn pair is ~4.5 s/3601^2 tile).
 
-Same twin-and-golden contract as marching/stitch/postprocess
-(kernels/stitch_cext.py module doc): lazy content-hashed gcc build,
-pure-Python/numpy path stays the ORACLE and the fallback, tests assert
-bit-equality on random heightfields with NOVALUE holes, make_golden
-pins HGT2OSM2_NO_CKERNEL so every golden derives from the Python path.
+The C-twin contract is in kernels/cext.py; tests assert bit-equality
+on random heightfields with NOVALUE holes, and make_golden pins
+HGT2OSM2_NO_CKERNEL so every golden derives from the Python path.
 Everything here is INTEGER arithmetic (the r7 integer-exact gate
-discipline), so bit-equality needs no FP flags at all — but the build
-keeps the shared -ffp-contract=off contract anyway.
+discipline), so bit-equality needs no FP flags at all.
 
 Semantics mirrored exactly from ops/terrain.py:
  - d8: steepest descent ranked by drop2x = k*max(drop,0)^2 (k=2
@@ -894,39 +891,24 @@ int64_t fill_profile_c(const int16_t* g, int64_t h, int64_t w,
 }
 """
 
-_lib = None
-_tried = False
+_k = cext.load("terrain", _C_SOURCE, dict.fromkeys((
+    "d8_grid_c", "flow_accumulate_c", "mosaic_accumulate_c", "fill_c",
+    "routed_flow_c", "flow_length_c", "stream_order_c", "morph_c",
+    "viewshed_c", "fill_profile_c",
+), (ctypes.c_int64, None)))
 
 
 def available() -> bool:
-    global _lib, _tried
-    if _tried:
-        return _lib is not None
-    _tried = True
-    if cext.disabled():
-        return False
-    try:
-        lib = cext.build_lib("terrain", _C_SOURCE)
-        lib.d8_grid_c.restype = ctypes.c_int64
-        lib.flow_accumulate_c.restype = ctypes.c_int64
-        lib.mosaic_accumulate_c.restype = ctypes.c_int64
-        lib.fill_c.restype = ctypes.c_int64
-        lib.routed_flow_c.restype = ctypes.c_int64
-        lib.flow_length_c.restype = ctypes.c_int64
-        lib.stream_order_c.restype = ctypes.c_int64
-        lib.morph_c.restype = ctypes.c_int64
-        lib.viewshed_c.restype = ctypes.c_int64
-        lib.fill_profile_c.restype = ctypes.c_int64
-        _lib = lib
-    except Exception:
-        _lib = None
-    return _lib is not None
+    return _k.lib is not None
 
 
-def _as_i16(grid: np.ndarray) -> np.ndarray | None:
-    """int16 view of the grid or None when values would not round-trip
-    (the mosaic path hands int64 aug grids; elevations are int16-ranged
-    by the HGT contract, but fall back rather than truncate)."""
+def _input(grid: np.ndarray) -> np.ndarray | None:
+    """The shared prologue: the int16 grid for the C call, or None when
+    the C path is off or values would not round-trip (the mosaic path
+    hands int64 aug grids; elevations are int16-ranged by the HGT
+    contract, but fall back rather than truncate)."""
+    if not available():
+        return None
     if grid.dtype == np.int16:
         return np.ascontiguousarray(grid)
     if not np.issubdtype(grid.dtype, np.integer):
@@ -936,67 +918,53 @@ def _as_i16(grid: np.ndarray) -> np.ndarray | None:
     return np.ascontiguousarray(grid.astype(np.int16))
 
 
+_I32, _I64 = np.int32, np.int64
+
+
 def _ptr(a: np.ndarray):
     return a.ctypes.data_as(ctypes.c_void_p)
 
 
-def d8(grid: np.ndarray):
-    """C twin of terrain.d8_grid -> (ys, xs, d8, drop2x) or None."""
-    if not available():
-        return None
-    g = _as_i16(grid)
+def _i64(v) -> ctypes.c_int64:
+    return ctypes.c_int64(int(v))
+
+
+def _cells(sym: str, grid: np.ndarray, dtypes: tuple, *scalars):
+    """Shared body of the per-interior-cell kernels: one output slot per
+    interior cell ((h-2) x (w-2)) in each of `dtypes`, the C call
+    ``sym(g, h, w, *scalars, *outs)`` returns the cell count (< 0 =
+    declined -> None), and the outputs are trimmed copies."""
+    g = _input(grid)
     if g is None:
         return None
     h, w = g.shape
     cap = max((h - 2) * (w - 2), 0)
+    outs = [np.empty(cap, dt) for dt in dtypes]
     if cap == 0:
-        return (np.empty(0, np.int32), np.empty(0, np.int32),
-                np.empty(0, np.int32), np.empty(0, np.int64))
-    ys = np.empty(cap, np.int32)
-    xs = np.empty(cap, np.int32)
-    d8o = np.empty(cap, np.int32)
-    dr = np.empty(cap, np.int64)
-    n = _lib.d8_grid_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                       _ptr(ys), _ptr(xs), _ptr(d8o), _ptr(dr))
+        return tuple(outs)
+    n = getattr(_k.lib, sym)(_ptr(g), _i64(h), _i64(w),
+                             *map(_i64, scalars), *map(_ptr, outs))
     if n < 0:
         return None
-    return ys[:n].copy(), xs[:n].copy(), d8o[:n].copy(), dr[:n].copy()
+    return tuple(o[:n].copy() for o in outs)
+
+
+def d8(grid: np.ndarray):
+    """C twin of terrain.d8_grid -> (ys, xs, d8, drop2x) or None."""
+    return _cells("d8_grid_c", grid, (_I32, _I32, _I32, _I64))
 
 
 def flow_accumulate(grid: np.ndarray):
     """C twin of terrain.flow_accumulate_grid ->
     (ys, xs, acc, outlet_y, outlet_x) or None."""
-    if not available():
-        return None
-    g = _as_i16(grid)
-    if g is None:
-        return None
-    h, w = g.shape
-    cap = max((h - 2) * (w - 2), 0)
-    if cap == 0:
-        z32, z64 = np.empty(0, np.int32), np.empty(0, np.int64)
-        return z32, z32.copy(), z64, z32.copy(), z32.copy()
-    ys = np.empty(cap, np.int32)
-    xs = np.empty(cap, np.int32)
-    acc = np.empty(cap, np.int64)
-    oy = np.empty(cap, np.int32)
-    ox = np.empty(cap, np.int32)
-    n = _lib.flow_accumulate_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                               _ptr(ys), _ptr(xs), _ptr(acc),
-                               _ptr(oy), _ptr(ox))
-    if n < 0:
-        return None
-    return (ys[:n].copy(), xs[:n].copy(), acc[:n].copy(),
-            oy[:n].copy(), ox[:n].copy())
+    return _cells("flow_accumulate_c", grid, (_I32, _I32, _I64, _I32, _I32))
 
 
 def mosaic_accumulate(aug: np.ndarray, weights: np.ndarray | None = None):
     """C twin of ops/mosaic.mosaic_tile_arrays over the augmented grid
     -> the same (ys, xs, acc, term, cross, t_ys, t_xs, steps, ncard, t)
     10-tuple, or None (unavailable / non-int16-ranged input)."""
-    if not available():
-        return None
-    g = _as_i16(aug)
+    g = _input(aug)
     if g is None:
         return None
     ha, wa = g.shape
@@ -1023,9 +991,8 @@ def mosaic_accumulate(aug: np.ndarray, weights: np.ndarray | None = None):
     steps = np.empty(cap, np.int64)
     ncard = np.empty(cap, np.int64)
     t = np.empty(cap, np.int64)
-    n = _lib.mosaic_accumulate_c(
-        _ptr(g), ctypes.c_int64(ha), ctypes.c_int64(wa),
-        _ptr(wts), ctypes.c_int64(has_w),
+    n = _k.lib.mosaic_accumulate_c(
+        _ptr(g), _i64(ha), _i64(wa), _ptr(wts), _i64(has_w),
         _ptr(ys), _ptr(xs), _ptr(acc), _ptr(term), _ptr(cross),
         _ptr(t_ys), _ptr(t_xs), _ptr(steps), _ptr(ncard), _ptr(t))
     if n < 0:
@@ -1039,16 +1006,14 @@ def mosaic_accumulate(aug: np.ndarray, weights: np.ndarray | None = None):
 def fill(grid: np.ndarray):
     """C twin of ops/terrain.fill_grid -> the full (h, w) int64 filled
     surface (NOVALUE preserved), or None."""
-    if not available():
-        return None
-    g = _as_i16(grid)
+    g = _input(grid)
     if g is None:
         return None
     h, w = g.shape
     out = np.empty((h, w), np.int64)
     if h == 0 or w == 0:
         return out
-    n = _lib.fill_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w), _ptr(out))
+    n = _k.lib.fill_c(_ptr(g), _i64(h), _i64(w), _ptr(out))
     if n < 0:
         return None
     return out
@@ -1060,9 +1025,7 @@ def fill_profile(g: np.ndarray, seed: np.ndarray, band: np.ndarray):
     OUT), or None. Same sweep order, neighbor order and rep rule as the
     Python twin, so the event lists are bit-identical (pinned in
     tests/test_mosaic.py)."""
-    if not available():
-        return None
-    g16 = _as_i16(g)
+    g16 = _input(g)
     if g16 is None:
         return None
     h, w = g16.shape
@@ -1075,8 +1038,8 @@ def fill_profile(g: np.ndarray, seed: np.ndarray, band: np.ndarray):
     ev_l = np.empty(cap, np.int64)
     s8 = np.ascontiguousarray(seed.astype(np.uint8))
     b8 = np.ascontiguousarray(band.astype(np.uint8))
-    n = _lib.fill_profile_c(
-        _ptr(g16), ctypes.c_int64(h), ctypes.c_int64(w),
+    n = _k.lib.fill_profile_c(
+        _ptr(g16), _i64(h), _i64(w),
         _ptr(s8), _ptr(b8), _ptr(ev_a), _ptr(ev_b), _ptr(ev_l))
     if n < 0:
         return None
@@ -1086,122 +1049,43 @@ def fill_profile(g: np.ndarray, seed: np.ndarray, band: np.ndarray):
 def routed_flow(filled: np.ndarray):
     """C twin of ops/terrain.routed_flow_grid ->
     (ys, xs, acc, outlet_y, outlet_x) or None."""
-    if not available():
-        return None
-    g = _as_i16(filled)
-    if g is None:
-        return None
-    h, w = g.shape
-    cap = max((h - 2) * (w - 2), 0)
-    if cap == 0:
-        z32, z64 = np.empty(0, np.int32), np.empty(0, np.int64)
-        return z32, z32.copy(), z64, z32.copy(), z32.copy()
-    ys = np.empty(cap, np.int32)
-    xs = np.empty(cap, np.int32)
-    acc = np.empty(cap, np.int64)
-    oy = np.empty(cap, np.int32)
-    ox = np.empty(cap, np.int32)
-    n = _lib.routed_flow_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                           _ptr(ys), _ptr(xs), _ptr(acc),
-                           _ptr(oy), _ptr(ox))
-    if n < 0:
-        return None
-    return (ys[:n].copy(), xs[:n].copy(), acc[:n].copy(),
-            oy[:n].copy(), ox[:n].copy())
+    return _cells("routed_flow_c", filled, (_I32, _I32, _I64, _I32, _I32))
 
 
 def flow_length(grid: np.ndarray):
     """C twin of ops/terrain.flow_length_grid ->
     (ys, xs, steps, n_card, n_diag) or None."""
-    if not available():
+    res = _cells("flow_length_c", grid, (_I32, _I32, _I64, _I64))
+    if res is None:
         return None
-    g = _as_i16(grid)
-    if g is None:
-        return None
-    h, w = g.shape
-    cap = max((h - 2) * (w - 2), 0)
-    if cap == 0:
-        z32, z64 = np.empty(0, np.int32), np.empty(0, np.int64)
-        return z32, z32.copy(), z64, z64.copy(), z64.copy()
-    ys = np.empty(cap, np.int32)
-    xs = np.empty(cap, np.int32)
-    steps = np.empty(cap, np.int64)
-    ncard = np.empty(cap, np.int64)
-    n = _lib.flow_length_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                           _ptr(ys), _ptr(xs), _ptr(steps), _ptr(ncard))
-    if n < 0:
-        return None
-    steps, ncard = steps[:n].copy(), ncard[:n].copy()
-    return ys[:n].copy(), xs[:n].copy(), steps, ncard, steps - ncard
+    ys, xs, steps, ncard = res
+    return ys, xs, steps, ncard, steps - ncard
 
 
 def stream_order(grid: np.ndarray, min_acc: int):
     """C twin of ops/terrain.stream_order_grid ->
     (ys, xs, acc, sorder) or None."""
-    if not available():
-        return None
-    g = _as_i16(grid)
-    if g is None:
-        return None
-    h, w = g.shape
-    cap = max((h - 2) * (w - 2), 0)
-    if cap == 0:
-        z32, z64 = np.empty(0, np.int32), np.empty(0, np.int64)
-        return z32, z32.copy(), z64, z64.copy()
-    ys = np.empty(cap, np.int32)
-    xs = np.empty(cap, np.int32)
-    acc = np.empty(cap, np.int64)
-    order = np.empty(cap, np.int64)
-    n = _lib.stream_order_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                            ctypes.c_int64(int(min_acc)),
-                            _ptr(ys), _ptr(xs), _ptr(acc), _ptr(order))
-    if n < 0:
-        return None
-    return (ys[:n].copy(), xs[:n].copy(), acc[:n].copy(),
-            order[:n].copy())
+    return _cells("stream_order_c", grid, (_I32, _I32, _I64, _I64), min_acc)
 
 
 def morph(grid: np.ndarray):
     """C twin of ops/terrain.morph_grid ->
     (ys, xs, tpi8, tri, rough, zxx, zyy, ixy4) or None."""
-    if not available():
-        return None
-    g = _as_i16(grid)
-    if g is None:
-        return None
-    h, w = g.shape
-    cap = max((h - 2) * (w - 2), 0)
-    if cap == 0:
-        z32, z64 = np.empty(0, np.int32), np.empty(0, np.int64)
-        return (z32, z32.copy(), z64, z64.copy(), z64.copy(),
-                z64.copy(), z64.copy(), z64.copy())
-    ys = np.empty(cap, np.int32)
-    xs = np.empty(cap, np.int32)
-    outs = [np.empty(cap, np.int64) for _ in range(6)]
-    n = _lib.morph_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                     _ptr(ys), _ptr(xs), *[_ptr(o) for o in outs])
-    if n < 0:
-        return None
-    return (ys[:n].copy(), xs[:n].copy(), *[o[:n].copy() for o in outs])
+    return _cells("morph_c", grid, (_I32, _I32) + (_I64,) * 6)
 
 
 def viewshed(grid: np.ndarray, oy: int, ox: int,
              h_obs: int = 2, radius: int = 100):
     """C twin of ops/terrain.viewshed_grid -> full (h, w) bool plane,
-    or None (unavailable / non-int16-ranged / bad observer)."""
-    if not available():
-        return None
-    g = _as_i16(grid)
+    or None (unavailable / non-int16-ranged).  A bad observer gives an
+    all-False plane, the same as numpy."""
+    g = _input(grid)
     if g is None:
         return None
     h, w = g.shape
     vis = np.zeros((h, w), np.uint8)
     if h == 0 or w == 0:
         return vis.astype(bool)
-    n = _lib.viewshed_c(_ptr(g), ctypes.c_int64(h), ctypes.c_int64(w),
-                        ctypes.c_int64(int(oy)), ctypes.c_int64(int(ox)),
-                        ctypes.c_int64(int(h_obs)),
-                        ctypes.c_int64(int(radius)), _ptr(vis))
-    if n < 0:
-        return vis.astype(bool)  # bad observer: all-False, same as numpy
+    _k.lib.viewshed_c(_ptr(g), _i64(h), _i64(w), _i64(oy), _i64(ox),
+                      _i64(h_obs), _i64(radius), _ptr(vis))
     return vis.astype(bool)

@@ -1,5 +1,7 @@
 """Bit-exactness of the optional C kernel fast paths vs their Python
-oracles (kernels/stitch_cext.py, kernels/postprocess_cext.py).
+oracles (kernels/stitch_cext.py, kernels/postprocess_cext.py), and the
+one loader behind them (kernels/cext.py): why an unavailable C path is
+off, and that it says so once.
 
 The stitch C path is already pinned by test_stitch.py (stitch_tile ==
 stitch_tile_reference exercises C when available) and the banded
@@ -7,11 +9,18 @@ property test; here we cover the batch postprocess twin and the
 array-native stitch container, including adversarial polyline shapes
 the marching kernel never emits."""
 
+import ctypes
+import errno
+import shutil
+import warnings
+
 import numpy as np
 import pytest
 
-from hgt2osm2_spark.kernels import marching, postprocess, stitch
-from hgt2osm2_spark.kernels import postprocess_cext, stitch_cext
+from hgt2osm2_spark.kernels import cext, marching, postprocess, stitch
+from hgt2osm2_spark.kernels import (
+    marching_cext, postprocess_cext, stitch_cext, terrain_cext,
+)
 from hgt2osm2_spark.sources.synthetic import heightfield
 
 
@@ -140,13 +149,11 @@ def test_stitch_c_against_reference_twin_random():
         assert stitch.stitch_tile(seg) == stitch.stitch_tile_reference(seg)
 
 
-@pytest.mark.skipif(not __import__("hgt2osm2_spark.kernels.marching_cext", fromlist=["x"]).available(),
-                    reason="no C compiler")
+@pytest.mark.skipif(not marching_cext.available(), reason="no C compiler")
 def test_marching_c_equals_numpy_twin():
     """The C per-cell marcher must equal the numpy strip path exactly:
     fixtures, random grids with NoValue rows/cols, case-e plateaus,
     fake-distance settings, and windowed crops."""
-    from hgt2osm2_spark.kernels import marching, marching_cext
     from hgt2osm2_spark.kernels.fixtures import TEST1, TEST2, TEST3
 
     def py_extract(grid, d, fake, **kw):
@@ -211,3 +218,116 @@ def test_stitch_c_on_adversarial_segment_streams():
         fast = stitch.stitch_tile(seg)
         ref = stitch.stitch_tile_reference(seg)
         assert fast == ref, f"trial {trial}"
+
+
+def test_stitch_declined_c_call_runs_once_then_python():
+    """A declined C stitch (run -> None) falls through to the Python
+    twin without a second C call, and both views stay equal to the
+    reference."""
+    seg = marching.extract_segments(heightfield(2, 57), 20, -0.5)
+    calls = []
+
+    def declining_run(*a, **k):
+        calls.append(1)
+        return None
+
+    av, run = stitch_cext.available, stitch_cext.run
+    stitch_cext.available, stitch_cext.run = (lambda: True), declining_run
+    try:
+        bags = stitch.stitch_tile(seg)
+        assert len(calls) == 1
+        lvls, offs, fx, fy = stitch.stitch_tile_arrays(seg)
+        assert len(calls) == 2
+    finally:
+        stitch_cext.available, stitch_cext.run = av, run
+    assert bags == stitch.stitch_tile_reference(seg)
+    flat = [(lv, pts) for lv in sorted(bags) for pts in bags[lv]]
+    assert lvls.tolist() == [lv for lv, _ in flat]
+    assert [list(zip(fx[s:e].tolist(), fy[s:e].tolist()))
+            for s, e in zip(offs[:-1], offs[1:])] == [pts for _, pts in flat]
+
+
+# ---- the one loader (kernels/cext.py) ----------------------------------
+
+_ADD1 = "#include <stdint.h>\nint64_t add1(int64_t x) { return x + 1; }\n"
+_ADD1_SIGS = {"add1": (ctypes.c_int64, [ctypes.c_int64])}
+
+
+@pytest.fixture
+def fresh_cache(tmp_path, monkeypatch):
+    """An empty .so cache, so no earlier build can hide a failure."""
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    monkeypatch.delenv("HGT2OSM2_NO_CKERNEL", raising=False)
+    return tmp_path
+
+
+def _touch(k, times=2):
+    """Use the handle `times` times; return the warnings it raised."""
+    with warnings.catch_warnings(record=True) as w:
+        warnings.simplefilter("always")
+        libs = [k.lib for _ in range(times)]
+    return libs, w
+
+
+@pytest.mark.skipif(shutil.which("gcc") is None, reason="gcc not on PATH")
+def test_loader_builds_binds_and_records_no_reason(fresh_cache):
+    k = cext.load("t_add1", _ADD1, _ADD1_SIGS)
+    (lib, _), w = _touch(k)
+    assert lib is not None and lib.add1(41) == 42
+    assert k.reason is None and not w
+
+
+def test_loader_env_pin_is_quiet_and_named(fresh_cache, monkeypatch):
+    import importlib
+
+    from hgt2osm2_spark.kernels import marching_cext
+
+    monkeypatch.setenv("HGT2OSM2_NO_CKERNEL", "1")
+    importlib.reload(marching_cext)  # the pin is read at first use
+    try:
+        with warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            assert marching_cext.available() is False
+        assert "HGT2OSM2_NO_CKERNEL" in marching_cext._k.reason
+        assert not w
+    finally:
+        monkeypatch.delenv("HGT2OSM2_NO_CKERNEL")
+        importlib.reload(marching_cext)
+
+
+def test_loader_missing_gcc_names_gcc_and_warns_once(fresh_cache, monkeypatch):
+    def no_gcc(cmd, **kw):
+        raise FileNotFoundError(errno.ENOENT, "No such file or directory", cmd[0])
+
+    monkeypatch.setattr(cext.subprocess, "run", no_gcc)
+    k = cext.load("t_nogcc", _ADD1, _ADD1_SIGS)
+    libs, w = _touch(k)
+    assert libs == [None, None]
+    assert "gcc" in k.reason
+    assert len(w) == 1 and "gcc" in str(w[0].message)
+
+
+@pytest.mark.skipif(shutil.which("gcc") is None, reason="gcc not on PATH")
+def test_loader_compile_error_puts_stderr_in_reason(fresh_cache):
+    k = cext.load("t_broken", "int f(void) { return undeclared_name_x; }\n",
+                  {"f": (ctypes.c_int, [])})
+    (lib, _), w = _touch(k)
+    assert lib is None
+    assert "undeclared_name_x" in k.reason
+    assert len(w) == 1
+
+
+@pytest.mark.skipif(shutil.which("gcc") is None, reason="gcc not on PATH")
+def test_loader_absent_symbol_raises(fresh_cache):
+    k = cext.load("t_nosym", _ADD1, {"no_such_symbol": (ctypes.c_int, None)})
+    with pytest.raises(AttributeError):
+        k.lib
+    with pytest.raises(AttributeError):  # not latched into "unavailable"
+        k.lib
+
+
+def test_status_reports_every_kernel():
+    st = cext.status()
+    assert set(st) == {"marching", "stitch", "postproc", "terrain"}
+    for m in (marching_cext, stitch_cext, postprocess_cext, terrain_cext):
+        assert (st[m._k.name] is None) == m.available()

@@ -7,16 +7,24 @@ worker processes: a clean subprocess with the env pin runs the fused
 contour pipeline on real tiles at local[2] and must reproduce the
 C-enabled node stream hash exactly (env vars set before JVM start
 propagate to the python workers, so the pin reaches every executor
-task)."""
+task). The probe also prints every C kernel's ``available()``, so the
+test proves it compares the C path against the Python twin rather than
+Python against Python after a silently failed build."""
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+
+import pytest
 
 PROBE = """
 import json
 from hgt2osm2_spark.config import ContourOptions
+from hgt2osm2_spark.kernels import (
+    marching_cext, postprocess_cext, stitch_cext, terrain_cext,
+)
 from hgt2osm2_spark.plans.pipeline import run_contour_pipeline
 from hgt2osm2_spark.session import get_spark
 from hgt2osm2_spark.sources import synthetic
@@ -27,7 +35,10 @@ res = run_contour_pipeline(tiles, ContourOptions(), band_rows=None)
 row = res.nodes.selectExpr(
     "count(*) AS n", "sum(hash(node_id, lat, lon)) AS h"
 ).collect()[0]
-print("PROBE_RESULT " + json.dumps({"n": row["n"], "h": row["h"]}))
+avail = [m.available() for m in (marching_cext, stitch_cext,
+                                 postprocess_cext, terrain_cext)]
+print("PROBE_RESULT " + json.dumps({"n": row["n"], "h": row["h"],
+                                    "available": avail}))
 spark.stop()
 """
 
@@ -47,8 +58,12 @@ def _run(extra_env):
     return json.loads(line[0].split(" ", 1)[1])
 
 
+@pytest.mark.skipif(shutil.which("gcc") is None,
+                    reason="gcc not on PATH: there is no C path to compare")
 def test_no_ckernel_env_reproduces_c_node_stream():
     with_c = _run({"HGT2OSM2_NO_CKERNEL": ""})
     no_c = _run({"HGT2OSM2_NO_CKERNEL": "1"})
+    assert with_c.pop("available") == [True] * 4
+    assert no_c.pop("available") == [False] * 4
     assert with_c["n"] > 0
     assert with_c == no_c

@@ -3,7 +3,8 @@
 Runs every __spark_entry__.queries() entry at sf0.01 and, where an
 oracle_sql() twin exists, compares against DuckDB: row count, sorted
 column names, and order-insensitive values (exact on non-floats,
-bit-exact on floats unless --approx). Prints one PASS/FAIL line per
+bit-exact on floats unless --approx). Prints a header line with each C
+kernel's path (C, or python and why), then one PASS/FAIL line per
 query; exits nonzero on any FAIL.
 
 Usage: python tools/check_entry.py [--sf /root/testdata/sf0.01] [names...]
@@ -61,8 +62,14 @@ def main():
     import duckdb
 
     import __spark_entry__ as entrymod
+    from hgt2osm2_spark.kernels import cext
     from hgt2osm2_spark.session import get_spark
 
+    # which side of the native-kernel boundary this gate run exercises
+    print("c kernels: " + "  ".join(
+        f"{name}=C" if why is None else f"{name}=python ({why})"
+        for name, why in cext.status().items()
+    ))
     spark = get_spark("check-entry")
     con = duckdb.connect()
     for t in TABLES:
