@@ -14,9 +14,9 @@ contract:
   swap for libjpeg/libwebp at fleet scale (see COVERAGE.md).
 - No build at import time: ``load`` returns a handle that compiles on
   first use with the system gcc and caches the .so in the user cache
-  dir under a content hash of the source, so ``spark-submit
-  --py-files`` zipimport deploys keep working (each executor Python
-  worker builds once, then mmaps).
+  dir under a hash of the source, the flags and the gcc version, so
+  ``spark-submit --py-files`` zipimport deploys keep working (each
+  executor Python worker builds once, then mmaps).
 - ``-ffp-contract=off`` forbids FMA contraction so every double op in
   the C twins matches the Python/NumPy IEEE-754 sequence exactly; no
   -ffast-math, ever.
@@ -37,6 +37,7 @@ unpicklable ``CDLL``.
 from __future__ import annotations
 
 import ctypes
+import functools
 import hashlib
 import os
 import subprocess
@@ -45,10 +46,24 @@ import warnings
 
 ENV_PIN = "HGT2OSM2_NO_CKERNEL"
 
+#: gcc flags of every C twin (-ffp-contract=off is what keeps them
+#: bit-identical to the Python twins)
+CFLAGS = ("-O2", "-ffp-contract=off", "-fPIC", "-shared")
+
+
+@functools.cache
+def _gcc_version() -> str:
+    return subprocess.run(
+        ["gcc", "--version"], check=True, capture_output=True, timeout=30,
+    ).stdout.decode(errors="replace")
+
 
 def build_lib(name: str, source: str) -> ctypes.CDLL:
-    """Compile `source` (cached by content hash) and load it."""
-    digest = hashlib.md5(source.encode()).hexdigest()[:16]
+    """Compile `source` and load it.  The .so is cached under a hash of
+    the source, the gcc flags and `gcc --version`, so a changed flag or
+    compiler builds afresh instead of loading a stale build."""
+    key = "\0".join([source, *CFLAGS, _gcc_version()])
+    digest = hashlib.md5(key.encode()).hexdigest()[:16]
     cache_dir = os.environ.get("XDG_CACHE_HOME") or os.path.join(
         os.path.expanduser("~"), ".cache"
     )
@@ -65,8 +80,7 @@ def build_lib(name: str, source: str) -> ctypes.CDLL:
                 f.write(source)
             tmp_so = os.path.join(td, f"{name}.so")
             subprocess.run(
-                ["gcc", "-O2", "-ffp-contract=off", "-fPIC", "-shared",
-                 "-o", tmp_so, src],
+                ["gcc", *CFLAGS, "-o", tmp_so, src],
                 check=True, capture_output=True, timeout=120,
             )
             # atomic publish — concurrent executor workers race benignly

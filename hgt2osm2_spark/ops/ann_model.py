@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 from ..fanout import fan_out
 from .similarity import (
     _probe_clusters,
+    _seq_scores,
     _train_coarse,
     assign_cluster_col,
     cosine_expr,
@@ -183,56 +184,22 @@ def pq_encode_udf(books: np.ndarray):
     return encode
 
 
-def adc_udf(books: np.ndarray):
-    """ADC score of (query vec, codes) against the stored codebooks —
-    per-distinct-query LUT within each Arrow batch."""
-    books = np.ascontiguousarray(books, dtype=np.float64)
-    m, _ksub, dsub = books.shape
-
-    @F.pandas_udf(T.DoubleType())
-    def adc(qvecs: pd.Series, codes: pd.Series) -> pd.Series:
-        qs = np.array(qvecs.tolist(), dtype=np.float64)
-        if qs.size == 0:
-            return pd.Series([], dtype=np.float64)
-        qs /= np.maximum(np.linalg.norm(qs, axis=1, keepdims=True), 1e-12)
-        cs = np.array(codes.tolist(), dtype=np.int64)
-        out = np.empty(len(qs))
-        # one LUT per DISTINCT query, then one vectorized gather+sum
-        # over all of that query's rows (r9: the per-row Python loop
-        # was ~30 us/row over 10^5 candidate rows). The last-axis
-        # np.sum over m is the same sequential accumulation order as
-        # the old per-row lut[arange(m), cs[i]].sum() — bit-identical.
-        qkeys = np.array([q.tobytes() for q in qs])
-        marange = np.arange(m)
-        for key in pd.unique(qkeys):
-            sel = np.flatnonzero(qkeys == key)
-            qi = qs[sel[0]]
-            # elementwise product + last-axis np.sum: sequential
-            # accumulation (dsub < 128), bit-identical to the
-            # twin's plain-loop dot — BLAS @ is not
-            lut = np.stack([
-                (books[j] * qi[j * dsub : (j + 1) * dsub][None, :]).sum(axis=1)
-                for j in range(m)
-            ])
-            out[sel] = lut[marange[None, :], cs[sel]].sum(axis=1)
-        return pd.Series(out)
-
-    return adc
-
-
 def adc_by_id_udf(books: np.ndarray, qmap: dict):
     """ADC score of (q_id, codes): the query VECTORS ride in the UDF
     closure (`qmap`: q_id -> float64 vector, the tiny collected query
     batch) so each candidate row crosses the Python boundary carrying
     8 bytes of id instead of a dim-sized array (guide §4.1 — at 10^5
     candidate rows x 64 floats that duplicated payload dominated the
-    ADC stage's Arrow transfer). LUT construction and the gather+sum
-    are byte-for-byte the adc_udf body, keyed by id instead of by
-    vector bytes — two rows with the same q_id see the same LUT, so
-    scores are bit-identical to the qvec-carrying form."""
+    ADC stage's Arrow transfer).
+
+    Per distinct query in a batch: normalize, build the (m, ksub)
+    lookup table of subspace dots, then sum LUT[j, code_j] over j. The
+    norm and the LUT go through similarity._seq_scores and the sum over
+    j runs in order, so every addition happens left-to-right, exactly
+    as in the scalar ADC twin of the goldens."""
     books = np.ascontiguousarray(books, dtype=np.float64)
     m, _ksub, dsub = books.shape
-    qarr = {k: np.asarray(v, dtype=np.float64) for k, v in qmap.items()}
+    qarr = {k: np.asarray(v, dtype=np.float64)[None, :] for k, v in qmap.items()}
 
     @F.pandas_udf(T.DoubleType())
     def adc(qids: pd.Series, codes: pd.Series) -> pd.Series:
@@ -241,19 +208,15 @@ def adc_by_id_udf(books: np.ndarray, qmap: dict):
             return pd.Series([], dtype=np.float64)
         cs = np.array(codes.tolist(), dtype=np.int64)
         out = np.empty(len(ids))
-        marange = np.arange(m)
         for key in pd.unique(ids):
             sel = np.flatnonzero(ids == key)
-            # adc_udf's matrix-form normalization: the 1-D norm goes
-            # through BLAS dot and can differ from it in the last bit
-            qi = qarr[key][None, :].copy()
-            qi /= np.maximum(np.linalg.norm(qi, axis=1, keepdims=True), 1e-12)
-            qi = qi[0]
-            lut = np.stack([
-                (books[j] * qi[j * dsub : (j + 1) * dsub][None, :]).sum(axis=1)
-                for j in range(m)
-            ])
-            out[sel] = lut[marange[None, :], cs[sel]].sum(axis=1)
+            q = qarr[key]
+            q = q / max(np.sqrt(_seq_scores(q, q)[0, 0]), 1e-12)
+            acc = np.zeros(len(sel))
+            for j in range(m):
+                lut = _seq_scores(q[:, j * dsub : (j + 1) * dsub], books[j])[0]
+                acc += lut[cs[sel, j]]
+            out[sel] = acc
         return pd.Series(out)
 
     return adc
@@ -297,12 +260,18 @@ def search_topk(
     carries ONLY (p_id, cluster, codes) — the compressed tier, 32x
     smaller than the raw vectors — and raw vectors are joined back for
     just the rerank*k-per-query shortlist (a broadcast of the tiny
-    shortlist against the vector table, a point-lookup-sized read)."""
+    shortlist against the vector table, a point-lookup-sized read).
+
+    q_ids must be unique. With PQ codebooks the query batch is read
+    once (collected), a duplicate q_id raises ValueError, and the probe
+    and the re-attach both use the collected rows, so a
+    nondeterministic `queries` frame cannot hand the scorer a q_id it
+    does not hold."""
     e = embeddings.select(F.col(id_col).alias("p_id"), F.col(vec_col).alias("pvec"))
     q = queries.select("q_id", "qvec")
-    qb = _probe_clusters(q, model.cent, n_probe)
 
     if model.books is None:
+        qb = _probe_clusters(q, model.cent, n_probe)
         # IVF-only: exact cosine needs the raw vectors in the probed
         # lists; cluster is computed inline (narrow) unless the stored
         # encoded table already carries it
@@ -327,15 +296,15 @@ def search_topk(
     # (guide §4.1 / §2.3 — at 10^5 candidate rows the per-row qvec array
     # was ~95% of the ADC stage's join payload and Arrow transfer). The
     # collect is bounded by the query-batch size — the same bound the
-    # broadcast(qb) probe join already imposes. Scores are bit-identical
-    # (same float64 vectors, same LUT arithmetic; see adc_by_id_udf).
-    qrows = q.select("q_id", "qvec").collect()
+    # broadcast probe join already imposes.
+    qrows = q.collect()
     qmap: dict = {}
     for r in qrows:
         if r.q_id in qmap:
             raise ValueError(f"search_topk: duplicate q_id {r.q_id}")
         qmap[r.q_id] = r.qvec
-    qb_slim = qb.select("q_id", "cluster")
+    q = embeddings.sparkSession.createDataFrame(qrows, q.schema)
+    qb_slim = _probe_clusters(q, model.cent, n_probe).select("q_id", "cluster")
 
     if encoded is None:
         # inline path (ivf_pq_ann_topk): one narrow pass computes
@@ -370,7 +339,7 @@ def search_topk(
     )
     # re-attach the query vectors to the tiny shortlist for the exact
     # cosine re-rank (a broadcast of the <= n_queries-row query batch)
-    short = short.join(F.broadcast(q.select("q_id", "qvec")), "q_id")
+    short = short.join(F.broadcast(q), "q_id")
     if rerank_src is not None:
         short = rerank_src.join(
             F.broadcast(short.select("q_id", "qvec", "p_id")), "p_id")

@@ -226,7 +226,7 @@ def stitch_polylines(segments: DataFrame, shuffle_partitions: int | None = None)
     reference's per-level work queue; poly_ord is the deterministic
     surviving-list order that later drives ID assignment (O2/W1)."""
 
-    def do_stitch(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def do_stitch(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         image_id, level = key
         rows = []
         for i, (fx, fy) in enumerate(_stitch_group(pdf, level)):
@@ -381,7 +381,7 @@ _CHAINS_SCHEMA = T.StructType(
 )
 
 
-def _stitch_band(key, pdf: pd.DataFrame) -> pd.DataFrame:
+def _stitch_band(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     image_id, level, _band = key
     # flat-array fast path (r7): a hot checkerboard band yields
     # ~20k+ tiny chains per task, and the old per-chain
@@ -463,7 +463,7 @@ def salted_stitch_polylines(
     closed_chains = chains.where(F.col("closed"))
     open_chains = chains.where(~F.col("closed"))
 
-    def merge_open(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_open(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         image_id, level = key
         pieces = [(np.asarray(r.xs, np.float64), np.asarray(r.ys, np.float64))
                   for r in pdf.itertuples(index=False)]

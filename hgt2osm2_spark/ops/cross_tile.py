@@ -136,7 +136,7 @@ def stitch_across_tiles(post_kept: DataFrame, max_iters: int = 12) -> DataFrame:
 
     grouped = pl.join(labels, "pid")
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (comp,) = key
         level = int(pdf["level"].iloc[0])
         pieces = {

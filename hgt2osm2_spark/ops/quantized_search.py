@@ -25,8 +25,7 @@ Two rejected cuts, kept on record: an unrolled 64-wide element_at
 chain inflated the task binary to 9.5 MiB (4096-node projections
 after CollapseProject inlining, 23.6 s at the gate), and the
 zip_with+aggregate interpreted form ran 7 s; the Arrow matmul runs
-the same pairs in one vectorized pass. int_dot_expr stays exported as
-the column-expression building block for JVM-only compositions.
+the same pairs in one vectorized pass.
 
 Scale shape: the gate query scores the full table per query (the
 brute baseline, like ann_bruteforce, but with no crossJoin — each row
@@ -41,8 +40,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W, functions as F, types as T
 
-from ..fanout import fan_out
-
 
 def int8_codes_expr(vec: Column, max_abs: Column) -> Column:
     """array<int> SQ8 codes: floor(x*127/max_abs + 0.5) clamped."""
@@ -52,16 +49,6 @@ def int8_codes_expr(vec: Column, max_abs: Column) -> Column:
     return F.when(
         max_abs == 0.0, F.transform(vec, lambda v: F.lit(0))
     ).otherwise(F.transform(vec, code))
-
-
-def int_dot_expr(a: Column, b: Column) -> Column:
-    """Exact int64 dot of two int-code arrays (strict left-to-right
-    integer accumulation — order-deterministic, engine-portable)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("long") * y.cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
 
 
 def quantize_codes(embeddings: DataFrame,

@@ -6,9 +6,21 @@
   lsh_ann_topk       random-hyperplane LSH buckets -> candidates ->
                      exact re-rank; the scale path (candidates only)
   embedding_near_dup cosine >= threshold near-duplicate pairs
+  ivf_ann_topk       IVF: k-means coarse centroids -> probe n_probe
+                     clusters -> exact re-rank (via ann_model.search_topk)
+  ivf_pq_ann_topk    IVF-PQ: PQ codes + ADC scoring + exact re-rank of a
+                     shortlist (via ann_model.search_topk)
+  assign_cluster_col nearest-centroid id column (IVF encode and assign)
+  _probe_clusters    each query's n_probe best clusters
+  train_pq           product-quantizer codebooks
+  quantize_embeddings_int8  SQ8 codes (searched in quantized_search)
 
 Distances are computed in float64 with left-to-right accumulation so
-results are deterministic and comparable to an external oracle.
+results are deterministic and comparable to an external oracle. The
+Spark-side cosine re-rank folds with F.aggregate; every Arrow-side
+float score (LSH sign bits, IVF assign and probe, the PQ ADC lookup
+table in ann_model) goes through the one sequential-fold kernel
+_seq_scores, the twin of the scalar goldens' _seq_dot loop.
 """
 
 from __future__ import annotations
@@ -65,51 +77,36 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def lsh_bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-bit bucket id from fixed hyperplanes (deterministic; planes
-    are literal arrays so the whole expression stays JVM-side)."""
-    bits = [
-        F.when(_dot(vec, F.array(*[F.lit(float(v)) for v in p])) >= 0, F.lit(1)).otherwise(F.lit(0))
-        for p in planes
-    ]
-    acc = F.lit(0)
-    for bit in bits:
-        acc = F.shiftleft(acc, 1).bitwiseOR(bit)
-    return acc
+def _seq_scores(V: np.ndarray, rows: np.ndarray) -> np.ndarray:
+    """(n, k) dot scores of V (n, dim) against rows (k, dim), folded
+    left-to-right over the dim axis — the one float scoring kernel of
+    the vector-search family (LSH sign bits, IVF assign and probe, the
+    PQ ADC lookup table). The fold order is the contract: it is the
+    scalar goldens' `_seq_dot` loop, while a BLAS matmul or numpy's
+    pairwise `sum` would reorder the additions and could flip a
+    near-zero sign bit or a near-tie argmax."""
+    scores = np.zeros((V.shape[0], rows.shape[0]), dtype=np.float64)
+    for j in range(V.shape[1]):
+        scores += V[:, j, None] * rows[None, :, j]
+    return scores
 
 
 def _all_buckets_udf(all_planes: np.ndarray):
     """Arrow kernel: every table's sign-bit bucket id for a batch of
-    vectors, vectorized across rows — replaces the per-plane
-    zip_with/aggregate column expression, which Catalyst evaluates
-    interpreted (higher-order functions are outside whole-stage
-    codegen) at ~100us+/row.
-
-    Bit-exactness with the sequential JVM fold (and the golden's
-    _seq_dot twin): the accumulation loops over the dim axis in order,
-    so each row's additions happen left-to-right exactly like
-    F.aggregate / the scalar oracle — a BLAS matmul would reorder the
-    sums and could flip a near-zero sign bit."""
-    from pyspark.sql import types as T
-
+    vectors (plane 0 is the most significant bit), one _seq_scores call
+    over all tables' planes at once."""
     planes = np.asarray(all_planes, dtype=np.float64)  # (tables, planes, dim)
+    n_tables, n_planes, dim = planes.shape
+    flat = planes.reshape(n_tables * n_planes, dim)
+    weights = 1 << np.arange(n_planes - 1, -1, -1, dtype=np.int64)
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def all_buckets(vecs: pd.Series) -> pd.Series:
         V = np.array(vecs.tolist(), dtype=np.float64)  # (n, dim)
         if V.size == 0:
             return pd.Series([], dtype=object)
-        n = V.shape[0]
-        out = np.zeros((n, len(planes)), dtype=np.int64)
-        for t, tbl in enumerate(planes):
-            bucket = np.zeros(n, dtype=np.int64)
-            for p in tbl:
-                acc = np.zeros(n, dtype=np.float64)
-                for j in range(V.shape[1]):
-                    acc += V[:, j] * p[j]
-                bucket = (bucket << 1) | (acc >= 0)
-            out[:, t] = bucket
-        return pd.Series(list(out.astype(np.int32)))
+        bits = (_seq_scores(V, flat) >= 0).reshape(len(V), n_tables, n_planes)
+        return pd.Series(list((bits * weights).sum(axis=2).astype(np.int32)))
 
     return all_buckets
 
@@ -176,86 +173,6 @@ def _kmeans(vecs: np.ndarray, n_centroids: int, iters: int, seed: int) -> np.nda
     return cent
 
 
-#: above this many centroids the literal-expression coarse path would
-#: inline n_centroids x dim float literals into one array_sort tree —
-#: codegen-hostile and uncompilable at real IVF scale (2^14-2^16
-#: centroids at 10^12 vectors; VERDICT r3 "What's wrong" #2). Past the
-#: threshold, assignment and probing switch to an Arrow kernel with the
-#: centroid matrix broadcast in the UDF closure — the same shape the PQ
-#: ADC stage already uses. Both paths fold dot products sequentially
-#: over the dim axis, so they are bit-identical and the dispatch
-#: boundary cannot change results (pinned by test_ivf_assign_parity).
-IVF_EXPR_MAX_CENTROIDS = 64
-
-
-def _seq_scores(V: np.ndarray, centroids: np.ndarray) -> np.ndarray:
-    """(n, n_centroids) dot scores, accumulated sequentially over the
-    dim axis — the same left-to-right fold as the JVM F.aggregate
-    expression (a BLAS matmul would reorder the sums and could flip an
-    argmax/tie on near-equal scores)."""
-    scores = np.zeros((V.shape[0], centroids.shape[0]), dtype=np.float64)
-    for j in range(V.shape[1]):
-        scores += V[:, j, None] * centroids[None, :, j]
-    return scores
-
-
-def _ivf_assign_udf(cent: np.ndarray):
-    centroids = np.ascontiguousarray(cent, dtype=np.float64)
-
-    @F.pandas_udf(T.IntegerType())
-    def assign(vecs: pd.Series) -> pd.Series:
-        V = np.array(vecs.tolist(), dtype=np.float64)
-        if V.size == 0:
-            return pd.Series([], dtype="int32")
-        # argmax ties -> first occurrence = smallest centroid id,
-        # matching the expression path's (s, -i) struct-sort rule
-        return pd.Series(_seq_scores(V, centroids).argmax(axis=1).astype(np.int32))
-
-    return assign
-
-
-def _ivf_probe_udf(cent: np.ndarray, n_probe: int):
-    centroids = np.ascontiguousarray(cent, dtype=np.float64)
-
-    @F.pandas_udf(T.ArrayType(T.IntegerType()))
-    def probe(qvecs: pd.Series) -> pd.Series:
-        Q = np.array(qvecs.tolist(), dtype=np.float64)
-        if Q.size == 0:
-            return pd.Series([], dtype=object)
-        scores = _seq_scores(Q, centroids)
-        nc = centroids.shape[0]
-        idx = np.arange(nc)
-        out = []
-        for r in scores:
-            # descending (score, cluster) lexicographic — identical to
-            # reverse(array_sort(struct(s, c))) on the expression path
-            # (ties pick the HIGHER cluster id first)
-            order = np.lexsort((idx, r))[::-1][:n_probe]
-            out.append(order.astype(np.int32))
-        return pd.Series(out)
-
-    return probe
-
-
-def ivf_assign_expr(vec: Column, centroids: np.ndarray) -> Column:
-    """Nearest-centroid id as a JVM-side expression: argmax of dot
-    against literal centroid arrays (norm of `vec` divides out of the
-    argmax). Implemented as one array_sort over (score, -i) structs —
-    NOT a chained when/otherwise running max, whose expression tree
-    doubles per centroid (2^n nodes) and stalls codegen. Ties pick the
-    smallest centroid id, matching NumPy argmax. Only used up to
-    IVF_EXPR_MAX_CENTROIDS; see assign_cluster_col."""
-    scored = F.array(*[
-        F.struct(
-            _dot(vec, F.array(*[F.lit(float(x)) for x in c])).alias("s"),
-            F.lit(-i).alias("negi"),
-        )
-        for i, c in enumerate(centroids)
-    ])
-    top = F.element_at(F.array_sort(scored), -1)  # max s, then max -i = min i
-    return (-top["negi"]).cast("int")
-
-
 def _train_coarse(embeddings: DataFrame, id_col: str, vec_col: str,
                   n_centroids: int, train_sample: int, iters: int,
                   seed: int) -> np.ndarray:
@@ -271,33 +188,39 @@ def _train_coarse(embeddings: DataFrame, id_col: str, vec_col: str,
 
 
 def assign_cluster_col(vec: Column, cent: np.ndarray) -> Column:
-    """Coarse-quantizer assignment, dispatched on centroid count:
-    literal JVM expression for small codebooks (no Python in the plan),
-    broadcast-matrix Arrow kernel above IVF_EXPR_MAX_CENTROIDS (no
-    literal blowup). Bit-identical either way (_seq_scores fold)."""
-    if len(cent) <= IVF_EXPR_MAX_CENTROIDS:
-        return ivf_assign_expr(vec, cent)
-    return _ivf_assign_udf(cent)(vec)
+    """Coarse-quantizer assignment: nearest centroid by dot (the norm
+    of `vec` divides out of the argmax), an Arrow kernel with the
+    centroid matrix in its closure. Ties go to the smallest centroid
+    id (argmax keeps the first maximum)."""
+    centroids = np.ascontiguousarray(cent, dtype=np.float64)
+
+    @F.pandas_udf(T.IntegerType())
+    def assign(vecs: pd.Series) -> pd.Series:
+        V = np.array(vecs.tolist(), dtype=np.float64)
+        if V.size == 0:
+            return pd.Series([], dtype="int32")
+        return pd.Series(_seq_scores(V, centroids).argmax(axis=1).astype(np.int32))
+
+    return assign(vec)
 
 
 def _probe_clusters(q: DataFrame, cent: np.ndarray, n_probe: int) -> DataFrame:
     """queries (q_id, qvec) -> exploded (q_id, qvec, cluster) rows for
-    the n_probe best clusters by centroid dot. Same dispatch rule as
-    assign_cluster_col."""
-    if len(cent) <= IVF_EXPR_MAX_CENTROIDS:
-        probe_scores = F.array(*[
-            F.struct(_dot(F.col("qvec"), F.array(*[F.lit(float(x)) for x in c])).alias("s"),
-                     F.lit(i).alias("c"))
-            for i, c in enumerate(cent)
-        ])
-        return (
-            q.withColumn("_p", F.slice(F.reverse(F.array_sort(probe_scores)), 1, n_probe))
-            .withColumn("cluster", F.explode(F.transform("_p", lambda st: st["c"])))
-            .drop("_p")
-        )
-    return q.withColumn(
-        "cluster", F.explode(_ivf_probe_udf(cent, n_probe)(F.col("qvec")))
-    )
+    the n_probe best clusters by centroid dot, in descending
+    (score, cluster) order: among equal scores the HIGHER cluster id
+    comes first."""
+    centroids = np.ascontiguousarray(cent, dtype=np.float64)
+    ids = np.arange(len(centroids))
+
+    @F.pandas_udf(T.ArrayType(T.IntegerType()))
+    def probe(qvecs: pd.Series) -> pd.Series:
+        Q = np.array(qvecs.tolist(), dtype=np.float64)
+        if Q.size == 0:
+            return pd.Series([], dtype=object)
+        return pd.Series([np.lexsort((ids, r))[::-1][:n_probe].astype(np.int32)
+                          for r in _seq_scores(Q, centroids)])
+
+    return q.withColumn("cluster", F.explode(probe(F.col("qvec"))))
 
 
 def ivf_ann_topk(

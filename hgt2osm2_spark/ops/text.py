@@ -109,9 +109,9 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
         )
         for lang, ms in sorted(LANG_MARKERS.items())
     ]
-    # argmax: sort by (hits asc, lang desc) and take the last => max hits,
-    # ties -> lexicographically-first language
-    best = F.array_sort(F.array(*scores))[len(LANG_MARKERS) - 1]
+    # argmax: the greatest (hits, lang) struct => max hits, ties -> the
+    # lexicographically last language
+    best = F.array_max(F.array(*scores))
     return df.select(
         "doc_id",
         F.col("lang").alias("lang_actual"),
@@ -197,7 +197,7 @@ def inverted_index(df: DataFrame, min_df: int = 1, max_postings: int | None = No
     caps stopword-like terms (and is reported, not silent: capped
     terms keep their true df_t)."""
     tc = term_counts(df, text_col, id_col)
-    posts = F.array_sort(F.collect_list("doc_id"))
+    posts = F.sort_array(F.collect_list("doc_id"))
     if max_postings is not None:
         posts = F.slice(posts, 1, int(max_postings))
     return (

@@ -45,7 +45,7 @@ def render_polylines(post: DataFrame, width: int = 512) -> DataFrame:
     """post rows (image_id, level, xs, ys, grid_w, grid_h) -> one debug
     PNG per tile. groupBy tile keeps a render task bounded by one tile."""
 
-    def gen(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def gen(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (img_id,) = key
         gw = int(pdf["grid_w"].iloc[0])
         scale = (width - 1) / max(gw - 1, 1)

@@ -68,7 +68,7 @@ def tile_xml(nodes: DataFrame, ways: DataFrame, bounds: bool = False) -> DataFra
     )
     both = n.unionByName(w)
 
-    def fmt(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fmt(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (image_id,) = key
         pdf = pdf.sort_values(["kind", "olevel", "poly_ord", "node_id", "way_id"])
         parts = [_HEADER]

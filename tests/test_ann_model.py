@@ -2,12 +2,17 @@
 parquet codebook artifact, and the no-migration-on-append contract —
 adding vectors re-encodes only the new rows, bit-identically."""
 
+import struct
+from collections import Counter
+
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from hgt2osm2_spark.ops import ann_model as am
 from hgt2osm2_spark.ops import similarity
+from tests import vector_twins as twins
 
 
 def _embs(spark, n=200, dim=16, seed=7, start=0):
@@ -126,24 +131,48 @@ def test_version_gate(tmp_path):
         am.load_ann_model(str(p))
 
 
-def test_adc_by_id_bit_equals_adc(spark):
-    """r9: the slim ADC form (q_id + closure-held query vectors) must
-    score BIT-identically to the qvec-carrying adc_udf it replaced —
-    same LUT arithmetic, keyed by id instead of by vector bytes."""
+def test_adc_by_id_matches_scalar_twin(spark):
+    """The ADC scorer (q_id + closure-held query vectors) equals the
+    scalar twin BIT for bit. dim=64, m=8 gives 8-wide subspaces, where
+    numpy's pairwise `sum` would already reorder the additions."""
     e = _embs(spark, n=120, dim=64, seed=11)
     model = am.fit_ann_model(e, n_centroids=4, m=8, ksub=8, train_sample=64)
     q = _queries(spark, e, n=60)
     enc = am.encode_vectors(e, model).withColumnRenamed("vec_id", "p_id")
-    cand = enc.crossJoin(F.broadcast(q))
-    old = cand.withColumn(
-        "s", am.adc_udf(model.books)(F.col("qvec"), F.col("codes")))
     qmap = {r.q_id: r.qvec for r in q.collect()}
-    new = cand.withColumn(
+    got = enc.crossJoin(F.broadcast(q.select("q_id"))).withColumn(
         "s", am.adc_by_id_udf(model.books, qmap)(F.col("q_id"), F.col("codes")))
-    a = {(r.q_id, r.p_id): r.s for r in old.collect()}
-    b = {(r.q_id, r.p_id): r.s for r in new.collect()}
-    assert len(a) == len(b) == 120 * 60
+    rows = got.collect()
+    assert len(rows) == 120 * 60
     # bit equality, not approx: the scores feed a rank comparator
-    import struct
-    for k in a:
-        assert struct.pack("<d", a[k]) == struct.pack("<d", b[k]), k
+    for r in rows:
+        want = twins.adc(model.books, qmap[r.q_id], r.codes)
+        assert struct.pack("<d", r.s) == struct.pack("<d", want), (r.q_id, r.p_id)
+
+
+def test_search_reads_nondeterministic_queries_once(spark, tmp_path):
+    """A query frame that yields different rows on each evaluation
+    (here: even q_ids, then odd, ...) is read once, so the ADC scorer
+    never meets a q_id it was not given and every q_id gets k rows.
+    Duplicate q_ids raise ValueError."""
+    e = _embs(spark, n=150, seed=3)
+    model = am.fit_ann_model(e, n_centroids=8, m=4, ksub=8,
+                             train_sample=64, iters=5, seed=11)
+    evals = tmp_path / "evals"
+    evals.write_text("0")
+
+    @F.pandas_udf("boolean")
+    def alternate(ids: pd.Series) -> pd.Series:
+        n = int(evals.read_text())
+        evals.write_text(str(n + 1))
+        return ids % 2 == n % 2
+
+    q = _queries(spark, e, n=12).filter(
+        alternate.asNondeterministic()(F.col("q_id")))
+    per_q = Counter(r.q_id for r in am.search_topk(
+        e, q, model, k=3, n_probe=3).collect())
+    assert per_q and set(per_q.values()) == {3}
+
+    dup = _queries(spark, e, n=3)
+    with pytest.raises(ValueError, match="duplicate q_id"):
+        am.search_topk(e, dup.unionByName(dup), model, k=3)

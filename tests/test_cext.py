@@ -326,6 +326,29 @@ def test_loader_absent_symbol_raises(fresh_cache):
         k.lib
 
 
+@pytest.mark.skipif(shutil.which("gcc") is None, reason="gcc not on PATH")
+def test_build_cache_is_keyed_by_flags(fresh_cache, monkeypatch):
+    """Same source, new gcc flags -> a second compile, never the .so
+    built with the old flags."""
+    compiles = []
+    real_run = cext.subprocess.run
+
+    def counting_run(cmd, **kw):
+        if "-o" in cmd:
+            compiles.append(cmd)
+        return real_run(cmd, **kw)
+
+    monkeypatch.setattr(cext.subprocess, "run", counting_run)
+    cext.build_lib("t_flags", _ADD1)
+    cext.build_lib("t_flags", _ADD1)
+    assert len(compiles) == 1  # cached
+    monkeypatch.setattr(cext, "CFLAGS", ("-O0", *cext.CFLAGS[1:]))
+    lib = cext.build_lib("t_flags", _ADD1)
+    assert len(compiles) == 2 and "-O0" in compiles[1]
+    lib.add1.restype, lib.add1.argtypes = ctypes.c_int64, [ctypes.c_int64]
+    assert lib.add1(1) == 2
+
+
 def test_status_reports_every_kernel():
     st = cext.status()
     assert set(st) == {"marching", "stitch", "postproc", "terrain"}

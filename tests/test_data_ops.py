@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hgt2osm2_spark.ops import dedup, multimodal, similarity, text
+from tests import vector_twins as twins
 from tests.conftest import SF_DIR
 
 
@@ -114,30 +115,15 @@ def test_brute_force_topk_vs_numpy(embs, spark):
         assert sorted(got[q["q_id"]]) == want
 
 
-def test_lsh_bucket_kernel_matches_jvm_expr(embs, spark):
-    """The Arrow bucket kernel (_all_buckets_udf) must produce the same
-    bucket ids as the JVM zip_with/aggregate expression twin
-    (lsh_bucket_expr) — both fold the dot product left-to-right, so the
-    sign bits are bit-identical."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from hgt2osm2_spark.ops import similarity
-
+def test_lsh_bucket_kernel_matches_scalar_twin(embs, spark):
+    """The Arrow bucket kernel (_all_buckets_udf) gives the scalar
+    twin's bucket ids: both fold every plane's dot left-to-right, so
+    the sign bits are bit-identical."""
     planes = [similarity._hyperplanes(64, 8, 42 + 101 * t) for t in range(2)]
-    e = embs.select("vec_id", "embedding")
-    jvm = e.select(
-        "vec_id",
-        *[similarity.lsh_bucket_expr(F.col("embedding"), p).alias(f"b{t}")
-          for t, p in enumerate(planes)],
-    ).toPandas().set_index("vec_id").sort_index()
     udf = similarity._all_buckets_udf(np.asarray(planes))
-    arrow = (
-        e.select("vec_id", udf(F.col("embedding")).alias("bb"))
-        .toPandas().set_index("vec_id").sort_index()
-    )
-    for t in range(2):
-        assert jvm[f"b{t}"].tolist() == [int(b[t]) for b in arrow["bb"]]
+    rows = embs.select("embedding", udf(F.col("embedding")).alias("bb")).collect()
+    for r in rows:
+        assert list(r["bb"]) == [twins.bucket(r["embedding"], p) for p in planes]
 
 
 def test_lsh_ann_recall(embs, spark):
@@ -170,47 +156,55 @@ def test_ivf_ann_recall(embs, spark):
     assert len(ivf & exact) >= 8
 
 
-def test_ivf_assign_parity_and_scale(embs, spark, monkeypatch):
-    # dispatch-boundary parity: the literal-expression coarse path and
-    # the broadcast-matrix Arrow kernel must be bit-identical on the
-    # SAME centroids — force each path via the threshold global.
+def _ivf_run(e, q, cent, n_probe):
+    """(assignments by vec_id, probe lists by q_id in emitted order)."""
+    assign = dict(map(tuple, e.select(
+        "vec_id", similarity.assign_cluster_col(F.col("embedding"), cent)).collect()))
+    probes = {}
+    for r in similarity._probe_clusters(q, cent, n_probe).collect():
+        probes.setdefault(r["q_id"], []).append(r["cluster"])
+    return assign, probes
+
+
+def test_ivf_assign_parity_and_scale(embs, spark):
+    """Assign and probe equal the scalar twins at the entry queries'
+    16 centroids and at 96; assign also at 1024 centroids (the scale
+    the Arrow kernel exists for: no n_centroids x dim literal plan)."""
     rng = np.random.default_rng(7)
-    cent = rng.standard_normal((96, 64))
-    e = embs.limit(120).select("vec_id", "embedding")
-    q = embs.limit(8).select(
-        F.col("vec_id").cast("string").alias("q_id"),
-        F.col("embedding").alias("qvec"),
-    )
+    e = embs.orderBy("vec_id").limit(120).select("vec_id", "embedding")
+    q = e.limit(8).select(F.col("vec_id").cast("string").alias("q_id"),
+                          F.col("embedding").alias("qvec"))
+    rows = {r["vec_id"]: r["embedding"] for r in e.collect()}
+    for n_c in (16, 96):
+        cent = rng.standard_normal((n_c, 64))
+        assign, probes = _ivf_run(e, q, cent, 3)
+        assert assign == {vid: twins.assign(v, cent) for vid, v in rows.items()}
+        for r in q.collect():
+            assert probes[r["q_id"]] == twins.probe(r["qvec"], cent, 3)
 
-    def run(threshold):
-        monkeypatch.setattr(similarity, "IVF_EXPR_MAX_CENTROIDS", threshold)
-        assign = (
-            e.select("vec_id", similarity.assign_cluster_col(F.col("embedding"), cent).alias("c"))
-            .toPandas().set_index("vec_id")["c"].sort_index()
-        )
-        probes = sorted(
-            map(tuple, similarity._probe_clusters(q, cent, 3).select("q_id", "cluster").collect())
-        )
-        return assign, probes
-
-    a_expr, p_expr = run(10**9)   # expression path for all 96 centroids
-    a_arrow, p_arrow = run(0)     # Arrow path for all 96 centroids
-    assert a_expr.tolist() == a_arrow.tolist()
-    assert p_expr == p_arrow
-
-    # scale path: 1024 centroids through the Arrow kernel (the literal
-    # plan the dispatch exists to avoid) vs an independent scalar twin
     big = rng.standard_normal((1024, 64))
-    monkeypatch.setattr(similarity, "IVF_EXPR_MAX_CENTROIDS", 64)
-    got = (
-        e.limit(40)
-        .select("vec_id", similarity.assign_cluster_col(F.col("embedding"), big).alias("c"))
-        .toPandas().set_index("vec_id")["c"].sort_index()
-    )
-    rows = {r["vec_id"]: r["embedding"] for r in e.limit(40).collect()}
-    for vid, c in got.items():
-        scores = [sum(float(x) * float(y) for x, y in zip(rows[vid], cc)) for cc in big]
-        assert int(c) == max(range(1024), key=lambda i: (scores[i], -i))
+    few = e.limit(40)
+    got = dict(map(tuple, few.select(
+        "vec_id", similarity.assign_cluster_col(F.col("embedding"), big)).collect()))
+    assert got == {vid: twins.assign(rows[vid], big) for vid in got}
+    assert len(got) == 40
+
+
+def test_ivf_tie_rules(embs, spark):
+    """Duplicated centroid rows tie bit-for-bit: assign picks the
+    smallest id, probe lists the higher id first. With n_probe=3 the
+    third slot is the higher copy of the second-best centroid."""
+    base = np.random.default_rng(3).standard_normal((8, 64))
+    cent = np.vstack([base, base])  # cluster c and c + 8 always tie
+    e = embs.orderBy("vec_id").limit(30).select("vec_id", "embedding")
+    q = e.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qvec"))
+    assign, probes = _ivf_run(e, q, cent, 3)
+    for r in q.collect():
+        a = assign[r["q_id"]]
+        assert a < 8 and a == twins.assign(r["qvec"], cent)
+        p = probes[r["q_id"]]
+        assert p == twins.probe(r["qvec"], cent, 3)
+        assert p[0] == p[1] + 8 == a + 8 and p[2] >= 8
 
 
 def test_ivf_deterministic(embs, spark):

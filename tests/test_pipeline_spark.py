@@ -211,3 +211,29 @@ def test_auto_band_grain_picks_banding_and_matches_manual(spark):
     # small-tile inputs below the threshold keep the fused narrow map
     small_auto = run_contour_pipeline(tiles_df(spark, n_tiles=2, size=33), opt)
     assert small_auto.segments is None
+
+
+def test_grouped_map_udfs_infer_their_eval_type(spark):
+    """Every grouped-map UDF annotates `key: tuple`, so building its
+    applyInPandas plan infers the grouped-map eval type instead of
+    warning "Cannot infer the eval type from type hints"."""
+    import warnings
+
+    from hgt2osm2_spark.ops import contours, cross_tile
+    from hgt2osm2_spark.sinks import debug_png, osm_xml
+
+    seg = spark.createDataFrame([], contours.SEGMENTS_SCHEMA)
+    post = spark.createDataFrame([], contours.POST_SCHEMA)
+    nodes = spark.createDataFrame([], contours.NODES_SCHEMA)
+    ways = spark.createDataFrame(
+        [], "image_id string, level int, poly_ord int, way_id long, "
+            "node_refs array<long>, ele int, contour_ext string")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        contours.stitch_polylines(seg)                    # do_stitch
+        contours.salted_stitch_polylines(seg, band_h=8)   # _stitch_band, merge_open
+        cross_tile.stitch_across_tiles(post)              # assemble
+        osm_xml.tile_xml(nodes, ways)                     # fmt
+        debug_png.render_polylines(post)                  # gen
+    msgs = [str(w.message) for w in caught]
+    assert not [m for m in msgs if "Cannot infer the eval type" in m], msgs

@@ -211,6 +211,7 @@ AUDITED = {
         ("never all-pairs", r"CartesianProduct", "absent"),
         ("ADC + encode are Arrow-batched", r"ArrowEvalPython"),
         ("no per-row Python eval", r"BatchEvalPython", "absent"),
+        ("no literal array_sort argmax", r"array_sort", "absent"),
     ],
     "pack_sequences": [
         ("prefix-sum window is sharded, not single-partition",
