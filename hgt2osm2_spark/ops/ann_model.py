@@ -159,12 +159,34 @@ def load_ann_model(path: str) -> AnnModel:
     return AnnModel(cent=cent, books=books, params=meta)
 
 
+def _unit_rows(vs: np.ndarray) -> np.ndarray:
+    """Rows of ``vs`` divided by max(norm, 1e-12), the squared norm
+    folded left-to-right over dim as in the goldens' scalar `norm`
+    (np.linalg.norm's pairwise sum differs in the last bit)."""
+    n2 = np.zeros(len(vs))
+    for j in range(vs.shape[1]):
+        n2 += vs[:, j] * vs[:, j]
+    return vs / np.maximum(np.sqrt(n2), 1e-12)[:, None]
+
+
+def _sq_dists(sub: np.ndarray, book: np.ndarray) -> np.ndarray:
+    """(n, ksub) squared distances of ``sub`` (n, dsub) to ``book``
+    (ksub, dsub), (a-b)^2 folded left-to-right over dsub as in the
+    goldens' encode twin (numpy's pairwise sum reorders 8+ terms)."""
+    d2 = np.zeros((len(sub), len(book)))
+    for t in range(sub.shape[1]):
+        diff = sub[:, t, None] - book[None, :, t]
+        d2 += diff * diff
+    return d2
+
+
 def pq_encode_udf(books: np.ndarray):
     """PQ codes (array<int>) for a vector column, parameterized by the
-    STORED codebooks. Direct (a-b)^2 with a last-axis np.sum: for
-    dsub < 128 numpy reduces sequentially, so the scalar golden twin's
-    plain loop is bit-identical (the cancellation-prone
-    ||a||^2-2ab+||b||^2 expansion through BLAS is not)."""
+    STORED codebooks: the nearest code per subspace by direct (a-b)^2
+    (the cancellation-prone ||a||^2-2ab+||b||^2 expansion through BLAS
+    is not exact). The norm and the distances are left-to-right folds
+    (_unit_rows, _sq_dists), so every addition happens in the order of
+    the goldens' scalar encode twin."""
     books = np.ascontiguousarray(books, dtype=np.float64)
     m, _ksub, dsub = books.shape
 
@@ -173,12 +195,10 @@ def pq_encode_udf(books: np.ndarray):
         vs = np.array(vecs.tolist(), dtype=np.float64)
         if vs.size == 0:
             return pd.Series([], dtype=object)
-        vs /= np.maximum(np.linalg.norm(vs, axis=1, keepdims=True), 1e-12)
+        vs = _unit_rows(vs)
         codes = np.empty((len(vs), m), dtype=np.int32)
         for j in range(m):
-            sub = vs[:, j * dsub : (j + 1) * dsub]
-            d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = d2.argmin(axis=1)
+            codes[:, j] = _sq_dists(vs[:, j * dsub : (j + 1) * dsub], books[j]).argmin(axis=1)
         return pd.Series(list(codes))
 
     return encode
@@ -194,9 +214,9 @@ def adc_by_id_udf(books: np.ndarray, qmap: dict):
 
     Per distinct query in a batch: normalize, build the (m, ksub)
     lookup table of subspace dots, then sum LUT[j, code_j] over j. The
-    norm and the LUT go through similarity._seq_scores and the sum over
-    j runs in order, so every addition happens left-to-right, exactly
-    as in the scalar ADC twin of the goldens."""
+    norm (_unit_rows) and the LUT (similarity._seq_scores) are
+    left-to-right folds and the sum over j runs in order, so every
+    addition happens exactly as in the scalar ADC twin of the goldens."""
     books = np.ascontiguousarray(books, dtype=np.float64)
     m, _ksub, dsub = books.shape
     qarr = {k: np.asarray(v, dtype=np.float64)[None, :] for k, v in qmap.items()}
@@ -210,8 +230,7 @@ def adc_by_id_udf(books: np.ndarray, qmap: dict):
         out = np.empty(len(ids))
         for key in pd.unique(ids):
             sel = np.flatnonzero(ids == key)
-            q = qarr[key]
-            q = q / max(np.sqrt(_seq_scores(q, q)[0, 0]), 1e-12)
+            q = _unit_rows(qarr[key])
             acc = np.zeros(len(sel))
             for j in range(m):
                 lut = _seq_scores(q[:, j * dsub : (j + 1) * dsub], books[j])[0]

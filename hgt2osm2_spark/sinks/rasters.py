@@ -188,9 +188,14 @@ def write_artifacts(df: DataFrame, out_dir: str) -> int:
     return n
 
 
+def _write_bytes(payload, f) -> None:
+    f.write(bytes(payload))
+
+
 def write_artifacts_distributed(
     df: DataFrame, out_dir: str,
     filename_col: str = "filename", payload_col: str = "payload",
+    dump=_write_bytes,
 ) -> int:
     """Executor-side artifact writer: every task writes its partition's
     (filename, payload) rows straight to shared storage — nothing but a
@@ -200,7 +205,11 @@ def write_artifacts_distributed(
     here, as in the reference's per-tile outputs). On a cluster
     ``out_dir`` is the shared filesystem / object-store mount; at
     10^12 tiles this is the only shape that works — the collect-based
-    helper is a driver OOM. Returns the number of files written."""
+    helper is a driver OOM. ``dump(payload, f)`` writes one payload to
+    the open temp file (default: its raw bytes); a sink that encodes on
+    the way out passes its own, so the encoded bytes never cross the
+    Python boundary (the OSM tiles gzip their XML here). Returns the
+    number of files written."""
     import os
 
     from pyspark.sql import functions as F
@@ -214,7 +223,7 @@ def write_artifacts_distributed(
                 final = os.path.join(out_dir, str(name))
                 tmp = f"{final}.tmp.{os.getpid()}"
                 with open(tmp, "wb") as f:
-                    f.write(bytes(payload))
+                    dump(payload, f)
                 os.replace(tmp, final)
                 n += 1
         yield pd.DataFrame({"n": [n]})

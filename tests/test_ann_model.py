@@ -150,6 +150,38 @@ def test_adc_by_id_matches_scalar_twin(spark):
         assert struct.pack("<d", r.s) == struct.pack("<d", want), (r.q_id, r.p_id)
 
 
+def test_pq_encode_matches_scalar_twin(spark):
+    """The PQ encoder's normalized vectors and subspace distances equal
+    the scalar twin BIT for bit at dim=64, m=8 (8-wide subspaces, where
+    np.linalg.norm and numpy's pairwise `sum` reorder the additions),
+    and the Arrow kernel's codes are the twin's nearest codes."""
+    rng = np.random.default_rng(5)
+    vs = rng.standard_normal((300, 64))
+    books = rng.standard_normal((8, 16, 8)) * 0.3
+
+    def bits(x):
+        return struct.pack(f"<{len(x)}d", *x)
+
+    unit = am._unit_rows(vs)
+    d2 = [am._sq_dists(unit[:, j * 8 : (j + 1) * 8], books[j]) for j in range(8)]
+    want_codes = []
+    for i, v in enumerate(vs):
+        nv = twins.unit(v)
+        assert bits(unit[i]) == bits(nv), i
+        codes = []
+        for j in range(8):
+            want = [twins.sq_dist(nv[j * 8 : (j + 1) * 8], b) for b in books[j]]
+            assert bits(d2[j][i]) == bits(want), (i, j)
+            codes.append(min(range(16), key=lambda c: (want[c], c)))
+        want_codes.append(codes)
+
+    e = spark.createDataFrame([(i, v.tolist()) for i, v in enumerate(vs)],
+                              "vec_id long, embedding array<double>")
+    got = (e.select("vec_id", am.pq_encode_udf(books)(F.col("embedding")).alias("codes"))
+           .orderBy("vec_id").collect())
+    assert [list(r.codes) for r in got] == want_codes
+
+
 def test_search_reads_nondeterministic_queries_once(spark, tmp_path):
     """A query frame that yields different rows on each evaluation
     (here: even q_ids, then odd, ...) is read once, so the ADC scorer

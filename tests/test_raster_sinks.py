@@ -6,6 +6,7 @@ Program.cs:255-263 (1/W, 0, 0, -1/H, lon, lat+1); TSV per
 HGTReader.cs:428-439; color lerp per HGTReader.cs:337-342.
 """
 
+import gzip
 import struct
 import zlib
 
@@ -78,14 +79,9 @@ def test_sink_dataframes(spark):
 
 def test_distributed_artifact_writer_matches_collect(spark, tmp_path):
     """Executor-side artifact writer produces the same file set and
-    bytes as the collect-based golden helper (rasters + tile OSM.gz)."""
-    import gzip
+    bytes as the collect-based golden helper (the OSM .gz files are
+    pinned by test_osm_tile_sink_plan_and_files)."""
     import os
-
-    from hgt2osm2_spark.config import ContourOptions
-    from hgt2osm2_spark.plans.pipeline import run_contour_pipeline
-    from hgt2osm2_spark.sinks import osm_xml, rasters
-    from hgt2osm2_spark.sources.synthetic import tiles_df
 
     tiles = tiles_df(spark, n_tiles=3, size=17, seed=4)
 
@@ -98,12 +94,59 @@ def test_distributed_artifact_writer_matches_collect(spark, tmp_path):
     for name in os.listdir(a_dir):
         assert open(f"{a_dir}/{name}", "rb").read() == open(f"{b_dir}/{name}", "rb").read()
 
-    # per-tile OSM .gz files, deterministic payload (mtime=0)
-    res = run_contour_pipeline(tiles, ContourOptions(), shuffle_partitions=4)
+
+def test_osm_tile_sink_plan_and_files(spark, tmp_path, monkeypatch):
+    """The per-tile OSM sink is two Python operators: the nodes/ways
+    cogroup that formats each tile, then ONE mapInPandas that encodes,
+    gzips and lands each file. No Arrow UDF sits between them and no
+    null-padded union feeds the formatter. Two writes and the collect
+    helper give the same bytes, leave no temp file, and each file is its
+    tile's XML, gzipped at level 6 with mtime=0 and no file name."""
+    import os
+    import re
+
+    from hgt2osm2_spark.config import ContourOptions
+    from hgt2osm2_spark.plans.pipeline import run_contour_pipeline
+    from hgt2osm2_spark.sinks import osm_xml
+
+    res = run_contour_pipeline(
+        tiles_df(spark, n_tiles=3, size=17, seed=4), ContourOptions(), shuffle_partitions=4)
     xml = osm_xml.tile_xml(res.nodes, res.ways)
-    t_dir = str(tmp_path / "tiles")
-    n = osm_xml.write_tile_files_distributed(xml, t_dir, gz=True)
-    assert n == len(os.listdir(t_dir)) > 0
     want = {f"cl{r['image_id']}.osm.gz": r["xml"].encode() for r in xml.collect()}
-    for name, data in want.items():
-        assert gzip.open(f"{t_dir}/{name}", "rb").read() == data
+
+    plans = []
+    cls = type(xml)
+    collect = cls.collect
+
+    def spy(self):
+        rows = collect(self)
+        plan = self._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        plans.append(plan.toString())
+        return rows
+
+    monkeypatch.setattr(cls, "collect", spy)
+    dirs = [str(tmp_path / d) for d in ("a", "b")]
+    counts = [osm_xml.write_tile_files_distributed(xml, d) for d in dirs]
+    monkeypatch.undo()
+
+    assert len(plans) == 2
+    for plan in plans:
+        assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+        # the tree prints parents first: the sink is what sits above the cogroup
+        sink = plan[: plan.index("FlatMapCoGroupsInPandas")]
+        assert len(re.findall(r"\bMapInPandas\b", sink)) == 1, plan
+        assert "ArrowEvalPython" not in plan and not re.search(r"\bUnion\b", plan), plan
+
+    assert counts == [len(want)] * 2 == [3] * 2
+    dirs.append(str(tmp_path / "collect"))  # the golden helper writes the same bytes
+    osm_xml.write_tile_files(xml, dirs[-1])
+    a, b, c = (sorted(os.listdir(d)) for d in dirs)
+    assert a == b == c == sorted(want)
+    for name, text in want.items():
+        data = open(f"{dirs[0]}/{name}", "rb").read()
+        assert all(open(f"{d}/{name}", "rb").read() == data for d in dirs[1:])
+        assert data[:10] == b"\x1f\x8b\x08\x00\x00\x00\x00\x00\x00\xff"
+        assert data[10:-8] == zlib.compress(text, 6, wbits=-15)
+        assert gzip.decompress(data) == text

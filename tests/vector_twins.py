@@ -1,5 +1,5 @@
 """Scalar twins of the vector-search scoring kernels (LSH buckets, IVF
-assign and probe, PQ ADC): plain loops whose every addition runs
+assign and probe, PQ encode and ADC): plain loops whose every addition runs
 left-to-right, the same order as tools/make_golden.py's `_seq_dot`
 loop. Tests compare the Arrow kernels with these bit for bit."""
 
@@ -34,12 +34,26 @@ def probe(vec, cent, n_probe):
     return [i for _s, i in sorted(scores, reverse=True)[:n_probe]]
 
 
+def unit(vec):
+    """vec / max(norm, 1e-12), the squared norm summed in order."""
+    n = max(math.sqrt(seq_dot(vec, vec)), 1e-12)
+    return [float(x) / n for x in vec]
+
+
+def sq_dist(a, b):
+    """Squared distance, (a-b)^2 summed in order."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        d = float(x) - float(y)
+        acc += d * d
+    return acc
+
+
 def adc(books, qvec, codes):
     """ADC score: normalize the query, build the LUT of subspace dots,
     sum the coded entries in subspace order."""
     m, ksub, dsub = books.shape
-    n = max(math.sqrt(seq_dot(qvec, qvec)), 1e-12)
-    nq = [float(x) / n for x in qvec]
+    nq = unit(qvec)
     lut = [[seq_dot(nq[j * dsub:(j + 1) * dsub], books[j][i]) for i in range(ksub)]
            for j in range(m)]
     acc = 0.0

@@ -230,6 +230,12 @@ AUDITED = {
          r"MapInPandas|FlatMapGroupsInPandas"),
         ("never all-pairs", r"CartesianProduct", "absent"),
     ],
+    # the per-tile OSM sink formats each tile in one cogroup of its
+    # nodes and ways (no 11-column null-padded union of the two)
+    "osm_xml_tiles": [
+        ("nodes and ways cogrouped", r"FlatMapCoGroupsInPandas"),
+        ("no null-padded union", r"\bUnion\b", "absent"),
+    ],
     "bm25": [
         ("term stats broadcast (no shuffle of the big side for dft)",
          r"BroadcastHashJoin|BroadcastExchange"),
