@@ -1928,10 +1928,18 @@ def q_tsv_sink(spark, sf_dir):
 
 
 def q_osm_xml_tiles(spark, sf_dir):
-    """S5 sink: per-tile OSM XML documents (length + content md5)."""
+    """S5 sink: per-tile OSM XML documents (length + content md5).
+    Nodes and ways both derive from the assigned rows, and a Python
+    subtree is not deduplicated by ReuseExchange: `assigned` is cached
+    (released on the next call, the cache.py pattern), so the contour
+    pipeline runs once, not once under each side of the cogroup."""
+    from hgt2osm2_spark.cache import scope
     from hgt2osm2_spark.sinks import osm_xml
 
     r = _contour_result(spark)
+    held = scope("osm_xml")
+    held.release()
+    held.hold(r.assigned.cache())
     x = osm_xml.tile_xml(r.nodes, r.ways)
     return x.select(
         "image_id", F.length("xml").alias("n_chars"),

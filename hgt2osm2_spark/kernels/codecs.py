@@ -341,9 +341,9 @@ def decode(data: bytes, fmt: str, w: int, h: int, name: str | None = None) -> np
 
 def iter_decoded_tiles(pdf):
     """Yield (image_id, grid) for each tile row of an Arrow batch
-    DataFrame carrying the input_hint columns — the ONE decode loop
-    shared by every tile-consuming mapInPandas op (pyramid, contour
-    extract, band split); bytes() normalizes bytearray/memoryview
+    DataFrame carrying the input_hint columns — the ONE decode loop,
+    read by ops/tiles.tile_map (every per-tile operator) and the mosaic
+    cogroup's tile side; bytes() normalizes bytearray/memoryview
     payloads."""
     for img, data, w, h, fmt in zip(
         pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]

@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from ..cache import scope as _cache_scope
 
 from ..config import ContourOptions
-from ..kernels import codecs, marching, postprocess, stitch
+from ..kernels import marching, postprocess, stitch
+from .tiles import parse_tile_id, tile_map
 
 SEGMENTS_SCHEMA = T.StructType(
     [
@@ -69,33 +70,31 @@ POST_SCHEMA = T.StructType(
 )
 
 
+def _segment_columns(img: str, seg: np.ndarray) -> dict | None:
+    """SEGMENTS_SCHEMA columns of one tile's (or band's) marching
+    output, seg_ord in emission order; None when it has no segments."""
+    n = len(seg)
+    if n == 0:
+        return None
+    return {
+        "image_id": np.repeat(img, n),
+        "level": seg["level"].astype(np.int32),
+        "row_y": seg["y"].astype(np.int32),
+        "seg_ord": np.arange(n, dtype=np.int32),
+        "x1": seg["x1"],
+        "y1": seg["y1"],
+        "x2": seg["x2"],
+        "y2": seg["y2"],
+    }
+
+
 def extract_contour_segments(tiles: DataFrame, opt: ContourOptions | None = None) -> DataFrame:
     """tiles(input_hint schema) -> segments, in reference emission order
     (seg_ord). Decode happens inside the same Arrow batch as the kernel."""
     opt = opt or ContourOptions()
     d, fake = opt.minor_distance, opt.fake_distance
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                seg = marching.extract_segments(grid, d, fake)
-                n = len(seg)
-                if n == 0:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "image_id": np.repeat(img, n),
-                        "level": seg["level"].astype(np.int32),
-                        "row_y": seg["y"].astype(np.int32),
-                        "seg_ord": np.arange(n, dtype=np.int32),
-                        "x1": seg["x1"],
-                        "y1": seg["y1"],
-                        "x2": seg["x2"],
-                        "y2": seg["y2"],
-                    }
-                )
-
-    return tiles.mapInPandas(gen, schema=SEGMENTS_SCHEMA)
+    return tile_map(tiles, SEGMENTS_SCHEMA, lambda img, grid: _segment_columns(
+        img, marching.extract_segments(grid, d, fake)))
 
 
 BANDS_SCHEMA = T.StructType(
@@ -121,29 +120,21 @@ def split_tile_bands(tiles: DataFrame, opt: ContourOptions | None = None,
     Sub-tile parallelism for native-grain tiles (VERDICT r3 #5): one
     3601² SRTM-1 tile otherwise serializes on a single 50s task."""
     K = max(int(band_rows), 1)
+    cols = [f.name for f in BANDS_SCHEMA.fields]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                gh, gw = grid.shape
-                gb = grid[::-1]  # SW-origin rows
-                ny = gh - 1
-                for bi, lo in enumerate(range(0, max(ny, 0), K)):
-                    hi = min(lo + K, ny)
-                    a, b = max(lo - 1, 0), min(hi + 2, gh)
-                    band_ns = np.ascontiguousarray(gb[a:b][::-1]).astype("<i2")
-                    rows.append({
-                        "image_id": img, "band": bi, "y_base": a,
-                        "cell_lo": lo - a, "cell_hi": hi - a,
-                        "bw": gw, "bh": b - a,
-                        "payload": band_ns.tobytes(),
-                    })
-            yield pd.DataFrame(rows, columns=[f.name for f in BANDS_SCHEMA.fields])
+    def body(img, grid):
+        gh, gw = grid.shape
+        gb = grid[::-1]  # SW-origin rows
+        ny = gh - 1
+        rows = []
+        for bi, lo in enumerate(range(0, max(ny, 0), K)):
+            hi = min(lo + K, ny)
+            a, b = max(lo - 1, 0), min(hi + 2, gh)
+            band_ns = np.ascontiguousarray(gb[a:b][::-1]).astype("<i2")
+            rows.append((img, bi, a, lo - a, hi - a, gw, b - a, band_ns.tobytes()))
+        return pd.DataFrame(rows, columns=cols)
 
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=BANDS_SCHEMA
-    )
+    return tile_map(tiles, BANDS_SCHEMA, body)
 
 
 def extract_contour_segments_banded(
@@ -178,21 +169,9 @@ def extract_contour_segments_banded(
                     grid, d, fake,
                     cell_lo=int(c_lo), cell_hi=int(c_hi), y_base=int(y_base),
                 )
-                n = len(seg)
-                if n == 0:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "image_id": np.repeat(img, n),
-                        "level": seg["level"].astype(np.int32),
-                        "row_y": seg["y"].astype(np.int32),
-                        "seg_ord": np.arange(n, dtype=np.int32),
-                        "x1": seg["x1"],
-                        "y1": seg["y1"],
-                        "x2": seg["x2"],
-                        "y2": seg["y2"],
-                    }
-                )
+                cols = _segment_columns(img, seg)
+                if cols is not None:
+                    yield pd.DataFrame(cols)
 
     return bands.mapInPandas(gen, schema=SEGMENTS_SCHEMA)
 
@@ -672,6 +651,35 @@ def postprocess_polylines(
     return joined.mapInPandas(post, schema=POST_SCHEMA)
 
 
+def _tile_polylines(grid: np.ndarray, opt: ContourOptions, strict_reference: bool):
+    """The fused paths' one per-tile chain: march, stitch and post one
+    decoded tile. Yields, per polyline in stitching order (levels
+    ascending), (level, poly_ord, xs, ys, closed, status, n_unn,
+    n_dp): xs/ys are the post-processed vertices when kept (status 0),
+    else the stitched ones, and poly_ord counts each level's polylines
+    from 0."""
+    seg = marching.extract_segments(grid, opt.minor_distance, opt.fake_distance)
+    if len(seg) == 0:
+        return
+    lvls, offs, fx, fy = stitch.stitch_tile_arrays(seg)
+    oxs, oys, ooff, status, n_unn, n_dp = postprocess.run_polylines_batch(
+        fx, fy, offs, opt.min_vertice_points, opt.min_bounding_box,
+        1.0 / grid.shape[1], opt.douglas_peucker, strict_reference,
+    )
+    poly_ord, prev_lv = 0, None
+    for i, lv in enumerate(lvls.tolist()):
+        poly_ord = poly_ord + 1 if lv == prev_lv else 0
+        prev_lv = lv
+        s, e = offs[i], offs[i + 1]
+        if status[i] == 0:
+            xs, ys = oxs[ooff[i]:ooff[i + 1]], oys[ooff[i]:ooff[i + 1]]
+        else:
+            xs, ys = fx[s:e], fy[s:e]
+        yield (int(lv), poly_ord, xs, ys,
+               bool(fx[s] == fx[e - 1] and fy[s] == fy[e - 1]),
+               int(status[i]), int(n_unn[i]), int(n_dp[i]))
+
+
 def extract_stitch_post_fused(
     tiles: DataFrame, opt: ContourOptions | None = None, strict_reference: bool = True
 ) -> DataFrame:
@@ -688,61 +696,18 @@ def extract_stitch_post_fused(
     (the staged variant remains for checkpoint-resume and for few-huge-
     tile workloads)."""
     opt = opt or ContourOptions()
-    d, fake = opt.minor_distance, opt.fake_distance
-    minpt, minbox, dp = opt.min_vertice_points, opt.min_bounding_box, opt.douglas_peucker
     cols = [f.name for f in POST_SCHEMA.fields]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for img, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                w, h = int(w), int(h)
-                grid = codecs.decode(data, fmt, w, h)
-                seg = marching.extract_segments(grid, d, fake)
-                if len(seg) == 0:
-                    continue
-                lvls, offs, fx, fy = stitch.stitch_tile_arrays(seg)
-                oxs, oys, ooff, status, n_unn, n_dp = (
-                    postprocess.run_polylines_batch(
-                        fx, fy, offs, minpt, minbox, 1.0 / w, dp,
-                        strict_reference
-                    )
-                )
-                poly_ord = 0
-                prev_lv = None
-                for i, lv in enumerate(lvls.tolist()):
-                    if lv != prev_lv:
-                        poly_ord = 0
-                        prev_lv = lv
-                    s, e = offs[i], offs[i + 1]
-                    kept = status[i] == 0
-                    if kept:
-                        ks, ke = ooff[i], ooff[i + 1]
-                        uxs, uys = oxs[ks:ke].tolist(), oys[ks:ke].tolist()
-                    else:
-                        uxs, uys = fx[s:e].tolist(), fy[s:e].tolist()
-                    out.append(
-                        (
-                            img,
-                            int(lv),
-                            poly_ord,
-                            uxs,
-                            uys,
-                            bool(fx[s] == fx[e - 1] and fy[s] == fy[e - 1]),
-                            bool(kept),
-                            postprocess.STATUS_REASONS[status[i]],
-                            int(n_unn[i]),
-                            int(n_dp[i]),
-                            w,
-                            h,
-                        )
-                    )
-                    poly_ord += 1
-            yield pd.DataFrame(out, columns=cols)
+    def body(img, grid):
+        h, w = grid.shape
+        return pd.DataFrame([
+            (img, lv, po, xs.tolist(), ys.tolist(), closed, status == 0,
+             postprocess.STATUS_REASONS[status], n_unn, n_dp, w, h)
+            for lv, po, xs, ys, closed, status, n_unn, n_dp
+            in _tile_polylines(grid, opt, strict_reference)
+        ], columns=cols)
 
-    return tiles.mapInPandas(gen, schema=POST_SCHEMA)
+    return tile_map(tiles, POST_SCHEMA, body)
 
 
 NODES_SCHEMA = T.StructType(
@@ -771,50 +736,24 @@ def fused_tile_nodes(
     from ..config import tile_first_id
 
     opt = opt or ContourOptions()
-    d, fake = opt.minor_distance, opt.fake_distance
-    minpt, minbox, dp = opt.min_vertice_points, opt.min_bounding_box, opt.douglas_peucker
     cols = [f.name for f in NODES_SCHEMA.fields]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for img, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                w, h = int(w), int(h)
-                grid = codecs.decode(data, fmt, w, h)
-                seg = marching.extract_segments(grid, d, fake)
-                if len(seg) == 0:
-                    continue
-                lvls, offs, fx, fy = stitch.stitch_tile_arrays(seg)
-                oxs, oys, ooff, status, _n_unn, _n_dp = (
-                    postprocess.run_polylines_batch(
-                        fx, fy, offs, minpt, minbox, 1.0 / w, dp,
-                        strict_reference
-                    )
-                )
-                lat0 = int(img[1:3]) * (-1 if img[0] in "sS" else 1)
-                lon0 = int(img[4:7]) * (-1 if img[3] in "wW" else 1)
-                node_id = tile_first_id(lat0, lon0)
-                poly_ord = 0
-                prev_lv = None
-                for i, lv in enumerate(lvls.tolist()):
-                    if lv != prev_lv:
-                        poly_ord = 0
-                        prev_lv = lv
-                    if status[i] != 0:
-                        poly_ord += 1
-                        continue
-                    ks, ke = ooff[i], ooff[i + 1]
-                    for x, y in zip(oxs[ks:ke].tolist(), oys[ks:ke].tolist()):
-                        out.append(
-                            (img, int(lv), poly_ord, node_id, lat0 + y / (h - 1), lon0 + x / (w - 1))
-                        )
-                        node_id += 1
-                    poly_ord += 1
-            yield pd.DataFrame(out, columns=cols)
+    def body(img, grid):
+        h, w = grid.shape
+        lat0, lon0, _k = parse_tile_id(img)
+        node_id = tile_first_id(lat0, lon0)
+        out = []
+        for lv, po, xs, ys, _closed, status, _n_unn, _n_dp in _tile_polylines(
+            grid, opt, strict_reference
+        ):
+            if status != 0:
+                continue
+            for x, y in zip(xs.tolist(), ys.tolist()):
+                out.append((img, lv, po, node_id, lat0 + y / (h - 1), lon0 + x / (w - 1)))
+                node_id += 1
+        return pd.DataFrame(out, columns=cols)
 
-    return tiles.mapInPandas(gen, schema=NODES_SCHEMA)
+    return tile_map(tiles, NODES_SCHEMA, body)
 
 
 GEOM_SCHEMA = T.StructType(

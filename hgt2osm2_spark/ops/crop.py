@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from ..kernels import codecs
+from .tiles import parse_tile_id
 
 
 def crop_grid(
@@ -101,8 +102,7 @@ def crop_tiles(
                 pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"], pdf["caption"]
             ):
                 w, h = int(w), int(h)
-                lat0 = int(img[1:3]) * (-1 if img[0] in "sS" else 1)
-                lon0 = int(img[4:7]) * (-1 if img[3] in "wW" else 1)
+                lat0, lon0, _k = parse_tile_id(img)
                 grid = codecs.decode(data, fmt, w, h)
                 win = degree_window_to_index(
                     lon0, lat0, w, h, min_lon, min_lat, max_lon, max_lat

@@ -14,14 +14,12 @@ contour node/way streams, which stay below base + 10^9 in practice).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from ..config import tile_first_id
-from ..kernels import codecs
+from .tiles import parse_tile_id, tile_map
 
 #: offset added to the tile base for decoration IDs
 DECOR_OFFSET = 5_000_000_000
@@ -55,42 +53,32 @@ AREAS_WAYS_SCHEMA = T.StructType(
 )
 
 
-def _tile_geo(img: str):
-    lat0 = int(img[1:3]) * (-1 if img[0] in "sS" else 1)
-    lon0 = int(img[4:7]) * (-1 if img[3] in "wW" else 1)
-    return lat0, lon0
-
-
 def show_points(
     tiles: DataFrame, lat_min: float, lon_min: float, dlat: float, dlon: float
 ) -> DataFrame:
     """Grid samples inside [lat_min, lat_min+dlat] x [lon_min, ...] as
     elevationpoint nodes; iteration order x-major, y inner (the
     reference's loop, :2071-2082)."""
+    cols = [f.name for f in POINTS_SCHEMA.fields]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for img, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                w, h = int(w), int(h)
-                lat0, lon0 = _tile_geo(img)
-                grid = codecs.decode(data, fmt, w, h)  # rows N->S
-                gb = grid[::-1, :]  # y up from SW (Get4XY origin)
-                actid = tile_first_id(lat0, lon0) + DECOR_OFFSET + POINTS_SUB
-                for x in range(w):
-                    lon = lon0 + x / (w - 1)
-                    if not (lon_min <= lon <= lon_min + dlon):
-                        continue
-                    for y in range(h):
-                        lat = lat0 + y / (h - 1)
-                        if lat_min <= lat <= lat_min + dlat:
-                            out.append((img, actid, lat, lon, int(gb[y, x]), "elevationpoint"))
-                            actid += 1
-            yield pd.DataFrame(out, columns=[f.name for f in POINTS_SCHEMA.fields])
+    def body(img, grid):
+        h, w = grid.shape  # grid rows run N->S
+        lat0, lon0, _k = parse_tile_id(img)
+        gb = grid[::-1, :]  # y up from SW (Get4XY origin)
+        actid = tile_first_id(lat0, lon0) + DECOR_OFFSET + POINTS_SUB
+        out = []
+        for x in range(w):
+            lon = lon0 + x / (w - 1)
+            if not (lon_min <= lon <= lon_min + dlon):
+                continue
+            for y in range(h):
+                lat = lat0 + y / (h - 1)
+                if lat_min <= lat <= lat_min + dlat:
+                    out.append((img, actid, lat, lon, int(gb[y, x]), "elevationpoint"))
+                    actid += 1
+        return pd.DataFrame(out, columns=cols)
 
-    return tiles.mapInPandas(gen, schema=POINTS_SCHEMA)
+    return tile_map(tiles, POINTS_SCHEMA, body)
 
 
 def show_areas(tiles: DataFrame, lat_min: float, lon_min: float, dlat: float, dlon: float):
@@ -99,63 +87,51 @@ def show_areas(tiles: DataFrame, lat_min: float, lon_min: float, dlat: float, dl
     rendered as actid - pseudo_id; half-cell shift, :2087-2130).
     Returns (nodes_df, ways_df)."""
 
-    def gen_nodes(batches):
-        for pdf in batches:
-            yield _areas(pdf, want="nodes")
-
-    def gen_ways(batches):
-        for pdf in batches:
-            yield _areas(pdf, want="ways")
-
-    def _areas(pdf: pd.DataFrame, want: str) -> pd.DataFrame:
+    def areas(img: str, grid: np.ndarray) -> tuple[list, list]:
         nodes_out, ways_out = [], []
-        for img, data, w, h, fmt in zip(
-            pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-        ):
-            w, h = int(w), int(h)
-            lat0, lon0 = _tile_geo(img)
-            grid = codecs.decode(data, fmt, w, h)
-            gb = grid[::-1, :]
-            node_base = tile_first_id(lat0, lon0) + DECOR_OFFSET + AREA_NODES_SUB
-            way_base = tile_first_id(lat0, lon0) + DECOR_OFFSET + AREA_WAYS_SUB
-            store: dict[tuple[int, int], int] = {}
-            next_id = -1
-            waypoints: list[int] = []
-            cells: list[tuple[int, int]] = []
-            for x in range(w):
-                lon = lon0 + x / (w - 1)
-                if not (lon_min <= lon <= lon_min + dlon):
+        h, w = grid.shape
+        lat0, lon0, _k = parse_tile_id(img)
+        gb = grid[::-1, :]
+        node_base = tile_first_id(lat0, lon0) + DECOR_OFFSET + AREA_NODES_SUB
+        way_base = tile_first_id(lat0, lon0) + DECOR_OFFSET + AREA_WAYS_SUB
+        store: dict[tuple[int, int], int] = {}
+        next_id = -1
+        waypoints: list[int] = []
+        cells: list[tuple[int, int]] = []
+        for x in range(w):
+            lon = lon0 + x / (w - 1)
+            if not (lon_min <= lon <= lon_min + dlon):
+                continue
+            for y in range(h):
+                lat = lat0 + y / (h - 1)
+                if not (lat_min <= lat <= lat_min + dlat):
                     continue
-                for y in range(h):
-                    lat = lat0 + y / (h - 1)
-                    if not (lat_min <= lat <= lat_min + dlat):
-                        continue
-                    for cx, cy in ((x, y), (x + 1, y), (x + 1, y + 1), (x, y + 1)):
-                        pid = store.get((cx, cy))
-                        if pid is None:
-                            pid = store[(cx, cy)] = next_id
-                            next_id -= 1
-                        waypoints.append(pid)
-                    cells.append((x, y))
-            dlat_h = (1.0 / (h - 1)) / 2
-            dlon_h = (1.0 / (w - 1)) / 2
-            for (cx, cy), pid in store.items():
-                nodes_out.append(
-                    (img, node_base - pid,
-                     lat0 + cy / (h - 1) - dlat_h, lon0 + cx / (w - 1) - dlon_h,
-                     0, "elevationarea_corner")
-                )
-            for i in range(0, len(waypoints), 4):
-                x, y = cells[i // 4]
-                refs = [node_base - waypoints[i + j] for j in (0, 1, 2, 3)] + [node_base - waypoints[i]]
-                ways_out.append(
-                    (img, way_base + 1 + i // 4, refs, int(gb[min(y, h - 1), min(x, w - 1)]),
-                     "elevationarea")
-                )
-        if want == "nodes":
-            return pd.DataFrame(nodes_out, columns=[f.name for f in AREAS_NODES_SCHEMA.fields])
-        return pd.DataFrame(ways_out, columns=[f.name for f in AREAS_WAYS_SCHEMA.fields])
+                for cx, cy in ((x, y), (x + 1, y), (x + 1, y + 1), (x, y + 1)):
+                    pid = store.get((cx, cy))
+                    if pid is None:
+                        pid = store[(cx, cy)] = next_id
+                        next_id -= 1
+                    waypoints.append(pid)
+                cells.append((x, y))
+        dlat_h = (1.0 / (h - 1)) / 2
+        dlon_h = (1.0 / (w - 1)) / 2
+        for (cx, cy), pid in store.items():
+            nodes_out.append(
+                (img, node_base - pid,
+                 lat0 + cy / (h - 1) - dlat_h, lon0 + cx / (w - 1) - dlon_h,
+                 0, "elevationarea_corner")
+            )
+        for i in range(0, len(waypoints), 4):
+            x, y = cells[i // 4]
+            refs = [node_base - waypoints[i + j] for j in (0, 1, 2, 3)] + [node_base - waypoints[i]]
+            ways_out.append(
+                (img, way_base + 1 + i // 4, refs, int(gb[min(y, h - 1), min(x, w - 1)]),
+                 "elevationarea")
+            )
+        return nodes_out, ways_out
 
-    nodes = tiles.mapInPandas(gen_nodes, schema=AREAS_NODES_SCHEMA)
-    ways = tiles.mapInPandas(gen_ways, schema=AREAS_WAYS_SCHEMA)
+    nodes = tile_map(tiles, AREAS_NODES_SCHEMA, lambda img, grid: pd.DataFrame(
+        areas(img, grid)[0], columns=[f.name for f in AREAS_NODES_SCHEMA.fields]))
+    ways = tile_map(tiles, AREAS_WAYS_SCHEMA, lambda img, grid: pd.DataFrame(
+        areas(img, grid)[1], columns=[f.name for f in AREAS_WAYS_SCHEMA.fields]))
     return nodes, ways

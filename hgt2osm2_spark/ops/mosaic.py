@@ -90,6 +90,7 @@ from ..cache import scope
 from ..kernels import codecs
 from .terrain import (D8_NEIGHBORS, aspect_octant, d8_grid, fill_grid,
                       hillshade_grid, horn_grid, morph_grid)
+from .tiles import parse_tile_id, tile_map
 
 NOVALUE = int(codecs.NOVALUE)
 
@@ -124,14 +125,6 @@ LEN_CELLS_SCHEMA = "gx long, gy long, steps long, n_card long, n_diag long"
 # Packing is safe: global coords < 2^21, and a 2^31-step drainage path
 # would need two billion cells in ONE path — beyond any planet mosaic.
 _PACK = np.int64(1) << np.int64(32)
-
-
-def parse_tile_id(image_id: str) -> tuple[int, int, str]:
-    """`[ns]DD[ew]DDD_k` -> (lat, lon, k) — the scalar twin of
-    ids.with_tile_key's column parse."""
-    lat = int(image_id[1:3]) * (-1 if image_id[0] in "sS" else 1)
-    lon = int(image_id[4:7]) * (-1 if image_id[3] in "wW" else 1)
-    return lat, lon, image_id.split("_", 1)[1] if "_" in image_id else "0"
 
 
 def tile_id(lat: int, lon: int, k: str) -> str:
@@ -246,17 +239,8 @@ def halo_strips(tiles: DataFrame) -> DataFrame:
     """Every tile -> 8 perimeter strips of its elevations addressed to
     its neighbors (STRIP_SCHEMA rows, geometry in _edge_strips; the
     raster itself never leaves the task)."""
-    from typing import Iterator
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _frame([_edge_strips(grid, img)
-                          for img, grid in codecs.iter_decoded_tiles(pdf)],
-                         STRIP_SCHEMA)
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=STRIP_SCHEMA
-    )
+    return tile_map(tiles, STRIP_SCHEMA,
+                    lambda img, grid: _edge_strips(grid, img))
 
 
 # ------------------------------------------------------------ spark stages

@@ -29,39 +29,20 @@ Two equivalent formulations, pinned equal by test + gate oracle:
 from __future__ import annotations
 
 import numpy as np
-
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels import codecs
+from .tiles import cell_columns, tile_map
 
 
 def explode_cells(tiles: DataFrame) -> DataFrame:
     """tiles (input_hint schema) -> per-cell rows
     (image_id, x, y, value) via one Arrow decode pass."""
-    from typing import Iterator
+    def body(img, grid):
+        return {"image_id": img, **cell_columns(grid)}
 
-    import numpy as np
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                gh, gw = grid.shape
-                ys, xs = np.mgrid[0:gh, 0:gw]
-                parts.append(pd.DataFrame({
-                    "image_id": img,
-                    "x": xs.ravel().astype(np.int32),
-                    "y": ys.ravel().astype(np.int32),
-                    "value": grid.ravel().astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-                {"image_id": [], "x": [], "y": [], "value": []}
-            )
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema="image_id string, x int, y int, value int"
-    )
+    return tile_map(tiles, "image_id string, x int, y int, value int", body)
 
 
 def pyramid_level_up(cells: DataFrame) -> DataFrame:
@@ -119,31 +100,16 @@ def pyramid_cells(tiles: DataFrame, levels: int) -> DataFrame:
     build_pyramid(explode_cells(tiles), levels)."""
     if levels < 1:
         raise ValueError(f"pyramid_cells: levels must be >= 1, got {levels}")
-    from typing import Iterator
+    def body(img, grid):
+        parts = []
+        for lvl in range(1, levels + 1):
+            grid = halve_grid(grid)
+            parts.append(pd.DataFrame({"level": np.int32(lvl), "image_id": img,
+                                       **cell_columns(grid)}))
+        return pd.concat(parts, ignore_index=True)
 
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                for lvl in range(1, levels + 1):
-                    grid = halve_grid(grid)
-                    gh, gw = grid.shape
-                    ys, xs = np.mgrid[0:gh, 0:gw]
-                    parts.append(pd.DataFrame({
-                        "level": np.int32(lvl),
-                        "image_id": img,
-                        "x": xs.ravel().astype(np.int32),
-                        "y": ys.ravel().astype(np.int32),
-                        "value": grid.ravel().astype(np.int32),
-                    }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame(
-                {"level": [], "image_id": [], "x": [], "y": [], "value": []}
-            )
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema="level int, image_id string, x int, y int, value int"
+    return tile_map(
+        tiles, "level int, image_id string, x int, y int, value int", body
     )
 
 

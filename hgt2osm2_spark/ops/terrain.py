@@ -47,6 +47,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from ..kernels import codecs
+from .tiles import tile_map
 
 #: aspect_oct sector conditions, in CASE/np.select order: first match
 #: wins; sectors are half-open [k*45, (k+1)*45) from +x through +y.
@@ -104,41 +105,16 @@ TERRAIN_SCHEMA = (
 def terrain_cells(tiles: DataFrame) -> DataFrame:
     """PRODUCTION terrain derivatives: tiles (input_hint schema) ->
     per-interior-cell Horn rows, one narrow Arrow pass, no Exchange."""
-    from typing import Iterator
+    def body(img, grid):
+        ys, xs, ndx, ndy = horn_grid(grid)
+        return {
+            "image_id": img, "x": xs, "y": ys, "ndx": ndx, "ndy": ndy,
+            "slope_q": ndx * ndx + ndy * ndy,
+            "dzdx": ndx / 8.0, "dzdy": ndy / 8.0,
+            "aspect_oct": aspect_octant(ndx, ndy),
+        }
 
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, ndx, ndy = horn_grid(grid)
-                parts.append(pd.DataFrame({
-                    "image_id": img,
-                    "x": xs,
-                    "y": ys,
-                    "ndx": ndx,
-                    "ndy": ndy,
-                    "slope_q": ndx * ndx + ndy * ndy,
-                    "dzdx": ndx / 8.0,
-                    "dzdy": ndy / 8.0,
-                    "aspect_oct": aspect_octant(ndx, ndy),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "ndx": pd.Series([], dtype=np.int64),
-                "ndy": pd.Series([], dtype=np.int64),
-                "slope_q": pd.Series([], dtype=np.int64),
-                "dzdx": pd.Series([], dtype=np.float64),
-                "dzdy": pd.Series([], dtype=np.float64),
-                "aspect_oct": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=TERRAIN_SCHEMA
-    )
+    return tile_map(tiles, TERRAIN_SCHEMA, body)
 
 
 #: D8 neighbors in ESRI code order (E, SE, S, SW, W, NW, N, NE) as
@@ -294,6 +270,18 @@ FLOWACC_SCHEMA = (
 )
 
 
+def _flow_body(kernel):
+    """tile_map body: FLOWACC_SCHEMA rows of kernel(grid) -> (ys, xs,
+    acc, outlet_y, outlet_x)."""
+
+    def body(img, grid):
+        ys, xs, acc, oy, ox = kernel(grid)
+        return {"image_id": img, "x": xs, "y": ys, "acc": acc,
+                "outlet_x": ox.astype(np.int32), "outlet_y": oy.astype(np.int32)}
+
+    return body
+
+
 def flow_accumulation(tiles: DataFrame) -> DataFrame:
     """PRODUCTION flow accumulation + watershed outlet: tiles
     (input_hint schema) -> per-valid-cell (upstream-area count,
@@ -302,32 +290,7 @@ def flow_accumulation(tiles: DataFrame) -> DataFrame:
     pass with no Exchange — the iterative graph propagation runs
     inside the kernel in vectorized topological rounds, never as
     driver-side Spark iterations."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, acc, oy, ox = flow_accumulate_grid(grid)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys, "acc": acc,
-                    "outlet_x": ox.astype(np.int32),
-                    "outlet_y": oy.astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "acc": pd.Series([], dtype=np.int64),
-                "outlet_x": pd.Series([], dtype=np.int32),
-                "outlet_y": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=FLOWACC_SCHEMA
-    )
+    return tile_map(tiles, FLOWACC_SCHEMA, _flow_body(flow_accumulate_grid))
 
 
 BASIN_CELLS_SCHEMA = (
@@ -340,33 +303,15 @@ def basin_cells(tiles: DataFrame) -> DataFrame:
     (cell, its elevation, the outlet cell it drains to). The upstream
     half of basin_stats — kept separate so other consumers (stream
     extraction, basin joins) can reuse the labeled frame."""
-    from typing import Iterator
+    def body(img, grid):
+        ys, xs, _, oy, ox = flow_accumulate_grid(grid)
+        return {
+            "image_id": img, "x": xs, "y": ys,
+            "z": grid[ys, xs].astype(np.int32),
+            "outlet_x": ox.astype(np.int32), "outlet_y": oy.astype(np.int32),
+        }
 
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, _, oy, ox = flow_accumulate_grid(grid)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys,
-                    "z": grid[ys, xs].astype(np.int32),
-                    "outlet_x": ox.astype(np.int32),
-                    "outlet_y": oy.astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "z": pd.Series([], dtype=np.int32),
-                "outlet_x": pd.Series([], dtype=np.int32),
-                "outlet_y": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=BASIN_CELLS_SCHEMA
-    )
+    return tile_map(tiles, BASIN_CELLS_SCHEMA, body)
 
 
 def basin_stats(tiles: DataFrame) -> DataFrame:
@@ -399,30 +344,11 @@ def flow_direction(tiles: DataFrame) -> DataFrame:
     labeling, stream extraction all consume this grid). Same scale
     shape as terrain_cells: ONE narrow Arrow decode pass, numpy
     shifted-slice comparisons, no Exchange."""
-    from typing import Iterator
+    def body(img, grid):
+        ys, xs, d8, drop2x = d8_grid(grid)
+        return {"image_id": img, "x": xs, "y": ys, "d8": d8, "drop2x": drop2x}
 
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, d8, drop2x = d8_grid(grid)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys,
-                    "d8": d8, "drop2x": drop2x,
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "d8": pd.Series([], dtype=np.int32),
-                "drop2x": pd.Series([], dtype=np.int64),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=D8_SCHEMA
-    )
+    return tile_map(tiles, D8_SCHEMA, body)
 
 
 HILLSHADE_SCHEMA = "image_id string, x int, y int, shade int"
@@ -442,34 +368,13 @@ def hillshade_cells(
     kernel, bit-pinned against the pure-Python scalar twin
     (tests/test_terrain_text.py) and re-derived per-cell with
     math-module trig by the golden twin (tools/make_golden.py)."""
-    from typing import Iterator
+    def body(img, grid):
+        ys, xs, _ndx, _ndy = horn_grid(grid)
+        shade = hillshade_grid(grid, azimuth_deg, altitude_deg, z_factor)
+        return {"image_id": img, "x": xs, "y": ys,
+                "shade": shade[ys - 1, xs - 1].astype(np.int32)}
 
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, _ndx, _ndy = horn_grid(grid)
-                shade = hillshade_grid(
-                    grid, azimuth_deg, altitude_deg, z_factor
-                )
-                parts.append(pd.DataFrame({
-                    "image_id": img,
-                    "x": xs,
-                    "y": ys,
-                    "shade": shade[ys - 1, xs - 1].astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "shade": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=HILLSHADE_SCHEMA
-    )
+    return tile_map(tiles, HILLSHADE_SCHEMA, body)
 
 
 def hillshade_grid(
@@ -588,35 +493,14 @@ def morphometry_cells(tiles: DataFrame) -> DataFrame:
     rows — the terrain_cells scale shape: ONE narrow Arrow decode
     pass, numpy shifted-slice sums, no Exchange, integer-exact gate
     surface."""
-    from typing import Iterator
+    def body(img, grid):
+        ys, xs, tpi8, tri, rough, zxx, zyy, ixy4 = morph_grid(grid)
+        return {
+            "image_id": img, "x": xs, "y": ys, "tpi8": tpi8, "tri": tri,
+            "rough": rough, "zxx": zxx, "zyy": zyy, "ixy4": ixy4,
+        }
 
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, tpi8, tri, rough, zxx, zyy, ixy4 = morph_grid(grid)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys, "tpi8": tpi8,
-                    "tri": tri, "rough": rough, "zxx": zxx, "zyy": zyy,
-                    "ixy4": ixy4,
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "tpi8": pd.Series([], dtype=np.int64),
-                "tri": pd.Series([], dtype=np.int64),
-                "rough": pd.Series([], dtype=np.int64),
-                "zxx": pd.Series([], dtype=np.int64),
-                "zyy": pd.Series([], dtype=np.int64),
-                "ixy4": pd.Series([], dtype=np.int64),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=MORPH_SCHEMA
-    )
+    return tile_map(tiles, MORPH_SCHEMA, body)
 
 
 #: d8 codes whose step is cardinal (distance 1); the other four are
@@ -696,31 +580,12 @@ def flow_path_length(tiles: DataFrame) -> DataFrame:
     flow_accumulation, so ONE narrow Arrow pass, no Exchange; the
     iterative resolution runs inside the kernel as pointer-doubling
     rounds."""
-    from typing import Iterator
+    def body(img, grid):
+        ys, xs, steps, n_card, n_diag = flow_length_grid(grid)
+        return {"image_id": img, "x": xs, "y": ys, "steps": steps,
+                "n_card": n_card, "n_diag": n_diag}
 
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, steps, n_card, n_diag = flow_length_grid(grid)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys, "steps": steps,
-                    "n_card": n_card, "n_diag": n_diag,
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "steps": pd.Series([], dtype=np.int64),
-                "n_card": pd.Series([], dtype=np.int64),
-                "n_diag": pd.Series([], dtype=np.int64),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=FLOWLEN_SCHEMA
-    )
+    return tile_map(tiles, FLOWLEN_SCHEMA, body)
 
 
 def stream_order_grid(grid: np.ndarray, min_acc: int):
@@ -804,30 +669,11 @@ def stream_order(tiles: DataFrame, min_acc: int = 5) -> DataFrame:
     step downstream of flow accumulation. Tile-local: ONE narrow
     Arrow pass, no Exchange; the order merge runs in-kernel as
     worklist-Kahn rounds."""
-    from typing import Iterator
+    def body(img, grid):
+        ys, xs, acc, order = stream_order_grid(grid, min_acc)
+        return {"image_id": img, "x": xs, "y": ys, "acc": acc, "sorder": order}
 
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                ys, xs, acc, order = stream_order_grid(grid, min_acc)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys,
-                    "acc": acc, "sorder": order,
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "acc": pd.Series([], dtype=np.int64),
-                "sorder": pd.Series([], dtype=np.int64),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=STREAM_ORDER_SCHEMA
-    )
+    return tile_map(tiles, STREAM_ORDER_SCHEMA, body)
 
 
 def fill_grid(grid: np.ndarray) -> np.ndarray:
@@ -910,34 +756,16 @@ def fill_sinks(tiles: DataFrame) -> DataFrame:
     by construction (the seed set IS the tile boundary), so ONE narrow
     Arrow pass, no Exchange — the iterative reconstruction runs
     inside the kernel (C heap pass when available)."""
-    from typing import Iterator
+    def body(img, grid):
+        filled = fill_grid(grid)
+        ys, xs = np.nonzero(grid != codecs.NOVALUE)
+        return {
+            "image_id": img, "x": xs.astype(np.int32), "y": ys.astype(np.int32),
+            "z": grid[ys, xs].astype(np.int32),
+            "zfill": filled[ys, xs].astype(np.int32),
+        }
 
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                filled = fill_grid(grid)
-                ys, xs = np.nonzero(grid != codecs.NOVALUE)
-                parts.append(pd.DataFrame({
-                    "image_id": img,
-                    "x": xs.astype(np.int32),
-                    "y": ys.astype(np.int32),
-                    "z": grid[ys, xs].astype(np.int32),
-                    "zfill": filled[ys, xs].astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "z": pd.Series([], dtype=np.int32),
-                "zfill": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=FILL_SCHEMA
-    )
+    return tile_map(tiles, FILL_SCHEMA, body)
 
 
 def filled_flow_accumulation(tiles: DataFrame) -> DataFrame:
@@ -952,33 +780,8 @@ def filled_flow_accumulation(tiles: DataFrame) -> DataFrame:
     Same one-narrow-Arrow-pass shape as flow_accumulation; zfill
     stays int16-ranged (bounded by the tile's own max z), so the C
     drainage path engages on the filled surface too."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                filled = fill_grid(grid).astype(np.int16)
-                ys, xs, acc, oy, ox = flow_accumulate_grid(filled)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys, "acc": acc,
-                    "outlet_x": ox.astype(np.int32),
-                    "outlet_y": oy.astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "acc": pd.Series([], dtype=np.int64),
-                "outlet_x": pd.Series([], dtype=np.int32),
-                "outlet_y": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=FLOWACC_SCHEMA
-    )
+    return tile_map(tiles, FLOWACC_SCHEMA, _flow_body(
+        lambda grid: flow_accumulate_grid(fill_grid(grid).astype(np.int16))))
 
 
 def routed_flow_grid(filled: np.ndarray):
@@ -1117,33 +920,8 @@ def flat_routed_flow(tiles: DataFrame) -> DataFrame:
     filled_flow keeps flats as terminals; this op is the full
     conditioning a watershed delineation uses). Tile-local: ONE narrow
     Arrow pass, no Exchange."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                filled = fill_grid(grid).astype(np.int16)
-                ys, xs, acc, oy, ox = routed_flow_grid(filled)
-                parts.append(pd.DataFrame({
-                    "image_id": img, "x": xs, "y": ys, "acc": acc,
-                    "outlet_x": ox.astype(np.int32),
-                    "outlet_y": oy.astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "acc": pd.Series([], dtype=np.int64),
-                "outlet_x": pd.Series([], dtype=np.int32),
-                "outlet_y": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=FLOWACC_SCHEMA
-    )
+    return tile_map(tiles, FLOWACC_SCHEMA, _flow_body(
+        lambda grid: routed_flow_grid(fill_grid(grid).astype(np.int16))))
 
 
 def viewshed_grid(grid: np.ndarray, oy: int, ox: int,
@@ -1234,37 +1012,17 @@ def viewshed(tiles: DataFrame, oy: int | None = None, ox: int | None = None,
     pass, no Exchange. Dispatches to the C fast path
     (kernels/terrain_cext.viewshed) with this numpy body as oracle +
     fallback."""
-    from typing import Iterator
+    def body(img, grid):
+        h, w = grid.shape
+        cy = h // 2 if oy is None else oy
+        cx = w // 2 if ox is None else ox
+        vis = viewshed_grid(grid, cy, cx, h_obs, radius)
+        ys, xs = np.nonzero(grid != codecs.NOVALUE)
+        d2 = (ys.astype(np.int64) - cy) ** 2 + (xs.astype(np.int64) - cx) ** 2
+        keep = d2 <= int(radius) * int(radius)
+        ys, xs = ys[keep], xs[keep]
+        return {"image_id": img, "x": xs.astype(np.int32),
+                "y": ys.astype(np.int32),
+                "visible": vis[ys, xs].astype(np.int32)}
 
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                h, w = grid.shape
-                cy = h // 2 if oy is None else oy
-                cx = w // 2 if ox is None else ox
-                vis = viewshed_grid(grid, cy, cx, h_obs, radius)
-                g = grid.astype(np.int64)
-                ys2, xs2 = np.nonzero(g != codecs.NOVALUE)
-                d2 = ((ys2.astype(np.int64) - cy) ** 2
-                      + (xs2.astype(np.int64) - cx) ** 2)
-                keep = d2 <= int(radius) * int(radius)
-                ys2, xs2 = ys2[keep], xs2[keep]
-                parts.append(pd.DataFrame({
-                    "image_id": img,
-                    "x": xs2.astype(np.int32),
-                    "y": ys2.astype(np.int32),
-                    "visible": vis[ys2, xs2].astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "visible": pd.Series([], dtype=np.int32),
-            })
-
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=VIEWSHED_SCHEMA
-    )
+    return tile_map(tiles, VIEWSHED_SCHEMA, body)

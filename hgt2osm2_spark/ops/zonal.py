@@ -23,11 +23,13 @@ int64; mean is ONE IEEE division of exact scalars."""
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels import codecs
 from . import spatial
 from .ids import with_tile_key
+from .tiles import cell_columns, tile_map
 
 CELLS_GEO_SCHEMA = "image_id string, x int, y int, w int, h int, value int"
 
@@ -37,37 +39,12 @@ def cells_geo(tiles: DataFrame) -> DataFrame:
     degree space. The decode emits (x, y, w, h, value) from one Arrow
     pass; the grid->degree transform is a pure JVM projection on top
     (no per-cell Python beyond the decode itself)."""
-    from typing import Iterator
+    def body(img, grid):
+        gh, gw = grid.shape
+        return {"image_id": img, "w": np.int32(gw), "h": np.int32(gh),
+                **cell_columns(grid)}
 
-    import numpy as np
-    import pandas as pd
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                gh, gw = grid.shape
-                ys, xs = np.mgrid[0:gh, 0:gw]
-                parts.append(pd.DataFrame({
-                    "image_id": img,
-                    "x": xs.ravel().astype(np.int32),
-                    "y": ys.ravel().astype(np.int32),
-                    "w": np.int32(gw),
-                    "h": np.int32(gh),
-                    "value": grid.ravel().astype(np.int32),
-                }))
-            yield pd.concat(parts, ignore_index=True) if parts else pd.DataFrame({
-                "image_id": pd.Series([], dtype=object),
-                "x": pd.Series([], dtype=np.int32),
-                "y": pd.Series([], dtype=np.int32),
-                "w": pd.Series([], dtype=np.int32),
-                "h": pd.Series([], dtype=np.int32),
-                "value": pd.Series([], dtype=np.int32),
-            })
-
-    cells = tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=CELLS_GEO_SCHEMA
-    )
+    cells = tile_map(tiles, CELLS_GEO_SCHEMA, body)
     return with_tile_key(cells).select(
         "image_id", "x", "y", "value",
         (F.col("tile_lon") + F.col("x") / (F.col("w") - 1)).alias("lon"),

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from ..kernels import codecs
+from ..ops.tiles import parse_tile_id, tile_map
 
 SINK_SCHEMA = T.StructType(
     [
@@ -61,12 +62,6 @@ def _fmt_g(v: float) -> str:
     """InvariantCulture double formatting (shortest G15)."""
     s = f"{v:.15g}"
     return s
-
-
-def _tile_latlon(image_id: str) -> tuple[int, int]:
-    lat = int(image_id[1:3]) * (-1 if image_id[0] in "sS" else 1)
-    lon = int(image_id[4:7]) * (-1 if image_id[3] in "wW" else 1)
-    return lat, lon
 
 
 # ------------------------------------------------------------------ S6
@@ -116,7 +111,7 @@ def _encode_png_rgb8(img: np.ndarray) -> bytes:
 def geo_png_payloads(
     grid: np.ndarray, image_id: str, coltab: np.ndarray
 ) -> list[tuple[str, bytes]]:
-    lat, lon = _tile_latlon(image_id)
+    lat, lon, _k = parse_tile_id(image_id)
     h, w = grid.shape
     rgb = np.take(coltab, grid.astype(np.int32) + 0x8000, axis=0)
     name = f"Height_{'N' if lat >= 0 else 'S'}{abs(lat):02d}{'E' if lon >= 0 else 'W'}{abs(lon):03d}.png"
@@ -134,42 +129,33 @@ def tsv_text(grid: np.ndarray) -> str:
 
 # ------------------------------------------------------------------ DataFrame layer
 
-def _sink_map(kind: str, geocolor=None):
-    coltab = build_coltab(geocolor) if kind == "geopng" else None
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for img, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                grid = codecs.decode(data, fmt, int(w), int(h))
-                lat, lon = _tile_latlon(img)
-                if kind == "arcinfo":
-                    out.append((img, f"{img}.asc", arcinfo_text(grid, lon, lat).encode()))
-                elif kind == "tsv":
-                    out.append((img, f"{img}.tsv", tsv_text(grid).encode()))
-                else:
-                    for name, payload in geo_png_payloads(grid, img, coltab):
-                        out.append((img, name, payload))
-            yield pd.DataFrame(out, columns=["image_id", "filename", "payload"])
-
-    return gen
+def _artifacts(img: str, named: list[tuple[str, bytes]]) -> dict:
+    """SINK_SCHEMA columns of one tile's (filename, payload) pairs."""
+    return {"image_id": img, "filename": [n for n, _ in named],
+            "payload": [p for _, p in named]}
 
 
 def arcinfo_grid(tiles: DataFrame) -> DataFrame:
     """S6: per-tile ArcInfo ASCII Grid artifacts."""
-    return tiles.mapInPandas(_sink_map("arcinfo"), SINK_SCHEMA)
+
+    def body(img, grid):
+        lat, lon, _k = parse_tile_id(img)
+        return _artifacts(img, [(f"{img}.asc", arcinfo_text(grid, lon, lat).encode())])
+
+    return tile_map(tiles, SINK_SCHEMA, body)
 
 
 def geo_png(tiles: DataFrame, geocolor=None) -> DataFrame:
     """S7: per-tile Geo-PNG + worldfile artifacts (2 rows per tile)."""
-    return tiles.mapInPandas(_sink_map("geopng", geocolor), SINK_SCHEMA)
+    coltab = build_coltab(geocolor)
+    return tile_map(tiles, SINK_SCHEMA, lambda img, grid: _artifacts(
+        img, geo_png_payloads(grid, img, coltab)))
 
 
 def tsv_dump(tiles: DataFrame) -> DataFrame:
     """S9: per-tile TSV raster dump."""
-    return tiles.mapInPandas(_sink_map("tsv"), SINK_SCHEMA)
+    return tile_map(tiles, SINK_SCHEMA, lambda img, grid: _artifacts(
+        img, [(f"{img}.tsv", tsv_text(grid).encode())]))
 
 
 def write_artifacts(df: DataFrame, out_dir: str) -> int:

@@ -5,7 +5,8 @@ oracle_sql() twin exists, compares against DuckDB: row count, sorted
 column names, and order-insensitive values (exact on non-floats,
 bit-exact on floats unless --approx). Prints a header line with each C
 kernel's path (C, or python and why), then one PASS/FAIL line per
-query; exits nonzero on any FAIL.
+query with the Spark and the DuckDB oracle seconds apart (an oracle can
+take minutes where Spark takes a second); exits nonzero on any FAIL.
 
 Usage: python tools/check_entry.py [--sf /root/testdata/sf0.01] [names...]
 """
@@ -91,30 +92,33 @@ def main():
             continue
         dt = time.time() - t0
         if name not in oracles:
-            print(f"ok   {name}: rows-only, {len(srows)} rows ({dt:.1f}s)")
+            print(f"ok   {name}: rows-only, {len(srows)} rows (spark {dt:.1f}s)")
             continue
+        t0 = time.time()
         try:
             res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]
             orows = res.fetchall()
         except Exception:
-            print(f"FAIL {name}: oracle error\n{traceback.format_exc()}")
+            print(f"FAIL {name}: oracle error (spark {dt:.1f}s, oracle "
+                  f"{time.time() - t0:.1f}s)\n{traceback.format_exc()}")
             failed.append(name)
             continue
+        secs = f"(spark {dt:.1f}s, oracle {time.time() - t0:.1f}s)"
         sc, scn = canon([tuple(r) for r in srows], scols)
         oc, ocn = canon(orows, ocols)
         if scn != ocn:
-            print(f"FAIL {name}: columns spark={scn} oracle={ocn}")
+            print(f"FAIL {name}: columns spark={scn} oracle={ocn} {secs}")
             failed.append(name)
         elif len(sc) != len(oc):
-            print(f"FAIL {name}: rows spark={len(sc)} oracle={len(oc)}")
+            print(f"FAIL {name}: rows spark={len(sc)} oracle={len(oc)} {secs}")
             failed.append(name)
         elif sc != oc:
             bad = [(a, b) for a, b in zip(sc, oc) if a != b][:3]
-            print(f"FAIL {name}: values differ; first diffs: {bad}")
+            print(f"FAIL {name}: values differ {secs}; first diffs: {bad}")
             failed.append(name)
         else:
-            print(f"PASS {name}: {len(sc)} rows ({dt:.1f}s)")
+            print(f"PASS {name}: {len(sc)} rows {secs}")
 
     print(f"\n{len(names) - len(failed)}/{len(names)} ok; failures: {failed}")
     from hgt2osm2_spark.cache import release_all

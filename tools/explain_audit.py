@@ -231,10 +231,17 @@ AUDITED = {
         ("never all-pairs", r"CartesianProduct", "absent"),
     ],
     # the per-tile OSM sink formats each tile in one cogroup of its
-    # nodes and ways (no 11-column null-padded union of the two)
+    # nodes and ways (no 11-column null-padded union of the two); both
+    # sides read the one cached `assigned`, so the contour kernel runs
+    # once: each InMemoryRelation roots the same plan (same operator
+    # ids) and the MapInPandas kernel sits inside it
     "osm_xml_tiles": [
         ("nodes and ways cogrouped", r"FlatMapCoGroupsInPandas"),
         ("no null-padded union", r"\bUnion\b", "absent"),
+        ("contour kernel under one cached relation read by both sides",
+         r"InMemoryRelation \(\d+\)\n[^\n]*\+- (?:\* )?\w+ \((\d+)\)[\s\S]*?"
+         r"MapInPandas[\s\S]*InMemoryRelation \(\d+\)\n[^\n]*"
+         r"\+- (?:\* )?\w+ \(\1\)"),
     ],
     "bm25": [
         ("term stats broadcast (no shuffle of the big side for dft)",
