@@ -4,20 +4,22 @@ The stitch assembly (kernels/stitch.py) is the one genuinely sequential,
 order-sensitive kernel in the tile pipeline — the reference's
 PseudoLineBag/PseudoPolylineBag semantics (ContourProcessor2.cs:604-991)
 fix polyline list order, point order, orientation and ring starts, so it
-cannot be expressed as numpy array ops.  After the round-4/5 interning +
-flat-loop work it is still ~200 ms/tile of pure CPython dispatch, which
-is both the headline-throughput bottleneck and the named contributor to
-the 8->32 core scaling ceiling (BENCH/BASELINE.md).
+cannot be expressed as numpy array ops.
 
-This module holds a small C twin of stages 1-4 (row bags -> per-level
-gather -> master adjacency -> assembly) behind ``run``; the C-twin
-contract is in kernels/cext.py.
+This module holds a C twin of stages 1-4 (row bags -> per-level gather
+-> master adjacency -> assembly) behind ``run``, over endpoint ids
+interned by ``stitch._intern``; the C-twin contract is in
+kernels/cext.py. Its oracle and fallback is ``stitch_tile_reference``,
+the port of the C# on float points.
 
-The C code mirrors kernels/stitch.py line-for-line in structure; every
-behavioral quirk (umdrehen keying, duplicate rejection, candidate order
-l1-then-l2, ring retirement, the bridge partner dropped even when Concat
-fails, endpoint reads AFTER the attach) is replicated — see the Python
-twin for the reference file:line citations.
+The C code mirrors the reference's semantics, not its data structures:
+polylines are linked node chains and the endpoint index is a capped
+per-point array (a point with more than IDX_CAP polylines ending on it
+declines the call). Every behavioral quirk (umdrehen keying, duplicate
+rejection, candidate order l1-then-l2, ring retirement, the bridge
+partner dropped even when Concat fails, endpoint reads AFTER the
+attach) is replicated — see kernels/stitch.py for the reference
+file:line citations.
 """
 
 from __future__ import annotations
@@ -246,7 +248,7 @@ int stitch_tile_c(
             }
         }
 
-        /* ---- assembly for this level (mirrors _stitch_arr) ---- */
+        /* ---- assembly for this level (mirrors _stitch_master) ---- */
         ix_cur++;
         nd_cur = 0; pl_cur = 0;
         qsort(mkeys, n_mkeys, 4, cmp_i32);

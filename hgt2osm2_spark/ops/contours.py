@@ -176,11 +176,11 @@ def extract_contour_segments_banded(
     return bands.mapInPandas(gen, schema=SEGMENTS_SCHEMA)
 
 
-def _stitch_group(pdf: pd.DataFrame, level: int):
+def _stitch_frame(pdf: pd.DataFrame):
     """Sort one (image_id, level[, band]) segment group in whole-tile
-    emission order, run the stitch kernel, and yield this level's
-    (fx, fy) polyline slices — the single body shared by the plain and
-    salted paths so reference-order subtleties cannot drift apart.
+    emission order and run the stitch kernel on it: the one body shared
+    by the plain and salted paths so reference-order subtleties cannot
+    drift apart. Returns stitch_tile_arrays' (levels, offsets, xs, ys).
 
     (row_y, seg_ord): for whole-tile segments seg_ord is already
     y-primary so this equals the old seg_ord sort; for banded segments
@@ -192,7 +192,13 @@ def _stitch_group(pdf: pd.DataFrame, level: int):
     seg["level"] = pdf["level"].to_numpy()
     for c in ("x1", "y1", "x2", "y2"):
         seg[c] = pdf[c].to_numpy()
-    lvls, offs, fx, fy = stitch.stitch_tile_arrays(seg)
+    return stitch.stitch_tile_arrays(seg)
+
+
+def _stitch_group(pdf: pd.DataFrame, level: int):
+    """Stitch one (image_id, level) segment group and yield this level's
+    (fx, fy) polyline slices."""
+    lvls, offs, fx, fy = _stitch_frame(pdf)
     for j, lv in enumerate(lvls.tolist()):
         if lv == int(level):
             yield fx[offs[j]:offs[j + 1]], fy[offs[j]:offs[j + 1]]
@@ -367,13 +373,7 @@ def _stitch_band(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
     # canonicalize + dict + tolist tail cost 3x the C stitch
     # itself. The group key pins the level, so every stitched
     # chain is this level — no filter loop needed.
-    pdf = pdf.sort_values(["row_y", "seg_ord"])
-    seg = np.empty(len(pdf), dtype=marching.SEG_DTYPE)
-    seg["y"] = pdf["row_y"].to_numpy()
-    seg["level"] = pdf["level"].to_numpy()
-    for c in ("x1", "y1", "x2", "y2"):
-        seg[c] = pdf[c].to_numpy()
-    _lvls, offs, fx, fy = stitch.stitch_tile_arrays(seg)
+    _lvls, offs, fx, fy = _stitch_frame(pdf)
     ox, oy, oo, cl = _canonical_batch(fx, fy, offs)
     nc = len(oo) - 1
     if nc == 0:

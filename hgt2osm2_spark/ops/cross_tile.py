@@ -18,9 +18,11 @@ Algorithm (all DataFrames):
  2. equi-join endpoints on (level, lat, lon) across DIFFERENT tiles ->
     edges between polyline ids (within one tile, open polylines never
     share endpoints — the stitching invariant);
- 3. connected components by iterative min-label propagation (the
-    alternating-star pattern; components are chains, so iterations ~
-    log(longest chain));
+ 3. connected components by min-label propagation over those edges
+    (dedup.near_dup_components, the engine's one such loop; pieces
+    with no edge keep their own pid). A component is a chain, so a
+    contour line of N pieces takes N rounds (diameter + 1); the loop
+    raises after max_iters rounds;
  4. groupBy(component) -> applyInPandas chain walk -> merged polyline.
 
 Scale notes: step 2 shuffles only ENDPOINTS (2 rows/polyline); step 4
@@ -33,6 +35,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from .dedup import near_dup_components
 from .ids import with_tile_key
 
 MERGED_SCHEMA = T.StructType(
@@ -59,12 +62,14 @@ def _degree_polylines(post_kept: DataFrame) -> DataFrame:
     )
 
 
-def stitch_across_tiles(post_kept: DataFrame, max_iters: int = 12) -> DataFrame:
+def stitch_across_tiles(post_kept: DataFrame, max_iters: int = 100) -> DataFrame:
     """Merge per-tile polylines into cross-tile contour lines.
 
     Input: kept post-production polylines with (image_id, level,
     poly_ord, xs, ys, grid_w, grid_h, closed). Output: MERGED_SCHEMA —
-    one row per geographic contour component (singletons included)."""
+    one row per geographic contour component (singletons included).
+    Raises RuntimeError when a component needs more than max_iters
+    propagation rounds (a line of more than max_iters pieces)."""
     pl = _degree_polylines(post_kept).cache()
 
     ends = pl.select(
@@ -89,52 +94,18 @@ def stitch_across_tiles(post_kept: DataFrame, max_iters: int = 12) -> DataFrame:
         F.col("lon").alias("lon_b"),
         F.col("image_id").alias("t_b"),
     )
-    edges = (
-        a.join(
-            b,
-            (F.col("level") == F.col("level_b"))
-            & (F.col("lat") == F.col("lat_b"))
-            & (F.col("lon") == F.col("lon_b"))
-            & (F.col("pid_a") < F.col("pid_b"))
-            & (F.col("t_a") != F.col("t_b")),
-        )
-        .select("pid_a", "pid_b")
-        .distinct()
-        .cache()
+    edges = a.join(
+        b,
+        (F.col("level") == F.col("level_b"))
+        & (F.col("lat") == F.col("lat_b"))
+        & (F.col("lon") == F.col("lon_b"))
+        & (F.col("pid_a") < F.col("pid_b"))
+        & (F.col("t_a") != F.col("t_b")),
     )
-
-    # min-label propagation
-    labels = pl.select("pid").withColumn("comp", F.col("pid")).cache()
-    sym = edges.unionByName(
-        edges.select(F.col("pid_b").alias("pid_a"), F.col("pid_a").alias("pid_b"))
-    ).cache()
-    for _ in range(max_iters):
-        nbr_min = (
-            sym.join(labels, sym.pid_b == labels.pid)
-            .groupBy("pid_a")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.pid == nbr_min.pid_a, "left")
-            .select(
-                "pid",
-                F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias("comp"),
-            )
-            .cache()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "pid")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            break
-
-    grouped = pl.join(labels, "pid")
+    comps = near_dup_components(edges, "pid_a", "pid_b", max_iters)
+    grouped = pl.join(comps.withColumnRenamed("id", "pid"), "pid", "left").withColumn(
+        "comp", F.coalesce("component_id", "pid")
+    )
 
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (comp,) = key

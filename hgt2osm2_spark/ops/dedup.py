@@ -526,14 +526,18 @@ def near_dup_components(
     pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     max_iters: int = 50,
 ) -> DataFrame:
-    """Connected components over a near-duplicate pair graph — the
+    """Connected components over an undirected pair graph — the
     'cluster near-dups, keep one representative' step of a dedup
-    pipeline. Iterative minimum-label propagation: each round every
-    node takes the min of its own and its neighbors' labels (one
-    equi-join + partial-agg shuffle per round); converges in at most
-    graph-diameter rounds, which for dedup graphs (dense clusters of
-    mutual near-dups) is tiny. Raises rather than returning silently
-    wrong labels if max_iters is hit (no silent caps).
+    pipeline, and the component step of cross_tile stitching.
+    Iterative minimum-label propagation: each round every node takes
+    the min of its own and its neighbors' labels (one equi-join +
+    partial-agg shuffle per round). It needs graph-diameter + 1 rounds
+    (the last one sees no change): tiny for dedup graphs (dense
+    clusters of mutual near-dups), N for a chain of N nodes. Each
+    round's labels are materialized with a lineage cut
+    (localCheckpoint), so a round costs the same however many came
+    before it. Raises rather than returning silently wrong labels if
+    max_iters is hit (no silent caps).
 
     Returns (id, component_id) for every node appearing in `pairs`,
     where component_id = min node id reachable (so the representative
@@ -547,45 +551,36 @@ def near_dup_components(
     labels = (
         edges.select(F.col("src").alias("id")).distinct()
         .withColumn("comp", F.col("id"))
-        .cache()
+        .localCheckpoint(eager=True)
     )
-    converged = False
-    for _ in range(max_iters):
-        prop = (
-            edges.join(
-                labels.select(F.col("id").alias("dst"), F.col("comp").alias("ncomp")),
-                "dst",
+    try:
+        for _ in range(max_iters):
+            prop = (
+                edges.join(
+                    labels.select(F.col("id").alias("dst"), F.col("comp").alias("ncomp")),
+                    "dst",
+                )
+                .groupBy("src")
+                .agg(F.min("ncomp").alias("ncomp"))
+                .withColumnRenamed("src", "id")
             )
-            .groupBy("src")
-            .agg(F.min("ncomp").alias("ncomp"))
-            .withColumnRenamed("src", "id")
-        )
-        new_labels = (
-            labels.join(prop, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("comp"), F.coalesce("ncomp", "comp")).alias("comp"),
+            labels = (
+                labels.join(prop, "id", "left")
+                .select(
+                    "id",
+                    F.least(F.col("comp"), F.coalesce("ncomp", "comp")).alias("comp"),
+                    F.coalesce(F.col("ncomp") < F.col("comp"), F.lit(False)).alias("moved"),
+                )
+                .localCheckpoint(eager=True)
             )
-            .cache()
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("comp", "old"), "id")
-            .filter("comp != old")
-            .limit(1)
-            .count()
-        )
-        labels.unpersist(blocking=False)
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist(blocking=False)
-    if not converged:
-        raise RuntimeError(
-            f"near_dup_components: no convergence in {max_iters} rounds "
-            "(graph diameter exceeds the bound) — raise max_iters"
-        )
-    return labels.select("id", F.col("comp").alias("component_id"))
+            if labels.filter("moved").limit(1).count() == 0:
+                return labels.select("id", F.col("comp").alias("component_id"))
+    finally:
+        edges.unpersist(blocking=False)
+    raise RuntimeError(
+        f"near_dup_components: no convergence in {max_iters} rounds "
+        "(graph diameter exceeds the bound) — raise max_iters"
+    )
 
 
 # ----------------------------------------- substring / span-level dedup

@@ -82,11 +82,6 @@ def decode_stats(tiles: DataFrame) -> DataFrame:
     return tiles.mapInArrow(scan, schema=STATS_SCHEMA)
 
 
-def decode_grid(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
-    """Convenience passthrough for kernels that decode in-batch."""
-    return codecs.decode(data, fmt, w, h)
-
-
 QUARANTINE_SCHEMA = T.StructType(
     [
         T.StructField("image_id", T.StringType(), False),

@@ -42,11 +42,6 @@ def tile_key(idx: int) -> tuple[int, int, int]:
     return lat, lon, k
 
 
-def image_id_for(idx: int) -> str:
-    lat, lon, k = tile_key(idx)
-    return f"n{lat:02d}e{lon:03d}_{k}"
-
-
 def heightfield(idx: int, n: int, seed: int = 42) -> np.ndarray:
     """Seeded Gaussian bumps + a plateau, quantized to int16, sprinkled
     NoValue holes. Deterministic in (idx, n, seed) only."""

@@ -189,35 +189,68 @@ def test_marching_c_equals_numpy_twin():
         assert np.array_equal(a, b)
 
 
+def _flat_reference(seg):
+    """stitch_tile_reference flattened to (levels, offsets, xs, ys)
+    lists in stitch_tile_arrays' order."""
+    lvls, offs, xs, ys = [], [0], [], []
+    for lv, pls in stitch.stitch_tile_reference(seg).items():
+        for pl in pls:
+            lvls.append(lv)
+            xs += [p[0] for p in pl]
+            ys += [p[1] for p in pl]
+            offs.append(len(xs))
+    return [lvls, offs, xs, ys]
+
+
+def _random_segments(rng, n, universe, zero_frac):
+    seg = np.empty(n, dtype=marching.SEG_DTYPE)
+    # small coordinate/row/level universes force collisions
+    seg["y"] = rng.integers(0, 4, n)
+    seg["level"] = rng.integers(-1, 3, n) * int(rng.choice([10, 20]))
+    pts = rng.integers(0, universe, (n, 4)) * 0.5
+    seg["x1"], seg["y1"], seg["x2"], seg["y2"] = pts.T
+    if zero_frac:  # zero-length (self-loop) segments
+        zero = rng.random(n) < zero_frac
+        seg["x2"][zero], seg["y2"][zero] = seg["x1"][zero], seg["y1"][zero]
+    if n > 3 and rng.random() < 0.5:
+        # inject exact duplicates and reversed duplicates
+        src = int(rng.integers(0, n - 1))
+        seg[src + 1] = seg[src]
+        if rng.random() < 0.5:
+            seg["x1"][src + 1], seg["x2"][src + 1] = (
+                seg["x2"][src], seg["x1"][src])
+            seg["y1"][src + 1], seg["y2"][src + 1] = (
+                seg["y2"][src], seg["y1"][src])
+    return seg
+
+
 @pytest.mark.skipif(not stitch_cext.available(), reason="no C compiler")
 def test_stitch_c_on_adversarial_segment_streams():
     """Drive the C stitch's stage-1/3 logic (umdrehen keying, duplicate
     rejection, sorted row/key gathering) directly with random SEG_DTYPE
-    streams — duplicate and reversed-duplicate segments, shared
-    endpoints across rows and levels, interleaved emission — far
-    outside what marching squares emits. Must equal the readable
-    reference twin exactly."""
+    streams — duplicate and reversed-duplicate segments, zero-length
+    (self-loop) segments, dense endpoint collisions in a 4x4 half-cell
+    universe, shared endpoints across rows and levels, interleaved
+    emission — far outside what marching squares emits. The C path and
+    the C-off path of stitch_tile_arrays must both equal the flattened
+    reference exactly."""
     rng = np.random.default_rng(31)
-    for trial in range(120):
-        n = int(rng.integers(1, 120))
-        seg = np.empty(n, dtype=marching.SEG_DTYPE)
-        # small coordinate/row/level universes force collisions
-        seg["y"] = rng.integers(0, 4, n)
-        seg["level"] = rng.integers(-1, 3, n) * int(rng.choice([10, 20]))
-        pts = rng.integers(0, 5, (n, 4)) * 0.5
-        seg["x1"], seg["y1"], seg["x2"], seg["y2"] = pts.T
-        if n > 3 and rng.random() < 0.5:
-            # inject exact duplicates and reversed duplicates
-            src = int(rng.integers(0, n - 1))
-            seg[src + 1] = seg[src]
-            if rng.random() < 0.5:
-                seg["x1"][src + 1], seg["x2"][src + 1] = (
-                    seg["x2"][src], seg["x1"][src])
-                seg["y1"][src + 1], seg["y2"][src + 1] = (
-                    seg["y2"][src], seg["y1"][src])
-        fast = stitch.stitch_tile(seg)
-        ref = stitch.stitch_tile_reference(seg)
-        assert fast == ref, f"trial {trial}"
+    for trial in range(420):
+        if trial < 120:
+            seg = _random_segments(rng, int(rng.integers(1, 120)), 5, 0.0)
+        else:
+            seg = _random_segments(rng, int(rng.integers(1, 60)), 4, 0.2)
+        want = _flat_reference(seg)
+        assert stitch.stitch_tile(seg) == stitch.stitch_tile_reference(seg), \
+            f"trial {trial}"
+        c_on = [a.tolist() for a in stitch.stitch_tile_arrays(seg)]
+        av = stitch_cext.available
+        stitch_cext.available = lambda: False
+        try:
+            c_off = [a.tolist() for a in stitch.stitch_tile_arrays(seg)]
+        finally:
+            stitch_cext.available = av
+        assert c_on == want and c_off == want, f"trial {trial}"
 
 
 def test_stitch_declined_c_call_runs_once_then_python():

@@ -81,6 +81,31 @@ def test_levels_never_mix(spark, split_tiles):
     assert lv == src_lv
 
 
+def _chain(spark, n_tiles, w=5):
+    """Kept post rows of one horizontal contour piece per tile across a
+    west-east row of tiles: piece i ends where piece i+1 starts (lon
+    i + (w-1)/(w-1) == (i+1) + 0/(w-1) exactly)."""
+    rows = [{"image_id": f"n40e{i:03d}_0", "level": 100, "poly_ord": 0,
+             "xs": [float(x) for x in range(w)], "ys": [2.0] * w,
+             "grid_w": w, "grid_h": w, "closed": False}
+            for i in range(n_tiles)]
+    return spark.createDataFrame(pd.DataFrame(rows))
+
+
+def test_long_chain_merges_into_one_line(spark):
+    """A 16-tile chain needs 16 propagation rounds (diameter + 1) and
+    merges into one line of all 16 pieces."""
+    [row] = cross_tile.stitch_across_tiles(_chain(spark, 16)).collect()
+    assert row["n_parts"] == 16 and row["component"] == "n40e000_0/100/0"
+    assert row["lons"] == [i / 4 for i in range(16 * 4 + 1)]
+    assert not row["closed"]
+
+
+def test_too_few_rounds_raise(spark):
+    with pytest.raises(RuntimeError, match="no convergence in 3 rounds"):
+        cross_tile.stitch_across_tiles(_chain(spark, 4), max_iters=3)
+
+
 def test_clip_polyline_kernel():
     """Window clip: containment, boundary interpolation, piece count on
     a zig-zag crossing the window twice, and degenerate rejections."""

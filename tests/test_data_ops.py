@@ -429,6 +429,22 @@ def test_hamming_near_pairs_matches_bruteforce(spark):
     assert got == want and want  # non-trivial and exact
 
 
+def test_near_dup_components_long_path(spark):
+    """A 16-node path is one component after 16 rounds (diameter + 1);
+    15 rounds raise."""
+    import pandas as pd
+
+    from hgt2osm2_spark.ops import dedup
+
+    df = spark.createDataFrame(
+        pd.DataFrame({"id_a": list(range(15)), "id_b": list(range(1, 16))}))
+    got = {r["id"]: r["component_id"]
+           for r in dedup.near_dup_components(df).collect()}
+    assert got == {i: 0 for i in range(16)}
+    with pytest.raises(RuntimeError, match="no convergence in 15 rounds"):
+        dedup.near_dup_components(df, max_iters=15)
+
+
 def test_near_dup_components_vs_union_find(spark):
     """Label-propagation CC must equal a scalar union-find twin,
     including a long path (diameter > 1 round) and isolated pairs."""

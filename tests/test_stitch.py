@@ -142,8 +142,8 @@ def test_run_polyline_filters_and_counters():
 
 
 def test_stitch_fast_path_equals_reference_twin():
-    """The interned/inlined stitch_tile must reproduce the readable
-    LineBag-based twin exactly — polyline order, point order,
+    """stitch_tile (the C path when it is on) must reproduce the
+    reference port exactly — polyline order, point order,
     orientation, ring starts — on random, holed, flat-case and empty
     tiles (these feed the deterministic ID streams)."""
     import numpy as np
@@ -166,38 +166,3 @@ def test_stitch_fast_path_equals_reference_twin():
     for grid, d, fake in cases:
         seg = marching.extract_segments(grid, d, fake)
         assert stitch.stitch_tile(seg) == stitch.stitch_tile_reference(seg)
-
-
-def test_flat_assembly_equals_object_twin_on_multigraphs():
-    """The inlined integer-id assembly (_stitch_arr) must equal the
-    object-based twin (_stitch_arr_objects) on adversarial random
-    multigraphs — saddle-degree vertices, duplicate and self-loop
-    edges included, well beyond what marching squares emits."""
-    import numpy as np
-
-    from hgt2osm2_spark.kernels import stitch
-
-    rng = np.random.default_rng(11)
-    for _ in range(200):
-        n_pts = int(rng.integers(2, 30))
-        edges = rng.integers(0, n_pts, (int(rng.integers(1, 60)), 2))
-        built = []
-        for _twin in range(2):
-            adj, keys = [None] * n_pts, []
-            for a, b in edges.tolist():
-                lst = adj[a]
-                if lst is not None:
-                    if b not in lst:
-                        lst.append(b)
-                    continue
-                lst = adj[b]
-                if lst is not None:
-                    if a not in lst:
-                        lst.append(a)
-                    continue
-                adj[a] = [b]
-                keys.append(a)
-            built.append((adj, keys))
-        fast = stitch._stitch_arr(built[0][0], built[0][1], n_pts)
-        ref = stitch._stitch_arr_objects(built[1][0], built[1][1], n_pts)
-        assert fast == ref
