@@ -35,7 +35,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .dedup import near_dup_components
+from .dedup import MAX_ROUNDS, near_dup_components
 from .ids import with_tile_key
 
 MERGED_SCHEMA = T.StructType(
@@ -62,7 +62,7 @@ def _degree_polylines(post_kept: DataFrame) -> DataFrame:
     )
 
 
-def stitch_across_tiles(post_kept: DataFrame, max_iters: int = 100) -> DataFrame:
+def stitch_across_tiles(post_kept: DataFrame, max_iters: int = MAX_ROUNDS) -> DataFrame:
     """Merge per-tile polylines into cross-tile contour lines.
 
     Input: kept post-production polylines with (image_id, level,

@@ -7,20 +7,17 @@ degree box, every grid sample becomes a tagged node
 closed 5-ref way per cell (contour=elevationarea) over corner nodes
 deduplicated by the PointStore (K11) and shifted by half a cell.
 
-Both run as one Arrow map per tile (ShowAreas' nodes and ways are two
-filters of one cached map, so each tile is walked once); IDs are
-tile-keyed (decoration bases offset from the tile FirstID so they never
-collide with the contour node/way streams, which stay below base + 10^9
-in practice).
+Both run as one Arrow map per tile; IDs are tile-keyed (decoration
+bases offset from the tile FirstID so they never collide with the
+contour node/way streams, which stay below base + 10^9 in practice).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
-from ..cache import scope
 from ..config import tile_first_id
 from .tiles import parse_tile_id, tile_map
 
@@ -52,20 +49,6 @@ AREAS_WAYS_SCHEMA = T.StructType(
         T.StructField("node_refs", T.ArrayType(T.LongType()), False),
         T.StructField("ele", T.IntegerType(), False),
         T.StructField("contour", T.StringType(), False),
-    ]
-)
-#: ShowAreas' one map: corner nodes (contour "elevationarea_corner",
-#: empty node_refs) and ways (contour "elevationarea", lat/lon 0.0)
-#: in one frame; ``id`` is the node_id or the way_id
-_AREAS_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("id", T.LongType(), False),
-        T.StructField("lat", T.DoubleType(), False),
-        T.StructField("lon", T.DoubleType(), False),
-        T.StructField("ele", T.IntegerType(), False),
-        T.StructField("contour", T.StringType(), False),
-        T.StructField("node_refs", T.ArrayType(T.LongType()), False),
     ]
 )
 
@@ -102,11 +85,10 @@ def show_areas(tiles: DataFrame, lat_min: float, lon_min: float, dlat: float, dl
     """Cell rectangles inside the box as closed elevationarea ways over
     PointStore-deduped corner nodes (first-wins negative pseudo-IDs,
     rendered as actid - pseudo_id; half-cell shift, :2087-2130).
-    Returns (nodes_df, ways_df): two filters of one map, cached until
-    the next call, so reading both walks each tile once."""
+    Returns (nodes_df, ways_df)."""
 
-    def areas(img: str, grid: np.ndarray) -> pd.DataFrame:
-        out = []
+    def areas(img: str, grid: np.ndarray) -> tuple[list, list]:
+        nodes_out, ways_out = [], []
         h, w = grid.shape
         lat0, lon0, _k = parse_tile_id(img)
         gb = grid[::-1, :]
@@ -134,25 +116,22 @@ def show_areas(tiles: DataFrame, lat_min: float, lon_min: float, dlat: float, dl
         dlat_h = (1.0 / (h - 1)) / 2
         dlon_h = (1.0 / (w - 1)) / 2
         for (cx, cy), pid in store.items():
-            out.append(
+            nodes_out.append(
                 (img, node_base - pid,
                  lat0 + cy / (h - 1) - dlat_h, lon0 + cx / (w - 1) - dlon_h,
-                 0, "elevationarea_corner", [])
+                 0, "elevationarea_corner")
             )
         for i in range(0, len(waypoints), 4):
             x, y = cells[i // 4]
             refs = [node_base - waypoints[i + j] for j in (0, 1, 2, 3)] + [node_base - waypoints[i]]
-            out.append(
-                (img, way_base + 1 + i // 4, 0.0, 0.0,
-                 int(gb[min(y, h - 1), min(x, w - 1)]), "elevationarea", refs)
+            ways_out.append(
+                (img, way_base + 1 + i // 4, refs, int(gb[min(y, h - 1), min(x, w - 1)]),
+                 "elevationarea")
             )
-        return pd.DataFrame(out, columns=[f.name for f in _AREAS_SCHEMA.fields])
+        return nodes_out, ways_out
 
-    held = scope("decorations")
-    held.release()
-    both = held.hold(tile_map(tiles, _AREAS_SCHEMA, areas).cache())
-    nodes = both.filter(F.col("contour") == "elevationarea_corner").select(
-        "image_id", F.col("id").alias("node_id"), "lat", "lon", "ele", "contour")
-    ways = both.filter(F.col("contour") == "elevationarea").select(
-        "image_id", F.col("id").alias("way_id"), "node_refs", "ele", "contour")
+    nodes = tile_map(tiles, AREAS_NODES_SCHEMA, lambda img, grid: pd.DataFrame(
+        areas(img, grid)[0], columns=[f.name for f in AREAS_NODES_SCHEMA.fields]))
+    ways = tile_map(tiles, AREAS_WAYS_SCHEMA, lambda img, grid: pd.DataFrame(
+        areas(img, grid)[1], columns=[f.name for f in AREAS_WAYS_SCHEMA.fields]))
     return nodes, ways

@@ -522,9 +522,25 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3, **kw) -> DataFrame:
     )
 
 
+#: default round cap of near_dup_components, shared by cross_tile
+#: stitching: a chain of N pieces takes N rounds, so 50 covers a contour
+#: line across 50 tiles
+MAX_ROUNDS = 50
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Drop the blocks of a localCheckpoint result, which
+    DataFrame.unpersist does not touch (they would otherwise stay in
+    the block manager until the JVM's ContextCleaner finds them).
+    Through the context, not RDD.unpersist, which logs a lineage
+    warning for every checkpointed RDD."""
+    rdd = df._jdf.queryExecution().analyzed().rdd()
+    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
+
+
 def near_dup_components(
     pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-    max_iters: int = 50,
+    max_iters: int = MAX_ROUNDS,
 ) -> DataFrame:
     """Connected components over an undirected pair graph — the
     'cluster near-dups, keep one representative' step of a dedup
@@ -536,8 +552,10 @@ def near_dup_components(
     clusters of mutual near-dups), N for a chain of N nodes. Each
     round's labels are materialized with a lineage cut
     (localCheckpoint), so a round costs the same however many came
-    before it. Raises rather than returning silently wrong labels if
-    max_iters is hit (no silent caps).
+    before it; the previous round's blocks are dropped once the next
+    is materialized, so only the returned labels stay held. Raises
+    rather than returning silently wrong labels if max_iters is hit
+    (no silent caps).
 
     Returns (id, component_id) for every node appearing in `pairs`,
     where component_id = min node id reachable (so the representative
@@ -564,7 +582,7 @@ def near_dup_components(
                 .agg(F.min("ncomp").alias("ncomp"))
                 .withColumnRenamed("src", "id")
             )
-            labels = (
+            prev, labels = labels, (
                 labels.join(prop, "id", "left")
                 .select(
                     "id",
@@ -573,10 +591,12 @@ def near_dup_components(
                 )
                 .localCheckpoint(eager=True)
             )
+            _release_checkpoint(prev)
             if labels.filter("moved").limit(1).count() == 0:
                 return labels.select("id", F.col("comp").alias("component_id"))
     finally:
         edges.unpersist(blocking=False)
+    _release_checkpoint(labels)
     raise RuntimeError(
         f"near_dup_components: no convergence in {max_iters} rounds "
         "(graph diameter exceeds the bound) — raise max_iters"

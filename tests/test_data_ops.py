@@ -431,18 +431,26 @@ def test_hamming_near_pairs_matches_bruteforce(spark):
 
 def test_near_dup_components_long_path(spark):
     """A 16-node path is one component after 16 rounds (diameter + 1);
-    15 rounds raise."""
+    15 rounds raise. Of the 17 rounds' checkpointed labels only the
+    returned ones stay persisted, and none after a raise."""
     import pandas as pd
 
     from hgt2osm2_spark.ops import dedup
 
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
     df = spark.createDataFrame(
         pd.DataFrame({"id_a": list(range(15)), "id_b": list(range(1, 16))}))
-    got = {r["id"]: r["component_id"]
-           for r in dedup.near_dup_components(df).collect()}
+    before = persisted()
+    comps = dedup.near_dup_components(df)
+    assert len(persisted() - before) == 1
+    got = {r["id"]: r["component_id"] for r in comps.collect()}
     assert got == {i: 0 for i in range(16)}
+    before = persisted()
     with pytest.raises(RuntimeError, match="no convergence in 15 rounds"):
         dedup.near_dup_components(df, max_iters=15)
+    assert not persisted() - before
 
 
 def test_near_dup_components_vs_union_find(spark):

@@ -54,22 +54,3 @@ def test_decoration_id_bands_disjoint(spark):
     # way refs resolve within the corner-node band
     for r in w:
         assert set(r["node_refs"]) <= an_ids
-
-
-def test_show_areas_walks_each_tile_once(spark):
-    """A query reading both ShowAreas frames runs the per-tile walk
-    once: both sides scan one cached relation rooted at one
-    MapInPandas (same output attributes under each scan)."""
-    tiles = tiles_df(spark, n_tiles=1, size=9, seed=3)
-    nodes, ways = decorations.show_areas(tiles, 40.0, 0.0, 0.3, 0.3)
-    assert nodes.schema == decorations.AREAS_NODES_SCHEMA
-    assert ways.schema == decorations.AREAS_WAYS_SCHEMA
-    both = nodes.select("image_id").unionByName(ways.select("image_id"))
-    lines = both._jdf.queryExecution().executedPlan().toString().splitlines()
-    walks = [(above, line[line.index("MapInPandas"):])
-             for above, line in zip(lines, lines[1:])
-             if "MapInPandas" in line and "node_refs" in line]
-    assert len(walks) == 2
-    assert all("+- InMemoryRelation [" in above for above, _ in walks)
-    assert len({walk for _, walk in walks}) == 1
-    assert both.count() == nodes.count() + ways.count()
