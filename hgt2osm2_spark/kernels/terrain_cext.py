@@ -20,6 +20,15 @@ Semantics mirrored exactly from ops/terrain.py:
  - outlet: the terminal cell of each drainage path (a cell's target
    retires after it, so one reverse sweep of the retirement order
    resolves every label).
+
+The drainage kernels (d8, flow_accumulate, flow_length, stream_order,
+routed_flow, mosaic_accumulate) share one C core: ``universe()``
+(d8 planes and the row-major compaction; a box cut gives the mosaic's
+owned universe), ``graph()`` (lookup table and descent targets),
+``kahn()`` (the one FIFO Kahn, optionally summing acc),
+``accumulate()`` (Kahn + the reverse outlet sweep) and ``paths()``
+(the reverse steps/cardinal/terminal sweep). Only stream_order's
+(max, count-at-max) merge keeps its own loop.
 """
 
 from __future__ import annotations
@@ -45,13 +54,12 @@ static const int32_t DY[8]    = {0, 1, 1,  1,  0, -1, -1, -1};
 static const int32_t CARD[8]  = {1, 0, 1,  0,  1,  0, 1, 0};
 
 /* Fill interior planes ((h-2) x (w-2), row-major): d8 code, drop2x,
-   valid flag, and the neighbor slot index (or -1).  Returns the number
-   of valid cells. */
-static int64_t d8_planes(const int16_t* g, int64_t h, int64_t w,
-                         int32_t* d8, int64_t* drop2x, int8_t* kidx,
-                         uint8_t* valid)
+   valid flag, and the neighbor slot index (or -1). */
+static void d8_planes(const int16_t* g, int64_t h, int64_t w,
+                      int32_t* d8, int64_t* drop2x, int8_t* kidx,
+                      uint8_t* valid)
 {
-    int64_t iw = w - 2, n_valid = 0;
+    int64_t iw = w - 2;
     for (int64_t y = 1; y < h - 1; y++) {
         for (int64_t x = 1; x < w - 1; x++) {
             int64_t o = (y - 1) * iw + (x - 1);
@@ -73,296 +81,243 @@ static int64_t d8_planes(const int16_t* g, int64_t h, int64_t w,
                 valid[o] = 0; d8[o] = 0; drop2x[o] = 0; kidx[o] = -1;
             } else {
                 valid[o] = 1; d8[o] = code; drop2x[o] = best; kidx[o] = bk;
-                n_valid++;
             }
         }
     }
-    return n_valid;
 }
 
-/* d8 export: compact (ys, xs, d8, drop2x) over valid cells, row-major
-   order (the numpy keep order). Returns n or -1. */
-int64_t d8_grid_c(const int16_t* g, int64_t h, int64_t w,
-                  int32_t* ys, int32_t* xs, int32_t* d8o, int64_t* dr)
+/* The drainage universe: the d8 planes of g's interior (pw x ph =
+   (w-2) x (h-2)) and its valid cells inside the box px < bw, py < bh,
+   compacted row-major into (ys, xs) = plane coords + off.  graph()
+   adds lut (plane index -> universe index, -1 outside), t (each
+   cell's descent target index, -1 at pits/flats and where the target
+   leaves the universe) and queue (room for a Kahn retirement order).
+   Both return n, or -1 on alloc failure; drop() frees either way. */
+typedef struct {
+    int32_t* d8; int64_t* dp; int8_t* kx; uint8_t* va;
+    int64_t *lut, *t, *queue;
+    const int32_t *ys, *xs;
+    int64_t pw, ph, bw, bh, off, n;
+} Universe;
+
+static void drop(Universe* u)
 {
+    free(u->d8); free(u->dp); free(u->kx); free(u->va);
+    free(u->lut); free(u->t); free(u->queue);
+}
+
+/* plane index of universe cell i */
+static int64_t at(const Universe* u, int64_t i)
+{
+    return (u->ys[i] - u->off) * u->pw + (u->xs[i] - u->off);
+}
+
+static int64_t universe(const int16_t* g, int64_t h, int64_t w,
+                        int64_t bw, int64_t bh, int64_t off,
+                        int32_t* ys, int32_t* xs, Universe* u)
+{
+    memset(u, 0, sizeof *u);
     if (h < 3 || w < 3) return 0;
-    int64_t iw = w - 2, ih = h - 2, np_ = iw * ih;
-    int32_t* d8 = (int32_t*)malloc(np_ * sizeof(int32_t));
-    int64_t* dp = (int64_t*)malloc(np_ * sizeof(int64_t));
-    int8_t*  kx = (int8_t*)malloc(np_);
-    uint8_t* va = (uint8_t*)malloc(np_);
-    if (!d8 || !dp || !kx || !va) { free(d8); free(dp); free(kx); free(va); return -1; }
-    d8_planes(g, h, w, d8, dp, kx, va);
-    int64_t n = 0;
-    for (int64_t o = 0; o < np_; o++) {
-        if (!va[o]) continue;
-        ys[n] = (int32_t)(o / iw + 1);
-        xs[n] = (int32_t)(o % iw + 1);
-        d8o[n] = d8[o];
-        dr[n] = dp[o];
-        n++;
+    int64_t pw = w - 2, ph = h - 2, n = 0;
+    u->d8 = (int32_t*)malloc(pw * ph * sizeof(int32_t));
+    u->dp = (int64_t*)malloc(pw * ph * sizeof(int64_t));
+    u->kx = (int8_t*)malloc(pw * ph);
+    u->va = (uint8_t*)malloc(pw * ph);
+    if (!u->d8 || !u->dp || !u->kx || !u->va) return -1;
+    u->ys = ys; u->xs = xs; u->off = off;
+    u->pw = pw; u->ph = ph; u->bw = bw; u->bh = bh;
+    d8_planes(g, h, w, u->d8, u->dp, u->kx, u->va);
+    for (int64_t py = 0; py < ph && py < bh; py++) {
+        for (int64_t px = 0; px < pw && px < bw; px++) {
+            if (!u->va[py * pw + px]) continue;
+            ys[n] = (int32_t)(py + off);
+            xs[n] = (int32_t)(px + off);
+            n++;
+        }
     }
-    free(d8); free(dp); free(kx); free(va);
+    return u->n = n;
+}
+
+static int64_t graph(Universe* u)
+{
+    int64_t n = u->n, np_ = u->pw * u->ph;
+    u->lut = (int64_t*)malloc(np_ * sizeof(int64_t));
+    u->t = (int64_t*)malloc(n * sizeof(int64_t));
+    u->queue = (int64_t*)malloc(n * sizeof(int64_t));
+    if (!u->lut || !u->t || !u->queue) return -1;
+    for (int64_t o = 0; o < np_; o++) u->lut[o] = -1;
+    for (int64_t i = 0; i < n; i++) u->lut[at(u, i)] = i;
+    for (int64_t i = 0; i < n; i++) {
+        int8_t k = u->kx[at(u, i)];
+        int64_t tx = u->xs[i] - u->off + (k >= 0 ? DX[k] : 0);
+        int64_t ty = u->ys[i] - u->off + (k >= 0 ? DY[k] : 0);
+        u->t[i] = (k >= 0 && tx >= 0 && tx < u->bw && ty >= 0 && ty < u->bh)
+            ? u->lut[ty * u->pw + tx] : -1;
+    }
     return n;
 }
 
-/* Full drainage pass: compact (ys, xs, acc, oy, ox) over valid cells.
-   Returns n, or -1 on alloc failure, -2 on a cycle (impossible for
-   strict descent — defensive). */
+/* FIFO Kahn over the universe's functional graph t: fills queue with
+   the retirement order (a cell's target retires after it) and, when
+   acc is not NULL, adds each cell's final acc into its target —
+   integer sums are order-free, so any topological order matches the
+   numpy round-based result.  Returns n, -1 alloc, -2 on a cycle
+   (impossible for strict descent — defensive). */
+static int64_t kahn(Universe* u, int64_t* acc)
+{
+    int64_t n = u->n, head = 0, tail = 0;
+    const int64_t* t = u->t;
+    int64_t* q = u->queue;
+    int64_t* indeg = (int64_t*)calloc(n ? n : 1, sizeof(int64_t));
+    if (!indeg) return -1;
+    for (int64_t i = 0; i < n; i++) if (t[i] >= 0) indeg[t[i]]++;
+    for (int64_t i = 0; i < n; i++) if (indeg[i] == 0) q[tail++] = i;
+    while (head < tail) {
+        int64_t c = q[head++], ti = t[c];
+        if (ti < 0) continue;
+        if (acc) acc[ti] += acc[c];
+        if (--indeg[ti] == 0) q[tail++] = ti;
+    }
+    free(indeg);
+    return tail == n ? n : -2;
+}
+
+/* Weight-1 accumulation, then the reverse outlet sweep: walking the
+   retirement order backwards, a cell's target's outlet is final
+   before the cell copies it.  Returns n, -1, -2. */
+static int64_t accumulate(Universe* u, int64_t* acc, int32_t* oy, int32_t* ox)
+{
+    for (int64_t i = 0; i < u->n; i++) {
+        acc[i] = 1; oy[i] = u->ys[i]; ox[i] = u->xs[i];
+    }
+    int64_t n = kahn(u, acc);
+    for (int64_t q = n - 1; q >= 0; q--) {
+        int64_t c = u->queue[q], ti = u->t[c];
+        if (ti >= 0) { oy[c] = oy[ti]; ox[c] = ox[ti]; }
+    }
+    return n;
+}
+
+/* The reverse sweep for path lengths (n = kahn's result): steps = D8
+   edges to the terminal, ncard = cardinal steps among them, term
+   (when not NULL) = the terminal's index.  Each cell starts with its
+   own step, then adds its target's final totals. */
+static void paths(const Universe* u, int64_t n, int64_t* steps,
+                  int64_t* ncard, int64_t* term)
+{
+    for (int64_t i = 0; i < n; i++) {
+        int has = u->t[i] >= 0;
+        steps[i] = has;
+        ncard[i] = has ? CARD[u->kx[at(u, i)]] : 0;
+        if (term) term[i] = i;
+    }
+    for (int64_t q = n - 1; q >= 0; q--) {
+        int64_t c = u->queue[q], ti = u->t[c];
+        if (ti < 0) continue;
+        steps[c] += steps[ti];
+        ncard[c] += ncard[ti];
+        if (term) term[c] = term[ti];
+    }
+}
+
+/* The drainage graph over the interior universe of g (every valid
+   3x3 cell, grid coords). */
+static int64_t interior(const int16_t* g, int64_t h, int64_t w,
+                        int32_t* ys, int32_t* xs, Universe* u)
+{
+    int64_t n = universe(g, h, w, w - 2, h - 2, 1, ys, xs, u);
+    return n > 0 ? graph(u) : n;
+}
+
+/* d8 export: (ys, xs, d8, drop2x) over the interior universe.
+   Returns n or -1. */
+int64_t d8_grid_c(const int16_t* g, int64_t h, int64_t w,
+                  int32_t* ys, int32_t* xs, int32_t* d8o, int64_t* dr)
+{
+    Universe u;
+    int64_t n = universe(g, h, w, w - 2, h - 2, 1, ys, xs, &u);
+    for (int64_t i = 0; i < n; i++) {
+        d8o[i] = u.d8[at(&u, i)];
+        dr[i] = u.dp[at(&u, i)];
+    }
+    drop(&u);
+    return n;
+}
+
+/* Full drainage pass: (ys, xs, acc, oy, ox) over the interior
+   universe.  Returns n, -1, -2. */
 int64_t flow_accumulate_c(const int16_t* g, int64_t h, int64_t w,
                           int32_t* ys, int32_t* xs, int64_t* acc,
                           int32_t* oy, int32_t* ox)
 {
-    if (h < 3 || w < 3) return 0;
-    int64_t iw = w - 2, ih = h - 2, np_ = iw * ih;
-    int32_t* d8 = (int32_t*)malloc(np_ * sizeof(int32_t));
-    int64_t* dp = (int64_t*)malloc(np_ * sizeof(int64_t));
-    int8_t*  kx = (int8_t*)malloc(np_);
-    uint8_t* va = (uint8_t*)malloc(np_);
-    int64_t* lut = (int64_t*)malloc(np_ * sizeof(int64_t));
-    if (!d8 || !dp || !kx || !va || !lut) {
-        free(d8); free(dp); free(kx); free(va); free(lut); return -1;
-    }
-    d8_planes(g, h, w, d8, dp, kx, va);
-    int64_t n = 0;
-    for (int64_t o = 0; o < np_; o++) {
-        if (va[o]) { lut[o] = n; ys[n] = (int32_t)(o / iw + 1);
-                     xs[n] = (int32_t)(o % iw + 1); n++; }
-        else lut[o] = -1;
-    }
-    int64_t* t = (int64_t*)malloc(n * sizeof(int64_t));
-    int64_t* indeg = (int64_t*)calloc(n, sizeof(int64_t));
-    int64_t* queue = (int64_t*)malloc(n * sizeof(int64_t));
-    int64_t* outl = (int64_t*)malloc(n * sizeof(int64_t));
-    if (!t || !indeg || !queue || !outl) {
-        free(d8); free(dp); free(kx); free(va); free(lut);
-        free(t); free(indeg); free(queue); free(outl); return -1;
-    }
-    for (int64_t i = 0; i < n; i++) {
-        int64_t o = (int64_t)(ys[i] - 1) * iw + (xs[i] - 1);
-        int8_t k = kx[o];
-        int64_t ti = -1;
-        if (k >= 0) {
-            int64_t tx = xs[i] + DX[k], ty = ys[i] + DY[k];
-            if (tx >= 1 && tx <= iw && ty >= 1 && ty <= ih) {
-                ti = lut[(ty - 1) * iw + (tx - 1)];
-            }
-        }
-        t[i] = ti;
-        acc[i] = 1;
-        if (ti >= 0) indeg[ti]++;
-    }
-    /* FIFO worklist Kahn: integer sums are order-free, so any valid
-       topological order matches the numpy round-based result */
-    int64_t head = 0, tail = 0;
-    for (int64_t i = 0; i < n; i++) if (indeg[i] == 0) queue[tail++] = i;
-    while (head < tail) {
-        int64_t c = queue[head++];
-        int64_t ti = t[c];
-        if (ti >= 0) {
-            acc[ti] += acc[c];
-            if (--indeg[ti] == 0) queue[tail++] = ti;
-        }
-    }
-    int rc = (tail == n) ? 0 : -2;
-    if (rc == 0) {
-        for (int64_t i = 0; i < n; i++) outl[i] = i;
-        for (int64_t q = n - 1; q >= 0; q--) {
-            int64_t c = queue[q];
-            if (t[c] >= 0) outl[c] = outl[t[c]];
-        }
-        for (int64_t i = 0; i < n; i++) {
-            oy[i] = ys[outl[i]];
-            ox[i] = xs[outl[i]];
-        }
-    }
-    free(d8); free(dp); free(kx); free(va); free(lut);
-    free(t); free(indeg); free(queue); free(outl);
-    return rc == 0 ? n : rc;
+    Universe u;
+    int64_t n = interior(g, h, w, ys, xs, &u);
+    if (n > 0) n = accumulate(&u, acc, oy, ox);
+    drop(&u);
+    return n;
 }
 
 /* Downstream flow-path length (ops/terrain.flow_length_grid):
-   (ys, xs, steps, ncard) over the valid universe — steps = D8 edges
-   to the terminal, ncard = cardinal steps among them.  One FIFO Kahn
-   for retirement order + one reverse sweep (a cell's target retires
-   later, so its totals are final first) — O(n) vs the numpy pointer
-   doubling's O(n log L); both resolve the same integer path geometry
-   exactly.  Returns n, -1 alloc, -2 cycle. */
+   (ys, xs, steps, ncard) over the interior universe — O(n) vs the
+   numpy pointer doubling's O(n log L); both resolve the same integer
+   path geometry exactly.  Returns n, -1, -2. */
 int64_t flow_length_c(const int16_t* g, int64_t h, int64_t w,
                       int32_t* ys, int32_t* xs,
                       int64_t* steps, int64_t* ncard)
 {
-    if (h < 3 || w < 3) return 0;
-    int64_t iw = w - 2, ih = h - 2, np_ = iw * ih;
-    int32_t* d8 = (int32_t*)malloc(np_ * sizeof(int32_t));
-    int64_t* dp = (int64_t*)malloc(np_ * sizeof(int64_t));
-    int8_t*  kx = (int8_t*)malloc(np_);
-    uint8_t* va = (uint8_t*)malloc(np_);
-    int64_t* lut = (int64_t*)malloc(np_ * sizeof(int64_t));
-    if (!d8 || !dp || !kx || !va || !lut) {
-        free(d8); free(dp); free(kx); free(va); free(lut); return -1;
-    }
-    d8_planes(g, h, w, d8, dp, kx, va);
-    int64_t n = 0;
-    for (int64_t o = 0; o < np_; o++) {
-        if (va[o]) { lut[o] = n; ys[n] = (int32_t)(o / iw + 1);
-                     xs[n] = (int32_t)(o % iw + 1); n++; }
-        else lut[o] = -1;
-    }
-    int64_t* t = (int64_t*)malloc((n ? n : 1) * sizeof(int64_t));
-    int8_t* card = (int8_t*)malloc(n ? n : 1);
-    int64_t* indeg = (int64_t*)calloc(n ? n : 1, sizeof(int64_t));
-    int64_t* queue = (int64_t*)malloc((n ? n : 1) * sizeof(int64_t));
-    if (!t || !card || !indeg || !queue) {
-        free(d8); free(dp); free(kx); free(va); free(lut);
-        free(t); free(card); free(indeg); free(queue); return -1;
-    }
-    for (int64_t i = 0; i < n; i++) {
-        int64_t o = (int64_t)(ys[i] - 1) * iw + (xs[i] - 1);
-        int8_t k = kx[o];
-        int64_t ti = -1;
-        if (k >= 0) {
-            int64_t tx = xs[i] + DX[k], ty = ys[i] + DY[k];
-            if (tx >= 1 && tx <= iw && ty >= 1 && ty <= ih)
-                ti = lut[(ty - 1) * iw + (tx - 1)];
-        }
-        t[i] = ti;
-        card[i] = (k >= 0) ? (int8_t)CARD[k] : 0;
-        steps[i] = 0; ncard[i] = 0;
-        if (ti >= 0) indeg[ti]++;
-    }
-    int64_t head = 0, tail = 0;
-    for (int64_t i = 0; i < n; i++) if (indeg[i] == 0) queue[tail++] = i;
-    while (head < tail) {
-        int64_t c = queue[head++];
-        if (t[c] >= 0 && --indeg[t[c]] == 0) queue[tail++] = t[c];
-    }
-    int rc = (tail == n) ? 0 : -2;
-    if (rc == 0) {
-        for (int64_t q = n - 1; q >= 0; q--) {
-            int64_t c = queue[q];
-            if (t[c] >= 0) {
-                steps[c] = steps[t[c]] + 1;
-                ncard[c] = ncard[t[c]] + card[c];
-            }
-        }
-    }
-    free(d8); free(dp); free(kx); free(va); free(lut);
-    free(t); free(card); free(indeg); free(queue);
-    return rc == 0 ? n : rc;
+    Universe u;
+    int64_t n = interior(g, h, w, ys, xs, &u);
+    if (n > 0) n = kahn(&u, NULL);
+    paths(&u, n, steps, ncard, NULL);
+    drop(&u);
+    return n;
 }
 
 /* Strahler stream order (ops/terrain.stream_order_grid): acc via the
    FIFO Kahn, stream mask acc >= min_acc (descent-closed), then the
    (max order, count-at-max) merge applied per edge at retirement —
    the merge is order-free across arrival orders, so the sequential
-   per-edge form agrees with the numpy per-round form exactly.
-   Returns n_stream, -1 alloc, -2 cycle. */
+   per-edge form agrees with the numpy per-round form exactly.  acc
+   and order are computed over the universe in the caller's buffers,
+   then the stream cells are compacted in place (row-major).
+   Returns n_stream, -1, -2. */
 int64_t stream_order_c(const int16_t* g, int64_t h, int64_t w,
                        int64_t min_acc, int32_t* ys, int32_t* xs,
-                       int64_t* acc_out, int64_t* order_out)
+                       int64_t* acc, int64_t* order)
 {
-    if (h < 3 || w < 3) return 0;
-    int64_t iw = w - 2, ih = h - 2, np_ = iw * ih;
-    int32_t* d8 = (int32_t*)malloc(np_ * sizeof(int32_t));
-    int64_t* dp = (int64_t*)malloc(np_ * sizeof(int64_t));
-    int8_t*  kx = (int8_t*)malloc(np_);
-    uint8_t* va = (uint8_t*)malloc(np_);
-    int64_t* lut = (int64_t*)malloc(np_ * sizeof(int64_t));
-    if (!d8 || !dp || !kx || !va || !lut) {
-        free(d8); free(dp); free(kx); free(va); free(lut); return -1;
-    }
-    d8_planes(g, h, w, d8, dp, kx, va);
-    int64_t n = 0;
-    /* local compact coords (reuse caller buffers at the end) */
-    int32_t* cy = (int32_t*)malloc(np_ * sizeof(int32_t));
-    int32_t* cx = (int32_t*)malloc(np_ * sizeof(int32_t));
-    if (!cy || !cx) {
-        free(d8); free(dp); free(kx); free(va); free(lut);
-        free(cy); free(cx); return -1;
-    }
-    for (int64_t o = 0; o < np_; o++) {
-        if (va[o]) { lut[o] = n; cy[n] = (int32_t)(o / iw + 1);
-                     cx[n] = (int32_t)(o % iw + 1); n++; }
-        else lut[o] = -1;
-    }
-    int64_t* t = (int64_t*)malloc((n ? n : 1) * sizeof(int64_t));
-    int64_t* acc = (int64_t*)malloc((n ? n : 1) * sizeof(int64_t));
-    int64_t* indeg = (int64_t*)calloc(n ? n : 1, sizeof(int64_t));
-    int64_t* queue = (int64_t*)malloc((n ? n : 1) * sizeof(int64_t));
-    if (!t || !acc || !indeg || !queue) {
-        free(d8); free(dp); free(kx); free(va); free(lut);
-        free(cy); free(cx); free(t); free(acc); free(indeg); free(queue);
-        return -1;
-    }
-    for (int64_t i = 0; i < n; i++) {
-        int64_t o = (int64_t)(cy[i] - 1) * iw + (cx[i] - 1);
-        int8_t k = kx[o];
-        int64_t ti = -1;
-        if (k >= 0) {
-            int64_t tx = cx[i] + DX[k], ty = cy[i] + DY[k];
-            if (tx >= 1 && tx <= iw && ty >= 1 && ty <= ih)
-                ti = lut[(ty - 1) * iw + (tx - 1)];
-        }
-        t[i] = ti;
-        acc[i] = 1;
-        if (ti >= 0) indeg[ti]++;
-    }
-    int64_t head = 0, tail = 0;
-    for (int64_t i = 0; i < n; i++) if (indeg[i] == 0) queue[tail++] = i;
-    while (head < tail) {
-        int64_t c = queue[head++];
-        if (t[c] >= 0) {
-            acc[t[c]] += acc[c];
-            if (--indeg[t[c]] == 0) queue[tail++] = t[c];
-        }
-    }
-    if (tail != n) {
-        free(d8); free(dp); free(kx); free(va); free(lut);
-        free(cy); free(cx); free(t); free(acc); free(indeg); free(queue);
-        return -2;
-    }
+    Universe u;
+    int64_t n = interior(g, h, w, ys, xs, &u), m = 0;
+    int64_t* mx = (int64_t*)calloc(n > 0 ? n : 1, sizeof(int64_t));
+    int64_t* cnt = (int64_t*)calloc(n > 0 ? n : 1, sizeof(int64_t));
+    int64_t* sdeg = (int64_t*)calloc(n > 0 ? n : 1, sizeof(int64_t));
+    if (!mx || !cnt || !sdeg) n = -1;
+    for (int64_t i = 0; i < n; i++) acc[i] = 1;
+    if (n > 0) n = kahn(&u, acc);
     /* stream subgraph Kahn with the (mx, cnt) merge; the mask is
        descent-closed so stream targets stay stream */
-    int64_t* mx = (int64_t*)calloc(n ? n : 1, sizeof(int64_t));
-    int64_t* cnt = (int64_t*)calloc(n ? n : 1, sizeof(int64_t));
-    int64_t* order = (int64_t*)calloc(n ? n : 1, sizeof(int64_t));
-    int64_t* sdeg = (int64_t*)calloc(n ? n : 1, sizeof(int64_t));
-    if (!mx || !cnt || !order || !sdeg) {
-        free(d8); free(dp); free(kx); free(va); free(lut);
-        free(cy); free(cx); free(t); free(acc); free(indeg); free(queue);
-        free(mx); free(cnt); free(order); free(sdeg); return -1;
-    }
-    for (int64_t i = 0; i < n; i++) {
-        if (acc[i] < min_acc) continue;
-        int64_t ti = t[i];
-        if (ti >= 0 && acc[ti] >= min_acc) sdeg[ti]++;
-    }
-    head = 0; tail = 0;
+    const int64_t* t = u.t;
+    int64_t* q = u.queue;
+    int64_t head = 0, tail = 0;
     for (int64_t i = 0; i < n; i++)
-        if (acc[i] >= min_acc && sdeg[i] == 0) queue[tail++] = i;
+        if (acc[i] >= min_acc && t[i] >= 0 && acc[t[i]] >= min_acc) sdeg[t[i]]++;
+    for (int64_t i = 0; i < n; i++)
+        if (acc[i] >= min_acc && sdeg[i] == 0) q[tail++] = i;
     while (head < tail) {
-        int64_t c = queue[head++];
+        int64_t c = q[head++], ti = t[c];
         order[c] = (mx[c] == 0) ? 1 : mx[c] + (cnt[c] >= 2 ? 1 : 0);
-        int64_t ti = t[c];
         if (ti >= 0 && acc[ti] >= min_acc) {
             if (order[c] > mx[ti]) { mx[ti] = order[c]; cnt[ti] = 1; }
             else if (order[c] == mx[ti]) cnt[ti]++;
-            if (--sdeg[ti] == 0) queue[tail++] = ti;
+            if (--sdeg[ti] == 0) q[tail++] = ti;
         }
     }
-    /* export stream cells in row-major (compact) order */
-    int64_t m = 0;
     for (int64_t i = 0; i < n; i++) {
         if (acc[i] < min_acc) continue;
-        ys[m] = cy[i]; xs[m] = cx[i];
-        acc_out[m] = acc[i]; order_out[m] = order[i];
+        ys[m] = ys[i]; xs[m] = xs[i]; acc[m] = acc[i]; order[m] = order[i];
         m++;
     }
-    free(d8); free(dp); free(kx); free(va); free(lut);
-    free(cy); free(cx); free(t); free(acc); free(indeg); free(queue);
-    free(mx); free(cnt); free(order); free(sdeg);
-    return m;
+    free(mx); free(cnt); free(sdeg); drop(&u);
+    return n < 0 ? n : m;
 }
 
 /* Second-order morphometry stencils (ops/terrain.morph_grid):
@@ -411,7 +366,7 @@ int64_t morph_c(const int16_t* g, int64_t h, int64_t w,
 }
 
 /* Mosaic drainage pass (ops/mosaic.mosaic_tile_arrays): the same
-   d8 + FIFO-worklist Kahn over one tile's AUGMENTED grid
+   universe + graph + kahn + paths over one tile's AUGMENTED grid
    (ha = h + 2, wa = w + 2 where h, w are the tile dims), with the
    two mosaic generalizations — per-cell int64 initial weights
    (has_w = 0 means all-ones) and the owned-box universe cut
@@ -430,84 +385,23 @@ int64_t mosaic_accumulate_c(const int16_t* g, int64_t ha, int64_t wa,
                             int64_t* tys, int64_t* txs,
                             int64_t* steps, int64_t* ncard, int64_t* t)
 {
-    if (ha < 3 || wa < 3) return 0;
-    int64_t w = wa - 2, h = ha - 2;   /* tile dims; interior plane h x w */
-    int64_t np_ = w * h;
-    int32_t* d8 = (int32_t*)malloc(np_ * sizeof(int32_t));
-    int64_t* dp = (int64_t*)malloc(np_ * sizeof(int64_t));
-    int8_t*  kx = (int8_t*)malloc(np_);
-    uint8_t* va = (uint8_t*)malloc(np_);
-    int64_t* lut = (int64_t*)malloc(np_ * sizeof(int64_t));
-    if (!d8 || !dp || !kx || !va || !lut) {
-        free(d8); free(dp); free(kx); free(va); free(lut); return -1;
-    }
-    d8_planes(g, ha, wa, d8, dp, kx, va);
-    for (int64_t o = 0; o < np_; o++) lut[o] = -1;
-    int64_t n = 0;
-    for (int64_t y = 0; y < h - 1; y++) {
-        for (int64_t x = 0; x < w - 1; x++) {
-            int64_t o = y * w + x;
-            if (!va[o]) continue;
-            lut[o] = n;
-            ys[n] = (int32_t)y;
-            xs[n] = (int32_t)x;
-            n++;
-        }
-    }
-    int64_t* indeg = (int64_t*)calloc(n ? n : 1, sizeof(int64_t));
-    int64_t* queue = (int64_t*)malloc((n ? n : 1) * sizeof(int64_t));
-    if (!indeg || !queue) {
-        free(d8); free(dp); free(kx); free(va); free(lut);
-        free(indeg); free(queue); return -1;
-    }
+    int64_t w = wa - 2, h = ha - 2;   /* tile dims = the interior plane */
+    Universe u;
+    int64_t n = universe(g, ha, wa, w - 1, h - 1, 0, ys, xs, &u);
+    if (n > 0) n = graph(&u);
     for (int64_t i = 0; i < n; i++) {
-        int64_t x = xs[i], y = ys[i], o = y * w + x;
-        int8_t k = kx[o];
-        int64_t tx = x, ty = y, ti = -1;
-        uint8_t cr = 0;
-        if (k >= 0) {  /* k >= 0 iff d8 > 0: a strict-descent target */
-            tx = x + DX[k]; ty = y + DY[k];
-            if (tx >= 0 && tx < w - 1 && ty >= 0 && ty < h - 1)
-                ti = lut[ty * w + tx];  /* -1 at dead in-box targets */
-            else
-                cr = 1;
-        }
-        txs[i] = tx; tys[i] = ty;
-        t[i] = ti; cross[i] = cr;
-        acc[i] = has_w ? wts[y * (w - 1) + x] : 1;
-        if (ti >= 0) indeg[ti]++;
+        int8_t k = u.kx[at(&u, i)];   /* k >= 0 iff a strict-descent target */
+        txs[i] = xs[i] + (k >= 0 ? DX[k] : 0);
+        tys[i] = ys[i] + (k >= 0 ? DY[k] : 0);
+        t[i] = u.t[i];                /* -1 also at dead in-box targets */
+        cross[i] = k >= 0 && (txs[i] < 0 || txs[i] >= w - 1
+                              || tys[i] < 0 || tys[i] >= h - 1);
+        acc[i] = has_w ? wts[ys[i] * (w - 1) + xs[i]] : 1;
     }
-    int64_t head = 0, tail = 0;
-    for (int64_t i = 0; i < n; i++) if (indeg[i] == 0) queue[tail++] = i;
-    while (head < tail) {
-        int64_t c = queue[head++];
-        int64_t ti = t[c];
-        if (ti >= 0) {
-            acc[ti] += acc[c];
-            if (--indeg[ti] == 0) queue[tail++] = ti;
-        }
-    }
-    int rc = (tail == n) ? 0 : -2;
-    if (rc == 0) {
-        for (int64_t i = 0; i < n; i++) {
-            term[i] = i; steps[i] = 0; ncard[i] = 0;
-        }
-        /* reverse retirement order: a cell's target retires later, so
-           its term/steps/ncard are final before the source copies */
-        for (int64_t q = n - 1; q >= 0; q--) {
-            int64_t c = queue[q];
-            int64_t ti = t[c];
-            if (ti >= 0) {
-                term[c] = term[ti];
-                steps[c] = steps[ti] + 1;
-                ncard[c] = ncard[ti]
-                    + ((txs[c] == xs[c] || tys[c] == ys[c]) ? 1 : 0);
-            }
-        }
-    }
-    free(d8); free(dp); free(kx); free(va); free(lut);
-    free(indeg); free(queue);
-    return rc == 0 ? n : rc;
+    if (n > 0) n = kahn(&u, acc);
+    paths(&u, n, steps, ncard, term);
+    drop(&u);
+    return n;
 }
 
 /* Depression fill (Priority-Flood, Barnes 2014, eps = 0): one
@@ -627,47 +521,15 @@ int64_t routed_flow_c(const int16_t* g, int64_t h, int64_t w,
                       int32_t* ys, int32_t* xs, int64_t* acc,
                       int32_t* oy, int32_t* ox)
 {
-    if (h < 3 || w < 3) return 0;
-    int64_t iw = w - 2, ih = h - 2, np_ = iw * ih;
-    int32_t* d8 = (int32_t*)malloc(np_ * sizeof(int32_t));
-    int64_t* dp = (int64_t*)malloc(np_ * sizeof(int64_t));
-    int8_t*  kx = (int8_t*)malloc(np_);
-    uint8_t* va = (uint8_t*)malloc(np_);
-    int64_t* lut = (int64_t*)malloc(np_ * sizeof(int64_t));
-    if (!d8 || !dp || !kx || !va || !lut) {
-        free(d8); free(dp); free(kx); free(va); free(lut); return -1;
-    }
-    d8_planes(g, h, w, d8, dp, kx, va);
-    int64_t n = 0;
-    for (int64_t o = 0; o < np_; o++) {
-        if (va[o]) { lut[o] = n; ys[n] = (int32_t)(o / iw + 1);
-                     xs[n] = (int32_t)(o % iw + 1); n++; }
-        else lut[o] = -1;
-    }
-    int64_t* t = (int64_t*)malloc(n * sizeof(int64_t));
-    int64_t* dist = (int64_t*)malloc(n * sizeof(int64_t));
-    int64_t* indeg = (int64_t*)calloc(n ? n : 1, sizeof(int64_t));
-    int64_t* queue = (int64_t*)malloc((n ? n : 1) * sizeof(int64_t));
-    int64_t* outl = (int64_t*)malloc(n * sizeof(int64_t));
-    if (!t || !dist || !indeg || !queue || !outl) {
-        free(d8); free(dp); free(kx); free(va); free(lut);
-        free(t); free(dist); free(indeg); free(queue); free(outl);
-        return -1;
-    }
+    Universe u;
+    int64_t n = interior(g, h, w, ys, xs, &u), iw = w - 2, ih = h - 2;
+    int64_t* dist = (int64_t*)malloc((n > 0 ? n : 1) * sizeof(int64_t));
+    if (!dist) n = -1;
     const int64_t INF = (int64_t)1 << 60;
-    /* strict-descent targets + BFS seed (draining cells, dist 0) */
-    int64_t head = 0, tail = 0;
+    int64_t *t = u.t, *queue = u.queue, head = 0, tail = 0;
+    /* BFS seed: draining cells (a strict-descent code), dist 0 */
     for (int64_t i = 0; i < n; i++) {
-        int64_t o = (int64_t)(ys[i] - 1) * iw + (xs[i] - 1);
-        int8_t k = kx[o];
-        int64_t ti = -1;
-        if (k >= 0) {
-            int64_t txx = xs[i] + DX[k], tyy = ys[i] + DY[k];
-            if (txx >= 1 && txx <= iw && tyy >= 1 && tyy <= ih)
-                ti = lut[(tyy - 1) * iw + (txx - 1)];
-        }
-        t[i] = ti;
-        if (k >= 0) { dist[i] = 0; queue[tail++] = i; }
+        if (u.kx[at(&u, i)] >= 0) { dist[i] = 0; queue[tail++] = i; }
         else dist[i] = INF;
     }
     /* BFS across equal-z flat cells (unit edges: FIFO = breadth) */
@@ -677,7 +539,7 @@ int64_t routed_flow_c(const int16_t* g, int64_t h, int64_t w,
         for (int k = 0; k < 8; k++) {
             int64_t nx2 = xs[c] + DX[k], ny2 = ys[c] + DY[k];
             if (nx2 < 1 || nx2 > iw || ny2 < 1 || ny2 > ih) continue;
-            int64_t ni = lut[(ny2 - 1) * iw + (nx2 - 1)];
+            int64_t ni = u.lut[(ny2 - 1) * iw + (nx2 - 1)];
             if (ni < 0 || dist[ni] != INF) continue;
             if (g[ny2 * w + nx2] != zc) continue;
             /* dist[ni] == INF implies d8 == 0 (flat) — draining cells
@@ -696,40 +558,16 @@ int64_t routed_flow_c(const int16_t* g, int64_t h, int64_t w,
         for (int k = 0; k < 8; k++) {
             int64_t nx2 = xs[i] + DX[k], ny2 = ys[i] + DY[k];
             if (nx2 < 1 || nx2 > iw || ny2 < 1 || ny2 > ih) continue;
-            int64_t ni = lut[(ny2 - 1) * iw + (nx2 - 1)];
+            int64_t ni = u.lut[(ny2 - 1) * iw + (nx2 - 1)];
             if (ni < 0 || g[ny2 * w + nx2] != zc) continue;
             if (dist[ni] < best) { best = dist[ni]; bi = ni; }
         }
         if (bi >= 0 && best < INF) t[i] = bi;
     }
-    /* FIFO Kahn over strict + routed edges */
-    for (int64_t i = 0; i < n; i++) { acc[i] = 1; }
-    for (int64_t i = 0; i < n; i++) if (t[i] >= 0) indeg[t[i]]++;
-    head = 0; tail = 0;
-    for (int64_t i = 0; i < n; i++) if (indeg[i] == 0) queue[tail++] = i;
-    while (head < tail) {
-        int64_t c = queue[head++];
-        int64_t ti = t[c];
-        if (ti >= 0) {
-            acc[ti] += acc[c];
-            if (--indeg[ti] == 0) queue[tail++] = ti;
-        }
-    }
-    int rc = (tail == n) ? 0 : -2;
-    if (rc == 0) {
-        for (int64_t i = 0; i < n; i++) outl[i] = i;
-        for (int64_t q = n - 1; q >= 0; q--) {
-            int64_t c = queue[q];
-            if (t[c] >= 0) outl[c] = outl[t[c]];
-        }
-        for (int64_t i = 0; i < n; i++) {
-            oy[i] = ys[outl[i]];
-            ox[i] = xs[outl[i]];
-        }
-    }
-    free(d8); free(dp); free(kx); free(va); free(lut);
-    free(t); free(dist); free(indeg); free(queue); free(outl);
-    return rc == 0 ? n : rc;
+    /* strict + routed edges: the shared Kahn + outlet sweep */
+    if (n > 0) n = accumulate(&u, acc, oy, ox);
+    free(dist); drop(&u);
+    return n;
 }
 
 /* Radius-bounded viewshed (ops/terrain.viewshed_grid): R3

@@ -111,8 +111,7 @@ BANDS_SCHEMA = T.StructType(
 )
 
 
-def split_tile_bands(tiles: DataFrame, opt: ContourOptions | None = None,
-                     band_rows: int = 512) -> DataFrame:
+def split_tile_bands(tiles: DataFrame, band_rows: int = 512) -> DataFrame:
     """Decode each tile once and emit row-band sub-tiles of `band_rows`
     cell rows, each carrying its 2-row halo (the marching kernel's
     flat-case probes reach cell_y±2; the reference's own border-sharing
@@ -151,7 +150,7 @@ def extract_contour_segments_banded(
     which is what stitch_polylines sorts by. seg_ord is band-local."""
     opt = opt or ContourOptions()
     d, fake = opt.minor_distance, opt.fake_distance
-    bands = split_tile_bands(tiles, opt, band_rows)
+    bands = split_tile_bands(tiles, band_rows)
     bands = (
         bands.repartition(shuffle_partitions, "image_id", "band")
         if shuffle_partitions

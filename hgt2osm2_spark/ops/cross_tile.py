@@ -35,8 +35,13 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..cache import scope as _cache_scope
 from .dedup import MAX_ROUNDS, near_dup_components
 from .ids import with_tile_key
+
+#: the cached degree-space polylines of the previous call; released on
+#: the next call (or via cache.release_all)
+_CACHES = _cache_scope("cross_tile")
 
 MERGED_SCHEMA = T.StructType(
     [
@@ -70,7 +75,8 @@ def stitch_across_tiles(post_kept: DataFrame, max_iters: int = MAX_ROUNDS) -> Da
     one row per geographic contour component (singletons included).
     Raises RuntimeError when a component needs more than max_iters
     propagation rounds (a line of more than max_iters pieces)."""
-    pl = _degree_polylines(post_kept).cache()
+    _CACHES.release()
+    pl = _CACHES.hold(_degree_polylines(post_kept).cache())
 
     ends = pl.select(
         "pid",

@@ -415,7 +415,7 @@ def _fnv1a_varlen(tokens: list[bytes]) -> np.ndarray:
 
 
 def simhash_sketch(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", seed: int = 42
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """64-bit simhash over word tokens: (id, simhash long).
 

@@ -74,9 +74,13 @@ written once — ``_edge_strips`` (the 8-neighbour send) and
 tiles x strips cogroup, one decoded ``_Tile`` per call),
 ``_solve_once`` (the single-task solve), ``_drain`` (border pass ->
 border solve -> solved rows routed back into the strip frame ->
-final per-tile pass), ``_drain_arrays``/``_kahn_sum`` (the summing
-worklist Kahn and its term/steps tail) and ``_fixpoint`` (the
-checksummed strip iteration).
+final per-tile pass), ``_drain_arrays`` (the owned-box targets and
+the term/steps tail around the summing worklist Kahn) and
+``_fixpoint`` (the checksummed strip iteration). The drainage graph
+pieces come from ops/terrain.py, written once for both modules: the
+D8 target step (``d8_step``), the summing worklist Kahn
+(``kahn_sum``/``sum_by``), the Strahler merge (``strahler``) and the
+fill seed rule (``fill_seeds``).
 """
 
 from __future__ import annotations
@@ -88,8 +92,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..cache import scope
 from ..kernels import codecs
-from .terrain import (D8_NEIGHBORS, aspect_octant, d8_grid, fill_grid,
-                      hillshade_grid, horn_grid, morph_grid)
+from .terrain import (D8_NEIGHBORS, aspect_octant, d8_grid, d8_step, fill_grid,
+                      fill_seeds, hillshade_grid, horn_grid, kahn_sum,
+                      morph_grid, strahler, sum_by)
 from .tiles import parse_tile_id, tile_map
 
 NOVALUE = int(codecs.NOVALUE)
@@ -310,39 +315,6 @@ def _find(keys: np.ndarray, probes: np.ndarray) -> np.ndarray:
     return np.where(keys[order][pos] == probes, order[pos], -1)
 
 
-def _sum_by(keys: np.ndarray, vals: np.ndarray):
-    """Non-empty keys -> (sorted unique keys, sum of vals, count)."""
-    order = np.argsort(keys, kind="stable")
-    sk = keys[order]
-    cuts = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
-    return sk[cuts], np.add.reduceat(vals[order], cuts), np.diff(np.r_[cuts, len(sk)])
-
-
-def _kahn_sum(t: np.ndarray, acc: np.ndarray, what: str) -> list:
-    """Summing worklist Kahn over a functional graph (t = each node's
-    target index, -1 at terminals): adds every node's FINAL acc into
-    its target, in place, one vectorized frontier per round. Returns
-    the rounds (upstream first) for a reverse pass."""
-    indeg = np.zeros(len(t), dtype=np.int64)
-    np.add.at(indeg, t[t >= 0], 1)
-    rounds = []
-    frontier = np.flatnonzero(indeg == 0)
-    n_done = 0
-    while frontier.size:
-        rounds.append(frontier)
-        n_done += frontier.size
-        ft = t[frontier]
-        has = ft >= 0
-        if not has.any():
-            break
-        uniq, sums, cnt = _sum_by(ft[has], acc[frontier][has])
-        acc[uniq] += sums
-        indeg[uniq] -= cnt
-        frontier = uniq[indeg[uniq] == 0]
-    assert n_done == len(t), f"{what} must be acyclic"
-    return rounds
-
-
 def _owned(ys, xs, h: int, w: int):
     """Aug-frame cell coords -> (ly, lx) tile coords and the ownership
     mask lx < w-1 & ly < h-1: every mosaic cell has exactly one owner,
@@ -350,16 +322,6 @@ def _owned(ys, xs, h: int, w: int):
     x=0 / y=0."""
     ly, lx = ys - 1, xs - 1
     return ly, lx, (lx < w - 1) & (ly < h - 1)
-
-
-def _d8_step(ys, xs, d8):
-    """Target coords of each cell's D8 code (own coords where 0)."""
-    t_ys, t_xs = ys.astype(np.int64), xs.astype(np.int64)
-    for c, dx, dy, _card in D8_NEIGHBORS:
-        sel = d8 == c
-        t_xs[sel] += dx
-        t_ys[sel] += dy
-    return t_ys, t_xs
 
 
 def _drain_arrays(ys, xs, t_ys, t_xs, has, h: int, w: int, weights):
@@ -375,7 +337,7 @@ def _drain_arrays(ys, xs, t_ys, t_xs, has, h: int, w: int, weights):
     # t == -1 now means terminal: no target (pit/flat), dead in-box
     # target (owned but mosaic-invalid), or out-of-box target (cross)
     acc = np.ones(n, np.int64) if weights is None else weights[ys, xs].astype(np.int64)
-    rounds = _kahn_sum(t, acc, "mosaic drainage graph")
+    rounds = kahn_sum(t, acc, "mosaic drainage graph")
     term = np.arange(n, dtype=np.int64)
     steps = np.zeros(n, dtype=np.int64)
     ncard = np.zeros(n, dtype=np.int64)
@@ -436,7 +398,7 @@ def mosaic_tile_arrays_py(aug: np.ndarray, weights: np.ndarray | None = None):
     ays, axs, d8, _ = d8_grid(aug)  # AUGMENTED-frame coords
     ys, xs, own = _owned(ays, axs, h, w)
     ys, xs, d8 = ys[own], xs[own], d8[own]
-    t_ys, t_xs = _d8_step(ys, xs, d8)
+    t_ys, t_xs = d8_step(ys, xs, d8)
     return _drain_arrays(ys, xs, t_ys, t_xs, d8 > 0, h, w, weights)
 
 
@@ -530,7 +492,7 @@ def solve_border_graph(border: pd.DataFrame) -> pd.DataFrame:
         "entry marked crossing but its terminal has no exit edge"
     )
     flow = col(ex, "v").copy()
-    rounds = _kahn_sum(succ, flow, "border-edge graph")
+    rounds = kahn_sum(succ, flow, "border-edge graph")
 
     # mosaic terminal per edge: dead -> its own src; pit entry -> the
     # entry's local terminal; crossing -> terminal of the successor
@@ -566,7 +528,7 @@ def solve_border_graph(border: pd.DataFrame) -> pd.DataFrame:
     # per-entry inflow delta = sum of FINAL flow over live edges in
     li = np.flatnonzero(live)
     if li.size:
-        uniq_e, dsum, _n = _sum_by(ent[li], flow[li])
+        uniq_e, dsum, _n = sum_by(ent[li], flow[li])
         zero = np.zeros(uniq_e.size, np.int64)
         parts.append(pd.DataFrame({
             "kind": "d", "img": en["img"].to_numpy(object)[uniq_e],
@@ -686,15 +648,13 @@ def _stream_pass(t: _Tile, strips: pd.DataFrame, min_acc: int) -> pd.DataFrame:
 
 
 def solve_stream_order(cells: pd.DataFrame) -> pd.DataFrame:
-    """Strahler over the whole-mosaic stream skeleton: the
-    (max order, count-at-max) worklist-Kahn of
-    terrain.stream_order_grid, run once on the assembled sparse edge
-    list. A target absent from the node set is a terminal (dead edge
-    or sub-threshold — the latter cannot happen: mosaic acc is
+    """Strahler over the whole-mosaic stream skeleton:
+    terrain.strahler, run once on the assembled sparse edge list. A
+    target absent from the node set is a terminal (dead edge or
+    sub-threshold — the latter cannot happen: mosaic acc is
     nondecreasing along flow, so the skeleton is descent-closed).
     Pure pandas/numpy — ONE executor task."""
-    n = len(cells)
-    if n == 0:
+    if len(cells) == 0:
         return _empty(MOSAIC_STREAM_SCHEMA)
     gx = cells["gx"].to_numpy(np.int64)
     gy = cells["gy"].to_numpy(np.int64)
@@ -703,42 +663,7 @@ def solve_stream_order(cells: pd.DataFrame) -> pd.DataFrame:
     tgy = cells["tgt_gy"].to_numpy(np.int64)
     st = np.where(tgx >= 0, _find((gx << np.int64(32)) | gy,
                                   (tgx << np.int64(32)) | tgy), -1)
-
-    indeg = np.zeros(n, dtype=np.int64)
-    np.add.at(indeg, st[st >= 0], 1)
-    mx = np.zeros(n, dtype=np.int64)
-    cnt = np.zeros(n, dtype=np.int64)
-    sorder = np.zeros(n, dtype=np.int64)
-    frontier = np.flatnonzero(indeg == 0)
-    n_done = 0
-    while frontier.size:
-        sorder[frontier] = np.where(
-            mx[frontier] == 0, 1, mx[frontier] + (cnt[frontier] >= 2)
-        )
-        n_done += frontier.size
-        ft = st[frontier]
-        hs = ft >= 0
-        tgt = ft[hs]
-        if tgt.size == 0:
-            break
-        o = sorder[frontier][hs]
-        srt = np.lexsort((o, tgt))
-        tgt_s, o_s = tgt[srt], o[srt]
-        cuts = np.flatnonzero(np.r_[True, tgt_s[1:] != tgt_s[:-1]])
-        ends = np.r_[cuts[1:], len(tgt_s)] - 1
-        uniq = tgt_s[cuts]
-        rmx = o_s[ends]
-        at_max = (o_s == np.repeat(
-            rmx, np.diff(np.r_[cuts, len(tgt_s)]))).astype(np.int64)
-        rcnt = np.add.reduceat(at_max, cuts)
-        better = rmx > mx[uniq]
-        same = rmx == mx[uniq]
-        mx[uniq] = np.where(better, rmx, mx[uniq])
-        cnt[uniq] = np.where(better, rcnt, cnt[uniq] + np.where(same, rcnt, 0))
-        indeg[uniq] -= np.diff(np.r_[cuts, len(tgt_s)])
-        frontier = uniq[indeg[uniq] == 0]
-    assert n_done == n, "mosaic stream subgraph must be acyclic"
-    return pd.DataFrame({"gx": gx, "gy": gy, "acc": acc, "sorder": sorder})
+    return pd.DataFrame({"gx": gx, "gy": gy, "acc": acc, "sorder": strahler(st)})
 
 
 def mosaic_stream_order(tiles: DataFrame, min_acc: int = 5) -> DataFrame:
@@ -1018,14 +943,7 @@ def fill_profile_events(aug: np.ndarray) -> list[tuple[int, int, int]]:
     h, w = h2 - 2, w2 - 2
     g = np.ascontiguousarray(aug[1:-1, 1:-1])
     valid = g != NOVALUE
-    vp = (aug != NOVALUE).astype(np.int8)
-    nnb = np.zeros((h, w), dtype=np.int8)
-    for dy in (-1, 0, 1):
-        for dx in (-1, 0, 1):
-            if dx == 0 and dy == 0:
-                continue
-            nnb += vp[1 + dy: h + 1 + dy, 1 + dx: w + 1 + dx]
-    seed = valid & (nnb < 8)
+    seed = fill_seeds(aug != NOVALUE)
     band = np.zeros((h, w), dtype=bool)
     band[(0, 1, h - 2, h - 1), :] = True
     band[:, (0, 1, w - 2, w - 1)] = True
@@ -1220,6 +1138,10 @@ def mosaic_fill(tiles: DataFrame) -> DataFrame:
 
 # -------------------------------------- mosaic conditioned drainage
 
+#: round cap of mosaic_routed_flow's flat-distance iteration (it
+#: raises rather than stop early; the gate mosaics converge in 2-3)
+MAX_ROUNDS = 64
+
 #: unreachable-flat sentinel for the cross-seam BFS iteration (int64,
 #: far above any real hop count; strips carry it verbatim)
 DIST_INF = np.int64(1) << np.int64(40)
@@ -1307,7 +1229,7 @@ def _routed_arrays(grid: np.ndarray, strips: pd.DataFrame,
     uy, ux = np.nonzero(univ)
     ys, xs, own = _owned(uy, ux, h, w)
     ys, xs, code = ys[own], xs[own], code[uy[own], ux[own]]
-    t_ys, t_xs = _d8_step(ys, xs, code)
+    t_ys, t_xs = d8_step(ys, xs, code)
     return _drain_arrays(ys, xs, t_ys, t_xs, code > 0, h, w, weights)
 
 
@@ -1319,7 +1241,7 @@ def _dist_strips_pass(t: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
     return _edge_strips(dplane[1:-1, 1:-1], t.img, "q")
 
 
-def mosaic_routed_flow(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
+def mosaic_routed_flow(tiles: DataFrame) -> DataFrame:
     """PRODUCTION whole-mosaic CONDITIONED drainage: fill (cross-tile
     priority-flood) + flat routing (cross-seam Garbrecht-Martz) +
     accumulation — per-owned-cell (gx, gy, acc, outlet_gx, outlet_gy)
@@ -1336,7 +1258,7 @@ def mosaic_routed_flow(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
         BFS relaxation seeded by local draining cells and the ring
         distances — monotone decreasing from +inf, so it converges to
         the global BFS fixpoint in (seam crossings of the longest
-        shortest-flat-path) rounds, at most max_rounds;
+        shortest-flat-path) rounds, at most MAX_ROUNDS;
      3. the drainage spine (border pass -> ONE-task border solve ->
         weighted relabel), running on the ROUTED graph: the border
         machinery is unchanged because routed flat edges are
@@ -1353,7 +1275,7 @@ def mosaic_routed_flow(tiles: DataFrame, max_rounds: int = 64) -> DataFrame:
     qconv = _fixpoint(
         lambda q: _per_tile(tiles, wstrips if q is None else wstrips.unionByName(q),
                             _dist_strips_pass, STRIP_SCHEMA),
-        sc, max_rounds, "mosaic_routed_flow dist iteration")
+        sc, MAX_ROUNDS, "mosaic_routed_flow dist iteration")
     base = sc.hold(wstrips.unionByName(qconv).cache())
     cells = _drain(tiles, base, ("d", "t"), sc,
                    lambda t, s: _weighted_pass(t, s, _routed_arrays),

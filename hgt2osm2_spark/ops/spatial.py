@@ -290,9 +290,11 @@ def knn_join(
     ring (k hits and max distance <= ring cell width); the rest fall
     back to a broadcast exhaustive pass. Exactness: a hit at distance d
     can only be missed by pass 1 if d > ring_width, which the guard
-    rules out — then pass 2 is exhaustive. max_ring is kept for API
-    compatibility (the fallback replaces ring growth; growth rebuilt
-    its full lineage every iteration and serialized on driver syncs).
+    rules out — then pass 2 is exhaustive. max_ring caps the
+    density-adaptive ring (used when ``ring`` is not given); the ring
+    never grows past it — the fallback replaces ring growth, which
+    rebuilt its full lineage every iteration and serialized on driver
+    syncs.
 
     Telemetry: settled/fallback query counts land in LAST_KNN_METRICS
     and, when given, ``metrics_sink(dict)`` — the lineage/metrics hook.

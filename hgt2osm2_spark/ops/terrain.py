@@ -181,6 +181,84 @@ def d8_grid(grid: np.ndarray):
     )
 
 
+def d8_step(ys, xs, d8):
+    """Target coords (t_ys, t_xs) of each cell's D8 code (own coords
+    where 0), int64."""
+    t_ys, t_xs = ys.astype(np.int64), xs.astype(np.int64)
+    for c, dx, dy, _card in D8_NEIGHBORS:
+        sel = d8 == c
+        t_xs[sel] += dx
+        t_ys[sel] += dy
+    return t_ys, t_xs
+
+
+def d8_targets(ys, xs, d8, shape):
+    """Flat-index D8 target array: t[i] = index of cell i's descent
+    target within the (ys, xs) universe, -1 for terminals (pits/flats
+    and cells whose target left the valid universe)."""
+    h, w = shape
+    lookup = np.full(h * w, -1, dtype=np.int64)
+    lookup[ys.astype(np.int64) * w + xs] = np.arange(len(ys))
+    ty, tx = d8_step(ys, xs, d8)
+    return np.where(d8 > 0, lookup[ty * w + tx], -1)
+
+
+def sum_by(keys: np.ndarray, vals: np.ndarray):
+    """Non-empty keys -> (sorted unique keys, sum of vals, count)."""
+    order = np.argsort(keys, kind="stable")
+    sk = keys[order]
+    cuts = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
+    return sk[cuts], np.add.reduceat(vals[order], cuts), np.diff(np.r_[cuts, len(sk)])
+
+
+def kahn_sum(t: np.ndarray, acc: np.ndarray, what: str) -> list:
+    """Summing worklist Kahn over a functional graph (t = each node's
+    target index, -1 at terminals): adds every node's FINAL acc into
+    its target, in place, one vectorized frontier per round. Returns
+    the rounds (upstream first) for a reverse pass.
+
+    The graph is acyclic, so each round retires every zero-indegree
+    node at once: the round count is the longest path, not the node
+    count. Only the first frontier scans the full array; every later
+    one is exactly the targets whose indegree hit zero, so total work
+    is O(n + edges) (11 s -> 0.5 s of propagation on a 3601^2 tile
+    whose longest drainage path is ~1300 rounds). One sort per round
+    (sum_by) dedupes the targets, sums their contributions and counts
+    the indegree decrements."""
+    indeg = np.zeros(len(t), dtype=np.int64)
+    np.add.at(indeg, t[t >= 0], 1)
+    rounds = []
+    frontier = np.flatnonzero(indeg == 0)
+    n_done = 0
+    while frontier.size:
+        rounds.append(frontier)
+        n_done += frontier.size
+        ft = t[frontier]
+        has = ft >= 0
+        if not has.any():
+            break
+        uniq, sums, cnt = sum_by(ft[has], acc[frontier][has])
+        acc[uniq] += sums
+        indeg[uniq] -= cnt
+        frontier = uniq[indeg[uniq] == 0]
+    assert n_done == len(t), f"{what} must be acyclic"
+    return rounds
+
+
+def _accumulate(ys, xs, t: np.ndarray, what: str):
+    """Weight-1 accumulation over the drainage graph t (kahn_sum), then
+    the reverse outlet sweep: a cell's target retires in a LATER round,
+    so in reverse order outlet[target] is final before outlet[source]
+    copies it. -> (ys, xs, acc, outlet_y, outlet_x)."""
+    acc = np.ones(len(t), dtype=np.int64)
+    outlet = np.arange(len(t), dtype=np.int64)
+    for frontier in reversed(kahn_sum(t, acc, what)):
+        ft = t[frontier]
+        has_t = ft >= 0
+        outlet[frontier[has_t]] = outlet[ft[has_t]]
+    return ys, xs, acc, ys[outlet], xs[outlet]
+
+
 def flow_accumulate_grid(grid: np.ndarray):
     """Numpy flow-accumulation twin over one tile's D8 drainage graph:
     returns flat arrays (ys, xs, acc, outlet_y, outlet_x) over the
@@ -192,77 +270,17 @@ def flow_accumulate_grid(grid: np.ndarray):
     target left the valid universe — tile border / NOVALUE halo).
 
     The D8 graph is FUNCTIONAL (<=1 out-edge) and ACYCLIC (edges
-    strictly descend), so Kahn's propagation runs in VECTORIZED
-    rounds: each round retires every zero-indegree cell at once
-    (np.add.at merges same-target contributions) — per-round work is
-    O(active cells) and the round count is the longest drainage path,
-    not the cell count. Outlets resolve in one reverse sweep of the
-    same rounds (a cell's target always retires in a LATER round, so
-    in reverse order outlet[target] is final before outlet[source]
-    copies it).
-
-    Dispatches to the C fast path (kernels/terrain_cext.py, r8: the
-    whole d8 + FIFO-worklist Kahn + reverse outlet sweep in one C
-    call); this numpy body stays the ORACLE and the fallback."""
+    strictly descend), so acc and outlets resolve by _accumulate
+    (kahn_sum's vectorized rounds + one reverse outlet sweep).
+    Dispatches to the C fast path (kernels/terrain_cext.py); this
+    numpy body stays the ORACLE and the fallback."""
     from ..kernels import terrain_cext
 
     res = terrain_cext.flow_accumulate(grid)
     if res is not None:
         return res
     ys, xs, d8, _ = d8_grid(grid)
-    n = len(ys)
-    h, w = grid.shape
-    lookup = np.full(h * w, -1, dtype=np.int64)
-    lookup[ys.astype(np.int64) * w + xs] = np.arange(n)
-    code_to_delta = {c: (dx, dy) for c, dx, dy, _ in D8_NEIGHBORS}
-    tx = xs.astype(np.int64).copy()
-    ty = ys.astype(np.int64).copy()
-    for c, (dx, dy) in code_to_delta.items():
-        sel = d8 == c
-        tx[sel] += dx
-        ty[sel] += dy
-    t = np.where(d8 > 0, lookup[ty * w + tx], -1)
-
-    indeg = np.zeros(n, dtype=np.int64)
-    valid_t = t[t >= 0]
-    np.add.at(indeg, valid_t, 1)
-    acc = np.ones(n, dtype=np.int64)
-    rounds = []
-    # incremental worklist: only the FIRST frontier scans the full
-    # array; every later frontier is exactly the targets whose
-    # indegree hit zero this round, so total work is O(n + edges)
-    # instead of O(rounds * n) — the difference between 11 s and
-    # 0.5 s of propagation on a 3601^2 tile whose longest drainage
-    # path is ~1300 rounds.
-    frontier = np.flatnonzero(indeg == 0)
-    n_done = 0
-    while frontier.size:
-        rounds.append(frontier)
-        n_done += frontier.size
-        ft = t[frontier]
-        has = ft >= 0
-        tgt = ft[has]
-        if tgt.size == 0:  # every frontier cell is terminal
-            break
-        # one sort serves three duties (dedupe, contribution sums via
-        # add.reduceat, indegree decrements via group sizes) — the
-        # unbuffered np.add.at path this replaces was ~2x the cost
-        order = np.argsort(tgt, kind="stable")
-        st = tgt[order]
-        sa = acc[frontier][has][order]
-        cuts = np.flatnonzero(np.r_[True, st[1:] != st[:-1]])
-        uniq = st[cuts]
-        acc[uniq] += np.add.reduceat(sa, cuts)
-        indeg[uniq] -= np.diff(np.r_[cuts, len(st)])
-        frontier = uniq[indeg[uniq] == 0]
-    assert n_done == n, "D8 graph must be acyclic (strict descent)"
-
-    outlet = np.arange(n, dtype=np.int64)
-    for frontier in reversed(rounds):
-        ft = t[frontier]
-        has_t = ft >= 0
-        outlet[frontier[has_t]] = outlet[ft[has_t]]
-    return ys, xs, acc, ys[outlet], xs[outlet]
+    return _accumulate(ys, xs, d8_targets(ys, xs, d8, grid.shape), "D8 graph")
 
 
 FLOWACC_SCHEMA = (
@@ -508,23 +526,6 @@ def morphometry_cells(tiles: DataFrame) -> DataFrame:
 _D8_CARDINAL = (1, 4, 16, 64)
 
 
-def d8_targets(ys, xs, d8, shape):
-    """Flat-index D8 target array: t[i] = index of cell i's descent
-    target within the (ys, xs) universe, -1 for terminals (pits/flats
-    and cells whose target left the valid universe)."""
-    h, w = shape
-    n = len(ys)
-    lookup = np.full(h * w, -1, dtype=np.int64)
-    lookup[ys.astype(np.int64) * w + xs] = np.arange(n)
-    tx = xs.astype(np.int64).copy()
-    ty = ys.astype(np.int64).copy()
-    for c, dx, dy, _ in D8_NEIGHBORS:
-        sel = d8 == c
-        tx[sel] += dx
-        ty[sel] += dy
-    return np.where(d8 > 0, lookup[ty * w + tx], -1)
-
-
 def flow_length_grid(grid: np.ndarray):
     """Downstream flow-path length per valid D8 cell: flat arrays
     (ys, xs, steps, n_card, n_diag) — steps = number of D8 edges from
@@ -588,38 +589,20 @@ def flow_path_length(tiles: DataFrame) -> DataFrame:
     return tile_map(tiles, FLOWLEN_SCHEMA, body)
 
 
-def stream_order_grid(grid: np.ndarray, min_acc: int):
-    """Strahler stream order over one tile: flat arrays
-    (ys, xs, acc, sorder) over STREAM cells (flow accumulation >=
-    min_acc). Strahler (1957): a headwater stream cell (no stream
-    inflows) has order 1; a cell whose stream inflows have maximum
-    order m has order m+1 if at least two inflows attain m, else m.
+def strahler(st: np.ndarray) -> np.ndarray:
+    """Strahler orders over an acyclic functional stream graph (st =
+    each node's target index, -1 at terminals): a headwater (no
+    inflows) has order 1; a node whose inflows have maximum order m
+    has order m+1 if at least two inflows attain m, else m.
 
-    The stream mask is CLOSED under descent — acc is nondecreasing
-    along flow (the target accumulates everything the source does), so
-    a stream cell's in-universe target is always a stream cell and the
-    subgraph needs no edge clipping (property-pinned in tests).
-
-    Runs as the same vectorized worklist-Kahn rounds as
-    flow_accumulate_grid, but the per-target merge is (max order,
-    count at max) instead of a sum: per round one argsort of (target,
-    order) serves grouping, per-round maxima (last element of each
-    group) and counts-at-max (reduceat over an equality mask); the
-    running (mx, cnt) pair merges across rounds by the same rule. A
-    cell's order is final when it retires because every stream inflow
-    retires in an earlier round."""
-    ys, xs, acc, _oy, _ox = flow_accumulate_grid(grid)
-    ys2, xs2, d8, _ = d8_grid(grid)
-    # both kernels emit the identical row-major valid-cell universe
-    t = d8_targets(ys2, xs2, d8, grid.shape)
-    stream = acc >= min_acc
-    sidx = np.flatnonzero(stream)
-    n = len(sidx)
-    remap = np.full(len(ys), -1, dtype=np.int64)
-    remap[sidx] = np.arange(n)
-    st = t[sidx]
-    st = np.where(st >= 0, remap[st.clip(0)], -1)  # stream-closed: see doc
-
+    Vectorized worklist-Kahn rounds like kahn_sum, but the per-target
+    merge is (max order, count at max) instead of a sum: per round one
+    lexsort of (target, order) serves grouping, per-round maxima (last
+    element of each group) and counts-at-max (reduceat over an
+    equality mask); the running (mx, cnt) pair merges across rounds by
+    the same rule. A node's order is final when it retires because
+    every inflow retires in an earlier round."""
+    n = len(st)
     indeg = np.zeros(n, dtype=np.int64)
     np.add.at(indeg, st[st >= 0], 1)
     mx = np.zeros(n, dtype=np.int64)
@@ -641,20 +624,46 @@ def stream_order_grid(grid: np.ndarray, min_acc: int):
         srt = np.lexsort((o, tgt))
         tgt_s, o_s = tgt[srt], o[srt]
         cuts = np.flatnonzero(np.r_[True, tgt_s[1:] != tgt_s[:-1]])
-        ends = np.r_[cuts[1:], len(tgt_s)] - 1
+        sizes = np.diff(np.r_[cuts, len(tgt_s)])
         uniq = tgt_s[cuts]
-        rmx = o_s[ends]  # per-round max order per target (sorted last)
-        # count at the round max: reduceat over the equality mask
-        at_max = (o_s == np.repeat(rmx, np.diff(np.r_[cuts, len(tgt_s)]))).astype(np.int64)
-        rcnt = np.add.reduceat(at_max, cuts)
+        rmx = o_s[cuts + sizes - 1]  # per-round max order per target (sorted last)
+        rcnt = np.add.reduceat((o_s == np.repeat(rmx, sizes)).astype(np.int64), cuts)
         better = rmx > mx[uniq]
         same = rmx == mx[uniq]
         mx[uniq] = np.where(better, rmx, mx[uniq])
         cnt[uniq] = np.where(better, rcnt, cnt[uniq] + np.where(same, rcnt, 0))
-        indeg[uniq] -= np.diff(np.r_[cuts, len(tgt_s)])
+        indeg[uniq] -= sizes
         frontier = uniq[indeg[uniq] == 0]
-    assert n_done == n, "stream subgraph must be acyclic"
-    return ys[sidx], xs[sidx], acc[sidx], order
+    assert n_done == n, "stream graph must be acyclic"
+    return order
+
+
+def stream_order_grid(grid: np.ndarray, min_acc: int):
+    """Strahler stream order over one tile: flat arrays
+    (ys, xs, acc, sorder) over STREAM cells (flow accumulation >=
+    min_acc), orders by strahler() over the stream subgraph.
+
+    The stream mask is CLOSED under descent — acc is nondecreasing
+    along flow (the target accumulates everything the source does), so
+    a stream cell's in-universe target is always a stream cell and the
+    subgraph needs no edge clipping (property-pinned in tests).
+    Dispatches to the C fast path (kernels/terrain_cext.stream_order);
+    this numpy body stays the ORACLE and the fallback."""
+    from ..kernels import terrain_cext
+
+    res = terrain_cext.stream_order(grid, min_acc)
+    if res is not None:
+        return res
+    ys, xs, acc, _oy, _ox = flow_accumulate_grid(grid)
+    ys2, xs2, d8, _ = d8_grid(grid)
+    # both kernels emit the identical row-major valid-cell universe
+    t = d8_targets(ys2, xs2, d8, grid.shape)
+    sidx = np.flatnonzero(acc >= min_acc)
+    remap = np.full(len(ys), -1, dtype=np.int64)
+    remap[sidx] = np.arange(len(sidx))
+    st = t[sidx]
+    st = np.where(st >= 0, remap[st.clip(0)], -1)  # stream-closed: see doc
+    return ys[sidx], xs[sidx], acc[sidx], strahler(st)
 
 
 STREAM_ORDER_SCHEMA = (
@@ -674,6 +683,19 @@ def stream_order(tiles: DataFrame, min_acc: int = 5) -> DataFrame:
         return {"image_id": img, "x": xs, "y": ys, "acc": acc, "sorder": order}
 
     return tile_map(tiles, STREAM_ORDER_SCHEMA, body)
+
+
+def fill_seeds(valid: np.ndarray) -> np.ndarray:
+    """The fill seed rule over the interior of an (h+2, w+2) validity
+    plane: a valid cell with fewer than 8 valid neighbors (where water
+    can leave the known world). -> (h, w) bool."""
+    h, w = valid.shape[0] - 2, valid.shape[1] - 2
+    nnb = np.zeros((h, w), dtype=np.int8)
+    for dy in (-1, 0, 1):
+        for dx in (-1, 0, 1):
+            if dx or dy:
+                nnb += valid[1 + dy : h + 1 + dy, 1 + dx : w + 1 + dx]
+    return valid[1:-1, 1:-1] & (nnb < 8)
 
 
 def fill_grid(grid: np.ndarray) -> np.ndarray:
@@ -715,15 +737,7 @@ def fill_grid(grid: np.ndarray) -> np.ndarray:
     g = grid.astype(np.int64)
     h, w = g.shape
     valid = g != nv
-    vp = np.zeros((h + 2, w + 2), dtype=np.int8)
-    vp[1:-1, 1:-1] = valid
-    nnb = np.zeros((h, w), dtype=np.int8)
-    for dy in (-1, 0, 1):
-        for dx in (-1, 0, 1):
-            if dx == 0 and dy == 0:
-                continue
-            nnb += vp[1 + dy : h + 1 + dy, 1 + dx : w + 1 + dx]
-    seed = valid & (nnb < 8)
+    seed = fill_seeds(np.pad(valid, 1))
     inf = np.int64(1) << np.int64(62)
     wsur = np.where(seed, g, inf)
     wp = np.full((h + 2, w + 2), inf, dtype=np.int64)
@@ -799,10 +813,10 @@ def routed_flow_grid(filled: np.ndarray):
 
     Acyclicity: strict edges drop elevation; flat edges keep
     elevation and strictly drop BFS distance — so the union graph is
-    a DAG and the same vectorized worklist-Kahn propagates
-    accumulation and outlets. Returns (ys, xs, acc, outlet_y,
-    outlet_x) over the d8 universe of the filled grid — identical
-    shape to flow_accumulate_grid.
+    a DAG, and acc and outlets resolve by flow_accumulate_grid's
+    _accumulate. Returns (ys, xs, acc, outlet_y, outlet_x) over the d8
+    universe of the filled grid — identical shape to
+    flow_accumulate_grid.
 
     All-integer (elevations, BFS hop counts): the gate surface is
     exact across engines. Dispatches to the C fast path
@@ -823,15 +837,7 @@ def routed_flow_grid(filled: np.ndarray):
     lookup = np.full(h * w, -1, dtype=np.int64)
     lookup[ys.astype(np.int64) * w + xs] = np.arange(n)
     zz = g[ys, xs]
-
-    # strict-descent targets (same derivation as flow_accumulate_grid)
-    tx = xs.astype(np.int64).copy()
-    ty = ys.astype(np.int64).copy()
-    for c, dx, dy, _card in D8_NEIGHBORS:
-        sel = d8 == c
-        tx[sel] += dx
-        ty[sel] += dy
-    t = np.where(d8 > 0, lookup[ty * w + tx], np.int64(-1))
+    t = d8_targets(ys, xs, d8, filled.shape)  # strict-descent targets
 
     # BFS distance to a draining equal-elevation cell, per flat
     INF = np.int64(1) << np.int64(60)
@@ -878,38 +884,7 @@ def routed_flow_grid(filled: np.ndarray):
         chosen = cand[np.arange(flat.size), best]
         ok = nd[np.arange(flat.size), best] < INF
         t[flat[ok]] = chosen[ok]
-
-    # worklist Kahn over the union DAG (same idiom as
-    # flow_accumulate_grid; integer sums are order-free)
-    indeg = np.zeros(n, dtype=np.int64)
-    np.add.at(indeg, t[t >= 0], 1)
-    acc = np.ones(n, dtype=np.int64)
-    rounds = []
-    frontier = np.flatnonzero(indeg == 0)
-    n_done = 0
-    while frontier.size:
-        rounds.append(frontier)
-        n_done += frontier.size
-        ft = t[frontier]
-        has = ft >= 0
-        tgt = ft[has]
-        if tgt.size == 0:
-            break
-        order = np.argsort(tgt, kind="stable")
-        st = tgt[order]
-        sa = acc[frontier][has][order]
-        cuts = np.flatnonzero(np.r_[True, st[1:] != st[:-1]])
-        uniq = st[cuts]
-        acc[uniq] += np.add.reduceat(sa, cuts)
-        indeg[uniq] -= np.diff(np.r_[cuts, len(st)])
-        frontier = uniq[indeg[uniq] == 0]
-    assert n_done == n, "flat-routed graph must be acyclic"
-    outlet = np.arange(n, dtype=np.int64)
-    for frontier in reversed(rounds):
-        ft = t[frontier]
-        has_t = ft >= 0
-        outlet[frontier[has_t]] = outlet[ft[has_t]]
-    return ys, xs, acc, ys[outlet], xs[outlet]
+    return _accumulate(ys, xs, t, "flat-routed graph")
 
 
 def flat_routed_flow(tiles: DataFrame) -> DataFrame:

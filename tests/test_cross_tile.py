@@ -101,6 +101,27 @@ def test_long_chain_merges_into_one_line(spark):
     assert not row["closed"]
 
 
+def test_repeat_calls_hold_one_cached_relation(spark):
+    """Each call releases the previous call's cached polylines: after
+    two calls on different chains the cross_tile scope holds one
+    relation, and the second call adds one persisted RDD fewer than
+    the first did (the first call's polylines are gone). Both results
+    stay referenced, so no RDD of theirs is garbage-collected."""
+    from hgt2osm2_spark.cache import scope
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    first = cross_tile.stitch_across_tiles(_chain(spark, 3))
+    assert [r["n_parts"] for r in first.collect()] == [3]
+    one = len(persisted() - before)
+    second = cross_tile.stitch_across_tiles(_chain(spark, 4))
+    assert [r["n_parts"] for r in second.collect()] == [4]
+    assert len(scope("cross_tile")) == 1
+    assert len(persisted() - before) == 2 * one - 1
+
+
 def test_too_few_rounds_raise(spark):
     with pytest.raises(RuntimeError, match="no convergence in 3 rounds"):
         cross_tile.stitch_across_tiles(_chain(spark, 4), max_iters=3)

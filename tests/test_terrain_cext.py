@@ -48,10 +48,28 @@ def _grids():
     # monotone ramp (longest paths)
     r = (np.arange(25)[None, :] * 3 + np.arange(25)[:, None]).astype(np.int16)
     out.append(r)
+    # degenerate shapes: one-cell-wide strips of universe
+    out.append(rng.integers(0, 50, size=(3, 40)).astype(np.int16))
+    out.append(rng.integers(0, 50, size=(40, 3)).astype(np.int16))
+    # an empty universe (every 3x3 touches a NOVALUE row, n = 0)
+    e = rng.integers(0, 50, size=(8, 8)).astype(np.int16)
+    e[::2, :] = NV
+    out.append(e)
+    # a single valid 3x3 neighborhood (n = 1)
+    one = np.full((7, 7), NV, dtype=np.int16)
+    one[2:5, 2:5] = rng.integers(0, 50, size=(3, 3))
+    out.append(one)
+    # flat-heavy: four levels, ties and plateaus everywhere
+    out.append((rng.integers(0, 4, size=(30, 30)) * 10).astype(np.int16))
     return out
 
 
-@pytest.mark.parametrize("idx", range(6))
+#: every _grids() input; the viewshed test keeps the first six (its
+#: fixed observers sit outside the degenerate shapes)
+GRIDS = range(len(_grids()))
+
+
+@pytest.mark.parametrize("idx", GRIDS)
 def test_d8_bit_equal(idx):
     g = _grids()[idx]
     a = terrain_cext.d8(g)
@@ -62,7 +80,7 @@ def test_d8_bit_equal(idx):
         assert x.dtype == y.dtype
 
 
-@pytest.mark.parametrize("idx", range(6))
+@pytest.mark.parametrize("idx", GRIDS)
 def test_flow_accumulate_bit_equal(idx):
     g = _grids()[idx]
     a = terrain_cext.flow_accumulate(g)
@@ -155,10 +173,14 @@ def _augs():
         np.int64
     )
     out.append(ramp)
+    # an empty owned universe (every 3x3 touches a NOVALUE row)
+    empty = rng.integers(0, 500, size=(12, 12)).astype(np.int64)
+    empty[::2, :] = NV
+    out.append(empty)
     return out
 
 
-@pytest.mark.parametrize("idx", range(7))
+@pytest.mark.parametrize("idx", range(len(_augs())))
 @pytest.mark.parametrize("weighted", [False, True])
 def test_mosaic_accumulate_bit_equal(idx, weighted):
     aug = _augs()[idx]
@@ -201,7 +223,7 @@ def _py_fill(grid):
         return terrain.fill_grid(grid)
 
 
-@pytest.mark.parametrize("idx", range(6))
+@pytest.mark.parametrize("idx", GRIDS)
 def test_fill_bit_equal(idx):
     """Priority-flood heap (C) vs Jacobi reconstruction-by-erosion
     (numpy) — two structurally different algorithms for the same
@@ -276,7 +298,7 @@ def _py_routed(filled):
         return terrain.routed_flow_grid(filled)
 
 
-@pytest.mark.parametrize("idx", range(6))
+@pytest.mark.parametrize("idx", GRIDS)
 def test_routed_flow_bit_equal(idx):
     """C FIFO-BFS + argmin + Kahn vs the numpy n x 8 table derivation
     — on FILLED surfaces (the op's real input: big flats) and raw
@@ -323,7 +345,7 @@ def _py_morph(grid):
         return terrain.morph_grid(grid)
 
 
-@pytest.mark.parametrize("idx", range(6))
+@pytest.mark.parametrize("idx", GRIDS)
 def test_flow_length_bit_equal(idx):
     """C Kahn+reverse-sweep vs numpy pointer doubling — two different
     mechanisms for the same integer path geometry."""
@@ -335,7 +357,7 @@ def test_flow_length_bit_equal(idx):
         assert np.array_equal(x, y)
 
 
-@pytest.mark.parametrize("idx", range(6))
+@pytest.mark.parametrize("idx", GRIDS)
 @pytest.mark.parametrize("min_acc", [2, 8])
 def test_stream_order_bit_equal(idx, min_acc):
     """C per-edge (max, count-at-max) merge vs numpy per-round merge —
@@ -348,7 +370,7 @@ def test_stream_order_bit_equal(idx, min_acc):
         assert np.array_equal(x, y)
 
 
-@pytest.mark.parametrize("idx", range(6))
+@pytest.mark.parametrize("idx", GRIDS)
 def test_morph_bit_equal(idx):
     g = _grids()[idx]
     a = terrain_cext.morph(g)
