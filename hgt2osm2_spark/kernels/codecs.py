@@ -305,6 +305,28 @@ def decode_djpg(data: bytes) -> np.ndarray:
 
 # ---------------------------------------------------------------- dispatch
 
+def decode_rgb8(data: bytes, fmt: str) -> np.ndarray:
+    """(h, w, 3) uint8 pixels of a real 8-bit image payload: RGB8 PNG,
+    baseline JPEG (a grayscale one stacked to 3 channels), GIF87a/89a
+    (kernels.gif: palette + LZW) or WebP-lossless (kernels.webp: VP8L)."""
+    if fmt == "png-rgb":
+        return decode_png_rgb8(data)
+    if fmt == "jpeg":
+        from . import jpeg as _jpeg
+
+        px = _jpeg.decode_jpeg(data)
+        return np.stack([px] * 3, axis=2) if px.ndim == 2 else px
+    if fmt == "gif":
+        from . import gif as _gif
+
+        return _gif.decode_gif_rgb8(data)
+    if fmt == "webp":
+        from . import webp as _webp
+
+        return _webp.decode_webp_rgb8(data)
+    raise NotImplementedError(f"{fmt!r} is not a real 8-bit image format here")
+
+
 def decode(data: bytes, fmt: str, w: int, h: int, name: str | None = None) -> np.ndarray:
     if fmt == "hgt":
         return decode_hgt(data, w, h)
@@ -312,39 +334,21 @@ def decode(data: bytes, fmt: str, w: int, h: int, name: str | None = None) -> np
         return decode_hgt_zip(data, w, h, name)
     if fmt == "png":
         return decode_png16(data)
-    if fmt == "png-rgb":
-        # real RGB8 PNG -> grayscale luma grid (grid contract is 2-D i16)
-        return rgb_to_gray_i16(decode_png_rgb8(data))
     if fmt == "jpg":
         return decode_djpg(data)
-    if fmt == "jpeg":
-        # real baseline JPEG (kernels.jpeg); color images collapse to
-        # the 2-D luma grid contract like png-rgb does
-        from . import jpeg as _jpeg
-
-        px = _jpeg.decode_jpeg(data)
-        if px.ndim == 3:
-            return rgb_to_gray_i16(px)
-        return px.astype(np.int16)
-    if fmt == "gif":
-        # real GIF87a/89a (kernels.gif: palette + LZW); luma contract
-        from . import gif as _gif
-
-        return rgb_to_gray_i16(_gif.decode_gif_rgb8(data))
-    if fmt == "webp":
-        # real WebP-lossless (kernels.webp: VP8L); luma contract
-        from . import webp as _webp
-
-        return rgb_to_gray_i16(_webp.decode_webp_rgb8(data))
+    if fmt in ("png-rgb", "jpeg", "gif", "webp"):
+        # real 8-bit images: the grid contract is 2-D i16, so they
+        # collapse to their luma (a gray plane stacked to RGB gives
+        # itself back exactly)
+        return rgb_to_gray_i16(decode_rgb8(data, fmt))
     raise NotImplementedError(f"unknown tile format {fmt!r}")
 
 
 def iter_decoded_tiles(pdf):
     """Yield (image_id, grid) for each tile row of an Arrow batch
-    DataFrame carrying the input_hint columns — the ONE decode loop,
-    read by ops/tiles.tile_map (every per-tile operator) and the mosaic
-    cogroup's tile side; bytes() normalizes bytearray/memoryview
-    payloads."""
+    DataFrame carrying the input_hint columns — the mosaic cogroup's
+    tile side (ops/tiles.tile_map decodes each row the same way);
+    bytes() normalizes bytearray/memoryview payloads."""
     for img, data, w, h, fmt in zip(
         pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
     ):

@@ -17,14 +17,11 @@ their original fmt so every downstream operator works unchanged.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from ..kernels import codecs
-from .tiles import parse_tile_id
+from .tiles import TILE_COLS, parse_tile_id, row_map
 
 
 def crop_grid(
@@ -95,34 +92,12 @@ def crop_tiles(
     reference; callers that want them gone entirely add the partition
     prune filter first (cheap: image_id encodes the tile corner)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for img, data, w, h, fmt, cap in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"], pdf["caption"]
-            ):
-                w, h = int(w), int(h)
-                lat0, lon0, _k = parse_tile_id(img)
-                grid = codecs.decode(data, fmt, w, h)
-                win = degree_window_to_index(
-                    lon0, lat0, w, h, min_lon, min_lat, max_lon, max_lat
-                )
-                out, stats = crop_grid(grid, win[0], win[1], win[2], win[3])
-                rows.append(
-                    (
-                        img,
-                        codecs.encode(out, fmt),
-                        w,
-                        h,
-                        fmt,
-                        cap,
-                        codecs.phash64(out),
-                        stats["minimum"],
-                        stats["maximum"],
-                        stats["not_valid"],
-                        stats["kept"],
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in CROP_SCHEMA.fields])
+    def body(img, data, w, h, fmt, cap):
+        w, h = int(w), int(h)
+        lat0, lon0, _k = parse_tile_id(img)
+        win = degree_window_to_index(lon0, lat0, w, h, min_lon, min_lat, max_lon, max_lat)
+        out, stats = crop_grid(codecs.decode(bytes(data), fmt, w, h), *win)
+        return (img, codecs.encode(out, fmt), w, h, fmt, cap, codecs.phash64(out),
+                stats["minimum"], stats["maximum"], stats["not_valid"], stats["kept"])
 
-    return tiles.mapInPandas(gen, schema=CROP_SCHEMA)
+    return row_map(tiles, (*TILE_COLS, "caption"), CROP_SCHEMA, body)

@@ -169,14 +169,15 @@ def _minhash_batch(texts: list[bytes], a: np.ndarray, b: np.ndarray,
     """Minhash signatures for a whole Arrow batch, vectorized ACROSS
     documents (VERDICT r2 item 4: no per-document Python loop).
 
-    All shingle windows of the batch are hashed in one `_fnv1a_rows`
-    column sweep over the concatenated byte buffer (window positions
+    All shingle windows of the batch are hashed in one FNV-1a column
+    sweep over the concatenated byte buffer (window positions
     that would straddle a document boundary are excluded by ragged
     indexing), then each of the k permutations is reduced to per-doc
     minima with one segmented ``np.minimum.reduceat``. The min over a
     doc's multiset of shingle hashes equals the min over its set, so
-    the scalar twin's ``np.unique`` step is unnecessary. Arithmetic is
-    bit-identical to the scalar twin: uint64 wraparound multiply/add,
+    the per-document scalar twin's ``np.unique`` step (the test oracle
+    in tests/test_data_ops.py) is unnecessary. Arithmetic is
+    bit-identical to that twin: uint64 wraparound multiply/add,
     then mod 2^61-1. Returns an (n_docs, k) int64 matrix."""
     n = len(texts)
     if n == 0:
@@ -221,49 +222,6 @@ def _minhash_batch(texts: list[bytes], a: np.ndarray, b: np.ndarray,
         buf %= M
         sig[i] = np.minimum.reduceat(buf, out_offs)
     return sig.T.copy()
-
-
-def minhash_signatures_scalar(
-    texts: list[bytes], k: int = 64, shingle: int = 5, seed: int = 42
-) -> np.ndarray:
-    """Per-document scalar twin of `_minhash_batch` (the round-1/2
-    implementation) — kept as the equality oracle for tests."""
-    a, b = _minhash_params(k, seed)
-    M = np.uint64(_MERSENNE)
-    out = np.empty((len(texts), k), dtype=np.int64)
-    for d, s in enumerate(texts):
-        if len(s) < shingle:
-            hs = np.array([_fnv1a(s)], dtype=np.uint64)
-        else:
-            win = np.lib.stride_tricks.sliding_window_view(
-                np.frombuffer(s, dtype=np.uint8), shingle
-            )
-            hs = _fnv1a_rows(win)
-        hs = np.unique(hs)
-        vals = (np.outer(a, hs) + b[:, None]) % M  # (k, n_shingles)
-        out[d] = vals.min(axis=1).astype(np.int64)
-    return out
-
-
-def _fnv1a(data: bytes) -> np.uint64:
-    # uint64 wraparound IS the FNV algorithm — silence numpy's scalar
-    # overflow RuntimeWarning so it can't train readers to ignore the
-    # warnings that elsewhere signal real bugs (VERDICT r8 ward #2)
-    with np.errstate(over="ignore"):
-        h = np.uint64(0xCBF29CE484222325)
-        for c in data:
-            h = (h ^ np.uint64(c)) * np.uint64(0x100000001B3)
-        return h
-
-
-def _fnv1a_rows(win: np.ndarray) -> np.ndarray:
-    """FNV-1a over each row of a (n, w) uint8 window matrix, vectorized
-    over rows."""
-    h = np.full(win.shape[0], 0xCBF29CE484222325, dtype=np.uint64)
-    prime = np.uint64(0x100000001B3)
-    for j in range(win.shape[1]):
-        h = (h ^ win[:, j].astype(np.uint64)) * prime
-    return h
 
 
 def minhash_lsh_pairs(
@@ -360,7 +318,8 @@ _VARLEN_SCALAR_CAP = 4096
 
 
 def _fnv1a_py(data: bytes) -> int:
-    """Plain-int FNV-1a (fast scalar path for rare oversized tokens)."""
+    """Plain-int FNV-1a: the scalar path for rare oversized tokens and
+    the oracle of the vectorized sweeps."""
     h = 0xCBF29CE484222325
     for c in data:
         h = ((h ^ c) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
@@ -371,7 +330,7 @@ def _fnv1a_varlen(tokens: list[bytes]) -> np.ndarray:
     """FNV-1a over each variable-length token, vectorized ACROSS tokens:
     one masked column sweep per byte position (loop bound = longest
     token in a length bucket, not token count) — identical results to
-    the scalar _fnv1a.
+    the scalar _fnv1a_py.
 
     Memory bound: tokens are swept in geometric length buckets
     ((0,16], (16,32], ... (2048,4096]), so each padded matrix is at

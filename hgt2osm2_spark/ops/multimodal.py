@@ -1,64 +1,45 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Real image/audio/video codec libraries are NOT in this container. The
-image path is nonetheless REAL: pure-Python PNG (kernels.codecs) and
-baseline JPEG (kernels.jpeg) codecs decode standard bytes end-to-end.
-Audio/video container formats stay clearly-marked stubs
+image path is nonetheless REAL: pure-Python PNG (kernels.codecs),
+baseline JPEG (kernels.jpeg), GIF and WebP-lossless codecs decode
+standard bytes end-to-end, as do RIFF/PCM wav and the AVI and mp4
+containers of MJPEG video. The entropy-coded bitstreams
+(UNSUPPORTED_REAL_FORMATS) stay clearly-marked stubs
 (NotImplementedError), while their Spark-side plumbing — schema,
 partition strategy, Arrow UDF signatures, batch shapes — is real and
 tested with the engine's own deterministic formats.
 
 Operators:
-  decode_features    binary -> fixed-width feature vector (mapInPandas)
+  decode_features    binary -> fixed-width feature vector (tile_map)
   resize_tiles       grid resize (block-mean downsample), re-encoded
   frame_sample       treat a binary as T stacked frames; sample every
                      k-th frame (video-shaped plumbing)
-  video_frames       REAL AVI container demux (kernels.avi) -> MJPEG
-                     frame payloads
+  video_frames       REAL AVI / mp4 container demux (kernels.avi,
+                     kernels.mp4) -> MJPEG frame payloads
   video_frame_features  demux + per-frame baseline-JPEG decode -> luma
                      stats (the full real video path)
+
+Every operator is a body for ops/tiles.row_map (or tile_map, for the
+grid ones); the two video operators share one demux, ``_mjpeg_frames``.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernels import codecs
+from .tiles import TILE_COLS, row_map, tile_map
 
-#: formats the stub decoder refuses (real libs unavailable here).
-#: 'png-rgb' graduated to a REAL pure-Python decoder in round 2
-#: (codecs.decode_png_rgb8: stdlib zlib + all five scanline filters);
-#: 'jpeg' AND 'wav' graduated in round 3 (kernels.jpeg:
-#: baseline-sequential huffman + dequant + IDCT, validated against
-#: Java ImageIO; kernels.audio: RIFF/PCM u8..s32 + float, validated
-#: against the stdlib wave module); 'avi-mjpeg' AND 'gif' graduated in
-#: round 3 (kernels.avi RIFF mux/demux + per-frame kernels.jpeg decode;
-#: kernels.gif palette+LZW, lossless over quantized pixels); 'webp'
-#: graduated in round 4 (kernels.webp: full VP8L — all four transforms,
-#: color cache, meta prefix codes, LZ77 — from the public lossless
-#: bitstream spec, round-trip exact), and so did the 'mp4' CONTAINER
-#: (kernels.mp4: ISO-BMFF box-tree demux + generic sample-table
-#: resolution; MJPEG tracks pixel-decode end-to-end, an avc1/h264
-#: track raises with its codec named). The remaining entries are
-#: genuinely codec-bound BITSTREAMS (mp3 hybrid filterbank, h264
-#: CABAC/CAVLC) with no feasible stdlib-only decoder — they are the
-#: documented native-codec seam, not pending work: see COVERAGE.md
-#: "Native fast paths and the fleet-scale swap points".
+#: entropy-coded bitstreams (mp3 hybrid filterbank, h264 CABAC/CAVLC)
+#: with no feasible stdlib-only decoder: every operator here refuses
+#: them with NotImplementedError. They are the documented native-codec
+#: seam, see COVERAGE.md "Native fast paths and the fleet-scale swap
+#: points".
 UNSUPPORTED_REAL_FORMATS = {"mp3", "h264"}
-
-
-def _decode_any(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
-    if fmt in UNSUPPORTED_REAL_FORMATS:
-        raise NotImplementedError(
-            f"decoder for {fmt!r} requires an image/audio library not present "
-            "in this environment — plumbing is exercised via hgt/png/jpg"
-        )
-    return codecs.decode(data, fmt, w, h)
 
 
 FEATURES_SCHEMA = T.StructType(
@@ -74,25 +55,14 @@ def decode_features(tiles: DataFrame, n_bins: int = 16) -> DataFrame:
     The Arrow batch shape (rows of MB-sized binaries) is the same a JPEG
     feature extractor would see."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, feats = [], []
-            for img, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                grid = _decode_any(data, fmt, int(w), int(h)).astype(np.float64)
-                valid = grid != codecs.NOVALUE
-                vals = grid[valid]
-                if vals.size == 0:
-                    hist = np.zeros(n_bins)
-                else:
-                    hist, _ = np.histogram(vals, bins=n_bins, range=(vals.min(), vals.max() + 1))
-                    hist = hist / vals.size
-                ids.append(img)
-                feats.append(hist.tolist())
-            yield pd.DataFrame({"image_id": ids, "features": feats})
+    def body(img, grid):
+        vals = grid[grid != codecs.NOVALUE].astype(np.float64)
+        if vals.size == 0:
+            return img, [0.0] * n_bins
+        hist, _ = np.histogram(vals, bins=n_bins, range=(vals.min(), vals.max() + 1))
+        return img, (hist / vals.size).tolist()
 
-    return tiles.mapInPandas(gen, schema=FEATURES_SCHEMA)
+    return tile_map(tiles, FEATURES_SCHEMA, body)
 
 
 IMAGE_STATS_SCHEMA = T.StructType(
@@ -118,28 +88,9 @@ IMAGE_STATS_Q_SCHEMA = T.StructType(
 )
 
 
-def _one_image_stats(data: bytes, fmt: str, edge_thresh: float) -> dict:
-    from ..kernels import jpeg as _jpeg
-
-    if fmt == "png-rgb":
-        px = codecs.decode_png_rgb8(data)
-    elif fmt == "jpeg":
-        px = _jpeg.decode_jpeg(data)
-        if px.ndim == 2:
-            px = np.stack([px] * 3, axis=2)
-    elif fmt == "gif":
-        from ..kernels import gif as _gif
-
-        px = _gif.decode_gif_rgb8(data)
-    elif fmt == "webp":
-        from ..kernels import webp as _webp
-
-        px = _webp.decode_webp_rgb8(data)
-    else:
-        raise NotImplementedError(
-            f"image_stats: {fmt!r} is not a real image format here"
-        )
-    px = px.astype(np.float64)
+def _one_image_stats(data: bytes, fmt: str, edge_thresh: float) -> tuple:
+    """(mean_luma, std_luma, entropy, edge_density) of one image."""
+    px = codecs.decode_rgb8(data, fmt).astype(np.float64)
     luma = (0.299 * px[:, :, 0] + 0.587 * px[:, :, 1]
             + 0.114 * px[:, :, 2])
     lu8 = np.clip(np.rint(luma), 0, 255).astype(np.uint8)
@@ -155,12 +106,8 @@ def _one_image_stats(data: bytes, fmt: str, edge_thresh: float) -> dict:
     # images under 3px have no Sobel interior: zero edges by definition
     # (NOT NaN — NaN would sail through quality filters as ok)
     edge_density = float((mag > edge_thresh).mean()) if mag.size else 0.0
-    return {
-        "mean_luma": round(float(luma.mean()), 6),
-        "std_luma": round(float(luma.std()), 6),
-        "entropy": round(entropy, 6),
-        "edge_density": round(edge_density, 6),
-    }
+    return (round(float(luma.mean()), 6), round(float(luma.std()), 6),
+            round(entropy, 6), round(edge_density, 6))
 
 
 def image_stats(images: DataFrame, edge_thresh: float = 30.0) -> DataFrame:
@@ -171,21 +118,8 @@ def image_stats(images: DataFrame, edge_thresh: float = 30.0) -> DataFrame:
     content; flat synthetic images score low). Rounded to 6 so the
     plain-loop golden twin hashes equal. Raises on a corrupt payload —
     use image_stats_quarantined when the input is untrusted."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in IMAGE_STATS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for img, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                rows.append(
-                    {"image_id": img,
-                     **_one_image_stats(bytes(data), fmt, edge_thresh)}
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        gen, schema=IMAGE_STATS_SCHEMA
-    )
+    return row_map(images, ("image_id", "bytes", "fmt"), IMAGE_STATS_SCHEMA,
+                   lambda img, data, fmt: (img, *_one_image_stats(bytes(data), fmt, edge_thresh)))
 
 
 def image_stats_quarantined(images: DataFrame,
@@ -196,25 +130,14 @@ def image_stats_quarantined(images: DataFrame,
     stream must never cost a 10-hour job. Mirrors
     sources/decode.decode_stats_quarantined for grids."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in IMAGE_STATS_Q_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for img, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                try:
-                    stats = _one_image_stats(bytes(data), fmt, edge_thresh)
-                    rows.append({"image_id": img, "ok": True, "error": "",
-                                 **stats})
-                except Exception as e:  # noqa: BLE001 — quarantine boundary
-                    rows.append({"image_id": img, "ok": False,
-                                 "error": type(e).__name__,
-                                 "mean_luma": None, "std_luma": None,
-                                 "entropy": None, "edge_density": None})
-            yield pd.DataFrame(rows, columns=cols)
+    def body(img, data, fmt):
+        try:
+            stats = _one_image_stats(bytes(data), fmt, edge_thresh)
+        except Exception as e:  # noqa: BLE001 — quarantine boundary
+            return img, False, type(e).__name__, None, None, None, None
+        return img, True, "", *stats
 
-    return images.select("image_id", "bytes", "fmt").mapInPandas(
-        gen, schema=IMAGE_STATS_Q_SCHEMA
-    )
+    return row_map(images, ("image_id", "bytes", "fmt"), IMAGE_STATS_Q_SCHEMA, body)
 
 
 def phash_near_dup(images: DataFrame, max_hamming: int = 10,
@@ -246,55 +169,29 @@ def resize_tiles(tiles: DataFrame, factor: int = 2) -> DataFrame:
     NoValue cells poison their block (stay NoValue) — missing data is
     never averaged into real samples."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for img, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                hh = (h // factor) * factor
-                ww = (w // factor) * factor
-                if fmt in ("png-rgb", "jpeg"):
-                    if fmt == "png-rgb":
-                        px = codecs.decode_png_rgb8(bytes(data))
-                    else:
-                        from ..kernels import jpeg as _jpeg
+    def blocks(px: np.ndarray, h: int, w: int) -> np.ndarray:
+        hh, ww = h // factor, w // factor
+        return px[:hh * factor, :ww * factor].reshape(hh, factor, ww, factor, *px.shape[2:])
 
-                        px = _jpeg.decode_jpeg(bytes(data))
-                        if px.ndim == 2:  # grayscale jpeg -> 3-channel
-                            px = np.stack([px] * 3, axis=2)
-                    rgb = px[:hh, :ww].astype(np.float64)
-                    blocks = rgb.reshape(hh // factor, factor, ww // factor, factor, 3)
-                    small8 = np.rint(blocks.mean(axis=(1, 3))).astype(np.uint8)
-                    if fmt == "png-rgb":
-                        payload = codecs.encode_png_rgb8(small8)
-                    else:
-                        from ..kernels import jpeg as _jpeg
+    def body(img, data, w, h, fmt):
+        data, w, h = bytes(data), int(w), int(h)
+        if fmt in ("png-rgb", "jpeg"):
+            b = blocks(codecs.decode_rgb8(data, fmt), h, w).astype(np.float64)
+            small8 = np.rint(b.mean(axis=(1, 3))).astype(np.uint8)
+            if fmt == "png-rgb":
+                payload = codecs.encode_png_rgb8(small8)
+            else:
+                from ..kernels import jpeg as _jpeg
 
-                        payload = _jpeg.encode_jpeg_rgb8(small8, quality=92)
-                    sw, sh = small8.shape[1], small8.shape[0]
-                else:
-                    grid = _decode_any(data, fmt, int(w), int(h))
-                    g = grid[:hh, :ww].astype(np.float64)
-                    bad = g == codecs.NOVALUE
-                    blocks = g.reshape(hh // factor, factor, ww // factor, factor)
-                    badb = bad.reshape(hh // factor, factor, ww // factor, factor).any(axis=(1, 3))
-                    small = blocks.mean(axis=(1, 3))
-                    small = np.where(badb, codecs.NOVALUE, np.rint(small)).astype(np.int16)
-                    payload = codecs.encode(small, fmt)
-                    sw, sh = small.shape[1], small.shape[0]
-                out.append(
-                    {
-                        "image_id": img,
-                        "bytes": payload,
-                        "w": sw,
-                        "h": sh,
-                        "fmt": fmt,
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in RESIZE_SCHEMA.fields])
+                payload = _jpeg.encode_jpeg_rgb8(small8, quality=92)
+            return img, payload, small8.shape[1], small8.shape[0], fmt
+        b = blocks(codecs.decode(data, fmt, w, h), h, w)
+        small = np.rint(b.astype(np.float64).mean(axis=(1, 3)))
+        small = np.where((b == codecs.NOVALUE).any(axis=(1, 3)), codecs.NOVALUE, small)
+        small = small.astype(np.int16)
+        return img, codecs.encode(small, fmt), small.shape[1], small.shape[0], fmt
 
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(gen, schema=RESIZE_SCHEMA)
+    return row_map(tiles, TILE_COLS, RESIZE_SCHEMA, body)
 
 
 AUDIO_FEATURES_SCHEMA = T.StructType(
@@ -314,30 +211,20 @@ def audio_features(clips: DataFrame) -> DataFrame:
     """wav binary -> per-clip features (duration, RMS, peak,
     zero-crossing rate) via the REAL pure-Python RIFF/PCM decoder
     (kernels.audio). Entropy-coded audio (mp3) still refuses through
-    _decode_any's honest stub."""
+    a NotImplementedError."""
     from ..kernels import audio as _audio
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for cid, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                if fmt != "wav":
-                    raise NotImplementedError(
-                        f"audio_features: {fmt!r} needs a codec library not "
-                        "present here (only RIFF/PCM wav is real)"
-                    )
-                samples, rate = _audio.decode_wav(bytes(data))
-                f = _audio.clip_features(samples, rate)
-                rows.append(
-                    {"image_id": cid, "sample_rate": rate,
-                     "n_channels": samples.shape[1], **f}
-                )
-            yield pd.DataFrame(rows, columns=cols)
+    def body(cid, data, fmt):
+        if fmt != "wav":
+            raise NotImplementedError(
+                f"audio_features: {fmt!r} needs a codec library not "
+                "present here (only RIFF/PCM wav is real)"
+            )
+        samples, rate = _audio.decode_wav(bytes(data))
+        f = _audio.clip_features(samples, rate)
+        return (cid, rate, samples.shape[1], f["duration_s"], f["rms"], f["peak"], f["zcr"])
 
-    return clips.select("image_id", "bytes", "fmt").mapInPandas(
-        gen, schema=AUDIO_FEATURES_SCHEMA
-    )
+    return row_map(clips, ("image_id", "bytes", "fmt"), AUDIO_FEATURES_SCHEMA, body)
 
 
 FRAMES_SCHEMA = T.StructType(
@@ -354,46 +241,48 @@ def frame_sample(videos: DataFrame, every: int = 2, frame_bytes: int | None = No
     of `frame_bytes` each (w*h*2 if not given); emit every k-th frame.
     A real container demuxer would slot into the same UDF."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for img, data, w, h in zip(pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"]):
-                fb = frame_bytes or int(w) * int(h) * 2
-                n = len(data) // fb
-                for t in range(0, n, every):
-                    out.append({"image_id": img, "frame_idx": t, "frame": data[t * fb : (t + 1) * fb]})
-            yield pd.DataFrame(out, columns=[f.name for f in FRAMES_SCHEMA.fields])
+    def body(img, data, w, h):
+        fb = frame_bytes or int(w) * int(h) * 2
+        return [(img, t, data[t * fb : (t + 1) * fb]) for t in range(0, len(data) // fb, every)]
 
-    return videos.select("image_id", "bytes", "w", "h").mapInPandas(gen, schema=FRAMES_SCHEMA)
+    return row_map(videos, ("image_id", "bytes", "w", "h"), FRAMES_SCHEMA, body)
+
+
+def _mjpeg_frames(data: bytes, fmt: str) -> list[bytes]:
+    """The encoded MJPEG frames of one real container payload — the one
+    demux: AVI (kernels.avi RIFF walk) or ISO-BMFF mp4 (kernels.mp4
+    box-tree demux + sample tables). An mp4 track in a codec that is not
+    JPEG (avc1/h264) raises with its codec named."""
+    if fmt == "avi-mjpeg":
+        from ..kernels.avi import demux_avi
+
+        return demux_avi(data)["frames"]
+    if fmt == "mp4":
+        from ..kernels.mp4 import demux_mp4
+
+        info = demux_mp4(data)
+        if info["codec"] not in ("jpeg", "mjpa", "mjpb"):
+            raise NotImplementedError(
+                f"mp4 codec {info['codec']!r} has no stdlib-feasible pixel decoder"
+            )
+        return info["frames"]
+    raise NotImplementedError(
+        f"{fmt!r} is not a real video format here (only AVI and mp4 MJPEG are)"
+    )
 
 
 def video_frames(videos: DataFrame, every: int = 1) -> DataFrame:
-    """REAL container demux: AVI (kernels.avi RIFF walk) -> every k-th
-    encoded MJPEG frame payload, same output schema as frame_sample.
-    One clip stays one task-local unit — at 10^12 clips the op is
-    embarrassingly parallel and the exploded frame rows inherit the
-    clip partitioning (no shuffle)."""
+    """REAL container demux: AVI or mp4 (``_mjpeg_frames``) -> every
+    k-th encoded MJPEG frame payload, same output schema as
+    frame_sample. One clip stays one task-local unit — at 10^12 clips
+    the op is embarrassingly parallel and the exploded frame rows
+    inherit the clip partitioning (no shuffle)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import avi as _avi
+    def body(img, data, fmt):
+        frames = _mjpeg_frames(bytes(data), fmt)
+        return [(img, t, frames[t]) for t in range(0, len(frames), every)]
 
-        for pdf in batches:
-            out = []
-            for img, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                if fmt != "avi-mjpeg":
-                    raise NotImplementedError(
-                        f"video_frames: {fmt!r} needs a codec library not "
-                        "present here (only RIFF/AVI MJPEG is real)"
-                    )
-                info = _avi.demux_avi(bytes(data))
-                for t in range(0, len(info["frames"]), every):
-                    out.append({"image_id": img, "frame_idx": t,
-                                "frame": info["frames"][t]})
-            yield pd.DataFrame(out, columns=[f.name for f in FRAMES_SCHEMA.fields])
-
-    return videos.select("image_id", "bytes", "fmt").mapInPandas(
-        gen, schema=FRAMES_SCHEMA
-    )
+    return row_map(videos, ("image_id", "bytes", "fmt"), FRAMES_SCHEMA, body)
 
 
 VIDEO_STATS_SCHEMA = T.StructType(
@@ -407,8 +296,8 @@ VIDEO_STATS_SCHEMA = T.StructType(
 
 
 def video_frame_features(videos: DataFrame, every: int = 1) -> DataFrame:
-    """Full real video path: AVI demux -> per-frame baseline-JPEG decode
-    (kernels.jpeg) -> luma statistics.
+    """Full real video path: AVI or mp4 demux (``_mjpeg_frames``) ->
+    per-frame baseline-JPEG decode (kernels.jpeg) -> luma statistics.
 
     r5: the stats are FIXED-POINT-derived (the BM25 pattern): per-pixel
     lumaq = 299R + 587G + 114B is an exact int64, summed exactly, so
@@ -417,52 +306,21 @@ def video_frame_features(videos: DataFrame, every: int = 1) -> DataFrame:
     (video_frame_sums) with the identical double expression — no
     twin-reads-result-back. mean = sum_q/1000/n; var = sumsq_q/1e6/n -
     mean^2 (clamped at 0); both rounded to 6."""
+    from ..kernels import jpeg as _jpeg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import avi as _avi
-        from ..kernels import jpeg as _jpeg
-        from ..kernels import mp4 as _mp4
+    def stats(img, t, frame):
+        px = _jpeg.decode_jpeg(frame).astype(np.int64)
+        if px.ndim == 2:  # grayscale MJPEG frame
+            lumaq = 1000 * px
+        else:
+            lumaq = 299 * px[:, :, 0] + 587 * px[:, :, 1] + 114 * px[:, :, 2]
+        n = lumaq.size
+        mean_raw = int(lumaq.sum()) / 1000.0 / n
+        var = int((lumaq * lumaq).sum()) / 1000000.0 / n - mean_raw * mean_raw
+        return img, t, round(mean_raw, 6), round(math.sqrt(var if var > 0 else 0.0), 6)
 
-        cols = [f.name for f in VIDEO_STATS_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for img, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                if fmt == "avi-mjpeg":
-                    info = _avi.demux_avi(bytes(data))
-                elif fmt == "mp4":
-                    # real ISO-BMFF demux (r4); only the JPEG codec is
-                    # pixel-decodable — an avc1/h264 track raises here,
-                    # honestly, with its codec named
-                    info = _mp4.demux_mp4(bytes(data))
-                    if info["codec"] not in ("jpeg", "mjpa", "mjpb"):
-                        raise NotImplementedError(
-                            f"video_frame_features: mp4 codec {info['codec']!r}"
-                            " has no stdlib-feasible pixel decoder"
-                        )
-                else:
-                    raise NotImplementedError(
-                        f"video_frame_features: {fmt!r} is not a real format here"
-                    )
-                for t in range(0, len(info["frames"]), every):
-                    px = _jpeg.decode_jpeg(info["frames"][t]).astype(np.int64)
-                    if px.ndim == 2:  # grayscale MJPEG frame
-                        lumaq = 1000 * px
-                    else:
-                        lumaq = (299 * px[:, :, 0] + 587 * px[:, :, 1]
-                                 + 114 * px[:, :, 2])
-                    n = lumaq.size
-                    sum_q = int(lumaq.sum())
-                    sumsq_q = int((lumaq * lumaq).sum())
-                    mean_raw = sum_q / 1000.0 / n
-                    var = sumsq_q / 1000000.0 / n - mean_raw * mean_raw
-                    std = math.sqrt(var if var > 0 else 0.0)
-                    rows.append(
-                        {"image_id": img, "frame_idx": t,
-                         "mean_luma": round(mean_raw, 6),
-                         "std_luma": round(std, 6)}
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def body(img, data, fmt):
+        frames = _mjpeg_frames(bytes(data), fmt)
+        return [stats(img, t, frames[t]) for t in range(0, len(frames), every)]
 
-    return videos.select("image_id", "bytes", "fmt").mapInPandas(
-        gen, schema=VIDEO_STATS_SCHEMA
-    )
+    return row_map(videos, ("image_id", "bytes", "fmt"), VIDEO_STATS_SCHEMA, body)

@@ -1,19 +1,22 @@
-"""The per-tile raster map and the scalar tile-id parse.
+"""The per-row payload map, the per-tile raster map on top of it, and
+the scalar tile-id parse.
 
 The reference is a per-tile program: it reads one HGT tile, computes
 on it and writes its outputs, with no state shared between tiles
-(Program.cs:93-113). Every tile-local operator keeps that shape —
-decode each tile of an Arrow batch, run a grid kernel, emit that
-tile's rows — and only the kernel differs, so the loop around the
-kernels is written once, here: an operator is a ``body`` for
-``tile_map``.
+(Program.cs:93-113). Every payload operator keeps that shape — take
+each row of an Arrow batch, run a kernel on its payload, emit that
+row's output rows — and only the kernel differs, so the loop around
+the kernels is written once, here: ``row_map`` is the one Python-UDF
+boundary of the scan, crop, image, audio and video operators, and
+``tile_map`` is ``row_map`` over the five tile columns with the tile
+decoded to its grid, for every tile-local raster operator.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, types as T
 
 from ..kernels import codecs
 
@@ -34,25 +37,45 @@ def cell_columns(grid: np.ndarray) -> dict:
             "value": grid.ravel().astype(np.int32)}
 
 
-def tile_map(tiles: DataFrame, schema, body) -> DataFrame:
-    """tiles (input_hint schema) -> `schema` rows in ONE narrow Arrow
-    pass, no Exchange. ``body(image_id, grid)`` returns one decoded
-    tile's rows as a column dict or a frame, or None for none. A
-    batch's non-empty parts are concatenated; a batch with no rows
-    yields no frame."""
+#: the input_hint columns a tile decodes from
+TILE_COLS = ("image_id", "bytes", "w", "h", "fmt")
+
+
+def row_map(df: DataFrame, cols, schema, body) -> DataFrame:
+    """df -> `schema` rows in ONE narrow Arrow pass, no Exchange.
+    ``body(*values)`` gets one input row's `cols` values and returns
+    its output rows: a tuple (one record in `schema` order), a list of
+    them, a column dict or a frame, or None for none. A batch's records
+    become one frame, after its non-empty dicts and frames; a batch
+    with no rows yields no frame."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.fieldNames()
 
     def gen(batches):
         for pdf in batches:
-            parts = []
-            for img, grid in codecs.iter_decoded_tiles(pdf):
-                rows = body(img, grid)
-                if rows is not None:
+            parts, records = [], []
+            for values in zip(*(pdf[c] for c in cols)):
+                rows = body(*values)
+                if isinstance(rows, tuple):
+                    records.append(rows)
+                elif isinstance(rows, list):
+                    records += rows
+                elif rows is not None:
                     rows = pd.DataFrame(rows) if isinstance(rows, dict) else rows
                     if len(rows):
                         parts.append(rows)
+            if records:
+                parts.append(pd.DataFrame.from_records(records, columns=names))
             if parts:
-                yield pd.concat(parts, ignore_index=True)
+                yield parts[0] if len(parts) == 1 else pd.concat(parts, ignore_index=True)
 
-    return tiles.select("image_id", "bytes", "w", "h", "fmt").mapInPandas(
-        gen, schema=schema
-    )
+    return df.select(*cols).mapInPandas(gen, schema=schema)
+
+
+def tile_map(tiles: DataFrame, schema, body) -> DataFrame:
+    """tiles (input_hint schema) -> `schema` rows: ``row_map`` over
+    the five tile columns with ``body(image_id, grid)`` called on each
+    decoded tile; it returns what a ``row_map`` body does."""
+    return row_map(tiles, TILE_COLS, schema, lambda img, data, w, h, fmt: body(
+        img, codecs.decode(bytes(data), fmt, int(w), int(h))))

@@ -15,12 +15,13 @@ columns (no null-padded union, no per-row tuples);
 ``write_tile_files_distributed`` is one ``mapInPandas`` that encodes,
 gzips and lands each ``cl<id>.osm.gz`` through rasters' write-temp +
 rename, so the XML text goes back into Python once (into the writer)
-and the gzip payload never leaves it. All OSM ``.gz`` writers share
-``_gz``: zlib's default level 6, not GzipFile's default 9 (on 32
-synthetic 201x201 tiles, 17.6 MB of XML, level 6 takes 0.37 s of CPU
-against 1.92 s and writes 3.4% more bytes: 2,076,228 against
-2,008,584), mtime=0 and no file name in the header, so the file bytes
-are a function of the XML alone.
+and the gzip payload never leaves it. Both OSM ``.gz`` writers, that
+one and ``write_merged_distributed(gz=True)``, share ``_gz``: zlib's
+default level 6, not GzipFile's default 9 (on 32 synthetic 201x201
+tiles, 17.6 MB of XML, level 6 takes 0.37 s of CPU against 1.92 s and
+writes 3.4% more bytes: 2,076,228 against 2,008,584), mtime=0 and no
+file name in the header, so the file bytes are a function of the XML
+alone.
 
 Merge semantics (Program.cs:267-363, merge_gz2bzip2.pl): union of the
 per-tile node sections then way sections, with a global <bounds> from
@@ -73,14 +74,6 @@ def _gz(f) -> gzip.GzipFile:
     return gzip.GzipFile(filename="", mode="wb", fileobj=f, compresslevel=6, mtime=0)
 
 
-def _dump(xml: str, f, gz: bool) -> None:
-    if gz:
-        with _gz(f) as g:
-            g.write(xml.encode())
-    else:
-        f.write(xml.encode())
-
-
 def tile_xml(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     """One XML document per tile: (image_id, xml). Nodes sorted by
     (level, poly_ord, node_id), then ways by (level, poly_ord, way_id)."""
@@ -108,34 +101,20 @@ def tile_xml(nodes: DataFrame, ways: DataFrame) -> DataFrame:
     )
 
 
-def write_tile_files_distributed(xml_df: DataFrame, out_dir: str, gz: bool = True) -> int:
-    """S5 scale path: per-tile OSM files written executor-side, encoded
-    and gzipped in the writer's own ``mapInPandas`` (see
+def write_tile_files_distributed(xml_df: DataFrame, out_dir: str) -> int:
+    """S5 scale path: one gzipped ``cl<image_id>.osm.gz`` per tile
+    (naming: ContourProcessor2.cs:1410-1414), written executor-side:
+    encoded and gzipped in the writer's own ``mapInPandas`` (see
     rasters.write_artifacts_distributed); returns the file count."""
     from .rasters import write_artifacts_distributed
 
-    suffix = ".osm.gz" if gz else ".osm"
+    def dump(xml: str, f) -> None:
+        with _gz(f) as g:
+            g.write(xml.encode())
+
     files = xml_df.select(
-        F.concat(F.lit("cl"), F.col("image_id"), F.lit(suffix)).alias("filename"), "xml")
-    return write_artifacts_distributed(
-        files, out_dir, payload_col="xml", dump=lambda xml, f: _dump(xml, f, gz))
-
-
-def write_tile_files(xml_df: DataFrame, out_dir: str, gz: bool = True) -> list[str]:
-    """Materialize one `cl{N|S}{lat}{E|W}{lon}_{k}.osm[.gz]` per tile
-    (naming: ContourProcessor2.cs:1410-1414). Small-result collect —
-    golden-test helper; the scale path is write_tile_files_distributed
-    (same bytes)."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    paths = []
-    for row in xml_df.collect():
-        path = os.path.join(out_dir, f"cl{row['image_id']}.osm" + (".gz" if gz else ""))
-        with open(path, "wb") as f:
-            _dump(row["xml"], f, gz)
-        paths.append(path)
-    return paths
+        F.concat(F.lit("cl"), F.col("image_id"), F.lit(".osm.gz")).alias("filename"), "xml")
+    return write_artifacts_distributed(files, out_dir, payload_col="xml", dump=dump)
 
 
 def _node_lines(nodes: DataFrame) -> DataFrame:

@@ -158,22 +158,6 @@ def tsv_dump(tiles: DataFrame) -> DataFrame:
         img, [(f"{img}.tsv", tsv_text(grid).encode())]))
 
 
-def write_artifacts(df: DataFrame, out_dir: str) -> int:
-    """Materialize sink rows as files; returns file count.
-
-    NOTE: driver-side collect — golden-test helper only. The scale path
-    is ``write_artifacts_distributed`` (same files, executor-side)."""
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    n = 0
-    for row in df.collect():
-        with open(os.path.join(out_dir, row["filename"]), "wb") as f:
-            f.write(row["payload"])
-        n += 1
-    return n
-
-
 def _write_bytes(payload, f) -> None:
     f.write(bytes(payload))
 
@@ -190,12 +174,12 @@ def write_artifacts_distributed(
     bytes (artifact content is a deterministic function of its name
     here, as in the reference's per-tile outputs). On a cluster
     ``out_dir`` is the shared filesystem / object-store mount; at
-    10^12 tiles this is the only shape that works — the collect-based
-    helper is a driver OOM. ``dump(payload, f)`` writes one payload to
-    the open temp file (default: its raw bytes); a sink that encodes on
-    the way out passes its own, so the encoded bytes never cross the
-    Python boundary (the OSM tiles gzip their XML here). Returns the
-    number of files written."""
+    10^12 tiles this is the only shape that works — a driver-side
+    collect of the payloads is a driver OOM. ``dump(payload, f)``
+    writes one payload to the open temp file (default: its raw bytes);
+    a sink that encodes on the way out passes its own, so the encoded
+    bytes never cross the Python boundary (the OSM tiles gzip their XML
+    here). Returns the number of files written."""
     import os
 
     from pyspark.sql import functions as F

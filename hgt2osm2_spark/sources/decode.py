@@ -2,8 +2,8 @@
 
 The reference scans one HGT file at a time accumulating min/max/invalid
 (/root/reference/HGTReader.cs:111-166). Here the whole stage is a
-mapInArrow pass over the tiles table: bytes -> grid -> stats + phash
-recheck, never shipping a per-row Python object through the plan.
+narrow Arrow pass over the tiles table (ops/tiles.row_map): bytes ->
+grid -> stats + phash recheck, one output record per tile.
 
 The decoded grid intentionally does NOT leave the UDF as a column by
 default — downstream kernels re-decode inside their own Arrow batch
@@ -16,13 +16,12 @@ payload away immediately (column pruning: select early, HGTReader's
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernels import codecs
+from ..ops.tiles import TILE_COLS, row_map
 
 STATS_SCHEMA = T.StructType(
     [
@@ -40,6 +39,16 @@ STATS_SCHEMA = T.StructType(
 )
 
 
+def _grid_stats(grid: np.ndarray) -> tuple:
+    """(minimum, maximum, not_valid) over the valid samples; the
+    extremes are None for an all-NoValue grid."""
+    valid = grid != codecs.NOVALUE
+    vals = grid[valid]
+    if not vals.size:
+        return None, None, int(grid.size)
+    return int(vals.min()), int(vals.max()), int(grid.size - vals.size)
+
+
 def decode_stats(tiles: DataFrame) -> DataFrame:
     """Per-tile scan stats (A1) + phash integrity check.
 
@@ -47,39 +56,16 @@ def decode_stats(tiles: DataFrame) -> DataFrame:
     the decoded grid vs. the re-encoded round trip (a self-check that
     the lossy path stays >= 40 dB without needing the original)."""
 
-    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            d = batch.to_pydict()
-            out = {k: [] for k in
-                   ("image_id", "w", "h", "fmt", "caption", "minimum",
-                    "maximum", "not_valid", "phash_ok", "psnr_db")}
-            for img, data, w, h, fmt, cap, ph in zip(
-                d["image_id"], d["bytes"], d["w"], d["h"], d["fmt"], d["caption"], d["phash"]
-            ):
-                grid = codecs.decode(data, fmt, w, h)
-                valid = grid != codecs.NOVALUE
-                out["image_id"].append(img)
-                out["w"].append(w)
-                out["h"].append(h)
-                out["fmt"].append(fmt)
-                out["caption"].append(cap)
-                out["minimum"].append(int(grid[valid].min()) if valid.any() else None)
-                out["maximum"].append(int(grid[valid].max()) if valid.any() else None)
-                out["not_valid"].append(int((~valid).sum()))
-                out["phash_ok"].append(codecs.phash64(grid) == ph)
-                if fmt == "jpg":
-                    rt = codecs.decode(codecs.encode(grid, "jpg"), "jpg", w, h)
-                    out["psnr_db"].append(float(codecs.psnr(grid, rt)))
-                else:
-                    out["psnr_db"].append(None)
-            yield pa.RecordBatch.from_pydict(out, schema=pa.schema(
-                [pa.field(f.name, pa.from_numpy_dtype(np.int32) if f.dataType == T.IntegerType()
-                  else pa.int64() if f.dataType == T.LongType()
-                  else pa.bool_() if f.dataType == T.BooleanType()
-                  else pa.float64() if f.dataType == T.DoubleType()
-                  else pa.string(), f.nullable) for f in STATS_SCHEMA.fields]))
+    def body(img, data, w, h, fmt, cap, ph):
+        grid = codecs.decode(bytes(data), fmt, int(w), int(h))
+        psnr = None
+        if fmt == "jpg":
+            rt = codecs.decode(codecs.encode(grid, "jpg"), "jpg", int(w), int(h))
+            psnr = float(codecs.psnr(grid, rt))
+        return (img, w, h, fmt, cap, *_grid_stats(grid),
+                codecs.phash64(grid) == ph, psnr)
 
-    return tiles.mapInArrow(scan, schema=STATS_SCHEMA)
+    return row_map(tiles, (*TILE_COLS, "caption", "phash"), STATS_SCHEMA, body)
 
 
 QUARANTINE_SCHEMA = T.StructType(
@@ -100,28 +86,15 @@ def decode_stats_quarantined(tiles: DataFrame) -> DataFrame:
     10^12 rows a handful of bad files must never kill the job; the
     quarantined ids feed a retry/repair table (same pattern as the
     checkpoint lineage)."""
-    import pandas as pd
 
-    def scan(batches):
-        for pdf in batches:
-            rows = []
-            for img, data, w, h, fmt in zip(
-                pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-            ):
-                try:
-                    grid = codecs.decode(bytes(data), fmt, int(w), int(h))
-                    valid = grid != codecs.NOVALUE
-                    rows.append(
-                        (img, True, None,
-                         int(grid[valid].min()) if valid.any() else None,
-                         int(grid[valid].max()) if valid.any() else None,
-                         int((~valid).sum()))
-                    )
-                except Exception as ex:  # noqa: BLE001 — quarantine, don't die
-                    rows.append((img, False, type(ex).__name__, None, None, None))
-            yield pd.DataFrame(rows, columns=[f.name for f in QUARANTINE_SCHEMA.fields])
+    def body(img, data, w, h, fmt):
+        try:
+            stats = _grid_stats(codecs.decode(bytes(data), fmt, int(w), int(h)))
+        except Exception as ex:  # noqa: BLE001 — quarantine, don't die
+            return img, False, type(ex).__name__, None, None, None
+        return img, True, None, *stats
 
-    return tiles.mapInPandas(scan, schema=QUARANTINE_SCHEMA)
+    return row_map(tiles, TILE_COLS, QUARANTINE_SCHEMA, body)
 
 
 # ----------------------------------------------------------- S2/S4 dir scan
@@ -141,8 +114,6 @@ def scan_hgt_dir(tiles_spark, path: str) -> DataFrame:
     Output fmt stays 'hgt.zip' for zipped tiles — every downstream
     kernel decodes through codecs.decode, which unzips transparently,
     so zipped and raw tiles flow through one pipeline."""
-    import pandas as pd
-
     bf = (
         tiles_spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.[hH][gG][tT]*")
@@ -169,24 +140,15 @@ def scan_hgt_dir(tiles_spark, path: str) -> DataFrame:
         ]
     )
 
-    def finish(batches):
-        for pdf in batches:
-            rows = []
-            for key, fmt, data in zip(pdf["tile_key"], pdf["fmt"], pdf["bytes"]):
-                data = bytes(data)
-                if fmt == "hgt.zip":
-                    grid = codecs.decode(data, fmt, 0, 0, name=key)
-                else:
-                    n = math.isqrt(len(data) // 2)  # HGTReader.cs:150
-                    grid = codecs.decode_hgt(data, n, n)
-                h, w = grid.shape
-                rows.append(
-                    {
-                        "image_id": key.lower(), "bytes": data, "w": w, "h": h,
-                        "fmt": fmt, "caption": f"hgt scan {key.lower()}",
-                        "phash": codecs.phash64(grid),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+    def finish(key, fmt, data):
+        data = bytes(data)
+        if fmt == "hgt.zip":
+            grid = codecs.decode(data, fmt, 0, 0, name=key)
+        else:
+            n = math.isqrt(len(data) // 2)  # HGTReader.cs:150
+            grid = codecs.decode_hgt(data, n, n)
+        h, w = grid.shape
+        return (key.lower(), data, w, h, fmt, f"hgt scan {key.lower()}",
+                codecs.phash64(grid))
 
-    return bf.mapInPandas(finish, schema=out_schema)
+    return row_map(bf, ("tile_key", "fmt", "bytes"), out_schema, finish)

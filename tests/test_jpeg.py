@@ -143,3 +143,20 @@ public class D { public static void main(String[] a) throws Exception {
                            check=True, cwd=td)
             got = np.frombuffer(open(rf, "rb").read(), np.uint8).reshape(img.shape)
             assert jpeg.psnr(img, got) >= 40.0
+
+
+def test_gray_jpeg_grid_is_its_plane():
+    """codecs.decode_rgb8 stacks a grayscale JPEG's plane to 3 channels
+    and codecs.decode takes the luma of that: the grid equals the plane
+    itself, since the BT.601 luma of (g, g, g) rounds back to g for all
+    256 values."""
+    g = np.arange(256, dtype=np.uint8)
+    assert np.array_equal(codecs.rgb_to_gray_i16(np.stack([g, g, g], axis=1)[None]),
+                          g[None].astype(np.int16))
+    img = np.tile(np.arange(256, dtype=np.uint8), (16, 1))
+    img[8:] = img[8:, ::-1]
+    data = jpeg.encode_jpeg_gray8(img, quality=90)
+    plane = jpeg.decode_jpeg(data)
+    assert plane.ndim == 2
+    assert np.array_equal(codecs.decode_rgb8(data, "jpeg"), np.stack([plane] * 3, axis=2))
+    assert np.array_equal(codecs.decode(data, "jpeg", 256, 16), plane.astype(np.int16))

@@ -104,3 +104,26 @@ def test_mp4_rows_flow_through_video_features(spark):
     ).collect()
     assert len(out) == 8
     assert all(0.0 <= r["mean_luma"] <= 255.0 for r in out)
+
+
+def test_video_frames_demuxes_mp4(spark):
+    """video_frames and video_frame_features share one container demux:
+    an MJPEG mp4 gives demux_mp4's frames, an avc1 one raises with its
+    codec named."""
+    import pandas as pd
+
+    from hgt2osm2_spark.ops import multimodal
+
+    frames, size = _clip(5)
+    data = mp4.mux_mp4_mjpeg(frames, size, size)
+    df = spark.createDataFrame(pd.DataFrame(
+        [{"image_id": "clip", "bytes": data, "fmt": "mp4"}]))
+    got = multimodal.video_frames(df, every=2).orderBy("frame_idx").collect()
+    assert [r["frame_idx"] for r in got] == [0, 2, 4]
+    assert [bytes(r["frame"]) for r in got] == mp4.demux_mp4(data)["frames"][::2]
+
+    h264 = spark.createDataFrame(pd.DataFrame(
+        [{"image_id": "h264clip", "bytes": data.replace(b"jpeg", b"avc1", 1), "fmt": "mp4"}]))
+    with pytest.raises(Exception) as ei:
+        multimodal.video_frames(h264).collect()
+    assert "avc1" in str(ei.value)

@@ -127,16 +127,20 @@ def test_decode_stats(small_result, spark):
 
 
 def test_xml_sink(small_result, spark, tmp_path):
-    from hgt2osm2_spark.sinks.osm_xml import tile_xml, write_tile_files
+    import gzip
+    import os
+
+    from hgt2osm2_spark.sinks.osm_xml import tile_xml, write_tile_files_distributed
 
     _, res, rows = small_result
     xdf = tile_xml(res.nodes, res.ways)
-    paths = write_tile_files(xdf, str(tmp_path), gz=True)
-    assert len(paths) == len([r for r in rows])
-    import gzip
-
-    with gzip.open(paths[0]) as f:
-        text = f.read().decode()
+    want = {f"cl{r['image_id']}.osm.gz": r["xml"] for r in xdf.collect()}
+    assert write_tile_files_distributed(xdf, str(tmp_path)) == len(want) == len(rows)
+    assert sorted(os.listdir(tmp_path)) == sorted(want)
+    for name, xml in want.items():
+        with gzip.open(tmp_path / name) as f:
+            text = f.read().decode()
+        assert text == xml
     assert text.startswith("<?xml") and text.rstrip().endswith("</osm>")
     assert "<node id='" in text and "<tag k='contour' v='elevation'/>" in text
 

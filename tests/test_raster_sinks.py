@@ -78,30 +78,29 @@ def test_sink_dataframes(spark):
 
 
 def test_distributed_artifact_writer_matches_collect(spark, tmp_path):
-    """Executor-side artifact writer produces the same file set and
-    bytes as the collect-based golden helper (the OSM .gz files are
-    pinned by test_osm_tile_sink_plan_and_files)."""
+    """The executor-side artifact writer lands exactly the collected
+    (filename, payload) rows as files (the OSM .gz files are pinned by
+    test_osm_tile_sink_plan_and_files)."""
     import os
 
     tiles = tiles_df(spark, n_tiles=3, size=17, seed=4)
 
     art = rasters.arcinfo_grid(tiles)
-    a_dir, b_dir = str(tmp_path / "collect"), str(tmp_path / "dist")
-    n_a = rasters.write_artifacts(art, a_dir)
-    n_b = rasters.write_artifacts_distributed(art, b_dir)
-    assert n_a == n_b == 3
-    assert sorted(os.listdir(a_dir)) == sorted(os.listdir(b_dir))
-    for name in os.listdir(a_dir):
-        assert open(f"{a_dir}/{name}", "rb").read() == open(f"{b_dir}/{name}", "rb").read()
+    want = {r["filename"]: bytes(r["payload"]) for r in art.collect()}
+    out = str(tmp_path / "dist")
+    assert rasters.write_artifacts_distributed(art, out) == len(want) == 3
+    assert sorted(os.listdir(out)) == sorted(want)
+    for name, payload in want.items():
+        assert open(f"{out}/{name}", "rb").read() == payload
 
 
 def test_osm_tile_sink_plan_and_files(spark, tmp_path, monkeypatch):
     """The per-tile OSM sink is two Python operators: the nodes/ways
     cogroup that formats each tile, then ONE mapInPandas that encodes,
     gzips and lands each file. No Arrow UDF sits between them and no
-    null-padded union feeds the formatter. Two writes and the collect
-    helper give the same bytes, leave no temp file, and each file is its
-    tile's XML, gzipped at level 6 with mtime=0 and no file name."""
+    null-padded union feeds the formatter. Two writes give the same
+    bytes, leave no temp file, and each file is its collected tile's
+    XML, gzipped at level 6 with mtime=0 and no file name."""
     import os
     import re
 
@@ -140,10 +139,8 @@ def test_osm_tile_sink_plan_and_files(spark, tmp_path, monkeypatch):
         assert "ArrowEvalPython" not in plan and not re.search(r"\bUnion\b", plan), plan
 
     assert counts == [len(want)] * 2 == [3] * 2
-    dirs.append(str(tmp_path / "collect"))  # the golden helper writes the same bytes
-    osm_xml.write_tile_files(xml, dirs[-1])
-    a, b, c = (sorted(os.listdir(d)) for d in dirs)
-    assert a == b == c == sorted(want)
+    a, b = (sorted(os.listdir(d)) for d in dirs)
+    assert a == b == sorted(want)
     for name, text in want.items():
         data = open(f"{dirs[0]}/{name}", "rb").read()
         assert all(open(f"{d}/{name}", "rb").read() == data for d in dirs[1:])

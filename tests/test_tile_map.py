@@ -1,18 +1,24 @@
-"""The per-tile map (ops/tiles.tile_map) under every operator that runs
-on it: a batch whose tiles emit no rows yields nothing and still
-collects with the declared columns, and a batch mixing such tiles with
-a real one gives exactly the rows of each tile run alone."""
+"""The per-row payload map (ops/tiles.row_map) and the per-tile map on
+it (tile_map) under every operator over the five tile columns: a batch
+whose tiles emit no rows yields nothing and still collects with the
+declared columns, and a batch mixing such tiles with a real one gives
+exactly the rows of each tile run alone. The payload operators run on
+no other Python row loop."""
 
+import ast
+import pathlib
 from collections import Counter
 
 import numpy as np
 import pytest
 
 from hgt2osm2_spark.kernels import codecs
-from hgt2osm2_spark.ops import contours, decorations, mosaic, pyramid, terrain, zonal
+from hgt2osm2_spark.ops import (
+    contours, decorations, mosaic, multimodal, pyramid, terrain, zonal,
+)
 from hgt2osm2_spark.ops.tiles import parse_tile_id
 from hgt2osm2_spark.sinks import rasters
-from hgt2osm2_spark.sources import synthetic
+from hgt2osm2_spark.sources import decode, synthetic
 
 TILE_DDL = "image_id string, bytes binary, w int, h int, fmt string"
 
@@ -43,6 +49,9 @@ OPS = {
     "show_points": lambda t: decorations.show_points(t, 40.0, 0.0, 0.5, 0.5),
     "show_areas_nodes": lambda t: decorations.show_areas(t, 40.0, 0.0, 0.3, 0.3)[0],
     "show_areas_ways": lambda t: decorations.show_areas(t, 40.0, 0.0, 0.3, 0.3)[1],
+    "decode_features": multimodal.decode_features,
+    "resize_tiles": multimodal.resize_tiles,
+    "decode_stats_quarantined": decode.decode_stats_quarantined,
 }
 
 #: operators that emit a row for every tile (cells, strips, bands,
@@ -50,7 +59,8 @@ OPS = {
 EMIT_PER_TILE = {
     "explode_cells", "pyramid_cells", "cells_geo", "halo_strips",
     "split_tile_bands", "arcinfo_grid", "geo_png", "tsv_dump",
-    "fill_sinks", "viewshed",
+    "fill_sinks", "viewshed", "decode_features", "resize_tiles",
+    "decode_stats_quarantined",
 }
 
 
@@ -109,3 +119,20 @@ def test_parse_tile_id():
     assert parse_tile_id("s05w120_3") == (-5, -120, "3")
     assert parse_tile_id("N12E034") == (12, 34, "0")
     assert mosaic.parse_tile_id is parse_tile_id
+
+
+def _map_calls(module: str) -> int:
+    """mapInPandas/mapInArrow calls in one package module."""
+    path = pathlib.Path(__file__).parent.parent / "hgt2osm2_spark" / module
+    return sum(isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+               and n.func.attr in ("mapInPandas", "mapInArrow")
+               for n in ast.walk(ast.parse(path.read_text())))
+
+
+def test_payload_operators_share_one_row_loop():
+    """The scan, crop, image, audio and video operators are bodies for
+    row_map/tile_map: their modules hold no row loop of their own, and
+    ops/tiles.py holds the one."""
+    for module in ("ops/multimodal.py", "ops/crop.py", "sources/decode.py"):
+        assert _map_calls(module) == 0, module
+    assert _map_calls("ops/tiles.py") == 1
