@@ -1279,8 +1279,8 @@ def q_mosaic_routed_flow(spark, sf_dir):
     accumulation, all seam-correct — the capstone composition of the
     hydrology tier. Three perimeter-sized halo exchanges: the
     mosaic_fill W single solve, a flat-distance (q-strip) iteration whose
-    min-plus relaxation converges monotonically from +inf to the
-    global BFS fixpoint, and the unchanged drainage decomposition on
+    per-tile seeded BFS (terrain.flat_route) converges monotonically
+    from +inf to the global BFS fixpoint, and the unchanged drainage decomposition on
     the ROUTED graph (flat edges are functional like strict edges; a
     best ring target is a cross-seam exit edge). Bit-equal to
     routed_flow_grid(fill_grid(assembled mosaic)) incl. L-shaped

@@ -344,17 +344,6 @@ def decode(data: bytes, fmt: str, w: int, h: int, name: str | None = None) -> np
     raise NotImplementedError(f"unknown tile format {fmt!r}")
 
 
-def iter_decoded_tiles(pdf):
-    """Yield (image_id, grid) for each tile row of an Arrow batch
-    DataFrame carrying the input_hint columns — the mosaic cogroup's
-    tile side (ops/tiles.tile_map decodes each row the same way);
-    bytes() normalizes bytearray/memoryview payloads."""
-    for img, data, w, h, fmt in zip(
-        pdf["image_id"], pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"]
-    ):
-        yield img, decode(bytes(data), fmt, int(w), int(h))
-
-
 def encode(grid: np.ndarray, fmt: str, name: str = "tile") -> bytes:
     if fmt == "hgt":
         return encode_hgt(grid)

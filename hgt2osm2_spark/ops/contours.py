@@ -573,18 +573,16 @@ def auto_stitch_polylines(
     """Metric-driven stitch dispatch (the §4.2 wiring): measure the
     per-(image_id, level) segment histogram — or consume a PREVIOUS
     run's checkpoint-lineage counts — plan a salt count with
-    ops.skew.plan_salt_count, and stitch plain (salt 1: bit-faithful
+    ops.skew.planned_salt, and stitch plain (salt 1: bit-faithful
     reference order, the parity path) or banded (hot groups spread over
     ~n_salt row bands, canonical order). Returns (polylines, n_salt) so
     callers and tests can assert which plan ran. The order contract
     changes with the plan, so this is an explicit OPT-IN entry point —
     ID-assignment parity consumers call stitch_polylines directly."""
-    from .skew import plan_salt_count, skew_stats
+    from .skew import planned_salt
 
-    key_counts = counts if counts is not None else (
-        segments.groupBy("image_id", "level").agg(F.count("*").alias("n_rows"))
-    )
-    n_salt = plan_salt_count(skew_stats(key_counts), target_ratio, max_salt)
+    n_salt = planned_salt(segments, ("image_id", "level"), counts,
+                          target_ratio, max_salt)
     if n_salt <= 1:
         return stitch_polylines(segments, shuffle_partitions), 1
     # the row span (band sizing) is only measured once the plan says

@@ -92,10 +92,10 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..cache import scope
 from ..kernels import codecs
-from .terrain import (D8_NEIGHBORS, aspect_octant, d8_grid, d8_step, fill_grid,
-                      fill_seeds, hillshade_grid, horn_grid, kahn_sum,
-                      morph_grid, strahler, sum_by)
-from .tiles import parse_tile_id, tile_map
+from .terrain import (DIST_INF, aspect_octant, d8_grid, d8_step, fill_grid,
+                      fill_seeds, flat_route, hillshade_grid, horn_grid,
+                      kahn_sum, morph_grid, strahler, sum_by)
+from .tiles import decode_tile, parse_tile_id, tile_map
 
 NOVALUE = int(codecs.NOVALUE)
 
@@ -170,7 +170,8 @@ class _Tile:
     def __init__(self, pdf: pd.DataFrame):
         self.img = pdf["image_id"].iloc[0]
         lat, lon, _k = parse_tile_id(self.img)
-        (_, self.grid), = codecs.iter_decoded_tiles(pdf)
+        (data, w, h, fmt), = zip(pdf["bytes"], pdf["w"], pdf["h"], pdf["fmt"])
+        self.grid = decode_tile(data, w, h, fmt)
         self.h, self.w = self.grid.shape
         self.gx0 = cell_gx(lon, 0, self.w)
         self.gy0 = cell_gy(lat, 0, self.h)
@@ -1142,65 +1143,25 @@ def mosaic_fill(tiles: DataFrame) -> DataFrame:
 #: raises rather than stop early; the gate mosaics converge in 2-3)
 MAX_ROUNDS = 64
 
-#: unreachable-flat sentinel for the cross-seam BFS iteration (int64,
-#: far above any real hop count; strips carry it verbatim)
-DIST_INF = np.int64(1) << np.int64(40)
-
-
-def _flat_candidates(dplane, augW, part):
-    """Per D8 neighbor k -> (k, target slices, candidate plane): the
-    neighbor's BFS dist where it is a flat-routing candidate (a
-    participant of EQUAL filled elevation), else DIST_INF."""
-    ha, wa = augW.shape
-    for k, (_c, dx, dy, _card) in enumerate(D8_NEIGHBORS):
-        src = (slice(max(dy, 0), ha + min(dy, 0)), slice(max(dx, 0), wa + min(dx, 0)))
-        tgt = (slice(max(-dy, 0), ha + min(-dy, 0)), slice(max(-dx, 0), wa + min(-dx, 0)))
-        yield k, tgt, np.where(part[src] & (augW[src] == augW[tgt]),
-                               dplane[src], DIST_INF)
-
 
 def _routed_core(grid: np.ndarray, strips: pd.DataFrame):
     """Shared derivation for the mosaic conditioned-drainage passes:
     decode-side core over ONE tile given the solved fill ring
     (n/s/e/w/corner sides carry W) and the current flat-distance ring
-    (q-prefixed sides, absent = +inf).
+    (q-prefixed sides, absent = DIST_INF).
 
-    Returns (augW, univ, d8p, dplane) in AUG coords:
-      augW   the tile's filled surface incl. the ring (fill_grid of
-             the W-ringed aug — the per-tile exact solve),
-      univ   the mosaic-universe mask (valid 3x3 on augW),
-      d8p    D8 codes on augW (0 = flat/pit),
-      dplane BFS hop distance to a draining equal-W cell, seeded by
-             local draining cells (0) and the ring distances, relaxed
-             to the local fixpoint (min-plus rounds; the CROSS-SEAM
-             fixpoint emerges from the outer strip iteration)."""
+    Returns (ys, xs, dist, code), in AUG coords: the mosaic universe
+    (valid 3x3) of augW, the tile's filled surface incl. the ring
+    (fill_grid of the W-ringed aug — the per-tile exact solve), and
+    terrain.flat_route's planes over it, seeded by the ring distances
+    (the CROSS-SEAM fixpoint emerges from the outer strip
+    iteration)."""
     augW = fill_grid(_assemble_aug(grid, strips))
-    ha, wa = augW.shape
     ys, xs, d8, _ = d8_grid(augW)
-    univ = np.zeros((ha, wa), dtype=bool)
-    univ[ys, xs] = True
-    d8p = np.zeros((ha, wa), dtype=np.int32)
-    d8p[ys, xs] = d8
     # ring distances from the q strips; a ring position without one
-    # (round 1, or the mosaic edge) stays +inf
-    rdist = _receive(np.full((ha, wa), DIST_INF, dtype=np.int64), strips, "q")
-    dplane = np.full((ha, wa), DIST_INF, dtype=np.int64)
-    dplane[univ & (d8p > 0)] = 0
-    np.minimum(dplane, rdist, out=dplane)
-    flat = univ & (d8p == 0)
-    # min-plus relaxation to the LOCAL fixpoint: rounds <= local flat
-    # diameter; candidates flow through universe cells and ring cells
-    # of EQUAL filled elevation
-    part = univ | (rdist < DIST_INF)
-    while True:
-        best = np.full((ha, wa), DIST_INF, dtype=np.int64)
-        for _k, tgt, cand in _flat_candidates(dplane, augW, part):
-            np.minimum(best[tgt], cand + 1, out=best[tgt])
-        nd = np.where(flat, np.minimum(dplane, best), dplane)
-        if np.array_equal(nd, dplane):
-            break
-        dplane = nd
-    return augW, univ, d8p, dplane
+    # (round 1, or the mosaic edge) stays DIST_INF
+    rdist = _receive(np.full(augW.shape, DIST_INF, dtype=np.int64), strips, "q")
+    return (ys, xs) + flat_route(augW, ys, xs, d8, rdist)
 
 
 def _routed_arrays(grid: np.ndarray, strips: pd.DataFrame,
@@ -1212,21 +1173,10 @@ def _routed_arrays(grid: np.ndarray, strips: pd.DataFrame,
     code) among universe AND ring cells (a best ring target is a
     cross-seam flat edge, handled by the existing border machinery).
     Acyclic: strict edges drop W, flat edges drop the global BFS dist."""
-    augW, univ, d8p, dplane = _routed_core(grid, strips)
-    ha, wa = augW.shape
-    h, w = ha - 2, wa - 2
-    # routed code for flat universe cells: stacked per-neighbor
-    # planes, first-minimum = smallest ESRI code (np.argmin ties)
-    cand = np.full((8, ha, wa), DIST_INF, dtype=np.int64)
-    for k, tgt, c in _flat_candidates(dplane, augW, univ | (dplane < DIST_INF)):
-        cand[k][tgt] = c
-    bestk = np.argmin(cand, axis=0)
-    routed = univ & (d8p == 0) & (cand.min(axis=0) < DIST_INF)
-    codes = np.array([d[0] for d in D8_NEIGHBORS], dtype=np.int32)
-    code = np.where(routed, codes[bestk], d8p)
+    uy, ux, _dist, code = _routed_core(grid, strips)
+    h, w = grid.shape
     # compact owned universe (row-major), tile coords — the
     # mosaic_tile_arrays contract
-    uy, ux = np.nonzero(univ)
     ys, xs, own = _owned(uy, ux, h, w)
     ys, xs, code = ys[own], xs[own], code[uy[own], ux[own]]
     t_ys, t_xs = d8_step(ys, xs, code)
@@ -1235,10 +1185,10 @@ def _routed_arrays(grid: np.ndarray, strips: pd.DataFrame,
 
 def _dist_strips_pass(t: _Tile, strips: pd.DataFrame) -> pd.DataFrame:
     """Cogroup body for one flat-distance halo round: per-tile BFS
-    relaxation (given the solved W ring + current q-dist ring) ->
-    fresh outgoing q strips (the _edge_strips geometry, q-prefixed)."""
-    dplane = _routed_core(t.grid, strips)[3]
-    return _edge_strips(dplane[1:-1, 1:-1], t.img, "q")
+    (given the solved W ring + current q-dist ring) -> fresh outgoing
+    q strips (the _edge_strips geometry, q-prefixed)."""
+    dist = _routed_core(t.grid, strips)[2]
+    return _edge_strips(dist[1:-1, 1:-1], t.img, "q")
 
 
 def mosaic_routed_flow(tiles: DataFrame) -> DataFrame:
@@ -1254,10 +1204,11 @@ def mosaic_routed_flow(tiles: DataFrame) -> DataFrame:
         task) -> the solved W strips, the boundary condition under
         which every tile reproduces its slice of the mosaic-filled
         surface locally;
-     2. a flat-distance halo iteration (q strips): per-tile min-plus
-        BFS relaxation seeded by local draining cells and the ring
-        distances — monotone decreasing from +inf, so it converges to
-        the global BFS fixpoint in (seam crossings of the longest
+     2. a flat-distance halo iteration (q strips): per tile,
+        terrain.flat_route's BFS (the step routed_flow_grid runs on
+        one tile) seeded by local draining cells and the ring
+        distances — monotone decreasing from DIST_INF, so it converges
+        to the global BFS fixpoint in (seam crossings of the longest
         shortest-flat-path) rounds, at most MAX_ROUNDS;
      3. the drainage spine (border pass -> ONE-task border solve ->
         weighted relabel), running on the ROUTED graph: the border
@@ -1266,10 +1217,10 @@ def mosaic_routed_flow(tiles: DataFrame) -> DataFrame:
         is simply a cross-seam exit edge. Acyclic end to end (strict
         edges drop W, flat edges drop the global BFS dist).
 
-    Cost: every distance round re-decodes, re-fills and re-relaxes
-    every tile and adds a cogroup + checksum job; the routed kernel is
-    the numpy body (no C twin yet). The gate mosaics converge in 2-3
-    rounds."""
+    Cost: every distance round re-decodes, re-fills and re-runs the
+    BFS on every tile and adds a cogroup + checksum job; the BFS is
+    numpy, O(cells) per round (the tile path's C twin takes no ring
+    seeds). The gate mosaics converge in 2-3 rounds."""
     sc = _fresh_scope()
     wstrips = _solved_fill_strips(tiles, sc)
     qconv = _fixpoint(

@@ -167,7 +167,18 @@ RESIZE_SCHEMA = T.StructType(
 def resize_tiles(tiles: DataFrame, factor: int = 2) -> DataFrame:
     """Block-mean downsample by `factor`, re-encoded in the same format.
     NoValue cells poison their block (stay NoValue) — missing data is
-    never averaged into real samples."""
+    never averaged into real samples. Colour images (png-rgb, jpeg,
+    webp) keep their colour: each channel is block-meaned. A gif
+    payload raises a ValueError: the one GIF encoder here
+    (kernels.gif) quantizes to the 216-colour web-safe palette, so the
+    block means would not survive it."""
+    from ..kernels import jpeg as _jpeg, webp as _webp
+
+    rgb_encoders = {
+        "png-rgb": codecs.encode_png_rgb8,
+        "jpeg": lambda px: _jpeg.encode_jpeg_rgb8(px, quality=92),
+        "webp": lambda px: _webp.encode_webp(px, subtract_green=True),
+    }
 
     def blocks(px: np.ndarray, h: int, w: int) -> np.ndarray:
         hh, ww = h // factor, w // factor
@@ -175,16 +186,14 @@ def resize_tiles(tiles: DataFrame, factor: int = 2) -> DataFrame:
 
     def body(img, data, w, h, fmt):
         data, w, h = bytes(data), int(w), int(h)
-        if fmt in ("png-rgb", "jpeg"):
+        if fmt == "gif":
+            raise ValueError(f"resize_tiles: {img!r} has fmt 'gif', whose "
+                             "encoder quantizes to the web-safe palette")
+        if fmt in rgb_encoders:
             b = blocks(codecs.decode_rgb8(data, fmt), h, w).astype(np.float64)
             small8 = np.rint(b.mean(axis=(1, 3))).astype(np.uint8)
-            if fmt == "png-rgb":
-                payload = codecs.encode_png_rgb8(small8)
-            else:
-                from ..kernels import jpeg as _jpeg
-
-                payload = _jpeg.encode_jpeg_rgb8(small8, quality=92)
-            return img, payload, small8.shape[1], small8.shape[0], fmt
+            return (img, rgb_encoders[fmt](small8), small8.shape[1],
+                    small8.shape[0], fmt)
         b = blocks(codecs.decode(data, fmt, w, h), h, w)
         small = np.rint(b.astype(np.float64).mean(axis=(1, 3)))
         small = np.where((b == codecs.NOVALUE).any(axis=(1, 3)), codecs.NOVALUE, small)

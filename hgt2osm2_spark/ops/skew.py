@@ -97,6 +97,18 @@ def plan_salt_count(stats: dict, target_ratio: float = 4.0, max_salt: int = 64) 
     return min(n, max_salt)
 
 
+def planned_salt(df: DataFrame, keys, counts: DataFrame | None = None,
+                 target_ratio: float = 4.0, max_salt: int = 64) -> int:
+    """The auto planners' one salt decision: plan_salt_count over the
+    skew_stats of ``counts`` (per-key n_rows — a previous run's
+    checkpoint-lineage counts) or, by default, of df's own per-`keys`
+    row counts (one cheap count agg, itself skew-tolerant: partial
+    counts merge map-side)."""
+    if counts is None:
+        counts = df.groupBy(*keys).agg(F.count("*").alias("n_rows"))
+    return plan_salt_count(skew_stats(counts), target_ratio, max_salt)
+
+
 def auto_salted_agg(
     df: DataFrame,
     group_cols: list[str],
@@ -110,18 +122,14 @@ def auto_salted_agg(
 ) -> tuple[DataFrame, int]:
     """salted_agg with the salt count PLANNED from measured skew.
 
-    ``counts``: per-key row counts — pass checkpointed lineage metrics
+    ``counts``: as in planned_salt — pass checkpointed lineage metrics
     (plans/checkpoint lineage n_rows) to plan from the PREVIOUS run's
-    observation; default measures df with one cheap count agg (itself
-    skew-tolerant: partial counts merge map-side). When the plan says 1,
+    observation. When the plan says 1,
     returns the PLAIN single-stage aggregate (``plain_aggs``, defaulting
     to final_aggs over the partial names) — no extra exchange.
 
     Returns (result_df, n_salt) so callers/tests can assert the plan."""
-    key_counts = counts if counts is not None else (
-        df.groupBy(*group_cols).agg(F.count("*").alias("n_rows"))
-    )
-    n_salt = plan_salt_count(skew_stats(key_counts), target_ratio, max_salt)
+    n_salt = planned_salt(df, group_cols, counts, target_ratio, max_salt)
     if n_salt <= 1:
         if plain_aggs is not None:
             return df.groupBy(*group_cols).agg(*plain_aggs), 1
@@ -140,10 +148,7 @@ def auto_salted_repartition(
     hook: feed it the previous run's per-(tile, level) lineage counts
     and hot groups spread over n_salt partitions; balanced data gets a
     plain repartition (salt 1)."""
-    key_counts = counts if counts is not None else (
-        df.groupBy(*keys).agg(F.count("*").alias("n_rows"))
-    )
-    n_salt = plan_salt_count(skew_stats(key_counts), target_ratio, max_salt)
+    n_salt = planned_salt(df, keys, counts, target_ratio, max_salt)
     if n_salt <= 1:
         return df.repartition(n_partitions, *keys), 1
     return salted_repartition(df, n_partitions, *keys, n_salt=n_salt,

@@ -798,6 +798,76 @@ def filled_flow_accumulation(tiles: DataFrame) -> DataFrame:
         lambda grid: flow_accumulate_grid(fill_grid(grid).astype(np.int16))))
 
 
+#: unreached-flat sentinel of flat_route's distance plane (int64, far
+#: above any real hop count; the mosaic's q strips carry it verbatim)
+DIST_INF = np.int64(1) << np.int64(40)
+
+
+def flat_route(z: np.ndarray, ys, xs, d8, seeds: np.ndarray | None = None):
+    """Garbrecht-Martz flat routing over the D8 universe (ys, xs, d8)
+    of the (h, w) surface z -> (dist, code), two (h, w) planes.
+
+    dist: a multi-source BFS hop count. Draining cells (universe,
+    d8 > 0) seed it at 0, and so do the finite cells of `seeds` (fixed
+    distances of cells outside the universe, e.g. a mosaic tile's
+    ring) at their own value; seeds are taken in order of distance, so
+    non-uniform ones still give exact hop counts. It spreads only into
+    flat universe cells (d8 = 0), between neighbors of equal z;
+    DIST_INF where nothing reaches.
+
+    code: d8 where d8 > 0; a flat universe cell routes to the equal-z
+    neighbor of least (dist, ESRI code) among those with a finite
+    dist, else stays 0 (a terminal: a plateau top or a NOVALUE-locked
+    flat). Flat edges keep z and strictly drop dist, so the routed
+    graph stays acyclic."""
+    h, w = z.shape
+    wp = w + 2  # padded by one cell, so every neighbor index is in range
+    zp = np.pad(z, 1).ravel()
+    at = (ys.astype(np.int64) + 1) * wp + xs + 1
+    dist = np.full((h + 2) * wp, DIST_INF, dtype=np.int64)
+    if seeds is not None:
+        dist.reshape(h + 2, wp)[1:-1, 1:-1] = seeds
+    dist[at[d8 > 0]] = 0
+    cells = at[d8 == 0]
+    flat = np.zeros(dist.size, dtype=bool)
+    flat[cells] = True
+    offs = [(c, dy * wp + dx) for c, dx, dy, _card in D8_NEIGHBORS]
+
+    src = np.flatnonzero(dist < DIST_INF)
+    src = src[np.argsort(dist[src], kind="stable")]
+    sd = dist[src]
+    i, d, frontier = 0, np.int64(0), src[:0]
+    while True:
+        j = int(np.searchsorted(sd, d, side="right"))
+        frontier = np.concatenate((frontier, src[i:j]))
+        i = j
+        if not frontier.size:
+            if i == sd.size:
+                break
+            d = sd[i]  # jump to the next seed distance
+            continue
+        zf, reached = zp[frontier], []
+        for _c, o in offs:
+            nb = frontier + o
+            nb = nb[flat[nb] & (dist[nb] == DIST_INF) & (zp[nb] == zf)]
+            dist[nb] = d + 1  # set per neighbor: no cell joins twice
+            reached.append(nb)
+        frontier = np.concatenate(reached)
+        d += 1
+
+    code = np.zeros(dist.size, dtype=np.int32)
+    code[at] = d8
+    best = np.full(cells.size, DIST_INF, dtype=np.int64)
+    zc = zp[cells]
+    for c, o in offs:  # strict <: the first (smallest) code wins ties
+        cand = np.where(zp[cells + o] == zc, dist[cells + o], DIST_INF)
+        take = cand < best
+        best[take] = cand[take]
+        code[cells[take]] = c
+    return (dist.reshape(h + 2, wp)[1:-1, 1:-1],
+            code.reshape(h + 2, wp)[1:-1, 1:-1])
+
+
 def routed_flow_grid(filled: np.ndarray):
     """Flow accumulation WITH flat resolution over an (already filled)
     surface: strict-descent cells keep their D8 target; a flat cell
@@ -821,70 +891,18 @@ def routed_flow_grid(filled: np.ndarray):
     All-integer (elevations, BFS hop counts): the gate surface is
     exact across engines. Dispatches to the C fast path
     (kernels/terrain_cext.routed_flow: the whole d8 + FIFO-BFS +
-    argmin + Kahn in one call — the numpy body below builds n x 8
-    neighbor tables, which at SRTM-1 grain cost ~16 s/tile against
-    the C pass's ~1 s); this numpy body stays the ORACLE and the
-    fallback."""
+    argmin + Kahn in one call); the numpy body below (flat_route with
+    no seeds, the step mosaic_routed_flow runs per tile) stays the
+    ORACLE and the fallback."""
     from ..kernels import terrain_cext
 
     res = terrain_cext.routed_flow(filled)
     if res is not None:
         return res
     ys, xs, d8, _ = d8_grid(filled)
-    n = len(ys)
-    h, w = filled.shape
-    g = filled.astype(np.int64)
-    lookup = np.full(h * w, -1, dtype=np.int64)
-    lookup[ys.astype(np.int64) * w + xs] = np.arange(n)
-    zz = g[ys, xs]
-    t = d8_targets(ys, xs, d8, filled.shape)  # strict-descent targets
-
-    # BFS distance to a draining equal-elevation cell, per flat
-    INF = np.int64(1) << np.int64(60)
-    dist = np.full(n, INF, dtype=np.int64)
-    dist[(d8 > 0)] = 0
-    # neighbor index table (n x 8) in ESRI code order, -1 where the
-    # neighbor is outside the universe
-    nbr = np.full((n, 8), -1, dtype=np.int64)
-    same = np.zeros((n, 8), dtype=bool)
-    for k, (c, dx, dy, _card) in enumerate(D8_NEIGHBORS):
-        nx2 = xs.astype(np.int64) + dx
-        ny2 = ys.astype(np.int64) + dy
-        ok = (nx2 >= 1) & (nx2 < w - 1) & (ny2 >= 1) & (ny2 < h - 1)
-        idx = np.where(ok, lookup[np.clip(ny2, 0, h - 1) * w
-                                  + np.clip(nx2, 0, w - 1)], -1)
-        nbr[:, k] = idx
-        valid_nb = idx >= 0
-        same[valid_nb, k] = zz[idx[valid_nb]] == zz[valid_nb.nonzero()[0]]
-    frontier = np.flatnonzero(dist == 0)
-    d = np.int64(0)
-    while frontier.size:
-        d += 1
-        # flat cells adjacent (equal-z) to the frontier and not reached
-        cand = nbr[frontier]                       # (f, 8)
-        eq = same[frontier]
-        flat_nb = cand[eq & (cand >= 0)]
-        flat_nb = flat_nb[(d8[flat_nb] == 0) & (dist[flat_nb] == INF)]
-        if flat_nb.size == 0:
-            break
-        flat_nb = np.unique(flat_nb)
-        dist[flat_nb] = d
-        frontier = flat_nb
-
-    # route each reachable flat cell: argmin over equal-z neighbors of
-    # (dist, code order) — code order is the column order of nbr
-    flat = np.flatnonzero((d8 == 0) & (dist < INF))
-    if flat.size:
-        cand = nbr[flat]                           # (m, 8)
-        eq = same[flat] & (cand >= 0)
-        nd = np.full(cand.shape, INF, dtype=np.int64)
-        cc = np.clip(cand, 0, max(n - 1, 0))
-        nd[eq] = dist[cc[eq]]
-        best = np.argmin(nd, axis=1)               # first (smallest code) wins
-        chosen = cand[np.arange(flat.size), best]
-        ok = nd[np.arange(flat.size), best] < INF
-        t[flat[ok]] = chosen[ok]
-    return _accumulate(ys, xs, t, "flat-routed graph")
+    code = flat_route(filled, ys, xs, d8)[1][ys, xs]
+    return _accumulate(ys, xs, d8_targets(ys, xs, code, filled.shape),
+                       "flat-routed graph")
 
 
 def flat_routed_flow(tiles: DataFrame) -> DataFrame:

@@ -41,6 +41,13 @@ def cell_columns(grid: np.ndarray) -> dict:
 TILE_COLS = ("image_id", "bytes", "w", "h", "fmt")
 
 
+def decode_tile(data, w, h, fmt) -> np.ndarray:
+    """One tile row's (bytes, w, h, fmt) values -> its grid; bytes()
+    normalizes bytearray/memoryview payloads. tile_map and the mosaic
+    cogroup's tile side both decode through it."""
+    return codecs.decode(bytes(data), fmt, int(w), int(h))
+
+
 def row_map(df: DataFrame, cols, schema, body) -> DataFrame:
     """df -> `schema` rows in ONE narrow Arrow pass, no Exchange.
     ``body(*values)`` gets one input row's `cols` values and returns
@@ -77,5 +84,5 @@ def tile_map(tiles: DataFrame, schema, body) -> DataFrame:
     """tiles (input_hint schema) -> `schema` rows: ``row_map`` over
     the five tile columns with ``body(image_id, grid)`` called on each
     decoded tile; it returns what a ``row_map`` body does."""
-    return row_map(tiles, TILE_COLS, schema, lambda img, data, w, h, fmt: body(
-        img, codecs.decode(bytes(data), fmt, int(w), int(h))))
+    return row_map(tiles, TILE_COLS, schema,
+                   lambda img, *cols: body(img, decode_tile(*cols)))

@@ -769,6 +769,15 @@ def test_mosaic_routed_flow_single_tile_equals_kernel(spark):
     assert got == want
 
 
+@pytest.mark.slow
+def test_mosaic_routed_flow_2x2_401_bit_exact(spark):
+    """The routed mosaic at a grain where the filled flats hold ~42k
+    cells and run to 163 hops, so ring seeds carry long hop counts
+    across the seams: a 2x2 crater mosaic of 401^2 tiles, bit-equal to
+    routed_flow_grid(fill_grid(assembled))."""
+    _routed_check(spark, 2, 2, size=401)
+
+
 def test_mosaic_routed_beats_unconditioned(spark):
     """The reason the op exists: on the crater mosaic, the CONDITIONED
     drainage concentrates flow (its max accumulation exceeds the

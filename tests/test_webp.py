@@ -182,3 +182,38 @@ def test_codecs_and_multimodal_integration(spark):
         synthetic.webps_df(spark, n_images=3, size=33)
     ).collect()
     assert len(rows) == 3 and all(r["entropy"] > 0 for r in rows)
+
+
+def test_resize_keeps_webp_colour_and_refuses_gif(spark):
+    """resize_tiles block-means a colour webp per channel and re-encodes
+    it as webp (a grey one byte-equal to the grid path's encode); a gif
+    payload fails with a ValueError that names its format."""
+    import pandas as pd
+
+    from hgt2osm2_spark.kernels import gif
+    from hgt2osm2_spark.ops import multimodal
+    from hgt2osm2_spark.sources import synthetic
+
+    img = synthetic.rgb_image(0, 16)
+    grey = np.random.default_rng(5).integers(0, 256, (16, 16)).astype(np.int16)
+
+    def resize(data, fmt):
+        tiles = spark.createDataFrame(pd.DataFrame([{
+            "image_id": "img0", "bytes": data, "w": 16, "h": 16, "fmt": fmt,
+        }]))
+        return multimodal.resize_tiles(tiles, factor=2).collect()[0]
+
+    small = resize(webp.encode_webp(img, subtract_green=True), "webp")
+    assert (small["w"], small["h"], small["fmt"]) == (8, 8, "webp")
+    want = np.rint(img.reshape(8, 2, 8, 2, 3).astype(np.float64)
+                   .mean(axis=(1, 3))).astype(np.uint8)
+    assert len(np.unique(want.reshape(-1, 3), axis=0)) > 1
+    assert not (want[:, :, 0] == want[:, :, 1]).all()  # really colour
+    assert np.array_equal(webp.decode_webp_rgb8(bytes(small["bytes"])), want)
+
+    small = resize(codecs.encode(grey, "webp"), "webp")
+    want = np.rint(grey.reshape(8, 2, 8, 2).astype(np.float64).mean(axis=(1, 3)))
+    assert bytes(small["bytes"]) == codecs.encode(want.astype(np.int16), "webp")
+
+    with pytest.raises(Exception, match="ValueError.*'gif'"):
+        resize(gif.encode_gif_rgb8(img), "gif")
