@@ -9,7 +9,7 @@ over a table of image+caption pairs, expressed Spark-first
 Layout:
   kernels/    pure NumPy/Python kernels (marching triangles, stitching,
               Douglas-Peucker, codecs) — no Spark imports, unit-testable
-  sources/    synthetic tiles generator, decode (mapInArrow)
+  sources/    synthetic tiles generator, decode (ops/tiles.row_map bodies)
   ops/        Spark operators: contours, spatial joins, dedup, text,
               similarity, multimodal
   sinks/      OSM XML, ArcInfo ASCII grid, merge/union

@@ -30,17 +30,31 @@ class CacheScope:
         self._live: list[DataFrame] = []
 
     def hold(self, df: DataFrame) -> DataFrame:
-        """Register an already-.cache()'d DataFrame for later release."""
+        """Register an already-.cache()'d or localCheckpoint'ed
+        DataFrame for later release."""
         self._live.append(df)
         return df
 
+    @staticmethod
+    def drop(df: DataFrame) -> None:
+        """Drop one frame's blocks now: its cache, and the blocks of a
+        localCheckpoint result, which DataFrame.unpersist does not
+        touch (they would otherwise stay in the block manager until the
+        JVM's ContextCleaner finds them). The latter go through the
+        context, not RDD.unpersist, which logs a lineage warning for
+        every checkpointed RDD."""
+        df.unpersist(blocking=False)
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.nodeName() == "LogicalRDD":
+            df.sparkSession.sparkContext._jsc.sc().unpersistRDD(plan.rdd().id(), False)
+
     def release(self) -> None:
-        """Unpersist every held cache (errors swallowed: the session
-        may already be stopped at teardown)."""
+        """Drop every held frame (errors swallowed: the session may
+        already be stopped at teardown)."""
         while self._live:
             df = self._live.pop()
             try:
-                df.unpersist(blocking=False)
+                self.drop(df)
             except Exception:
                 pass
 

@@ -9,16 +9,15 @@ Per segment the clip is Liang-Barsky against the axis-aligned window
 (boundary-inclusive); consecutive surviving segments whose parameter
 range chains (prev exit t1 == 1 and next entry t0 == 0) merge into one
 output piece, so a polyline crossing the window N times yields N
-pieces with interpolated boundary points. Runs inside Arrow batches
+pieces with interpolated boundary points. Runs as one row_map pass
 (same per-polyline grain as kernels/postprocess).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from pyspark.sql import DataFrame, types as T
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from .tiles import row_map
 
 
 def clip_polyline(
@@ -101,33 +100,19 @@ def clip_polylines(
     oracle reproduces them bit-for-bit). Narrow Arrow map — clipping
     is per-polyline, no shuffle."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in CLIP_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for img, lvl, ordi, xs, ys in zip(
-                pdf["image_id"], pdf["level"], pdf["poly_ord"],
-                pdf["xs"], pdf["ys"],
-            ):
-                for p, (cx, cy) in enumerate(
-                    clip_polyline(list(xs), list(ys), wx0, wy0, wx1, wy1)
-                ):
-                    ln = 0.0
-                    for i in range(len(cx) - 1):
-                        ln += ((cx[i + 1] - cx[i]) ** 2
-                               + (cy[i + 1] - cy[i]) ** 2) ** 0.5
-                    rows.append({
-                        "image_id": img, "level": int(lvl),
-                        "poly_ord": int(ordi), "piece": p,
-                        "n_points": len(cx),
-                        "x_first": round(cx[0], 9), "y_first": round(cy[0], 9),
-                        "x_last": round(cx[-1], 9), "y_last": round(cy[-1], 9),
-                        "length": round(ln, 6),
-                    })
-            yield pd.DataFrame(rows, columns=cols)
+    def body(img, lvl, ordi, xs, ys):
+        rows = []
+        for p, (cx, cy) in enumerate(
+            clip_polyline(list(xs), list(ys), wx0, wy0, wx1, wy1)
+        ):
+            ln = 0.0
+            for i in range(len(cx) - 1):
+                ln += ((cx[i + 1] - cx[i]) ** 2
+                       + (cy[i + 1] - cy[i]) ** 2) ** 0.5
+            rows.append((img, int(lvl), int(ordi), p, len(cx),
+                         round(cx[0], 9), round(cy[0], 9),
+                         round(cx[-1], 9), round(cy[-1], 9), round(ln, 6)))
+        return rows
 
-    return (
-        post.filter("kept")
-        .select("image_id", "level", "poly_ord", "xs", "ys")
-        .mapInPandas(gen, schema=CLIP_SCHEMA)
-    )
+    return row_map(post.filter("kept"), ["image_id", "level", "poly_ord", "xs", "ys"],
+                   CLIP_SCHEMA, body)

@@ -1,7 +1,7 @@
 """Distributed contour pipeline stages (SURVEY.md §3.1 mapped to Spark).
 
  stage 1-2  extract_contour_segments : tiles -> segments
-            (mapInPandas; decode + vectorized marching kernel per tile)
+            (tile_map; decode + vectorized marching kernel per tile)
  stage 3-4  stitch_polylines         : segments -> polylines
             (repartition + groupBy(image_id, level) + applyInPandas —
             Spark's task parallelism replaces the reference's
@@ -31,7 +31,7 @@ from ..cache import scope as _cache_scope
 
 from ..config import ContourOptions
 from ..kernels import marching, postprocess, stitch
-from .tiles import parse_tile_id, tile_map
+from .tiles import parse_tile_id, row_map, tile_map
 
 SEGMENTS_SCHEMA = T.StructType(
     [
@@ -157,22 +157,13 @@ def extract_contour_segments_banded(
         else bands.repartition("image_id", "band")
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for img, payload, y_base, c_lo, c_hi, bw, bh in zip(
-                pdf["image_id"], pdf["payload"], pdf["y_base"],
-                pdf["cell_lo"], pdf["cell_hi"], pdf["bw"], pdf["bh"],
-            ):
-                grid = np.frombuffer(payload, dtype="<i2").reshape(int(bh), int(bw))
-                seg = marching.extract_segments(
-                    grid, d, fake,
-                    cell_lo=int(c_lo), cell_hi=int(c_hi), y_base=int(y_base),
-                )
-                cols = _segment_columns(img, seg)
-                if cols is not None:
-                    yield pd.DataFrame(cols)
+    def body(img, payload, y_base, c_lo, c_hi, bw, bh):
+        grid = np.frombuffer(payload, dtype="<i2").reshape(int(bh), int(bw))
+        return _segment_columns(img, marching.extract_segments(
+            grid, d, fake, cell_lo=int(c_lo), cell_hi=int(c_hi), y_base=int(y_base)))
 
-    return bands.mapInPandas(gen, schema=SEGMENTS_SCHEMA)
+    return row_map(bands, ["image_id", "payload", "y_base", "cell_lo", "cell_hi", "bw", "bh"],
+                   SEGMENTS_SCHEMA, body)
 
 
 def _stitch_frame(pdf: pd.DataFrame):
@@ -680,7 +671,7 @@ def _tile_polylines(grid: np.ndarray, opt: ContourOptions, strict_reference: boo
 def extract_stitch_post_fused(
     tiles: DataFrame, opt: ContourOptions | None = None, strict_reference: bool = True
 ) -> DataFrame:
-    """Fused fast path: stages 1-5 in ONE mapInPandas pass per tile.
+    """Fused fast path: stages 1-5 in ONE tile_map pass per tile.
 
     Semantically identical to extract -> stitch -> post (tested), but
     with zero shuffles before ID assignment: the reference never
@@ -774,31 +765,18 @@ def polyline_geometry(post_kept: DataFrame) -> DataFrame:
     bit-reproducible (golden-checked against the scalar twin)."""
     from .ids import with_tile_key
 
-    d = with_tile_key(post_kept).select(
+    def body(img, level, poly_ord, xs, ys, closed, grid_w, grid_h, tile_lat, tile_lon):
+        lons = tile_lon + np.asarray(xs, dtype=np.float64) / (grid_w - 1)
+        lats = tile_lat + np.asarray(ys, dtype=np.float64) / (grid_h - 1)
+        length = float(np.sqrt(np.diff(lons) ** 2 + np.diff(lats) ** 2).sum())
+        area = (float(0.5 * abs(np.sum(lons[:-1] * lats[1:] - lons[1:] * lats[:-1])))
+                if closed else None)
+        return img, int(level), int(poly_ord), len(lons), length, area, bool(closed)
+
+    return row_map(with_tile_key(post_kept), [
         "image_id", "level", "poly_ord", "xs", "ys", "closed",
         "grid_w", "grid_h", "tile_lat", "tile_lon",
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                lons = r.tile_lon + np.asarray(r.xs, dtype=np.float64) / (r.grid_w - 1)
-                lats = r.tile_lat + np.asarray(r.ys, dtype=np.float64) / (r.grid_h - 1)
-                length = float(np.sqrt(np.diff(lons) ** 2 + np.diff(lats) ** 2).sum())
-                if r.closed:
-                    area = float(
-                        0.5 * abs(np.sum(lons[:-1] * lats[1:] - lons[1:] * lats[:-1]))
-                    )
-                else:
-                    area = None
-                rows.append(
-                    (r.image_id, int(r.level), int(r.poly_ord), len(lons),
-                     length, area, bool(r.closed))
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in GEOM_SCHEMA.fields])
-
-    return d.mapInPandas(gen, schema=GEOM_SCHEMA)
+    ], GEOM_SCHEMA, body)
 
 
 def postprocess_metrics(post: DataFrame) -> DataFrame:

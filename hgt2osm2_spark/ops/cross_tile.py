@@ -74,7 +74,10 @@ def stitch_across_tiles(post_kept: DataFrame, max_iters: int = MAX_ROUNDS) -> Da
     poly_ord, xs, ys, grid_w, grid_h, closed). Output: MERGED_SCHEMA —
     one row per geographic contour component (singletons included).
     Raises RuntimeError when a component needs more than max_iters
-    propagation rounds (a line of more than max_iters pieces)."""
+    propagation rounds (a line of more than max_iters pieces). The
+    result reads the labels near_dup_components holds, so it cannot be
+    read after the next near_dup_components call (this operator's
+    included) or cache.release_all."""
     _CACHES.release()
     pl = _CACHES.hold(_degree_polylines(post_kept).cache())
 

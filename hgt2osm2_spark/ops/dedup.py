@@ -22,6 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W, functions as F, types as T
 
+from ..cache import scope as _cache_scope
 from ..fanout import fan_out
 
 
@@ -486,15 +487,9 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3, **kw) -> DataFrame:
 #: line across 50 tiles
 MAX_ROUNDS = 50
 
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Drop the blocks of a localCheckpoint result, which
-    DataFrame.unpersist does not touch (they would otherwise stay in
-    the block manager until the JVM's ContextCleaner finds them).
-    Through the context, not RDD.unpersist, which logs a lineage
-    warning for every checkpointed RDD."""
-    rdd = df._jdf.queryExecution().analyzed().rdd()
-    df.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)
+#: the labels near_dup_components returned last; released on the next
+#: call (or via cache.release_all)
+_CACHES = _cache_scope("dedup")
 
 
 def near_dup_components(
@@ -512,13 +507,17 @@ def near_dup_components(
     round's labels are materialized with a lineage cut
     (localCheckpoint), so a round costs the same however many came
     before it; the previous round's blocks are dropped once the next
-    is materialized, so only the returned labels stay held. Raises
-    rather than returning silently wrong labels if max_iters is hit
-    (no silent caps).
+    is materialized, and the returned labels stay held until the next
+    call (or cache.release_all) drops them. A checkpoint has no
+    lineage to recompute from, so the returned frame cannot be read
+    after that drop: collect or write it first if it must outlive the
+    next call. Raises rather than returning silently wrong labels if
+    max_iters is hit (no silent caps).
 
     Returns (id, component_id) for every node appearing in `pairs`,
     where component_id = min node id reachable (so the representative
     doc is first-wins, matching exact_dedup's keep-smallest rule)."""
+    _CACHES.release()
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -550,12 +549,12 @@ def near_dup_components(
                 )
                 .localCheckpoint(eager=True)
             )
-            _release_checkpoint(prev)
+            _CACHES.drop(prev)
             if labels.filter("moved").limit(1).count() == 0:
-                return labels.select("id", F.col("comp").alias("component_id"))
+                return _CACHES.hold(labels).select("id", F.col("comp").alias("component_id"))
     finally:
         edges.unpersist(blocking=False)
-    _release_checkpoint(labels)
+    _CACHES.drop(labels)
     raise RuntimeError(
         f"near_dup_components: no convergence in {max_iters} rounds "
         "(graph diameter exceeds the bound) — raise max_iters"

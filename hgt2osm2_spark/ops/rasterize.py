@@ -5,7 +5,7 @@ the north_star asks for a general raster<->vector toolkit, so this is
 the reverse operator: each polygon row becomes an n x n occupancy mask
 over a degree-space window, computed with the SAME even-odd ray-cast
 as the PIP join (ops/spatial._ray_crossings) vectorized over the whole
-center grid in one Arrow pass.
+center grid in one row_map pass.
 
 Scale shape: one task per polygon batch (masks never shuffle — the
 n_inside scalar and a packed-bits payload leave the UDF); at fleet
@@ -20,13 +20,11 @@ index from the south edge, j the column from the west edge.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from .spatial import _ray_crossings
+from .tiles import row_map
 
 RASTERIZE_SCHEMA = T.StructType(
     [
@@ -44,20 +42,15 @@ def rasterize_polygons(
     """polygons(poly_id, xs array<double>=lon, ys array<double>=lat) ->
     (poly_id, n_inside, mask packed-bits row-major south-up, n)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        jj, ii = np.meshgrid(np.arange(n), np.arange(n))  # (row i, col j)
-        lons = (lon_min + (jj + 0.5) * d).ravel()
-        lats = (lat_min + (ii + 0.5) * d).ravel()
-        for pdf in batches:
-            rows = []
-            for pid, xs, ys in zip(pdf["poly_id"], pdf["xs"], pdf["ys"]):
-                inside = _ray_crossings(
-                    lons, lats,
-                    np.asarray(xs, dtype=np.float64), np.asarray(ys, dtype=np.float64),
-                )
-                rows.append(
-                    (pid, int(inside.sum()), np.packbits(inside).tobytes(), n)
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in RASTERIZE_SCHEMA.fields])
+    jj, ii = np.meshgrid(np.arange(n), np.arange(n))  # (row i, col j)
+    lons = (lon_min + (jj + 0.5) * d).ravel()
+    lats = (lat_min + (ii + 0.5) * d).ravel()
 
-    return polygons.mapInPandas(gen, schema=RASTERIZE_SCHEMA)
+    def body(pid, xs, ys):
+        inside = _ray_crossings(
+            lons, lats,
+            np.asarray(xs, dtype=np.float64), np.asarray(ys, dtype=np.float64),
+        )
+        return pid, int(inside.sum()), np.packbits(inside).tobytes(), n
+
+    return row_map(polygons, ["poly_id", "xs", "ys"], RASTERIZE_SCHEMA, body)

@@ -11,11 +11,11 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..cache import scope as _cache_scope
 from ..fanout import fan_out
+from .tiles import row_map
 
 #: tiny per-language stopword marker sets for the n-gram/stopword
 #: language-ID heuristic (public-knowledge common words)
@@ -130,37 +130,26 @@ FINGERPRINT_SCHEMA = T.StructType(
 def fingerprint(df: DataFrame, text_col: str = "text", window: int = 16) -> DataFrame:
     """Rolling polynomial hash fingerprint (document sketch): min of the
     rolling hashes of `window`-byte substrings — a deterministic winnowing
-    fingerprint. Arrow-vectorized (one pandas batch at a time)."""
+    fingerprint, one row_map pass."""
+    B = np.uint64(1000003)
+    weights = np.array([pow(1000003, window - 1 - i, 1 << 64) for i in range(window)],
+                       dtype=np.uint64)  # B^(window-1-i) mod 2^64
 
-    def fp(batches):
-        B = np.uint64(1000003)
-        Bw = B
-        for _ in range(window - 2):
-            Bw = Bw * B  # B^(window-1) mod 2^64
-        for pdf in batches:
-            out = []
-            for doc_id, txt in zip(pdf["doc_id"], pdf[text_col]):
-                data = np.frombuffer(txt.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
-                n = len(data)
-                if n < window:
-                    h = np.uint64(0)
-                    for b in data:
-                        h = h * B + b
-                    out.append((doc_id, int(h.astype(np.int64))))
-                    continue
-                # rolling hash over all windows, vectorized via cumulative trick
-                pows = np.empty(window, dtype=np.uint64)
-                pows[0] = np.uint64(1)
-                for i in range(1, window):
-                    pows[i] = pows[i - 1] * B
-                mat = np.lib.stride_tricks.sliding_window_view(data, window)
-                hashes = (mat * pows[::-1]).sum(axis=1, dtype=np.uint64)
-                out.append((doc_id, int(hashes.min().astype(np.int64))))
-            yield pd.DataFrame(out, columns=["doc_id", "fingerprint"])
+    def body(doc_id, txt):
+        data = np.frombuffer(txt.encode("utf-8"), dtype=np.uint8).astype(np.uint64)
+        if len(data) < window:
+            h = np.uint64(0)
+            for b in data:
+                h = h * B + b
+            return doc_id, int(h.astype(np.int64))
+        # rolling hash over all windows, vectorized via cumulative trick
+        mat = np.lib.stride_tricks.sliding_window_view(data, window)
+        hashes = (mat * weights).sum(axis=1, dtype=np.uint64)
+        return doc_id, int(hashes.min().astype(np.int64))
 
     # spread a row-group-bound scan before the rolling-hash pass (r9)
     src = fan_out(df.select("doc_id", text_col), "doc_id")
-    return src.mapInPandas(fp, schema=FINGERPRINT_SCHEMA)
+    return row_map(src, ["doc_id", text_col], FINGERPRINT_SCHEMA, body)
 
 
 # ------------------------------------------------- relevance / indexing

@@ -3,13 +3,18 @@ the scalar tile-id parse.
 
 The reference is a per-tile program: it reads one HGT tile, computes
 on it and writes its outputs, with no state shared between tiles
-(Program.cs:93-113). Every payload operator keeps that shape — take
-each row of an Arrow batch, run a kernel on its payload, emit that
-row's output rows — and only the kernel differs, so the loop around
-the kernels is written once, here: ``row_map`` is the one Python-UDF
-boundary of the scan, crop, image, audio and video operators, and
-``tile_map`` is ``row_map`` over the five tile columns with the tile
-decoded to its grid, for every tile-local raster operator.
+(Program.cs:93-113). Every per-row operator keeps that shape — take
+each row of an Arrow batch, run a kernel on it, emit that row's
+output rows — and only the kernel differs, so the loop around the
+kernels is written once, here: ``row_map`` is the one per-row
+Python-UDF boundary of the package (the synthetic sources, the scan,
+crop, image, audio and video operators, the text fingerprint and
+subword encoder, rasterize, clip, the banded contour extract, the
+polyline geometry and the artifact writer), and ``tile_map`` is
+``row_map`` over the five tile columns with the tile decoded to its
+grid, for every tile-local raster operator. Only kernels that compute
+across the rows of a batch (the minhash and simhash sketches, the
+contour post pass) keep a ``mapInPandas`` of their own.
 """
 
 from __future__ import annotations

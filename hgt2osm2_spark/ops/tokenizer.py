@@ -45,11 +45,11 @@ import re
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..fanout import fan_out
+from .tiles import row_map
 
 TOKENIZER_VERSION = 1
 PAD_ID = 0
@@ -276,44 +276,27 @@ def subword_tokens(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """PRODUCTION transform: ONE Arrow pass, the vocab rides the UDF
+    """PRODUCTION transform: ONE row_map pass, the vocab rides the UDF
     closure (KB-scale by construction — max_words/vocab_size bound it),
     no shuffle, no join. n_words counts the same word list as
     tokens_expr; unk words contribute 1 piece ([UNK]) and 1 to
     n_unk_words."""
-    from typing import Iterator
-
     init_v, cont_v = model.init_vocab, model.cont_vocab
     mpl = model.max_piece_len
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_words, n_pieces, n_unk, n_chars, ids = [], [], [], [], []
-            for text in pdf[text_col]:
-                text = text if isinstance(text, str) else ""
-                words = split_words(text)
-                toks: list[int] = []
-                unk = 0
-                for wd in words:
-                    enc = encode_word(wd, init_v, cont_v, mpl)
-                    if enc and enc[0] == UNK_ID and len(enc) == 1 and wd:
-                        unk += 1
-                    toks.extend(enc)
-                n_words.append(len(words))
-                n_pieces.append(len(toks))
-                n_unk.append(unk)
-                n_chars.append(len(text))
-                ids.append(toks)
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col].astype("int64"),
-                "n_words": pd.Series(n_words, dtype="int32"),
-                "n_pieces": pd.Series(n_pieces, dtype="int32"),
-                "n_unk_words": pd.Series(n_unk, dtype="int32"),
-                "n_chars": pd.Series(n_chars, dtype="int32"),
-                "token_ids": pd.Series(ids, dtype=object),
-            })
+    def body(doc_id, text):
+        text = text if isinstance(text, str) else ""
+        words = split_words(text)
+        toks: list[int] = []
+        unk = 0
+        for wd in words:
+            enc = encode_word(wd, init_v, cont_v, mpl)
+            if enc and enc[0] == UNK_ID and len(enc) == 1 and wd:
+                unk += 1
+            toks.extend(enc)
+        return doc_id, len(words), len(toks), unk, len(text), toks
 
     # the greedy per-word encode loop is the heavy narrow pass — spread
     # a row-group-bound scan across the cores before it (guide §4, r9)
     src = fan_out(docs.select(id_col, text_col), id_col)
-    return src.mapInPandas(gen, schema=SUBWORD_SCHEMA)
+    return row_map(src, [id_col, text_col], SUBWORD_SCHEMA, body)

@@ -12,7 +12,7 @@ parity is.
 The per-tile sink is two Python operators in one stage. ``tile_xml``
 cogroups nodes and ways by tile and formats each side from its
 columns (no null-padded union, no per-row tuples);
-``write_tile_files_distributed`` is one ``mapInPandas`` that encodes,
+``write_tile_files_distributed`` is one ``row_map`` pass that encodes,
 gzips and lands each ``cl<id>.osm.gz`` through rasters' write-temp +
 rename, so the XML text goes back into Python once (into the writer)
 and the gzip payload never leaves it. Both OSM ``.gz`` writers, that
@@ -104,7 +104,7 @@ def tile_xml(nodes: DataFrame, ways: DataFrame) -> DataFrame:
 def write_tile_files_distributed(xml_df: DataFrame, out_dir: str) -> int:
     """S5 scale path: one gzipped ``cl<image_id>.osm.gz`` per tile
     (naming: ContourProcessor2.cs:1410-1414), written executor-side:
-    encoded and gzipped in the writer's own ``mapInPandas`` (see
+    encoded and gzipped in the writer's own ``row_map`` pass (see
     rasters.write_artifacts_distributed); returns the file count."""
     from .rasters import write_artifacts_distributed
 

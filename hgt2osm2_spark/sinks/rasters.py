@@ -1,8 +1,8 @@
 """Raster sinks S6/S7/S9: ArcInfo ASCII Grid, Geo-PNG + worldfile, TSV.
 
 All three are per-tile formatters over the tiles table, run as one
-Arrow-batched ``mapInPandas`` pass (decode + format in the same batch,
-never shipping the grid through a shuffle). Each returns a DataFrame
+``tile_map`` pass (decode + format in the same batch, never shipping
+the grid through a shuffle). Each returns a DataFrame
 ``(image_id, filename, payload)`` — the canonical artifact is the
 DataFrame; writing the files out is a thin binary/text sink.
 
@@ -25,14 +25,11 @@ Reference semantics reproduced:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, types as T
 
 from ..kernels import codecs
-from ..ops.tiles import parse_tile_id, tile_map
+from ..ops.tiles import parse_tile_id, row_map, tile_map
 
 SINK_SCHEMA = T.StructType(
     [
@@ -186,17 +183,13 @@ def write_artifacts_distributed(
 
     os.makedirs(out_dir, exist_ok=True)
 
-    def write_part(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = 0
-        for pdf in pdfs:
-            for name, payload in zip(pdf[filename_col], pdf[payload_col]):
-                final = os.path.join(out_dir, str(name))
-                tmp = f"{final}.tmp.{os.getpid()}"
-                with open(tmp, "wb") as f:
-                    dump(payload, f)
-                os.replace(tmp, final)
-                n += 1
-        yield pd.DataFrame({"n": [n]})
+    def write(name, payload):
+        final = os.path.join(out_dir, str(name))
+        tmp = f"{final}.tmp.{os.getpid()}"
+        with open(tmp, "wb") as f:
+            dump(payload, f)
+        os.replace(tmp, final)
+        return (1,)
 
-    counts = df.select(filename_col, payload_col).mapInPandas(write_part, "n long")
-    return int(counts.agg(F.sum("n")).collect()[0][0] or 0)
+    written = row_map(df, [filename_col, payload_col], "n long", write)
+    return int(written.agg(F.sum("n")).collect()[0][0] or 0)

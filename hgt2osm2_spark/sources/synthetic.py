@@ -7,17 +7,20 @@ One row per raster tile:
 This is the Spark analogue of a directory of HGT files
 (/root/reference/HGTReader.cs:111-166, Program.cs:132-167). Generation
 is seeded from the tile key only, so any executor can regenerate any
-row independently — the generator itself runs distributed via
-mapInPandas over a tiny spec DataFrame (at 10^12-image scale the spec
-is a range() DataFrame and generation is embarrassingly parallel).
+row independently — every generator is one ops.tiles.row_map pass
+over spark.range(n), the row index its only input, so generation is
+embarrassingly parallel at any scale.
 """
 
 from __future__ import annotations
 
+from operator import itemgetter
+
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, types as T
 
 from ..kernels import codecs
+from ..ops.tiles import row_map
 
 FMTS = ("hgt", "png", "jpg")
 
@@ -32,6 +35,18 @@ TILES_SCHEMA = T.StructType(
         T.StructField("phash", T.LongType(), False),
     ]
 )
+
+
+def _generated(spark: SparkSession, n: int, row, partitions: int | None = None) -> DataFrame:
+    """spark.range(n) -> TILES_SCHEMA rows in one row_map pass:
+    ``row(idx)`` builds row #idx's dict, so any task regenerates any
+    row from its index alone. `partitions` round-robins the indices
+    first."""
+    spec = spark.range(n)
+    if partitions:
+        spec = spec.repartition(partitions)
+    values = itemgetter(*TILES_SCHEMA.fieldNames())
+    return row_map(spec, ["id"], TILES_SCHEMA, lambda idx: values(row(int(idx))))
 
 
 def tile_key(idx: int) -> tuple[int, int, int]:
@@ -65,20 +80,30 @@ def heightfield(idx: int, n: int, seed: int = 42) -> np.ndarray:
     return out
 
 
-def make_tile_row(idx: int, n: int, seed: int = 42) -> dict:
-    lat, lon, k = tile_key(idx)
-    image_id = f"n{lat:02d}e{lon:03d}_{k}"
-    fmt = FMTS[idx % len(FMTS)]
-    grid = heightfield(idx, n, seed)
+def _grid_row(image_id: str, grid: np.ndarray, fmt: str, caption: str) -> dict:
+    """One elevation grid's row in the input_hint schema."""
     return {
         "image_id": image_id,
         "bytes": codecs.encode(grid, fmt),
-        "w": n,
-        "h": n,
+        "w": grid.shape[1],
+        "h": grid.shape[0],
         "fmt": fmt,
-        "caption": f"tile {image_id} seed{seed}",
+        "caption": caption,
         "phash": codecs.phash64(grid),
     }
+
+
+def _tile_row(idx: int, grid: np.ndarray, seed: int, kind: str) -> dict:
+    """Tile #idx's row over `grid`: id from tile_key, fmt rotating
+    through FMTS, caption `<kind> <id> seed<seed>`."""
+    lat, lon, k = tile_key(idx)
+    image_id = f"n{lat:02d}e{lon:03d}_{k}"
+    return _grid_row(image_id, grid, FMTS[idx % len(FMTS)],
+                     f"{kind} {image_id} seed{seed}")
+
+
+def make_tile_row(idx: int, n: int, seed: int = 42) -> dict:
+    return _tile_row(idx, heightfield(idx, n, seed), seed, "tile")
 
 
 def rgb_image(idx: int, n: int, seed: int = 42) -> np.ndarray:
@@ -128,18 +153,7 @@ def images_df(spark: SparkSession, n_images: int = 6, size: int = 33, seed: int 
               partitions: int | None = None) -> DataFrame:
     """Distributed RGB image table (png-rgb/jpeg payloads), same schema
     as tiles_df — the color half of the multimodal surface."""
-    import pandas as pd
-
-    spec = spark.range(n_images).withColumnRenamed("id", "idx")
-    if partitions:
-        spec = spec.repartition(partitions)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_image_row(int(i), size, seed) for i in pdf["idx"]]
-            yield pd.DataFrame(rows)
-
-    return spec.mapInPandas(gen, schema=TILES_SCHEMA)
+    return _generated(spark, n_images, lambda i: make_image_row(i, size, seed), partitions)
 
 
 def wav_clip(idx: int, n_frames: int = 8000, rate: int = 16000,
@@ -184,18 +198,7 @@ def audio_df(spark: SparkSession, n_clips: int = 6, n_frames: int = 8000,
              rate: int = 16000, seed: int = 42,
              partitions: int | None = None) -> DataFrame:
     """Distributed synthetic wav table, same schema as tiles_df."""
-    import pandas as pd
-
-    spec = spark.range(n_clips).withColumnRenamed("id", "idx")
-    if partitions:
-        spec = spec.repartition(partitions)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_audio_row(int(i), n_frames, rate, seed) for i in pdf["idx"]]
-            yield pd.DataFrame(rows)
-
-    return spec.mapInPandas(gen, schema=TILES_SCHEMA)
+    return _generated(spark, n_clips, lambda i: make_audio_row(i, n_frames, rate, seed), partitions)
 
 
 def make_gif_row(idx: int, n: int, seed: int = 42) -> dict:
@@ -220,18 +223,7 @@ def make_gif_row(idx: int, n: int, seed: int = 42) -> dict:
 def gifs_df(spark: SparkSession, n_images: int = 4, size: int = 33,
             seed: int = 42, partitions: int | None = None) -> DataFrame:
     """Distributed synthetic GIF table, same schema as tiles_df."""
-    import pandas as pd
-
-    spec = spark.range(n_images).withColumnRenamed("id", "idx")
-    if partitions:
-        spec = spec.repartition(partitions)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_gif_row(int(i), size, seed) for i in pdf["idx"]]
-            yield pd.DataFrame(rows)
-
-    return spec.mapInPandas(gen, schema=TILES_SCHEMA)
+    return _generated(spark, n_images, lambda i: make_gif_row(i, size, seed), partitions)
 
 
 def webp_source(idx: int, n: int, seed: int = 42) -> np.ndarray:
@@ -274,18 +266,7 @@ def make_webp_row(idx: int, n: int, seed: int = 42) -> dict:
 def webps_df(spark: SparkSession, n_images: int = 3, size: int = 33,
              seed: int = 42, partitions: int | None = None) -> DataFrame:
     """Distributed synthetic WebP-lossless table, same schema as tiles_df."""
-    import pandas as pd
-
-    spec = spark.range(n_images).withColumnRenamed("id", "idx")
-    if partitions:
-        spec = spec.repartition(partitions)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_webp_row(int(i), size, seed) for i in pdf["idx"]]
-            yield pd.DataFrame(rows)
-
-    return spec.mapInPandas(gen, schema=TILES_SCHEMA)
+    return _generated(spark, n_images, lambda i: make_webp_row(i, size, seed), partitions)
 
 
 def video_frame(idx: int, t: int, size: int, seed: int = 42) -> np.ndarray:
@@ -325,19 +306,8 @@ def videos_df(spark: SparkSession, n_clips: int = 4, n_frames: int = 8,
               size: int = 33, seed: int = 42,
               partitions: int | None = None) -> DataFrame:
     """Distributed synthetic MJPEG/AVI table, same schema as tiles_df."""
-    import pandas as pd
-
-    spec = spark.range(n_clips).withColumnRenamed("id", "idx")
-    if partitions:
-        spec = spec.repartition(partitions)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_video_row(int(i), n_frames, size, seed=seed)
-                    for i in pdf["idx"]]
-            yield pd.DataFrame(rows)
-
-    return spec.mapInPandas(gen, schema=TILES_SCHEMA)
+    return _generated(spark, n_clips,
+                      lambda i: make_video_row(i, n_frames, size, seed=seed), partitions)
 
 
 def make_mp4_row(idx: int, n_frames: int = 8, size: int = 33,
@@ -369,19 +339,8 @@ def mp4s_df(spark: SparkSession, n_clips: int = 3, n_frames: int = 6,
             size: int = 33, seed: int = 42,
             partitions: int | None = None) -> DataFrame:
     """Distributed synthetic MJPEG/MP4 table, same schema as tiles_df."""
-    import pandas as pd
-
-    spec = spark.range(n_clips).withColumnRenamed("id", "idx")
-    if partitions:
-        spec = spec.repartition(partitions)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_mp4_row(int(i), n_frames, size, seed=seed)
-                    for i in pdf["idx"]]
-            yield pd.DataFrame(rows)
-
-    return spec.mapInPandas(gen, schema=TILES_SCHEMA)
+    return _generated(spark, n_clips,
+                      lambda i: make_mp4_row(i, n_frames, size, seed=seed), partitions)
 
 
 def polygons_df(spark: SparkSession, n_polys: int = 8, seed: int = 42) -> DataFrame:
@@ -407,39 +366,10 @@ def polygons_df(spark: SparkSession, n_polys: int = 8, seed: int = 42) -> DataFr
     return spark.createDataFrame(pd.DataFrame(rows))
 
 
-def query_points_df(spark: SparkSession, n_points: int = 2000, seed: int = 42,
-                    skew_frac: float = 0.0) -> DataFrame:
-    """Seeded uniform + optionally skewed points (skew_frac of points in
-    one tiny hot cell — validates salting/AQE skew handling)."""
-    import pandas as pd
-
-    rng = np.random.default_rng(seed + 1)
-    n_hot = int(n_points * skew_frac)
-    lon = rng.uniform(0.0, 4.0, n_points)
-    lat = rng.uniform(40.0, 44.0, n_points)
-    if n_hot:
-        lon[:n_hot] = rng.uniform(1.0, 1.01, n_hot)
-        lat[:n_hot] = rng.uniform(41.0, 41.01, n_hot)
-    return spark.createDataFrame(
-        pd.DataFrame({"q_id": [f"q{i}" for i in range(n_points)], "lat": lat, "lon": lon})
-    )
-
-
 def tiles_df(spark: SparkSession, n_tiles: int = 12, size: int = 65, seed: int = 42,
              partitions: int | None = None) -> DataFrame:
-    """Distributed generation: spec rows -> mapInPandas -> tile rows."""
-    import pandas as pd
-
-    spec = spark.range(n_tiles).withColumnRenamed("id", "idx")
-    if partitions:
-        spec = spec.repartition(partitions)
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_tile_row(int(i), size, seed) for i in pdf["idx"]]
-            yield pd.DataFrame(rows)
-
-    return spec.mapInPandas(gen, schema=TILES_SCHEMA)
+    """Distributed seeded elevation tiles (``make_tile_row``)."""
+    return _generated(spark, n_tiles, lambda i: make_tile_row(i, size, seed), partitions)
 
 
 def crater_heightfield(idx: int, n: int, seed: int = 42) -> np.ndarray:
@@ -470,35 +400,13 @@ def crater_heightfield(idx: int, n: int, seed: int = 42) -> np.ndarray:
 
 
 def make_crater_tile_row(idx: int, n: int, seed: int = 42) -> dict:
-    lat, lon, k = tile_key(idx)
-    image_id = f"n{lat:02d}e{lon:03d}_{k}"
-    fmt = FMTS[idx % len(FMTS)]
-    grid = crater_heightfield(idx, n, seed)
-    return {
-        "image_id": image_id,
-        "bytes": codecs.encode(grid, fmt),
-        "w": n,
-        "h": n,
-        "fmt": fmt,
-        "caption": f"crater tile {image_id} seed{seed}",
-        "phash": codecs.phash64(grid),
-    }
+    return _tile_row(idx, crater_heightfield(idx, n, seed), seed, "crater tile")
 
 
 def crater_tiles_df(spark: SparkSession, n_tiles: int = 6, size: int = 33,
                     seed: int = 42) -> DataFrame:
     """input_hint-shaped tiles over ``crater_heightfield``."""
-    import pandas as pd
-
-    spec = spark.range(n_tiles).withColumnRenamed("id", "idx")
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [make_crater_tile_row(int(i), size, seed)
-                    for i in pdf["idx"]]
-            yield pd.DataFrame(rows)
-
-    return spec.mapInPandas(gen, schema=TILES_SCHEMA)
+    return _generated(spark, n_tiles, lambda i: make_crater_tile_row(i, size, seed))
 
 
 # ------------------------------------------------------------------ mosaic
@@ -610,18 +518,9 @@ def mosaic_tile_rows(
                 continue
             tile = g[r * (size - 1) : r * (size - 1) + size,
                      c * (size - 1) : c * (size - 1) + size]
-            lat, lon = lat0 + (ny - 1 - r), lon0 + c
-            image_id = tile_id(lat, lon, "0")
-            fmt = MOSAIC_FMTS[(r * nx + c) % len(MOSAIC_FMTS)]
-            rows.append({
-                "image_id": image_id,
-                "bytes": codecs.encode(tile, fmt),
-                "w": size,
-                "h": size,
-                "fmt": fmt,
-                "caption": f"mosaic tile {image_id} seed{seed}",
-                "phash": codecs.phash64(tile),
-            })
+            image_id = tile_id(lat0 + (ny - 1 - r), lon0 + c, "0")
+            rows.append(_grid_row(image_id, tile, MOSAIC_FMTS[(r * nx + c) % len(MOSAIC_FMTS)],
+                                  f"mosaic tile {image_id} seed{seed}"))
     return rows
 
 

@@ -102,11 +102,12 @@ def test_long_chain_merges_into_one_line(spark):
 
 
 def test_repeat_calls_hold_one_cached_relation(spark):
-    """Each call releases the previous call's cached polylines: after
-    two calls on different chains the cross_tile scope holds one
-    relation, and the second call adds one persisted RDD fewer than
-    the first did (the first call's polylines are gone). Both results
-    stay referenced, so no RDD of theirs is garbage-collected."""
+    """Each call releases the previous call's cached polylines and
+    component labels: after two calls on different chains the
+    cross_tile and dedup scopes hold one relation each, and the second
+    call adds two persisted RDDs fewer than the first did (the first
+    call's polylines and labels are gone). Both results stay
+    referenced, so no RDD of theirs is garbage-collected."""
     from hgt2osm2_spark.cache import scope
 
     def persisted():
@@ -118,8 +119,8 @@ def test_repeat_calls_hold_one_cached_relation(spark):
     one = len(persisted() - before)
     second = cross_tile.stitch_across_tiles(_chain(spark, 4))
     assert [r["n_parts"] for r in second.collect()] == [4]
-    assert len(scope("cross_tile")) == 1
-    assert len(persisted() - before) == 2 * one - 1
+    assert len(scope("cross_tile")) == len(scope("dedup")) == 1
+    assert len(persisted() - before) == 2 * one - 2
 
 
 def test_too_few_rounds_raise(spark):

@@ -483,6 +483,31 @@ def test_near_dup_components_long_path(spark):
     assert not persisted() - before
 
 
+def test_near_dup_components_releases_labels(spark):
+    """The returned labels are a localCheckpoint held in the dedup
+    cache scope: the next call drops them, and cache.release_all()
+    leaves no persisted RDD of either call."""
+    import pandas as pd
+
+    from hgt2osm2_spark import cache
+    from hgt2osm2_spark.ops import dedup
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    df = spark.createDataFrame(pd.DataFrame({"id_a": [1, 2, 7], "id_b": [2, 3, 8]}))
+    before = persisted()
+    labels = [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+    assert sorted(dedup.near_dup_components(df).collect()) == labels
+    held = persisted() - before
+    assert len(held) == 1
+    assert sorted(dedup.near_dup_components(df).collect()) == labels
+    now = persisted() - before
+    assert len(now) == 1 and not now & held
+    cache.release_all()
+    assert not persisted() - before
+
+
 def test_near_dup_components_vs_union_find(spark):
     """Label-propagation CC must equal a scalar union-find twin,
     including a long path (diameter > 1 round) and isolated pairs."""

@@ -1,11 +1,27 @@
 """PIP and kNN joins vs brute-force NumPy oracles."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from hgt2osm2_spark.ops import spatial
-from hgt2osm2_spark.sources.synthetic import polygons_df, query_points_df
+from hgt2osm2_spark.sources.synthetic import polygons_df
+
+
+def query_points_df(spark, n_points=2000, seed=42, skew_frac=0.0):
+    """Seeded uniform + optionally skewed points (skew_frac of points in
+    one tiny hot cell — validates salting/AQE skew handling)."""
+    rng = np.random.default_rng(seed + 1)
+    n_hot = int(n_points * skew_frac)
+    lon = rng.uniform(0.0, 4.0, n_points)
+    lat = rng.uniform(40.0, 44.0, n_points)
+    if n_hot:
+        lon[:n_hot] = rng.uniform(1.0, 1.01, n_hot)
+        lat[:n_hot] = rng.uniform(41.0, 41.01, n_hot)
+    return spark.createDataFrame(
+        pd.DataFrame({"q_id": [f"q{i}" for i in range(n_points)], "lat": lat, "lon": lon})
+    )
 
 
 def _pip_oracle(pts, polys):

@@ -1,20 +1,24 @@
-"""The per-row payload map (ops/tiles.row_map) and the per-tile map on
-it (tile_map) under every operator over the five tile columns: a batch
-whose tiles emit no rows yields nothing and still collects with the
-declared columns, and a batch mixing such tiles with a real one gives
-exactly the rows of each tile run alone. The payload operators run on
-no other Python row loop."""
+"""The per-row map (ops/tiles.row_map) and the per-tile map on it
+(tile_map) under every operator built on them: an input whose rows
+emit nothing, or no input row at all, yields nothing and still
+collects with the declared columns, and one Arrow batch of many rows
+gives exactly the rows of each row run alone. No package module runs
+a Python row loop of its own; only three kernels that compute across
+a batch's rows keep their own map call."""
 
 import ast
 import pathlib
 from collections import Counter
+from functools import partial
 
 import numpy as np
 import pytest
+from pyspark.sql import SparkSession
 
 from hgt2osm2_spark.kernels import codecs
 from hgt2osm2_spark.ops import (
-    contours, decorations, mosaic, multimodal, pyramid, terrain, zonal,
+    clip, contours, decorations, mosaic, multimodal, pyramid, rasterize,
+    terrain, text, tokenizer, zonal,
 )
 from hgt2osm2_spark.ops.tiles import parse_tile_id
 from hgt2osm2_spark.sinks import rasters
@@ -83,15 +87,13 @@ def _synthetic():
     return {c: row[c] for c in ("image_id", "bytes", "w", "h", "fmt")}
 
 
-def _rows(spark, op, tile_rows, one_tile_batches=False):
-    """The op's rows over one partition of `tile_rows`: one Arrow batch
-    of them all, or (one_tile_batches) one batch per tile, which is
-    each tile run alone."""
-    tiles = spark.createDataFrame(tile_rows, TILE_DDL).coalesce(1)
-    out = OPS[op](tiles)
+def _rows(spark, out, one_row_batches=False):
+    """The rows of `out`, an operator over a one-partition input,
+    collected in one Arrow batch of them all or (one_row_batches) in
+    one batch per input row, which is each row run alone."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
-    spark.conf.set(key, "1" if one_tile_batches else old)
+    spark.conf.set(key, "1" if one_row_batches else old)
     try:
         got = out.collect()
         if not got:
@@ -101,17 +103,91 @@ def _rows(spark, op, tile_rows, one_tile_batches=False):
     return Counter(repr(tuple(r)) for r in got)
 
 
+def _tile_rows(spark, op, tile_rows, one_tile_batches=False):
+    return _rows(spark, OPS[op](spark.createDataFrame(tile_rows, TILE_DDL).coalesce(1)),
+                 one_tile_batches)
+
+
 @pytest.mark.parametrize("case", ["rowless", "mixed"])
 @pytest.mark.parametrize("op", sorted(OPS))
 def test_tile_map_batches(spark, op, case):
     tiles = _rowless() + ([_synthetic()] if case == "mixed" else [])
-    got = _rows(spark, op, tiles)
-    assert got == _rows(spark, op, tiles, one_tile_batches=True)
+    got = _tile_rows(spark, op, tiles)
+    assert got == _tile_rows(spark, op, tiles, one_tile_batches=True)
     if case == "mixed":
         assert got
     if op not in EMIT_PER_TILE:  # the two odd tiles emit nothing
         assert got == (Counter() if case == "rowless"
-                       else _rows(spark, op, [_synthetic()]))
+                       else _tile_rows(spark, op, [_synthetic()]))
+
+
+def _frame(spark, ddl, rows, n):
+    """The first n of `rows` as one partition of a `ddl` frame."""
+    return spark.createDataFrame(rows[:n], ddl).coalesce(1)
+
+
+DOCS = ("doc_id long, text string", [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "fox"),
+    (3, ""),
+    (4, "a dog, a fox and the brown lazy dog again"),
+])
+SUBWORDS = tokenizer.TokenizerModel(pieces=(
+    ("the", False), ("fox", False), ("do", False), ("g", True),
+    ("a", False), ("brown", False), ("la", False), ("zy", True),
+))
+POLYGONS = ("poly_id string, xs array<double>, ys array<double>", [
+    ("sq", [0.5, 2.5, 2.5, 0.5, 0.5], [40.5, 40.5, 42.5, 42.5, 40.5]),
+    ("tri", [1.0, 3.5, 1.0, 1.0], [41.0, 41.0, 43.5, 41.0]),
+    ("far", [10.0, 11.0, 11.0, 10.0], [10.0, 10.0, 11.0, 10.0]),
+])
+#: post-production rows: a zig-zag crossing the clip window twice, a
+#: closed ring inside it, a dropped polyline and one wholly outside
+POST = ("image_id string, level int, poly_ord int, xs array<double>, "
+        "ys array<double>, closed boolean, kept boolean, grid_w int, grid_h int", [
+    ("n40e000_0", 100, 0, [0.0, 10.0, 20.0, 30.0, 40.0], [0.0, 20.0, 0.0, 20.0, 0.0],
+     False, True, 33, 33),
+    ("n40e000_0", 120, 1, [5.0, 9.0, 9.0, 5.0, 5.0], [5.0, 5.0, 9.0, 9.0, 5.0],
+     True, True, 33, 33),
+    ("n41e001_0", 100, 0, [1.0, 2.0, 3.0], [1.0, 2.0, 1.0], False, False, 33, 33),
+    ("n41e001_0", 140, 2, [30.0, 32.0], [30.0, 31.0], False, True, 33, 33),
+])
+
+#: every row_map operator off the tile columns: build(spark, n) runs it
+#: over an input of n rows (n = 0: none) and n is its case's size
+ROW_OPS = {
+    "images_df": (lambda spark, n: synthetic.images_df(spark, n, 33), 6),
+    "audio_df": (lambda spark, n: synthetic.audio_df(spark, n), 6),
+    "gifs_df": (lambda spark, n: synthetic.gifs_df(spark, n, 33), 3),
+    "webps_df": (lambda spark, n: synthetic.webps_df(spark, n, 33), 3),
+    "videos_df": (lambda spark, n: synthetic.videos_df(spark, n, n_frames=6), 4),
+    "mp4s_df": (lambda spark, n: synthetic.mp4s_df(spark, n, n_frames=6), 3),
+    "tiles_df": (lambda spark, n: synthetic.tiles_df(spark, n, 33), 6),
+    "crater_tiles_df": (lambda spark, n: synthetic.crater_tiles_df(spark, n, 33), 6),
+    "fingerprint": (lambda spark, n: text.fingerprint(_frame(spark, *DOCS, n)), 4),
+    "subword_tokens": (lambda spark, n: tokenizer.subword_tokens(
+        _frame(spark, *DOCS, n), SUBWORDS), 4),
+    "rasterize_polygons": (lambda spark, n: rasterize.rasterize_polygons(
+        _frame(spark, *POLYGONS, n), 40.0, 0.0, 16, 0.25), 3),
+    "clip_polylines": (lambda spark, n: clip.clip_polylines(
+        _frame(spark, *POST, n), 4.0, 4.0, 30.0, 12.0), 4),
+    "polyline_geometry": (lambda spark, n: contours.polyline_geometry(
+        _frame(spark, *POST, n)), 4),
+    "extract_contour_segments_banded": (lambda spark, n: (
+        contours.extract_contour_segments_banded(
+            synthetic.tiles_df(spark, n, 33), band_rows=8, shuffle_partitions=1)), 2),
+}
+
+
+@pytest.mark.parametrize("op", sorted(ROW_OPS))
+def test_row_map_batches(spark, op, monkeypatch):
+    """Inputs are one partition: coalesce(1) frames, and a range() of
+    one slice under the synthetic generators."""
+    monkeypatch.setattr(spark, "range", partial(SparkSession.range, spark, numPartitions=1))
+    build, n = ROW_OPS[op]
+    got = _rows(spark, build(spark, n))
+    assert got and got == _rows(spark, build(spark, n), one_row_batches=True)
+    assert _rows(spark, build(spark, 0)) == Counter()
 
 
 def test_parse_tile_id():
@@ -121,18 +197,40 @@ def test_parse_tile_id():
     assert mosaic.parse_tile_id is parse_tile_id
 
 
-def _map_calls(module: str) -> int:
-    """mapInPandas/mapInArrow calls in one package module."""
-    path = pathlib.Path(__file__).parent.parent / "hgt2osm2_spark" / module
-    return sum(isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
-               and n.func.attr in ("mapInPandas", "mapInArrow")
-               for n in ast.walk(ast.parse(path.read_text())))
+PACKAGE = pathlib.Path(__file__).parent.parent / "hgt2osm2_spark"
+
+#: the package's only mapInPandas/mapInArrow calls, by (module,
+#: enclosing function), each with the reason it is not a row_map body
+MAP_CALLS = {
+    ("ops/tiles.py", "row_map"): "the one per-row Python loop",
+    ("ops/dedup.py", "minhash_signatures"):
+        "one _minhash_batch over all of a batch's shingles",
+    ("ops/dedup.py", "simhash_sketch"):
+        "one FNV-1a pass and bit-plane prefix sum over all of a batch's tokens",
+    ("ops/contours.py", "postprocess_polylines"):
+        "run_polylines_batch over the flattened batch (one C call)",
+}
+
+
+def _map_calls(path: pathlib.Path) -> Counter:
+    """mapInPandas/mapInArrow calls in one module, by the top-level
+    function that holds them."""
+    calls = Counter()
+    for top in ast.parse(path.read_text()).body:
+        for n in ast.walk(top):
+            if (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                    and n.func.attr in ("mapInPandas", "mapInArrow")):
+                calls[getattr(top, "name", "<module>")] += 1
+    return calls
 
 
 def test_payload_operators_share_one_row_loop():
-    """The scan, crop, image, audio and video operators are bodies for
-    row_map/tile_map: their modules hold no row loop of their own, and
-    ops/tiles.py holds the one."""
-    for module in ("ops/multimodal.py", "ops/crop.py", "sources/decode.py"):
-        assert _map_calls(module) == 0, module
-    assert _map_calls("ops/tiles.py") == 1
+    """Every per-row operator of the package is a row_map/tile_map
+    body: the only map calls are row_map's and the three cross-row
+    kernels' (streaming's applyInPandasWithState is no map call)."""
+    found = Counter()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        module = path.relative_to(PACKAGE).as_posix()
+        for fn, k in _map_calls(path).items():
+            found[(module, fn)] += k
+    assert found == Counter(dict.fromkeys(MAP_CALLS, 1))
