@@ -5,8 +5,11 @@ Three formats, matching the `fmt` column of the input table
 
   'hgt'  big-endian int16 raw, row-major north->south — the SRTM HGT
          layout the reference scans (/root/reference/HGTReader.cs:111-166).
-  'png'  real PNG (public spec, RFC 2083): 16-bit grayscale, zlib,
-         filter 0 only. Lossless; values stored offset by +32768.
+  'png'  real PNG (public spec, RFC 2083): 16-bit grayscale, zlib.
+         Lossless; values stored offset by +32768. The encoder writes
+         filter 0; the decoder reads every scanline filter, through
+         the one PNG reader (_png_scanlines) that the RGB8 decoder
+         shares.
   'jpg'  STAND-IN LOSSY CODEC ("DJPG"). Real JPEG libs (PIL/cv2) are not
          in this container, so this is a deterministic 8x8 block-DCT
          quantizing codec implemented in NumPy. It exercises the same
@@ -115,26 +118,10 @@ def encode_png16(grid: np.ndarray) -> bytes:
 
 
 def decode_png16(data: bytes) -> np.ndarray:
-    if data[:8] != _PNG_SIG:
-        raise ValueError("not a PNG")
-    pos, idat, w, h, bitdepth, colortype = 8, b"", 0, 0, 0, 0
-    while pos < len(data):
-        (length,) = struct.unpack_from(">I", data, pos)
-        tag = data[pos + 4 : pos + 8]
-        payload = data[pos + 8 : pos + 8 + length]
-        pos += 12 + length
-        if tag == b"IHDR":
-            w, h, bitdepth, colortype = struct.unpack_from(">IIBB", payload)
-        elif tag == b"IDAT":
-            idat += payload
-        elif tag == b"IEND":
-            break
-    if (bitdepth, colortype) != (16, 0):
-        raise NotImplementedError("decoder handles 16-bit grayscale only")
-    raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8).reshape(h, 1 + 2 * w)
-    if np.any(raw[:, 0] != 0):
-        raise NotImplementedError("only filter type 0 scanlines supported")
-    u16 = raw[:, 1:].reshape(h, w, 2).astype(np.uint16)
+    """16-bit grayscale PNG -> int16 grid (the +32768 offset undone)."""
+    raw = _png_scanlines(data, 16, 0)
+    h, w = raw.shape[0], raw.shape[1] // 2
+    u16 = raw.reshape(h, w, 2).astype(np.uint16)
     vals = (u16[:, :, 0].astype(np.int32) << 8) | u16[:, :, 1]
     return (vals - 32768).astype(np.int16)
 
@@ -156,19 +143,56 @@ def encode_png_rgb8(img: np.ndarray) -> bytes:
     )
 
 
+#: bytes per pixel of each (bitdepth, colortype) the reader decodes:
+#: 16-bit grayscale and 8-bit truecolor
+_PNG_BPP = {(16, 0): 2, (8, 2): 3}
+
+
+def _png_scanlines(data: bytes, bitdepth: int, colortype: int) -> np.ndarray:
+    """The one PNG reader: walk the chunks, check the image is
+    (bitdepth, colortype) and non-interlaced, inflate the IDAT stream
+    and unfilter it. Returns the (h, w * bpp) uint8 pixel bytes."""
+    if data[:8] != _PNG_SIG:
+        raise ValueError("not a PNG")
+    pos, idat, head = 8, [], (0, 0, 0, 0, 0, 0, 0)
+    while pos < len(data):
+        (length,) = struct.unpack_from(">I", data, pos)
+        tag = data[pos + 4 : pos + 8]
+        payload = data[pos + 8 : pos + 8 + length]
+        pos += 12 + length
+        if tag == b"IHDR":
+            head = struct.unpack_from(">IIBBBBB", payload)
+        elif tag == b"IDAT":
+            idat.append(payload)
+        elif tag == b"IEND":
+            break
+    w, h, depth, ctype, _comp, _filt, interlace = head
+    if (depth, ctype) != (bitdepth, colortype):
+        raise NotImplementedError(
+            f"expected a PNG of bit depth {bitdepth} and colour type "
+            f"{colortype}, got {depth} and {ctype}")
+    if interlace:
+        raise NotImplementedError("Adam7 interlace not supported")
+    bpp = _PNG_BPP[(bitdepth, colortype)]
+    return _unfilter_scanlines(zlib.decompress(b"".join(idat)), h, bpp * w, bpp)
+
+
 def _unfilter_scanlines(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray:
     """PNG scanline unfiltering, all five standard filter types
-    (None/Sub/Up/Average/Paeth — RFC 2083 §6). The filter-0/2 paths are
-    vectorized; Sub/Average/Paeth carry a per-byte dependency and run
+    (None/Sub/Up/Average/Paeth — RFC 2083 §6). Input whose every
+    scanline is filter 0 (what encode_png16/encode_png_rgb8 write)
+    unfilters in one vectorized copy; otherwise Up runs vectorized per
+    row, and Sub/Average/Paeth carry a per-byte dependency and run
     scalar (they only appear in foreign-encoded files)."""
-    out = np.zeros((h, stride), dtype=np.uint8)
     arr = np.frombuffer(raw, dtype=np.uint8)
+    lines = arr[: h * (1 + stride)].reshape(h, 1 + stride)
+    if not lines[:, 0].any():
+        return lines[:, 1:].copy()
+    out = np.zeros((h, stride), dtype=np.uint8)
     prev = np.zeros(stride, dtype=np.int32)
-    pos = 0
     for y in range(h):
-        f = int(arr[pos])
-        line = arr[pos + 1 : pos + 1 + stride].astype(np.int32)
-        pos += 1 + stride
+        f = int(lines[y, 0])
+        line = lines[y, 1:].astype(np.int32)
         if f == 0:
             cur = line
         elif f == 2:  # Up
@@ -202,28 +226,8 @@ def _unfilter_scanlines(raw: bytes, h: int, stride: int, bpp: int) -> np.ndarray
 def decode_png_rgb8(data: bytes) -> np.ndarray:
     """Real RGB8 PNG decoder (stdlib zlib + NumPy): 8-bit truecolor,
     non-interlaced, any scanline filter. Returns (h, w, 3) uint8."""
-    if data[:8] != _PNG_SIG:
-        raise ValueError("not a PNG")
-    pos, idat, w, h, bitdepth, colortype, interlace = 8, b"", 0, 0, 0, 0, 0
-    while pos < len(data):
-        (length,) = struct.unpack_from(">I", data, pos)
-        tag = data[pos + 4 : pos + 8]
-        payload = data[pos + 8 : pos + 8 + length]
-        pos += 12 + length
-        if tag == b"IHDR":
-            w, h, bitdepth, colortype, _comp, _filt, interlace = struct.unpack_from(
-                ">IIBBBBB", payload
-            )
-        elif tag == b"IDAT":
-            idat += payload
-        elif tag == b"IEND":
-            break
-    if (bitdepth, colortype) != (8, 2):
-        raise NotImplementedError("decode_png_rgb8 handles 8-bit RGB only")
-    if interlace:
-        raise NotImplementedError("Adam7 interlace not supported")
-    raw = zlib.decompress(idat)
-    return _unfilter_scanlines(raw, h, 3 * w, 3).reshape(h, w, 3)
+    raw = _png_scanlines(data, 8, 2)
+    return raw.reshape(raw.shape[0], raw.shape[1] // 3, 3)
 
 
 def rgb_to_gray_i16(img: np.ndarray) -> np.ndarray:
@@ -244,6 +248,22 @@ def _dct_matrix(n: int = 8) -> np.ndarray:
 
 
 _DCT8 = _dct_matrix(8)
+
+
+def _pad_to(plane: np.ndarray, mh: int, mw: int) -> np.ndarray:
+    """Edge-replicate pad so dims become multiples of (mh, mw)."""
+    h, w = plane.shape
+    ph = (h + mh - 1) // mh * mh
+    pw = (w + mw - 1) // mw * mw
+    if ph == h and pw == w:
+        return plane
+    out = np.empty((ph, pw), dtype=plane.dtype)
+    out[:h, :w] = plane
+    out[h:, :w] = plane[h - 1:h, :]
+    out[:, w:] = out[:, w - 1:w]
+    return out
+
+
 #: luminance-style quantization ramp (flat-ish to keep PSNR>=40dB)
 _QBASE = 1.0 + 0.5 * (np.arange(8)[:, None] + np.arange(8)[None, :]).astype(np.float64)
 
@@ -264,12 +284,8 @@ def encode_djpg(grid: np.ndarray, quality: int = 90) -> bytes:
     if mask.any():
         g = g.copy()
         g[mask] = 0.0
-    ph = (h + 7) // 8 * 8
-    pw = (w + 7) // 8 * 8
-    pad = np.zeros((ph, pw))
-    pad[:h, :w] = g
-    pad[h:, :w] = g[h - 1 : h, :]  # edge-replicate padding
-    pad[:, w:] = pad[:, w - 1 : w]
+    pad = _pad_to(g, 8, 8)
+    ph, pw = pad.shape
     blocks = pad.reshape(ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3)
     coef = np.einsum("ij,abjk,lk->abil", _DCT8, blocks, _DCT8)
     scale = max(1e-3, (100.0 - quality) / 25.0 + 0.08)

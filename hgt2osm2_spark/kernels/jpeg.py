@@ -25,7 +25,8 @@ ops/multimodal.py (Arrow-batched decode/resize) — this file is
 deliberately framework-free so the golden twins can call it directly.
 
 Implementation notes:
-- DCT-II via the orthonormal 8x8 matrix: M @ block @ M.T equals the
+- DCT-II via the orthonormal 8x8 matrix (codecs._DCT8, the basis the
+  DJPG stand-in uses too): M @ block @ M.T equals the
   spec's 0.25*C(u)*C(v) double-cosine sum exactly, so quantized
   coefficients match a by-the-book implementation.
 - The encoder emits canonical Huffman tables with uniform code
@@ -42,6 +43,8 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+
+from .codecs import _DCT8, _pad_to
 
 # ------------------------------------------------------------- tables
 
@@ -86,17 +89,6 @@ _ZZ = _zigzag_coords()
 ZIGZAG = np.array([r * 8 + c for r, c in _ZZ], dtype=np.int64)
 #: inverse: zigzag position of each flat index
 UNZIGZAG = np.argsort(ZIGZAG)
-
-
-def _dct_matrix() -> np.ndarray:
-    k = np.arange(8)[:, None]
-    i = np.arange(8)[None, :]
-    m = np.cos((2 * i + 1) * k * np.pi / 16.0) * np.sqrt(2.0 / 8.0)
-    m[0, :] = np.sqrt(1.0 / 8.0)
-    return m
-
-
-_M = _dct_matrix()
 
 
 def scale_qtable(base: np.ndarray, quality: int) -> np.ndarray:
@@ -182,23 +174,9 @@ def _fdct_quant(plane: np.ndarray, qtab: np.ndarray) -> np.ndarray:
     coefficient blocks (H//8, W//8, 8, 8)."""
     h, w = plane.shape
     blocks = plane.reshape(h // 8, 8, w // 8, 8).transpose(0, 2, 1, 3) - 128.0
-    coef = np.einsum("ij,abjk,lk->abil", _M, blocks, _M)
+    coef = np.einsum("ij,abjk,lk->abil", _DCT8, blocks, _DCT8)
     q = np.rint(coef / qtab).astype(np.int32)
     return np.clip(q, -1023, 1023)
-
-
-def _pad_to(plane: np.ndarray, mh: int, mw: int) -> np.ndarray:
-    """Edge-replicate pad so dims become multiples of (mh, mw)."""
-    h, w = plane.shape
-    ph = (h + mh - 1) // mh * mh
-    pw = (w + mw - 1) // mw * mw
-    if ph == h and pw == w:
-        return plane
-    out = np.empty((ph, pw), dtype=plane.dtype)
-    out[:h, :w] = plane
-    out[h:, :w] = plane[h - 1:h, :]
-    out[:, w:] = out[:, w - 1:w]
-    return out
 
 
 def _encode_block(bw: _BitWriter, blk: np.ndarray, pred: int) -> int:
@@ -541,7 +519,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     for c in comps:
         q = qtabs[c["tq"]]
         coef = c["planes"] * q                     # (BY, BX, 8, 8)
-        sp = np.einsum("ji,abjk,kl->abil", _M, coef, _M) + 128.0
+        sp = np.einsum("ji,abjk,kl->abil", _DCT8, coef, _DCT8) + 128.0
         by, bx = sp.shape[:2]
         plane = sp.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)
         plane = np.clip(np.rint(plane), 0, 255)

@@ -230,43 +230,26 @@ def stitch_polylines(segments: DataFrame, shuffle_partitions: int | None = None)
 _CACHES = _cache_scope("contours")
 
 
-def _canonical_polyline(xs: np.ndarray, ys: np.ndarray) -> tuple[np.ndarray, np.ndarray, bool]:
-    """Orientation/rotation-canonical form of one polyline: closed loops
-    rotate to start at the lexicographically smallest (x, y) vertex and
-    run toward the smaller neighbor; open chains run from the smaller
-    endpoint. Pure relabeling — vertex VALUES are untouched, so the
-    canonical form is engine- and decomposition-invariant
-    (property-pinned in test_salted_stitch). Assumes the ring visits no
-    vertex twice — true for marching-squares isolines (degree <= 2
-    paths); a duplicated minimum vertex would make the rotation anchor
-    depend on input order."""
-    closed = bool(len(xs) > 1 and xs[0] == xs[-1] and ys[0] == ys[-1])
-    if closed:
-        cx, cy = xs[:-1], ys[:-1]
-        n = len(cx)
-        keys = np.lexsort((cy, cx))
-        k = int(keys[0])
-        nxt, prv = (k + 1) % n, (k - 1) % n
-        fwd = (cx[nxt], cy[nxt]) <= (cx[prv], cy[prv])
-        idx = (np.arange(n) * (1 if fwd else -1) + k) % n
-        ox, oy = cx[idx], cy[idx]
-        ox, oy = np.append(ox, ox[0]), np.append(oy, oy[0])
-        return ox, oy, True
-    if (xs[0], ys[0]) > (xs[-1], ys[-1]):
-        return xs[::-1].copy(), ys[::-1].copy(), False
-    return xs.copy(), ys.copy(), False
-
-
 def _canonical_batch(
     xs: np.ndarray, ys: np.ndarray, offs: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """_canonical_polyline over a FLAT chain batch (values xs/ys, chain
-    i spans offs[i]:offs[i+1]) without a per-chain Python loop — the
+    """Orientation/rotation-canonical form of a FLAT chain batch (values
+    xs/ys, chain i spans offs[i]:offs[i+1]): closed loops rotate to
+    start at the lexicographically smallest (x, y) vertex and run
+    toward the smaller neighbor; open chains run from the smaller
+    endpoint. Pure relabeling — vertex VALUES are untouched, so the
+    canonical form is engine- and decomposition-invariant. Assumes no
+    ring visits a vertex twice — true for marching-squares isolines
+    (degree <= 2 paths); a duplicated minimum vertex would make the
+    rotation anchor depend on input order.
+
+    It runs without a per-chain Python loop — the
     r7 stage-1 hot-path fix: a checkerboard-hot band yields ~20k+ tiny
     chains per task and the per-chain canonicalize/dict tail cost 3x
     the C stitch itself. Returns (out_xs, out_ys, out_offs, closed):
     same flat layout, canonical orientation/rotation, bit-identical to
-    the scalar twin (property-pinned in test_salted_stitch).
+    the scalar twin in tests/polyline_twins.py (property-pinned in
+    test_salted_stitch).
 
     Vectorization scheme: per-chain argmin of the lexicographic (x, y)
     ring vertex via two minimum.reduceat passes (unique by the
@@ -356,15 +339,11 @@ _CHAINS_SCHEMA = T.StructType(
 )
 
 
-def _stitch_band(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-    image_id, level, _band = key
-    # flat-array fast path (r7): a hot checkerboard band yields
-    # ~20k+ tiny chains per task, and the old per-chain
-    # canonicalize + dict + tolist tail cost 3x the C stitch
-    # itself. The group key pins the level, so every stitched
-    # chain is this level — no filter loop needed.
-    _lvls, offs, fx, fy = _stitch_frame(pdf)
-    ox, oy, oo, cl = _canonical_batch(fx, fy, offs)
+def _chains_frame(image_id: str, level, xs: np.ndarray, ys: np.ndarray,
+                  offs: np.ndarray) -> pd.DataFrame:
+    """One (image_id, level)'s flat chains (chain i spans
+    offs[i]:offs[i+1]) -> _CHAINS_SCHEMA rows in canonical form."""
+    ox, oy, oo, cl = _canonical_batch(xs, ys, offs)
     nc = len(oo) - 1
     if nc == 0:
         # r8 (ADVICE r7 #2): np.split(ox, oo[1:-1]) on zero chains
@@ -382,6 +361,17 @@ def _stitch_band(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         "ys": pd.Series(np.split(oy, oo[1:-1]), dtype=object),
         "closed": cl,
     }, columns=[f.name for f in _CHAINS_SCHEMA.fields])
+
+
+def _stitch_band(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+    image_id, level, _band = key
+    # flat-array fast path (r7): a hot checkerboard band yields
+    # ~20k+ tiny chains per task, and the old per-chain
+    # canonicalize + dict + tolist tail cost 3x the C stitch
+    # itself. The group key pins the level, so every stitched
+    # chain is this level — no filter loop needed.
+    _lvls, offs, fx, fy = _stitch_frame(pdf)
+    return _chains_frame(image_id, level, fx, fy, offs)
 
 
 def salted_stitch_polylines(
@@ -463,19 +453,14 @@ def salted_stitch_polylines(
                 out_y += list(py[1:])
                 used[i] = True
 
-        rows = []
+        chains = []
         # seed at free (degree-1) endpoints first: true open chains
         for i, (xs, ys) in enumerate(pieces):
             for side in (0, -1):
                 if used[i]:
                     break
                 if len(inc[(xs[side], ys[side])]) == 1:
-                    ox, oy = walk(i, side)
-                    cx, cy, closed = _canonical_polyline(
-                        np.asarray(ox), np.asarray(oy))
-                    rows.append({"image_id": image_id, "level": int(level),
-                                 "xs": cx.tolist(), "ys": cy.tolist(),
-                                 "closed": closed})
+                    chains.append(walk(i, side))
                     break
         # leftovers are cycles assembled entirely from open pieces
         # (a loop that crossed band boundaries on both sides)
@@ -484,12 +469,12 @@ def salted_stitch_polylines(
                 ox, oy = walk(i, 0)
                 if (ox[0], oy[0]) != (ox[-1], oy[-1]):
                     ox.append(ox[0]); oy.append(oy[0])
-                cx, cy, closed = _canonical_polyline(
-                    np.asarray(ox), np.asarray(oy))
-                rows.append({"image_id": image_id, "level": int(level),
-                             "xs": cx.tolist(), "ys": cy.tolist(),
-                             "closed": closed})
-        return pd.DataFrame(rows, columns=[f.name for f in _CHAINS_SCHEMA.fields])
+                chains.append((ox, oy))
+        offs = np.zeros(len(chains) + 1, np.int64)
+        offs[1:] = np.cumsum([len(ox) for ox, _ in chains])
+        fx = np.array([v for ox, _ in chains for v in ox], np.float64)
+        fy = np.array([v for _, oy in chains for v in oy], np.float64)
+        return _chains_frame(image_id, level, fx, fy, offs)
 
     merged = open_chains.groupBy("image_id", "level").applyInPandas(
         merge_open, schema=_CHAINS_SCHEMA
@@ -586,7 +571,6 @@ def auto_stitch_polylines(
 
 def postprocess_polylines(
     polylines: DataFrame, tiles_dims: DataFrame, opt: ContourOptions | None = None,
-    strict_reference: bool = True,
 ) -> DataFrame:
     """Stage 5 (F6-F10 + K5). tiles_dims: (image_id, w) — broadcast to
     provide the edge width 1/Width (ContourProcessor2.cs:1534)."""
@@ -612,7 +596,7 @@ def postprocess_polylines(
             fy = np.concatenate(ys_rows) if ys_rows else np.empty(0)
             edges = 1.0 / pdf["w"].to_numpy(dtype=np.float64)
             oxs, oys, ooff, status, n_unn, n_dp = postprocess.run_polylines_batch(
-                fx, fy, off, minpt, minbox, edges, dp, strict_reference
+                fx, fy, off, minpt, minbox, edges, dp
             )
             out = []
             for i, r in enumerate(pdf.itertuples(index=False)):
@@ -639,7 +623,7 @@ def postprocess_polylines(
     return joined.mapInPandas(post, schema=POST_SCHEMA)
 
 
-def _tile_polylines(grid: np.ndarray, opt: ContourOptions, strict_reference: bool):
+def _tile_polylines(grid: np.ndarray, opt: ContourOptions):
     """The fused paths' one per-tile chain: march, stitch and post one
     decoded tile. Yields, per polyline in stitching order (levels
     ascending), (level, poly_ord, xs, ys, closed, status, n_unn,
@@ -652,7 +636,7 @@ def _tile_polylines(grid: np.ndarray, opt: ContourOptions, strict_reference: boo
     lvls, offs, fx, fy = stitch.stitch_tile_arrays(seg)
     oxs, oys, ooff, status, n_unn, n_dp = postprocess.run_polylines_batch(
         fx, fy, offs, opt.min_vertice_points, opt.min_bounding_box,
-        1.0 / grid.shape[1], opt.douglas_peucker, strict_reference,
+        1.0 / grid.shape[1], opt.douglas_peucker,
     )
     poly_ord, prev_lv = 0, None
     for i, lv in enumerate(lvls.tolist()):
@@ -668,9 +652,7 @@ def _tile_polylines(grid: np.ndarray, opt: ContourOptions, strict_reference: boo
                int(status[i]), int(n_unn[i]), int(n_dp[i]))
 
 
-def extract_stitch_post_fused(
-    tiles: DataFrame, opt: ContourOptions | None = None, strict_reference: bool = True
-) -> DataFrame:
+def extract_stitch_post_fused(tiles: DataFrame, opt: ContourOptions | None = None) -> DataFrame:
     """Fused fast path: stages 1-5 in ONE tile_map pass per tile.
 
     Semantically identical to extract -> stitch -> post (tested), but
@@ -692,7 +674,7 @@ def extract_stitch_post_fused(
             (img, lv, po, xs.tolist(), ys.tolist(), closed, status == 0,
              postprocess.STATUS_REASONS[status], n_unn, n_dp, w, h)
             for lv, po, xs, ys, closed, status, n_unn, n_dp
-            in _tile_polylines(grid, opt, strict_reference)
+            in _tile_polylines(grid, opt)
         ], columns=cols)
 
     return tile_map(tiles, POST_SCHEMA, body)
@@ -710,9 +692,7 @@ NODES_SCHEMA = T.StructType(
 )
 
 
-def fused_tile_nodes(
-    tiles: DataFrame, opt: ContourOptions | None = None, strict_reference: bool = True
-) -> DataFrame:
+def fused_tile_nodes(tiles: DataFrame, opt: ContourOptions | None = None) -> DataFrame:
     """tiles -> OSM node rows in ONE narrow map (stages 1-6, no shuffle).
 
     ID assignment happens inside the per-tile pass with plain counters —
@@ -731,9 +711,7 @@ def fused_tile_nodes(
         lat0, lon0, _k = parse_tile_id(img)
         node_id = tile_first_id(lat0, lon0)
         out = []
-        for lv, po, xs, ys, _closed, status, _n_unn, _n_dp in _tile_polylines(
-            grid, opt, strict_reference
-        ):
+        for lv, po, xs, ys, _closed, status, _n_unn, _n_dp in _tile_polylines(grid, opt):
             if status != 0:
                 continue
             for x, y in zip(xs.tolist(), ys.tolist()):

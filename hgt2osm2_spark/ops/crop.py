@@ -21,7 +21,7 @@ import numpy as np
 from pyspark.sql import DataFrame, types as T
 
 from ..kernels import codecs
-from .tiles import TILE_COLS, parse_tile_id, row_map
+from .tiles import TILE_COLS, TILES_SCHEMA, parse_tile_id, row_map
 
 
 def crop_grid(
@@ -61,14 +61,8 @@ def degree_window_to_index(
 
 
 CROP_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("bytes", T.BinaryType(), False),
-        T.StructField("w", T.IntegerType(), False),
-        T.StructField("h", T.IntegerType(), False),
-        T.StructField("fmt", T.StringType(), False),
-        T.StructField("caption", T.StringType(), False),
-        T.StructField("phash", T.LongType(), False),
+    TILES_SCHEMA.fields
+    + [
         T.StructField("minimum", T.IntegerType(), False),
         T.StructField("maximum", T.IntegerType(), False),
         T.StructField("not_valid", T.LongType(), False),

@@ -36,11 +36,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..cache import scope as _cache_scope
-from .dedup import MAX_ROUNDS, near_dup_components
+from .dedup import MAX_ROUNDS, _components
 from .ids import with_tile_key
 
-#: the cached degree-space polylines of the previous call; released on
-#: the next call (or via cache.release_all)
+#: the cached degree-space polylines and the component labels of the
+#: previous call; released on the next call (or via cache.release_all)
 _CACHES = _cache_scope("cross_tile")
 
 MERGED_SCHEMA = T.StructType(
@@ -75,9 +75,9 @@ def stitch_across_tiles(post_kept: DataFrame, max_iters: int = MAX_ROUNDS) -> Da
     one row per geographic contour component (singletons included).
     Raises RuntimeError when a component needs more than max_iters
     propagation rounds (a line of more than max_iters pieces). The
-    result reads the labels near_dup_components holds, so it cannot be
-    read after the next near_dup_components call (this operator's
-    included) or cache.release_all."""
+    result reads component labels held in this operator's cache scope,
+    so it stays readable until the next stitch_across_tiles call or
+    cache.release_all, whatever other operators run in between."""
     _CACHES.release()
     pl = _CACHES.hold(_degree_polylines(post_kept).cache())
 
@@ -111,7 +111,7 @@ def stitch_across_tiles(post_kept: DataFrame, max_iters: int = MAX_ROUNDS) -> Da
         & (F.col("pid_a") < F.col("pid_b"))
         & (F.col("t_a") != F.col("t_b")),
     )
-    comps = near_dup_components(edges, "pid_a", "pid_b", max_iters)
+    comps = _components(edges, "pid_a", "pid_b", max_iters, _CACHES)
     grouped = pl.join(comps.withColumnRenamed("id", "pid"), "pid", "left").withColumn(
         "comp", F.coalesce("component_id", "pid")
     )

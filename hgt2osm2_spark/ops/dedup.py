@@ -22,7 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W, functions as F, types as T
 
-from ..cache import scope as _cache_scope
+from ..cache import CacheScope, scope as _cache_scope
 from ..fanout import fan_out
 
 
@@ -66,6 +66,14 @@ def word_ngrams(df: DataFrame, n: int = 3, text_col: str = "text", id_col: str =
     )
 
 
+#: the intermediates the pair operators (ngram_jaccard_pairs,
+#: minhash_lsh_pairs, simhash_near_pairs) cached last; released on the
+#: next pair-operator call (or via cache.release_all). Not the "dedup"
+#: scope: near_dup_components releases that first, and dedup_clusters
+#: runs it on ngram_jaccard_pairs' lazy pairs, which read this cache.
+_PAIR_CACHES = _cache_scope("dedup_pairs")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame, n: int = 3, threshold: float = 0.8,
     text_col: str = "text", id_col: str = "doc_id",
@@ -81,7 +89,8 @@ def ngram_jaccard_pairs(
     jaccard values stay exact — only pairs that share NOTHING but
     capped grams can be missed (documented approximation; None = off,
     the exact verify path). MinHash LSH remains the primary scale path."""
-    g = word_ngrams(df, n, text_col, id_col).cache()
+    _PAIR_CACHES.release()
+    g = _PAIR_CACHES.hold(word_ngrams(df, n, text_col, id_col).cache())
     sizes = g.groupBy("id").agg(F.count("*").alias("n_grams"))
     gj = g
     if max_doc_freq is not None:
@@ -257,7 +266,8 @@ def minhash_lsh_pairs(
     exactly the old pair set."""
     assert k % bands == 0
     rows_per_band = k // bands
-    sig = minhash_signatures(df, k, shingle, seed, text_col, id_col).cache()
+    _PAIR_CACHES.release()
+    sig = _PAIR_CACHES.hold(minhash_signatures(df, k, shingle, seed, text_col, id_col).cache())
     sig.count()  # materialize: accurate stats drive the attach-join strategy
 
     banded = sig.select(
@@ -427,15 +437,14 @@ def simhash_sketch(
 def hamming_near_pairs(
     sketches: DataFrame, max_hamming: int = 3,
     id_col: str = "id", sketch_col: str = "sketch",
-    n_bands: int | None = None,
 ) -> DataFrame:
     """Pairs within a hamming ball over ANY 64-bit sketch column
-    (simhash, phash, ...): split the word into n_bands contiguous
-    bit-bands (default max_hamming+1 — by pigeonhole, two words within
-    hamming <= max_hamming agree exactly on at least one band), band
-    equi-join for candidates, exact popcount verify.
+    (simhash, phash, ...): split the word into max_hamming+1 contiguous
+    bit-bands (by pigeonhole, two words within hamming <= max_hamming
+    agree exactly on at least one band), band equi-join for
+    candidates, exact popcount verify.
     Returns (id_a, id_b, hamming)."""
-    n_bands = n_bands or (max_hamming + 1)
+    n_bands = max_hamming + 1
     base, extra = divmod(64, n_bands)
     widths = [base + (1 if i < extra else 0) for i in range(n_bands)]
     offs = [sum(widths[:i]) for i in range(n_bands)]
@@ -476,7 +485,8 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3, **kw) -> DataFrame:
     recall is FULL for any max_hamming), verified exactly. (ADVICE r3:
     a fixed 4-band split only guaranteed recall for hamming <= 3 and
     silently lost pairs at larger radii.)"""
-    sk = simhash_sketch(df, **kw).cache()
+    _PAIR_CACHES.release()
+    sk = _PAIR_CACHES.hold(simhash_sketch(df, **kw).cache())
     return hamming_near_pairs(
         sk, max_hamming, id_col="id", sketch_col="simhash"
     )
@@ -518,6 +528,14 @@ def near_dup_components(
     where component_id = min node id reachable (so the representative
     doc is first-wins, matching exact_dedup's keep-smallest rule)."""
     _CACHES.release()
+    return _components(pairs, id_a, id_b, max_iters, _CACHES)
+
+
+def _components(pairs: DataFrame, id_a: str, id_b: str, max_iters: int,
+                held: CacheScope) -> DataFrame:
+    """near_dup_components' label loop, with the returned labels'
+    checkpoint held in `held` (cross_tile holds them in its own scope,
+    so a stitch result outlives other families' calls)."""
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -549,12 +567,12 @@ def near_dup_components(
                 )
                 .localCheckpoint(eager=True)
             )
-            _CACHES.drop(prev)
+            held.drop(prev)
             if labels.filter("moved").limit(1).count() == 0:
-                return _CACHES.hold(labels).select("id", F.col("comp").alias("component_id"))
+                return held.hold(labels).select("id", F.col("comp").alias("component_id"))
     finally:
         edges.unpersist(blocking=False)
-    _CACHES.drop(labels)
+    held.drop(labels)
     raise RuntimeError(
         f"near_dup_components: no convergence in {max_iters} rounds "
         "(graph diameter exceeds the bound) — raise max_iters"

@@ -78,14 +78,10 @@ def point_store_ids(points: DataFrame, x: str = "x", y: str = "y",
     first occurrence of a point claims the next ID; duplicates resolve
     to the same ID via the join back. The dense sequence needs a global
     row_number (single-task sort) — fine for its decoration use-case;
-    scale users partition first (the reference's store is per-tile)."""
-    firsts = (
-        points.groupBy(x, y)
-        .agg(F.min(ord_col).alias("_first") if ord_col else F.min(F.lit(0)).alias("_first"))
-    )
-    w = W.orderBy(F.col("_first").asc(), F.col(x).asc(), F.col(y).asc())
-    ids_df = firsts.withColumn("pseudo_id", -F.row_number().over(w).cast("long")).drop("_first")
-    return points.join(ids_df, [x, y])
+    scale users partition first (the reference's store is per-tile).
+    It is point_store_ids_per_tile over one constant tile key."""
+    one_tile = points.withColumn("_tile", F.lit(0))
+    return point_store_ids_per_tile(one_tile, "_tile", x, y, ord_col).drop("_tile")
 
 
 def point_store_ids_per_tile(

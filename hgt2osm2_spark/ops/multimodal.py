@@ -32,7 +32,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernels import codecs
-from .tiles import TILE_COLS, row_map, tile_map
+from .tiles import TILE_COLS, TILES_SCHEMA, row_map, tile_map
 
 #: entropy-coded bitstreams (mp3 hybrid filterbank, h264 CABAC/CAVLC)
 #: with no feasible stdlib-only decoder: every operator here refuses
@@ -153,15 +153,7 @@ def phash_near_dup(images: DataFrame, max_hamming: int = 10,
     return hamming_near_pairs(sk, max_hamming)
 
 
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("bytes", T.BinaryType(), False),
-        T.StructField("w", T.IntegerType(), False),
-        T.StructField("h", T.IntegerType(), False),
-        T.StructField("fmt", T.StringType(), False),
-    ]
-)
+RESIZE_SCHEMA = T.StructType([TILES_SCHEMA[c] for c in TILE_COLS])
 
 
 def resize_tiles(tiles: DataFrame, factor: int = 2) -> DataFrame:

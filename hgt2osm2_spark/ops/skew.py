@@ -28,14 +28,20 @@ import math
 from pyspark.sql import Column, DataFrame, functions as F
 
 
+def _salted(df: DataFrame, n_salt: int, salt_src: str | Column | None) -> DataFrame:
+    """df plus a ``_salt`` column in [0, n_salt): a hash of salt_src
+    (a column name or expr), or of all columns when it is None."""
+    src = F.col(salt_src) if isinstance(salt_src, str) else salt_src
+    h = F.hash(*[F.col(c) for c in df.columns]) if src is None else F.hash(src)
+    return df.withColumn("_salt", F.pmod(h, F.lit(n_salt)))
+
+
 def salted_repartition(df: DataFrame, n_partitions: int, *keys: str, n_salt: int = 16,
                        salt_src: str | Column | None = None) -> DataFrame:
     """Repartition on (keys..., salt) so one hot key spreads over
     ``n_salt`` partitions. salt_src: any stable column/expr to derive
     the salt from (defaults to a hash of all columns)."""
-    src = F.col(salt_src) if isinstance(salt_src, str) else salt_src
-    h = F.hash(*[F.col(c) for c in df.columns]) if src is None else F.hash(src)
-    d = df.withColumn("_salt", F.pmod(h, F.lit(n_salt)))
+    d = _salted(df, n_salt, salt_src)
     return d.repartition(n_partitions, *keys, "_salt").drop("_salt")
 
 
@@ -55,10 +61,7 @@ def salted_agg(
         partial: [F.count('*').alias('n'), F.sum('v').alias('s')]
         final:   [F.sum('n').alias('n'),  F.sum('s').alias('s')]
     """
-    src = F.col(salt_src) if isinstance(salt_src, str) else salt_src
-    h = F.hash(*[F.col(c) for c in df.columns]) if src is None else F.hash(src)
-    d = df.withColumn("_salt", F.pmod(h, F.lit(n_salt)))
-    part = d.groupBy(*group_cols, "_salt").agg(*partial_aggs)
+    part = _salted(df, n_salt, salt_src).groupBy(*group_cols, "_salt").agg(*partial_aggs)
     return part.groupBy(*group_cols).agg(*final_aggs)
 
 

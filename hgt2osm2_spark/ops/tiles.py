@@ -45,6 +45,19 @@ def cell_columns(grid: np.ndarray) -> dict:
 #: the input_hint columns a tile decodes from
 TILE_COLS = ("image_id", "bytes", "w", "h", "fmt")
 
+#: the input_hint tiles table: the TILE_COLS, then caption and phash
+TILES_SCHEMA = T.StructType(
+    [
+        T.StructField("image_id", T.StringType(), False),
+        T.StructField("bytes", T.BinaryType(), False),
+        T.StructField("w", T.IntegerType(), False),
+        T.StructField("h", T.IntegerType(), False),
+        T.StructField("fmt", T.StringType(), False),
+        T.StructField("caption", T.StringType(), False),
+        T.StructField("phash", T.LongType(), False),
+    ]
+)
+
 
 def decode_tile(data, w, h, fmt) -> np.ndarray:
     """One tile row's (bytes, w, h, fmt) values -> its grid; bytes()

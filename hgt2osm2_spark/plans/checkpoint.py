@@ -203,7 +203,6 @@ def run_checkpointed(
     tiles: DataFrame,
     root: str,
     opt: ContourOptions | None = None,
-    strict_reference: bool = True,
     shuffle_partitions: int | None = None,
     stop_after: str | None = None,
     auto_salt: bool = False,
@@ -304,7 +303,7 @@ def run_checkpointed(
     if n:
         pl = store.load_stage("polylines", p)
         store.commit_stage(
-            contours.postprocess_polylines(pl, dims, opt, strict_reference), "post", run_id,
+            contours.postprocess_polylines(pl, dims, opt), "post", run_id,
             pending_ids=p.select("image_id"),
         )
     if stop_after == "post":

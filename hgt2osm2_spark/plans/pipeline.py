@@ -35,7 +35,6 @@ class ContourResult:
 def run_contour_pipeline(
     tiles: DataFrame,
     opt: ContourOptions | None = None,
-    strict_reference: bool = True,
     shuffle_partitions: int | None = None,
     fused: bool = True,
     band_rows: "int | str | None" = "auto",
@@ -83,7 +82,7 @@ def run_contour_pipeline(
         fused = False
     if fused:
         segments = polylines = None
-        post = contours.extract_stitch_post_fused(tiles, opt, strict_reference)
+        post = contours.extract_stitch_post_fused(tiles, opt)
     else:
         segments = (
             contours.extract_contour_segments_banded(
@@ -93,7 +92,7 @@ def run_contour_pipeline(
             else contours.extract_contour_segments(tiles, opt)
         )
         polylines = contours.stitch_polylines(segments, shuffle_partitions)
-        post = contours.postprocess_polylines(polylines, dims, opt, strict_reference)
+        post = contours.postprocess_polylines(polylines, dims, opt)
     metrics = contours.postprocess_metrics(post)
 
     kept = post.filter("kept")

@@ -21,7 +21,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..kernels import codecs
-from ..ops.tiles import TILE_COLS, row_map
+from ..ops.tiles import TILE_COLS, TILES_SCHEMA, row_map
 
 STATS_SCHEMA = T.StructType(
     [
@@ -128,18 +128,6 @@ def scan_hgt_dir(tiles_spark, path: str) -> DataFrame:
         .filter(F.col("tile_key") != "")
     )
 
-    out_schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("bytes", T.BinaryType(), False),
-            T.StructField("w", T.IntegerType(), False),
-            T.StructField("h", T.IntegerType(), False),
-            T.StructField("fmt", T.StringType(), False),
-            T.StructField("caption", T.StringType(), False),
-            T.StructField("phash", T.LongType(), False),
-        ]
-    )
-
     def finish(key, fmt, data):
         data = bytes(data)
         if fmt == "hgt.zip":
@@ -151,4 +139,4 @@ def scan_hgt_dir(tiles_spark, path: str) -> DataFrame:
         return (key.lower(), data, w, h, fmt, f"hgt scan {key.lower()}",
                 codecs.phash64(grid))
 
-    return row_map(bf, ("tile_key", "fmt", "bytes"), out_schema, finish)
+    return row_map(bf, ("tile_key", "fmt", "bytes"), TILES_SCHEMA, finish)

@@ -17,24 +17,12 @@ from __future__ import annotations
 from operator import itemgetter
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import DataFrame, SparkSession
 
 from ..kernels import codecs
-from ..ops.tiles import row_map
+from ..ops.tiles import TILES_SCHEMA, row_map
 
 FMTS = ("hgt", "png", "jpg")
-
-TILES_SCHEMA = T.StructType(
-    [
-        T.StructField("image_id", T.StringType(), False),
-        T.StructField("bytes", T.BinaryType(), False),
-        T.StructField("w", T.IntegerType(), False),
-        T.StructField("h", T.IntegerType(), False),
-        T.StructField("fmt", T.StringType(), False),
-        T.StructField("caption", T.StringType(), False),
-        T.StructField("phash", T.LongType(), False),
-    ]
-)
 
 
 def _generated(spark: SparkSession, n: int, row, partitions: int | None = None) -> DataFrame:
@@ -381,16 +369,24 @@ def crater_heightfield(idx: int, n: int, seed: int = 42) -> np.ndarray:
     untouched, so each is a genuine closed sink the fill must raise
     to its spill elevation. Deterministic in (idx, n, seed) only;
     NOVALUE holes are preserved."""
-    g = heightfield(idx, n, seed)
-    nv = int(codecs.NOVALUE)
-    valid = g != nv
-    out = g.astype(np.int64)
     rng = np.random.default_rng(np.uint64(seed * 7_000_003 + idx))
-    yy, xx = np.mgrid[0:n, 0:n].astype(np.float64)
+    bowls = []
     for _ in range(3):
         cy, cx = rng.uniform(0.15, 0.85, 2) * (n - 1)
         r = rng.uniform(0.08, 0.2) * n
-        depth = rng.uniform(120, 400)
+        bowls.append((cy, cx, r, rng.uniform(120, 400)))
+    return _carve(heightfield(idx, n, seed), bowls)
+
+
+def _carve(g: np.ndarray, bowls) -> np.ndarray:
+    """Subtract tapered bowls (cy, cx, r, depth) from the valid cells
+    of g: each cell within r of a centre drops by rint(depth * (1 -
+    d^2/r^2)). Clipped to +/-32000; NOVALUE cells are kept."""
+    nv = int(codecs.NOVALUE)
+    valid = g != nv
+    out = g.astype(np.int64)
+    yy, xx = np.mgrid[0:g.shape[0], 0:g.shape[1]].astype(np.float64)
+    for cy, cx, r, depth in bowls:
         d2 = ((xx - cx) ** 2 + (yy - cy) ** 2) / (r * r)
         dz = np.rint(depth * np.maximum(1.0 - d2, 0.0)).astype(np.int64)
         out -= np.where(valid, dz, 0)
@@ -452,10 +448,8 @@ def crater_mosaic_heightfield(nx: int, ny: int, size: int,
     iteration converges across tiles. NOVALUE patches and the
     mosaic-wide tilt of the base generator are preserved."""
     g = mosaic_heightfield(nx, ny, size, seed)
-    nv = int(codecs.NOVALUE)
-    valid = g != nv
-    out = g.astype(np.int64)
-    gh, gw = out.shape
+    valid = g != codecs.NOVALUE
+    gh, gw = g.shape
     rng = np.random.default_rng(np.uint64(seed * 9_000_019 + nx * 17 + ny))
     yy, xx = np.mgrid[0:gh, 0:gw].astype(np.float64)
 
@@ -483,14 +477,7 @@ def crater_mosaic_heightfield(nx: int, ny: int, size: int,
         centers.append((cy, cx, r))
     centers.append((0.3 * (gh - 1), 0.7 * (gw - 1),
                     rng.uniform(0.12, 0.2) * size))  # in-tile bowl
-    for cy, cx, r in centers:
-        depth = rng.uniform(250, 500)
-        d2 = ((xx - cx) ** 2 + (yy - cy) ** 2) / (r * r)
-        dz = np.rint(depth * np.maximum(1.0 - d2, 0.0)).astype(np.int64)
-        out -= np.where(valid, dz, 0)
-    out = np.clip(out, -32000, 32000).astype(np.int16)
-    out[~valid] = nv
-    return out
+    return _carve(g, [(cy, cx, r, rng.uniform(250, 500)) for cy, cx, r in centers])
 
 
 MOSAIC_FMTS = ("hgt", "png")  # lossless only: seams must match bit-exactly

@@ -126,10 +126,10 @@ def test_scan_hgt_dir_binaryfile(spark, tmp_path):
 
 
 def test_png_rgb8_roundtrip_and_foreign_filters():
-    """Real RGB8 PNG codec: lossless roundtrip (PSNR = inf >= 40 dB) and
-    correct decoding of FOREIGN-encoded files using every scanline
-    filter type (Sub/Up/Average/Paeth), which our own encoder never
-    emits."""
+    """Real PNG codecs, RGB8 and 16-bit grayscale through the one PNG
+    reader: lossless roundtrip (PSNR = inf >= 40 dB) and correct
+    decoding of FOREIGN-encoded files using every scanline filter type
+    (Sub/Up/Average/Paeth), which our own encoders never emit."""
     import struct
     import zlib
 
@@ -138,55 +138,61 @@ def test_png_rgb8_roundtrip_and_foreign_filters():
     from hgt2osm2_spark.kernels import codecs
 
     rng = np.random.default_rng(3)
-    img = rng.integers(0, 256, (23, 17, 3)).astype(np.uint8)
+    h, w = 23, 17
+    rgb = rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
+    grey = rng.integers(-32768, 32768, (h, w)).astype(np.int16)
+    u16 = (grey.astype(np.int32) + 32768).astype(">u2").view(np.uint8)
+    kinds = [  # (image, encode, decode, bit depth, colour type, bpp, pixel bytes)
+        (rgb, codecs.encode_png_rgb8, codecs.decode_png_rgb8, 8, 2, 3, rgb),
+        (grey, codecs.encode_png16, codecs.decode_png16, 16, 0, 2, u16),
+    ]
+    for img, encode, decode, bitdepth, colortype, bpp, pixels in kinds:
+        # own-encoder roundtrip: bit-exact
+        assert np.array_equal(decode(encode(img)), img)
 
-    # own-encoder roundtrip: bit-exact
-    out = codecs.decode_png_rgb8(codecs.encode_png_rgb8(img))
-    assert np.array_equal(out, img)
+        # foreign encoder applying filter type (y % 5) per scanline
+        stride = bpp * w
+        flat = pixels.reshape(h, stride).astype(np.int32)
+        raw = bytearray()
+        prev = np.zeros(stride, dtype=np.int32)
+        for y in range(h):
+            f = y % 5
+            cur = flat[y]
+            line = cur.copy()
+            for x in range(stride):
+                a = cur[x - bpp] if x >= bpp else 0
+                b = prev[x]
+                c = prev[x - bpp] if x >= bpp else 0
+                if f == 1:
+                    line[x] = (cur[x] - a) & 0xFF
+                elif f == 2:
+                    line[x] = (cur[x] - b) & 0xFF
+                elif f == 3:
+                    line[x] = (cur[x] - ((a + b) >> 1)) & 0xFF
+                elif f == 4:
+                    p = a + b - c
+                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+                    line[x] = (cur[x] - pred) & 0xFF
+            raw.append(f)
+            raw.extend(line.astype(np.uint8).tobytes())
+            prev = cur
 
-    # foreign encoder applying filter type (y % 5) per scanline
-    h, w, _ = img.shape
-    stride = 3 * w
-    flat = img.reshape(h, stride).astype(np.int32)
-    raw = bytearray()
-    prev = np.zeros(stride, dtype=np.int32)
-    for y in range(h):
-        f = y % 5
-        cur = flat[y]
-        line = cur.copy()
-        for x in range(stride):
-            a = cur[x - 3] if x >= 3 else 0
-            b = prev[x]
-            c = prev[x - 3] if x >= 3 else 0
-            if f == 1:
-                line[x] = (cur[x] - a) & 0xFF
-            elif f == 2:
-                line[x] = (cur[x] - b) & 0xFF
-            elif f == 3:
-                line[x] = (cur[x] - ((a + b) >> 1)) & 0xFF
-            elif f == 4:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[x] = (cur[x] - pred) & 0xFF
-        raw.append(f)
-        raw.extend(line.astype(np.uint8).tobytes())
-        prev = cur
+        def chunk(tag, payload):
+            return (struct.pack(">I", len(payload)) + tag + payload
+                    + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF))
 
-    def chunk(tag, payload):
-        return (struct.pack(">I", len(payload)) + tag + payload
-                + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF))
-
-    foreign = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(bytes(raw), 9))
-        + chunk(b"IEND", b"")
-    )
-    assert np.array_equal(codecs.decode_png_rgb8(foreign), img)
+        ihdr = struct.pack(">IIBBBBB", w, h, bitdepth, colortype, 0, 0, 0)
+        foreign = (
+            b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", ihdr)
+            + chunk(b"IDAT", zlib.compress(bytes(raw), 9))
+            + chunk(b"IEND", b"")
+        )
+        assert np.array_equal(decode(foreign), img), bitdepth
 
     # luma view is deterministic and in range
-    gray = codecs.rgb_to_gray_i16(img)
+    gray = codecs.rgb_to_gray_i16(rgb)
     assert gray.shape == (h, w) and gray.min() >= 0 and gray.max() <= 255
 
 
@@ -219,3 +225,47 @@ def test_multimodal_png_rgb_end_to_end(spark):
         img.reshape(8, 2, 8, 2, 3).astype(np.float64).mean(axis=(1, 3))
     ).astype(np.uint8)
     assert np.array_equal(dec, want)
+
+
+def test_dct_codecs_and_craters_pinned():
+    """The DJPG stand-in and the baseline JPEG encoder share one 8x8
+    DCT basis and edge pad (codecs._DCT8, codecs._pad_to), and both
+    crater generators one carve: their bytes are pinned by sha256 —
+    DJPG on 20 seeded grids (most not multiples of 8), JPEG gray and
+    RGB (4:4:4 and 4:2:0) on 10 seeded images, and the crater arrays
+    at their gate sizes (crater_tiles_df's six 33^2 tiles, the 2x2
+    crater mosaic of 33^2 tiles)."""
+    import hashlib
+
+    from hgt2osm2_spark.kernels import jpeg
+    from hgt2osm2_spark.sources import synthetic
+
+    djpg, shapes = hashlib.sha256(), []
+    for s in range(20):
+        rng = np.random.default_rng(s)
+        h, w = (int(v) for v in rng.integers(1, 41, 2))
+        g = rng.integers(-500, 3000, (h, w)).astype(np.int16)
+        if s % 4 == 0:
+            g[rng.random((h, w)) < 0.1] = NOVALUE
+        djpg.update(codecs.encode_djpg(g))
+        shapes.append((h, w))
+    assert sum(h % 8 != 0 or w % 8 != 0 for h, w in shapes) > 10
+    assert djpg.hexdigest() == (
+        "3ce55c221af49c8a2ff3485d38d893b0d4c21f0acf491de88d8c968c4d62bbbe")
+
+    jpg = hashlib.sha256()
+    for s in range(10):
+        rng = np.random.default_rng(100 + s)
+        h, w = (int(v) for v in rng.integers(1, 40, 2))
+        img = rng.integers(0, 256, (h, w, 3)).astype(np.uint8)
+        jpg.update(jpeg.encode_jpeg_gray8(img[:, :, 0], quality=90))
+        jpg.update(jpeg.encode_jpeg_rgb8(img, quality=90, subsample=s % 2 == 1))
+    assert jpg.hexdigest() == (
+        "f4856c9e96f81563d789cad18ad783f1af48f1fb971b628b29b53bfa25f961ce")
+
+    craters = hashlib.sha256()
+    for idx in range(6):
+        craters.update(synthetic.crater_heightfield(idx, 33).tobytes())
+    craters.update(synthetic.crater_mosaic_heightfield(2, 2, 33, seed=7).tobytes())
+    assert craters.hexdigest() == (
+        "f13920f6e49d57e1c40a6f3fee568c0df980d56e8248afc3217924b1a9a28538")

@@ -104,10 +104,11 @@ def test_long_chain_merges_into_one_line(spark):
 def test_repeat_calls_hold_one_cached_relation(spark):
     """Each call releases the previous call's cached polylines and
     component labels: after two calls on different chains the
-    cross_tile and dedup scopes hold one relation each, and the second
-    call adds two persisted RDDs fewer than the first did (the first
-    call's polylines and labels are gone). Both results stay
-    referenced, so no RDD of theirs is garbage-collected."""
+    cross_tile scope holds the second call's two relations (the labels
+    are held in cross_tile's own scope, not in dedup's), and
+    the second call adds two persisted RDDs fewer than the first did
+    (the first call's polylines and labels are gone). Both results
+    stay referenced, so no RDD of theirs is garbage-collected."""
     from hgt2osm2_spark.cache import scope
 
     def persisted():
@@ -119,8 +120,22 @@ def test_repeat_calls_hold_one_cached_relation(spark):
     one = len(persisted() - before)
     second = cross_tile.stitch_across_tiles(_chain(spark, 4))
     assert [r["n_parts"] for r in second.collect()] == [4]
-    assert len(scope("cross_tile")) == len(scope("dedup")) == 1
+    assert len(scope("cross_tile")) == 2
     assert len(persisted() - before) == 2 * one - 2
+
+
+def test_result_survives_other_component_calls(spark):
+    """A stitch result reads labels held in the cross_tile scope, so a
+    later near_dup_components call on another graph (the dedup_clusters
+    query's step) does not release them: the first result still
+    collects afterwards."""
+    from hgt2osm2_spark.ops import dedup
+
+    first = cross_tile.stitch_across_tiles(_chain(spark, 3))
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long")
+    comps = {r["id"]: r["component_id"] for r in dedup.near_dup_components(pairs).collect()}
+    assert comps == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+    assert [r["n_parts"] for r in first.collect()] == [3]
 
 
 def test_too_few_rounds_raise(spark):

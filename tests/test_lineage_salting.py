@@ -14,12 +14,13 @@ from hgt2osm2_spark.config import ContourOptions
 from hgt2osm2_spark.ops import contours
 from hgt2osm2_spark.plans.checkpoint import CheckpointStore, run_checkpointed
 from hgt2osm2_spark.sources import synthetic
+from tests.polyline_twins import canonical_polyline
 
 
 def _canon_set(rows):
     out = set()
     for r in rows:
-        xs, ys, closed = contours._canonical_polyline(
+        xs, ys, closed = canonical_polyline(
             np.asarray(r["xs"], np.float64), np.asarray(r["ys"], np.float64))
         out.add((r["image_id"], r["level"], closed,
                  tuple(xs.tolist()), tuple(ys.tolist())))

@@ -15,6 +15,7 @@ import pytest
 from hgt2osm2_spark.kernels import codecs
 from hgt2osm2_spark.ops import contours
 from hgt2osm2_spark.sources.synthetic import tiles_df
+from tests.polyline_twins import canonical_polyline
 
 
 def _skewed_tile_df(spark, n=65):
@@ -42,7 +43,7 @@ def _skewed_tile_df(spark, n=65):
 def _canon_set(rows):
     out = []
     for r in rows:
-        xs, ys, closed = contours._canonical_polyline(
+        xs, ys, closed = canonical_polyline(
             np.asarray(r["xs"], np.float64), np.asarray(r["ys"], np.float64)
         )
         out.append((r["level"], closed, tuple(xs.tolist()), tuple(ys.tolist())))
@@ -139,7 +140,7 @@ def test_auto_stitch_consumes_lineage_counts(spark):
 
 
 def test_canonical_polyline_is_representation_invariant():
-    """_canonical_polyline must be a true canonical form: any rotation
+    """canonical_polyline must be a true canonical form: any rotation
     (closed) or reversal (either) of the same polyline canonicalizes to
     the identical vertex sequence — the property the salted-stitch SET
     contract rests on."""
@@ -149,13 +150,13 @@ def test_canonical_polyline_is_representation_invariant():
         xs = rng.uniform(-5, 5, n).round(3)
         ys = rng.uniform(-5, 5, n).round(3)
         # open chain: reversal-invariant
-        a = contours._canonical_polyline(xs, ys)
-        b = contours._canonical_polyline(xs[::-1].copy(), ys[::-1].copy())
+        a = canonical_polyline(xs, ys)
+        b = canonical_polyline(xs[::-1].copy(), ys[::-1].copy())
         assert (a[0].tolist(), a[1].tolist(), a[2]) == \
                (b[0].tolist(), b[1].tolist(), b[2])
         # closed ring: rotation- and reversal-invariant
         cx, cy = np.append(xs, xs[0]), np.append(ys, ys[0])
-        ref = contours._canonical_polyline(cx, cy)
+        ref = canonical_polyline(cx, cy)
         assert ref[2] is True
         for k in range(1, n):
             rx = np.append(np.roll(xs, k), np.roll(xs, k)[0])
@@ -163,9 +164,37 @@ def test_canonical_polyline_is_representation_invariant():
             for flip in (False, True):
                 tx = rx[::-1].copy() if flip else rx
                 ty = ry[::-1].copy() if flip else ry
-                got = contours._canonical_polyline(tx, ty)
+                got = canonical_polyline(tx, ty)
                 assert (got[0].tolist(), got[1].tolist()) == \
                        (ref[0].tolist(), ref[1].tolist()), (k, flip)
+
+
+def test_canonical_batch_matches_scalar_twin():
+    """contours._canonical_batch (the salted stitch's only
+    canonicalizer, band and merge stages alike) equals the scalar twin
+    chain by chain on random batches of open chains and closed rings,
+    degenerate one- and two-point chains included."""
+    rng = np.random.default_rng(11)
+    for _ in range(40):
+        chains = []
+        for _ in range(int(rng.integers(0, 9))):
+            n = int(rng.integers(1, 10))
+            xs = rng.uniform(-5, 5, n).round(2)
+            ys = rng.uniform(-5, 5, n).round(2)
+            if n > 2 and rng.random() < 0.5:
+                xs, ys = np.append(xs, xs[0]), np.append(ys, ys[0])
+            chains.append((xs, ys))
+        offs = np.zeros(len(chains) + 1, np.int64)
+        offs[1:] = np.cumsum([len(xs) for xs, _ in chains])
+        fx = np.concatenate([xs for xs, _ in chains] or [np.empty(0)])
+        fy = np.concatenate([ys for _, ys in chains] or [np.empty(0)])
+        ox, oy, oo, closed = contours._canonical_batch(fx, fy, offs)
+        assert oo.tolist() == offs.tolist()
+        for i, (xs, ys) in enumerate(chains):
+            cx, cy, cl = canonical_polyline(xs, ys)
+            s, e = oo[i], oo[i + 1]
+            assert ox[s:e].tolist() == cx.tolist() and oy[s:e].tolist() == cy.tolist()
+            assert bool(closed[i]) == cl
 
 
 def test_rank_poly_ord_tie_guard_raises(spark):

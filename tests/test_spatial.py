@@ -135,13 +135,10 @@ def test_knn_telemetry_clustered(spark):
         "lat": 40.0 + rng.random(20) * 3.9,
         "lon": 0.0 + rng.random(20) * 3.9,
     })
-    seen = []
     out = spatial.knn_join(
         spark.createDataFrame(pts), spark.createDataFrame(qs), k=3, res=6,
-        metrics_sink=seen.append,
     ).toPandas()
     m = spatial.LAST_KNN_METRICS
-    assert seen and seen[0] == m
     assert m["n_queries"] == 20
     assert m["n_settled"] + m["n_fallback"] == 20
     assert m["n_fallback"] > 0  # the clustered set MUST hit the fallback

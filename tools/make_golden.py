@@ -2167,9 +2167,9 @@ def g_salted_stitch():
     stitch's contract is set-equality with plain stitching under
     canonical orientation plus a purely geometric poly_ord rank
     (x0, y0, n_pts, x1, y1) — all reproducible here with the scalar
-    stitcher + ops.contours._canonical_polyline (pure numpy), no band
-    decomposition needed."""
-    from hgt2osm2_spark.ops.contours import _canonical_polyline
+    stitcher + the scalar canonical form of tests/polyline_twins.py
+    (pure numpy), no band decomposition needed."""
+    from tests.polyline_twins import canonical_polyline
 
     opt = ContourOptions()
     rows = []
@@ -2183,7 +2183,7 @@ def g_salted_stitch():
             for pts in bags[level]:
                 xs = np.asarray([p[0] for p in pts], np.float64)
                 ys = np.asarray([p[1] for p in pts], np.float64)
-                cx, cy, closed = _canonical_polyline(xs, ys)
+                cx, cy, closed = canonical_polyline(xs, ys)
                 polys.append((cx, cy, closed))
             polys.sort(key=lambda t: (t[0][0], t[1][0], len(t[0]),
                                       t[0][1], t[1][1]))
