@@ -2063,6 +2063,7 @@ def q_stream_contour_nodes(spark, sf_dir):
     import tempfile
 
     from hgt2osm2_spark.ops.contours import fused_tile_nodes
+    from hgt2osm2_spark.streaming.ingest import stream_tiles, write_nodes_stream
 
     rows = (
         _synth_tiles(spark, n_tiles=6, size=33)
@@ -2078,22 +2079,9 @@ def q_stream_contour_nodes(spark, sf_dir):
         rows.iloc[lo:hi].to_parquet(path)
         os.utime(path, (1_700_000_000 + i * 100,) * 2)
 
-    stream = (
-        spark.readStream.schema(
-            "image_id string, bytes binary, w long, h long, fmt string, "
-            "caption string, phash long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        fused_tile_nodes(stream, ContourOptions())
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = write_nodes_stream(
+        fused_tile_nodes(stream_tiles(spark, src, max_files=1), ContourOptions()),
+        out, ckpt)
     try:
         if not q.awaitTermination(300):
             q.stop()

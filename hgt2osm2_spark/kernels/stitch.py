@@ -247,15 +247,6 @@ def _stitch_master(master: LineBag) -> list[list[Point]]:
     return [list(pl.pts) for pl in polylines if pl.alive]
 
 
-def stitch_level(segments: list[tuple[Point, Point]]) -> list[list[Point]]:
-    """segments: (p1, p2) pairs in reference emission order for one
-    (tile, level). Returns surviving polylines in reference list order."""
-    bag = LineBag()
-    for p1, p2 in segments:
-        bag.add(p1, p2)
-    return _stitch_master(bag)
-
-
 def stitch_tile_reference(seg_array: np.ndarray) -> dict[int, list[list[Point]]]:
     """Per-tile stage 3+4 as the reference runs it: per-(row, level)
     bags -> per-level gather -> per-level stitching

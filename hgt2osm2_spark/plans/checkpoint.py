@@ -232,96 +232,68 @@ def run_checkpointed(
     salt_plan: dict | None = None
     dims = tiles.select("image_id", "w", "h")
 
-    def count_pending(p: DataFrame) -> int:
-        return p.select("image_id").distinct().count()
+    def polylines(p: DataFrame, segs: DataFrame) -> DataFrame:
+        nonlocal salt_plan
+        if not auto_salt:
+            return contours.stitch_polylines(segs, shuffle_partitions)
+        counts = store.level_metrics()
+        if counts is not None:
+            # r8 (ADVICE r7 #1): metrics only exist for segments
+            # committed WITH auto_salt — a resume over segments an
+            # earlier non-auto_salt run committed would feed the
+            # planner an empty/partial histogram and a genuinely
+            # hot tile could silently get the plain single-task
+            # stitch while salt_plan claims a lineage-backed
+            # decision. Anti-join the pending tiles against the
+            # metrics coverage (both metadata-scale) and only call
+            # it 'lineage' when coverage is COMPLETE; otherwise
+            # fall back to measuring.
+            pend = p.select("image_id").distinct()
+            uncovered = pend.join(
+                counts.select("image_id").distinct(), "image_id",
+                "left_anti",
+            ).limit(1).count()
+            if uncovered:
+                counts = None
+            else:
+                counts = counts.join(F.broadcast(pend), "image_id")
+        source = "lineage" if counts is not None else "measured"
+        out, n_salt = contours.auto_stitch_polylines(
+            segs, shuffle_partitions, counts=counts)
+        salt_plan = {"n_salt": n_salt, "counts_source": source}
+        return out
 
-    # stage 1-2: decode + marching kernel
-    p = store.pending(tiles, "segments")
-    n = count_pending(p)
-    computed["segments"] = n
-    if n:
-        store.commit_stage(contours.extract_contour_segments(p, opt), "segments", run_id,
-                           pending_ids=p.select("image_id"))
-        if auto_salt:
-            # level-grain metrics from the COMMITTED store (one narrow
-            # agg over the just-written parquet, no recompute of the
-            # Python extract stage), scoped to this commit's tiles
-            fresh = store.load_stage("segments", p)
-            store.commit_level_metrics(
-                fresh.groupBy("image_id", "level").agg(
-                    F.count("*").alias("n_rows")),
-                run_id,
-            )
-    if stop_after == "segments":
-        return ResumableResult(store, run_id, computed)
-
-    # stage 3-4: stitch per (tile, level)
-    p = store.pending(tiles, "polylines")
-    n = count_pending(p)
-    computed["polylines"] = n
-    if n:
-        segs = store.load_stage("segments", p)
-        if auto_salt:
-            counts = store.level_metrics()
-            if counts is not None:
-                # r8 (ADVICE r7 #1): metrics only exist for segments
-                # committed WITH auto_salt — a resume over segments an
-                # earlier non-auto_salt run committed would feed the
-                # planner an empty/partial histogram and a genuinely
-                # hot tile could silently get the plain single-task
-                # stitch while salt_plan claims a lineage-backed
-                # decision. Anti-join the pending tiles against the
-                # metrics coverage (both metadata-scale) and only call
-                # it 'lineage' when coverage is COMPLETE; otherwise
-                # fall back to measuring.
-                pend = p.select("image_id").distinct()
-                uncovered = pend.join(
-                    counts.select("image_id").distinct(), "image_id",
-                    "left_anti",
-                ).limit(1).count()
-                if uncovered:
-                    counts = None
-                else:
-                    counts = counts.join(F.broadcast(pend), "image_id")
-            source = "lineage" if counts is not None else "measured"
-            polylines, n_salt = contours.auto_stitch_polylines(
-                segs, shuffle_partitions, counts=counts)
-            salt_plan = {"n_salt": n_salt, "counts_source": source}
-        else:
-            polylines = contours.stitch_polylines(segs, shuffle_partitions)
-        store.commit_stage(
-            polylines, "polylines", run_id,
-            pending_ids=p.select("image_id"),
-        )
-    if stop_after == "polylines":
-        return ResumableResult(store, run_id, computed, salt_plan)
-
-    # stage 5: post-production
-    p = store.pending(tiles, "post")
-    n = count_pending(p)
-    computed["post"] = n
-    if n:
-        pl = store.load_stage("polylines", p)
-        store.commit_stage(
-            contours.postprocess_polylines(pl, dims, opt), "post", run_id,
-            pending_ids=p.select("image_id"),
-        )
-    if stop_after == "post":
-        return ResumableResult(store, run_id, computed, salt_plan)
-
-    # stage 6: IDs + node/way outputs
-    for stage, builder, id_col in (
-        ("nodes", lambda a: ids.nodes_df(a), "node_id"),
-        ("ways", lambda a: ids.ways_df(a, opt), "way_id"),
-    ):
+    # stage -> (the stage whose store it reads, None = the tiles;
+    # its builder over (pending tiles, input); its id column)
+    plan = {
+        "segments": (None, lambda p, t: contours.extract_contour_segments(t, opt), None),
+        "polylines": ("segments", polylines, None),
+        "post": ("polylines",
+                 lambda p, pl: contours.postprocess_polylines(pl, dims, opt), None),
+        "nodes": ("post",
+                  lambda p, post: ids.nodes_df(ids.assign_ids(post.filter("kept"), opt)),
+                  "node_id"),
+        "ways": ("post",
+                 lambda p, post: ids.ways_df(ids.assign_ids(post.filter("kept"), opt), opt),
+                 "way_id"),
+    }
+    for stage in STAGES:
+        source_stage, build, id_col = plan[stage]
         p = store.pending(tiles, stage)
-        n = count_pending(p)
-        computed[stage] = n
+        n = computed[stage] = p.select("image_id").distinct().count()
         if n:
-            kept = store.load_stage("post", p).filter("kept")
-            store.commit_stage(builder(ids.assign_ids(kept, opt)), stage, run_id, id_col,
+            inp = p if source_stage is None else store.load_stage(source_stage, p)
+            store.commit_stage(build(p, inp), stage, run_id, id_col,
                                pending_ids=p.select("image_id"))
+            if auto_salt and stage == "segments":
+                # level-grain metrics from the COMMITTED store (one narrow
+                # agg over the just-written parquet, no recompute of the
+                # Python extract stage), scoped to this commit's tiles
+                store.commit_level_metrics(
+                    store.load_stage("segments", p).groupBy("image_id", "level")
+                    .agg(F.count("*").alias("n_rows")),
+                    run_id,
+                )
         if stop_after == stage:
-            return ResumableResult(store, run_id, computed, salt_plan)
-
+            break
     return ResumableResult(store, run_id, computed, salt_plan)

@@ -22,8 +22,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..config import ContourOptions
-from ..ops import contours
 from ..sources.synthetic import TILES_SCHEMA
 
 
@@ -35,15 +33,6 @@ def stream_tiles(spark: SparkSession, path: str, max_files: int | None = None) -
     if max_files:
         r = r.option("maxFilesPerTrigger", int(max_files))
     return r.parquet(path)
-
-
-def stream_contour_nodes(tiles_stream: DataFrame, opt: ContourOptions | None = None) -> DataFrame:
-    """tiles stream -> contour nodes stream (stages 1-6 minus the
-    cross-tile merge, which is a batch concern). Uses the window-free
-    fused-nodes map (IDs assigned inside the per-tile pass — Structured
-    Streaming forbids non-time windows), so it runs append-mode,
-    stateless, exactly-once into the file sink."""
-    return contours.fused_tile_nodes(tiles_stream, opt or ContourOptions())
 
 
 def write_nodes_stream(

@@ -2,8 +2,9 @@
 
 Independent, deliberately-unvectorized implementation of the same
 semantics as marching.extract_segments — written straight from the
-documented case analysis (/root/reference/ContourProcessor2.cs:1785-1800)
-and used in tests to cross-check the vectorized kernel. Keep the two
+documented case analysis (the reference's ContourProcessor2.cs:1785-1800)
+and used by tests/test_marching.py and tools/make_golden.py to
+cross-check the vectorized kernel. Keep the two
 implementations structurally different so agreement is evidence.
 """
 

@@ -1,13 +1,28 @@
-"""Scalar twin of the salted stitch's canonical polyline form.
+"""Test-only polyline twins.
 
-``ops.contours._canonical_batch`` canonicalizes a flat batch of chains
-with no per-chain loop; this is its one-polyline oracle, used by the
-salted-stitch property tests and by tools/make_golden.py's
-``salted_stitch`` golden."""
+``canonical_polyline`` is the scalar twin of the salted stitch's
+canonical polyline form: ``ops.contours._canonical_batch`` canonicalizes
+a flat batch of chains with no per-chain loop; this is its one-polyline
+oracle, used by the salted-stitch property tests and by
+tools/make_golden.py's ``salted_stitch`` golden.
+
+``stitch_level`` stitches one (tile, level) segment list through the
+reference port's bag and drain, for the stitch invariant tests."""
 
 from __future__ import annotations
 
 import numpy as np
+
+from hgt2osm2_spark.kernels.stitch import LineBag, Point, _stitch_master
+
+
+def stitch_level(segments: list[tuple[Point, Point]]) -> list[list[Point]]:
+    """segments: (p1, p2) pairs in reference emission order for one
+    (tile, level). Returns surviving polylines in reference list order."""
+    bag = LineBag()
+    for p1, p2 in segments:
+        bag.add(p1, p2)
+    return _stitch_master(bag)
 
 
 def canonical_polyline(xs: np.ndarray, ys: np.ndarray) -> tuple[np.ndarray, np.ndarray, bool]:

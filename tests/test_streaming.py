@@ -5,6 +5,7 @@ over the events stream equals the batch groupBy."""
 import pytest
 
 from hgt2osm2_spark.config import ContourOptions
+from hgt2osm2_spark.ops.contours import fused_tile_nodes
 from hgt2osm2_spark.plans.pipeline import run_contour_pipeline
 from hgt2osm2_spark.sources.synthetic import tiles_df
 from hgt2osm2_spark.streaming import ingest
@@ -20,7 +21,7 @@ def test_stream_contour_matches_batch(spark, tmp_path):
 
     stream = ingest.stream_tiles(spark, src, max_files=1)
     assert stream.isStreaming
-    nodes_stream = ingest.stream_contour_nodes(stream, OPT)
+    nodes_stream = fused_tile_nodes(stream, OPT)
     q = ingest.write_nodes_stream(
         nodes_stream, str(tmp_path / "nodes_out"), str(tmp_path / "ckpt")
     )

@@ -3,7 +3,7 @@
 Every golden is computed by a SCALAR, no-Spark twin of the query:
 
  - contour goldens start from the independent per-triangle scalar
-   oracle (kernels/oracle.py — written straight from the reference's
+   oracle (tests/contour_oracle.py — written straight from the reference's
    documented case analysis, ContourProcessor2.cs:1785-1800) and chain
    the pure stitch/postprocess kernels with SEQUENTIAL id counters
    (the reference's own model, ContourProcessor2.cs:1576-1607) —
@@ -44,8 +44,9 @@ GOLDEN_DIR = os.path.join(ROOT, "golden")
 SF_DIR = os.environ.get("SPARK_GRAFT_GOLDEN_SF", "/root/testdata/sf0.01")
 
 from hgt2osm2_spark.config import ContourOptions, tile_first_id  # noqa: E402
-from hgt2osm2_spark.kernels import codecs, marching, oracle, postprocess, stitch  # noqa: E402
+from hgt2osm2_spark.kernels import codecs, marching, postprocess, stitch  # noqa: E402
 from hgt2osm2_spark.sources import synthetic  # noqa: E402
+from tests.contour_oracle import extract_segments_scalar  # noqa: E402
 
 
 def _round_half_up(v: float, digits: int) -> float:
@@ -85,7 +86,7 @@ def scalar_segments(grid: np.ndarray, opt: ContourOptions) -> np.ndarray:
     """Independent scalar-oracle segments, cross-checked against the
     vectorized kernel (order included) so goldens can't inherit a
     kernel bug silently."""
-    segs = oracle.extract_segments_scalar(grid, opt.minor_distance, opt.fake_distance)
+    segs = extract_segments_scalar(grid, opt.minor_distance, opt.fake_distance)
     arr = np.empty(len(segs), dtype=marching.SEG_DTYPE)
     for i, (y, lv, x1, y1, x2, y2) in enumerate(segs):
         arr[i] = (y, lv, x1, y1, x2, y2)

@@ -262,9 +262,10 @@ def main() -> None:
         f" | {p['cpu_ratio']} | {'PASS' if p['pass'] else 'FAIL'} |"
         for p in pairs
     )
-    # C-kernel on/off A/B (VERDICT r5 #8): recorded by tools/ckernel_ab.py
-    # into BENCH/ckernel_ab.json; surfaced here so the fallback's price
-    # tag lives in the main bench record
+    # C-kernel on/off A/B (VERDICT r5 #8): the r5 record BENCH/ckernel_ab.json,
+    # surfaced here so the fallback's price tag lives in the main bench
+    # record; the per-kernel C vs Python figures are now perfbench's
+    # --trace 1 kernels.*_s and kernels.*_py_s layers
     ab_section = ""
     try:
         with open("BENCH/ckernel_ab.json") as f:
